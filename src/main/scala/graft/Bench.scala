@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.certs.{Cert, TierCheck}
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -19,13 +21,10 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Steady-state measurement (JMH-style): run EVERY query once
-    // untimed, then measure. The warm pass absorbs the one-time costs —
-    // executor startup, parquet footers, Janino compile of each query's
-    // generated code — that otherwise land on whichever queries run
-    // first and made per-query times incomparable across rounds
-    // (q5_region_revenue read 6.5 s in round 3 vs 1.5 s steady-state
-    // purely from map-order drift). Data caches are flushed between
+    // Steady-state measurement: the first measured pass absorbs the
+    // one-time costs — executor startup, parquet footers, Janino compile
+    // of each query's generated code — and the per-query min() over
+    // passes (below) discards it. Data caches are flushed between
     // passes and queries; only the JVM-wide codegen cache stays warm,
     // which is the steady state a resident engine runs in.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -42,126 +41,31 @@ object Bench {
     // pressure (round-12 postmortem).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // TIER CACHE (round-20 ask #1, contended-box robustness): the
-    // parent's warm pass used to EXECUTE every streaming certification
-    // once purely to classify it — ~2 minutes of wall per run whose
-    // only output is a boolean, and whose box load inflates every
-    // measurement that follows. The observed classification persists
-    // across runs in target/bench-tiers.json; any cached name skips
-    // the warm pass (its first measured pass warms it, and min()
-    // discards that sample). SELF-HEALING, not a name list: unknown
-    // names classify by execution exactly as before, a cached-batch
-    // query that turns stream is caught live by the listener during
-    // its measurement, and each fork re-observes and reports its
-    // children's tier, so a stale entry corrects itself on the next
-    // run. Subset (child) runs never consult the cache — they
-    // classify by running, which they must do anyway.
-    val tierCachePath = java.nio.file.Paths.get(
-      sys.props.getOrElse("user.dir", "."), "target", "bench-tiers.json")
-    // fall back to the repo-committed seed (bench/bench-tiers.json)
-    // when target/ is fresh (clean checkout, sbt clean): without it a
-    // cold run warm-classifies all 200+ queries — a third execution of
-    // each on top of the two measured passes. Only names still in
-    // SparkEntry.queries are trusted either way; new queries classify
-    // by execution once and refresh the target copy.
-    val seedPath = java.nio.file.Paths.get(
-      sys.props.getOrElse("user.dir", "."), "bench", "bench-tiers.json")
-    val cachedTier: Map[String, Boolean] =
-      if (only.nonEmpty) Map.empty
-      else {
-        val src =
-          if (java.nio.file.Files.exists(tierCachePath)) Some(tierCachePath)
-          else if (java.nio.file.Files.exists(seedPath)) Some(seedPath)
-          else None
-        src.map { p =>
-          try {
-            val om = new com.fasterxml.jackson.databind.ObjectMapper()
-            val root = om.readTree(java.nio.file.Files.readAllBytes(p))
-            val names = SparkEntry.queries.keySet
-            val it = root.fields()
-            val b = Map.newBuilder[String, Boolean]
-            while (it.hasNext) {
-              val e = it.next()
-              if (names.contains(e.getKey))
-                b += (e.getKey -> e.getValue.asBoolean(false))
-            }
-            b.result()
-          } catch { case _: Throwable => Map.empty[String, Boolean] }
-        }.getOrElse(Map.empty)
-      }
-    // TIER classification (observed, not hardcoded): onQueryStarted is
-    // delivered SYNCHRONOUSLY on the starting thread, so any query that
-    // executes a real StreamingQuery during its run is classified
-    // "stream" with no name list to rot. Classified during the WARM
-    // pass because the stream tier is then MEASURED IN FRESH CHILD
-    // JVMs (below), not in this one.
-    val sawStream = new java.util.concurrent.atomic.AtomicBoolean(false)
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
-          sawStream.set(true)
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
-    // warm pass over the UNKNOWN names only (JMH-style): absorbs
-    // executor startup, parquet footers, and each query's Janino
-    // compile, and CLASSIFIES the query's tier by observation. A
-    // tier-cached query skips it — its first measured pass below
-    // doubles as its warm run, and the per-query min() discards that
-    // sample — so a cached query executes exactly twice per run, the
-    // round-19 cost envelope, with a second contention sample for
-    // free (an UNKNOWN name pays one extra classification run the
-    // first time it appears; the committed seed makes that rare).
-    // Restricting the pass to the selection keeps a diagnosis
-    // subset run from inheriting the full surface's in-JVM state —
-    // exactly the variable a subset run exists to isolate.
-    var isStream = selected.map { case (name, f) =>
-      cachedTier.get(name) match {
-        case Some(tier) => name -> tier
-        // child/diagnosis (BENCH_ONLY) runs measure in-process either
-        // way, so tier ROUTING is irrelevant there: skip the warm pass
-        // (the first measured pass warms; min() discards it) and let
-        // the live listener correction during measurement set the tier
-        // the parent/cache adopt
-        case None if only.nonEmpty => name -> false
-        case None =>
-          sawStream.set(false)
-          try f(spark, sfDir).count() catch { case _: Throwable => () }
-          spark.catalog.clearCache()
-          name -> sawStream.get
-      }
-    }.toMap
+    val selected = Cert.all.sortBy(_.name)
+      .filter(c => only.forall(_.contains(c.name)))
+    // the declared tier routes each cert; the listener only checks it
+    // (a run that disagrees with its cert's `stream` flag is an error)
+    val tiers = new TierCheck(spark)
     // per-query GC seconds (delta of the JVM-wide collector totals):
     // distinguishes "this query's work grew" from "this query paid
     // another query's garbage" when comparing rounds
     import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def measureHere(queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : Seq[(String, Double, Option[String], Double)] =
-      queries.map { case (name, fn) =>
-        sawStream.set(false)
+    def measureHere(certs: Seq[Cert]): Seq[(String, Double, Option[String], Double)] =
+      certs.map { c =>
+        tiers.reset()
         val g0 = gcMillis
         val t0 = System.nanoTime()
         // a failed query is NOT a fast query: record the error message so
         // the bench json distinguishes the two, and exit nonzero below
-        val err = try { fn(spark, sfDir).count(); None } catch {
+        val err = try { c.run(spark, sfDir).count(); tiers.mismatch(c) } catch {
           case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName))
         }
         val dt = (System.nanoTime() - t0) / 1e9
         val gc = (gcMillis - g0) / 1e3
         spark.catalog.clearCache()
-        // live tier correction: a cached-batch query that now runs a
-        // StreamingQuery reclassifies on the spot (the cache is an
-        // optimization, never an authority)
-        if (sawStream.get && !isStream.getOrElse(name, false))
-          isStream = isStream + (name -> true)
-        (name, dt, err, gc)
+        (c.name, dt, err, gc)
       }
     // MIN-OF-N PASSES (round-20 ask #1): one measured pass is one
     // sample of the shared box, and a load>2 contention phase inflated
@@ -170,8 +74,7 @@ object Bench {
     // time by the length of a pass, so they sample different phases —
     // with the per-query MIN is the standard least-noise estimator:
     // a query's floor is plan-governed, its excursions are the box's.
-    // The first pass doubles as the JIT warm for anything the warm
-    // pass skipped, which min() then discards.
+    // The first pass doubles as the JIT warm, which min() then discards.
     // Default passes: 2 (min-of-2, contended-box robustness). LOW-CORE
     // runs (≤ 8 cores) default to ONE pass: the driver's 8-core scaling
     // bench was killed at its time budget in round 21 (BENCH_r21_c8
@@ -184,9 +87,9 @@ object Bench {
       .map(_.trim.toInt).filter(_ > 0)
       .getOrElse(if (cpus.toInt <= 8) 1 else 2)
     // Single-pass runs have no second pass to absorb codegen/JIT costs
-    // (min-of-2 discards the cold sample; a tier-cached query also skips
-    // the classification warm). To keep a passes=1 budget run's numbers
-    // plan-governed rather than Janino-governed, warm each query ONCE at
+    // (min-of-2 discards the cold sample). To keep a passes=1 budget
+    // run's numbers plan-governed rather than Janino-governed, warm each
+    // query ONCE at
     // the smallest sibling scale factor (sf0.001 when the bench runs a
     // larger SF): the plans — and therefore the generated-code cache
     // entries — are scale-independent, while the warm data pass costs
@@ -202,15 +105,14 @@ object Bench {
           .filter(w => w.isDirectory && w.getPath != d.getPath)
           .map(_.getPath)
       }
-    def measureMin(queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : Seq[(String, Double, Option[String], Double)] = {
+    def measureMin(certs: Seq[Cert]): Seq[(String, Double, Option[String], Double)] = {
       warmSfDir.foreach { w =>
-        queries.foreach { case (_, fn) =>
-          try f2count(fn, w) catch { case _: Throwable => () }
+        certs.foreach { c =>
+          try c.run(spark, w).count() catch { case _: Throwable => () }
           spark.catalog.clearCache()
         }
       }
-      (1 to passes).map(_ => measureHere(queries))
+      (1 to passes).map(_ => measureHere(certs))
         .reduce { (a, b) =>
           a.zip(b).map { case ((n, dt1, e1, g1), (_, dt2, e2, g2)) =>
             // prefer a pass that succeeded; among successes, the faster
@@ -222,8 +124,6 @@ object Bench {
           }
         }
     }
-    def f2count(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Unit = { fn(spark, dir).count(); () }
     // STREAM-TIER ISOLATION (round-17 verdict ask #1): the streaming
     // certifications execute real micro-batch StreamingQueries through
     // RocksDB state, and their wall time in a long-lived shared JVM
@@ -239,17 +139,14 @@ object Bench {
     // per-query seconds. Batch queries are plan-governed and stable;
     // they keep measuring in-process.
     // Forking needs `run / fork := true` (the real classpath in
-    // java.class.path); SPARK_GRAFT_BENCH_NO_FORK=1 restores the old
-    // single-JVM behavior, and subset (child) runs never re-fork.
-    // chunk 12 (was 6): halves the number of fresh-JVM Spark startups
-    // — the fixed cost a contended box amplifies ~2x — while a chunk
-    // is still small enough that shared-JVM drift cannot accumulate
-    // (the round-17 failure mode needed a 200+-query JVM lifetime)
-    val noFork = sys.env.get("SPARK_GRAFT_BENCH_NO_FORK").contains("1")
-    val chunkSize = sys.env.get("SPARK_GRAFT_BENCH_STREAM_CHUNK")
-      .map(_.trim.toInt).filter(_ > 0).getOrElse(12)
-    val (streamSel, batchSel) = selected.partition(q => isStream(q._1))
-    val canFork = only.isEmpty && !noFork && streamSel.nonEmpty &&
+    // java.class.path); subset (child) runs never re-fork.
+    // 12 stream queries per child JVM: few enough fresh-JVM Spark
+    // startups (the fixed cost a contended box amplifies ~2x) while a
+    // chunk is still small enough that shared-JVM drift cannot
+    // accumulate (that failure mode needed a 200+-query JVM lifetime)
+    val chunkSize = 12
+    val (streamSel, batchSel) = selected.partition(_.stream)
+    val canFork = only.isEmpty && streamSel.nonEmpty &&
       new java.io.File(System.getProperty("java.home"), "bin/java").exists()
 
     def forkChunk(names: Seq[String]): Option[Seq[(String, Double, Option[String], Double)]] = {
@@ -284,15 +181,6 @@ object Bench {
             val root = om.readTree(l)
             val qs = root.get("queries"); val gcs = root.get("gc_sec")
             val errs = root.get("errors")
-            // adopt the child's OBSERVED tier per query: the fork ran
-            // each query and knows whether it started a StreamingQuery
-            // — this is what keeps the parent's tier cache self-healing
-            Option(root.get("stream")).foreach { sm =>
-              names.foreach { n =>
-                Option(sm.get(n)).foreach(v =>
-                  isStream = isStream + (n -> v.asBoolean(true)))
-              }
-            }
             val parsed = names.map { n =>
               val q = Option(qs.get(n))
               if (q.isEmpty) (n, 0.0, Some("missing from child bench output"), 0.0)
@@ -321,42 +209,31 @@ object Bench {
     val batchResults = measureMin(batchSel)
     val streamResults: Seq[(String, Double, Option[String], Double)] =
       if (!canFork) measureMin(streamSel)
-      else streamSel.map(_._1).grouped(chunkSize).toSeq.flatMap { chunk =>
-        forkChunk(chunk).getOrElse {
+      else streamSel.grouped(chunkSize).toSeq.flatMap { chunk =>
+        forkChunk(chunk.map(_.name)).getOrElse {
           // fallback: a chunk whose child died measures in-process —
           // worse isolation beats a hole in the bench surface
-          measureMin(streamSel.filter(q => chunk.contains(q._1)))
+          measureMin(chunk)
         }
       }
+    tiers.close()
+    val declaredStream = selected.map(c => c.name -> c.stream).toMap
     // merged, alphabetical (stable output regardless of tier routing)
     val results = (batchResults ++ streamResults).sortBy(_._1)
       .map { case (n, dt, err, gc) =>
-        (n, dt, err, gc, isStream.getOrElse(n, false)) }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
+        (n, dt, err, gc, declaredStream(n)) }
     val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e), _, _) => s"${jstr(k)}:${jstr(e)}" }
+    val errs = results
+      .collect { case (k, _, Some(e), _, _) => s"${Verify.jsonString(k)}:${Verify.jsonString(e)}" }
       .mkString("{", ",", "}")
     val gcs = results.map { case (k, _, _, g, _) => s"\"" + k + "\":" + g }
       .mkString("{", ",", "}")
-    // observed tier per query: a fork's parent adopts these, and the
-    // parent's own line feeds the cross-run tier cache
-    val tiers = results.map { case (k, _, _, _, s) => s"\"" + k + "\":" + s }
+    // declared tier per query
+    val tierMap = results.map { case (k, _, _, _, s) => s"\"" + k + "\":" + s }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"gc_sec":$gcs,"stream":$tiers,"sf":"$sfDir"}""")
-    // persist the tier observations for the next run's warm-pass skip
-    // (full runs only: a subset run sees a sliver of the surface)
-    if (only.isEmpty) try {
-      java.nio.file.Files.createDirectories(tierCachePath.getParent)
-      java.nio.file.Files.write(tierCachePath,
-        tiers.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"gc_sec":$gcs,"stream":$tierMap,"sf":"$sfDir"}""")
     // Compact headline line, printed LAST: the driver keeps only a
     // 2000-char tail of this stdout, and the full per-query maps above
     // overflow it (round 13's artifact carried only the gc_sec tail —

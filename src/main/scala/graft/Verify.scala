@@ -1,7 +1,10 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+
+import graft.certs.{Cert, TierCheck}
+
+/** Correctness dump: each cert's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * throws is recorded in `$outDir/_failures.json` (name → message), so a
   * fixture drift that breaks N queries shows up as N named entries in one
@@ -14,7 +17,7 @@ object Verify {
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness.
     */
-  private def q(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -26,27 +29,32 @@ object Verify {
 
   private def writeJsonMap(path: String, m: Iterable[(String, String)]): Unit =
     Files.writeString(Paths.get(path),
-      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      m.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}"))
 
-  /** Run every query, dump results + oracle SQL + failure manifest under
-    * `outDir`; returns the failures (empty when all queries ran). Factored
-    * out of `main` so VerifySpec can drive it with a deliberately broken
-    * query map.
+  /** Run every cert, dump results + oracle SQL + failure manifest under
+    * `outDir`; returns the failures (empty when all certs ran). A cert
+    * whose run disagrees with its declared tier is a failure too (its
+    * dump is still written). Factored out of `main` so VerifySpec can
+    * drive it with deliberately broken certs.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-      queries: Map[String, (SparkSession, String) => DataFrame],
-      oracleSql: Map[String, String]): Map[String, String] = {
+      certs: Seq[Cert]): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val tiers = new TierCheck(spark)
+    try certs.foreach { c =>
+      tiers.reset()
+      try {
+        c.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${c.name}")
+        tiers.mismatch(c).foreach(failures(c.name) = _)
+      } catch { case e: Throwable =>
+        failures(c.name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
-    }
-    writeJsonMap(s"$outDir/oracle_sql.json", oracleSql)
+      failures.get(c.name).foreach(m =>
+        System.err.println(s"[verify] ${c.name} failed: $m"))
+    } finally tiers.close()
+    writeJsonMap(s"$outDir/oracle_sql.json", certs.map(c => c.name -> c.oracle))
     // always written — an empty {} distinguishes "all green" from "the
     // manifest step itself never ran"
     writeJsonMap(s"$outDir/_failures.json", failures)
@@ -69,9 +77,7 @@ object Verify {
     // the full surface. Unset in driver runs.
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    run(spark, sfDir, outDir,
-      SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) },
-      SparkEntry.oracleSql.filter { case (n, _) => only.forall(_.contains(n)) })
+    run(spark, sfDir, outDir, Cert.all.filter(c => only.forall(_.contains(c.name))))
     spark.stop()
   }
 }

@@ -72,7 +72,7 @@ object Warehouse {
     * consumed frame.
     *
     * `merged` must not read from `path` (Spark rejects overwriting a
-    * path being read); stage it first — see WarehouseQueries for the
+    * path being read); stage it first — see ReconcileCerts for the
     * stage-then-swap shape.
     */
   def overwritePartitions(merged: DataFrame, path: String,

@@ -7,7 +7,7 @@ import org.apache.spark.util.sketch.CountMinSketch
 
 /** Mergeable Count-Min frequency sketches as typed Aggregators — the
   * second re-aggregable sketch family beside the HLL pair
-  * (`hll_sketch_agg`/`hll_union_agg`, RelationalQueries).
+  * (`hll_sketch_agg`/`hll_union_agg`, RelationalCerts).
   *
   * Spark ships a `count_min_sketch` SQL aggregate but no estimate or
   * union function over its binary output, so the production

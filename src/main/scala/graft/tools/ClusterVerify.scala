@@ -42,12 +42,7 @@ object ClusterVerify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val queries =
-      if (names.isEmpty) graft.SparkEntry.queries
-      else graft.SparkEntry.queries.filter(kv => names(kv._1))
-    val oracles =
-      if (names.isEmpty) graft.SparkEntry.oracleSql
-      else graft.SparkEntry.oracleSql.filter(kv => names(kv._1))
+    val certs = graft.certs.Cert.all.filter(c => names.isEmpty || names(c.name))
     // sanity: the session must actually be multi-process — 2 executors
     // registered, and a trivial job must NOT run in this JVM
     val execs = spark.sparkContext.statusTracker.getExecutorInfos
@@ -60,14 +55,14 @@ object ClusterVerify {
     require(!taskPids.contains(driverPid) && taskPids.length >= 2,
       s"expected tasks in 2 separate executor JVMs, got pids " +
         s"${taskPids.mkString(",")} (driver $driverPid)")
-    val failures = graft.Verify.run(spark, sfDir, outDir, queries, oracles)
+    val failures = graft.Verify.run(spark, sfDir, outDir, certs)
     spark.stop()
     if (failures.nonEmpty) {
       System.err.println(s"CLUSTER VERIFY FAILURES (${failures.size}):")
       failures.foreach { case (n, e) => System.err.println(s"  $n: $e") }
       sys.exit(1)
     }
-    println(s"CLUSTER VERIFY OK: ${queries.size} queries under " +
+    println(s"CLUSTER VERIFY OK: ${certs.size} queries under " +
       "local-cluster[2,16,4096]")
   }
 }

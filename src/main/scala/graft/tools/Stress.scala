@@ -164,7 +164,7 @@ object Stress {
         // records chunk count + ts dtype, so an amp-only key would serve
         // a DIFFERENT sf dir's stale layout (observed: an sf0.01 run
         // reused the previous sf0.1 sweep's chunks)
-        val root = s"${graft.CoreQueries.scratchDir("stress_stream")}/amp$amp-$sfKey"
+        val root = s"${graft.certs.CertSupport.scratchDir("stress_stream")}/amp$amp-$sfKey"
         def src() = StreamRun.chunkedSource(spark, evA, s"$root/src", 8)
         val (res, st) = StreamRun.runAvailableNowObserved(
           EventWindows.correlateStreams(
@@ -193,7 +193,7 @@ object Stress {
       val evA = Amplify.events(ev0, amp)
       run("session_close_stream", amp, ev0.count() * amp) {
         val root =
-          s"${graft.CoreQueries.scratchDir("stress_sessions")}/amp$amp-$sfKey"
+          s"${graft.certs.CertSupport.scratchDir("stress_sessions")}/amp$amp-$sfKey"
         val src = StreamRun.chunkedSource(spark, evA, s"$root/src", 8)
         val ev = src.select(col("user_id"), col("ts"), col("value"))
           .withWatermark("ts", "1 hour")
@@ -224,7 +224,7 @@ object Stress {
       val evA = Amplify.eventsHotKey(ev0, amp, hotPermille = 10)
       run("session_close_hotkey", amp, ev0.count() * amp) {
         val root =
-          s"${graft.CoreQueries.scratchDir("stress_hotkey")}/amp$amp-$sfKey"
+          s"${graft.certs.CertSupport.scratchDir("stress_hotkey")}/amp$amp-$sfKey"
         val src = StreamRun.chunkedSource(spark, evA, s"$root/src", 8)
         val ev = src.select(col("user_id"), col("ts"), col("value"))
           .withWatermark("ts", "1 hour")
@@ -256,7 +256,7 @@ object Stress {
         spark.conf.set(key, "3600")
         try {
           evA.createOrReplaceTempView("stress_rja_events")
-          val df = spark.sql(graft.Round12Queries.rangeJoinSql("stress_rja_events"))
+          val df = spark.sql(graft.certs.CertSupport.rangeJoinSql("stress_rja_events"))
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           require(!plan.contains("BroadcastNestedLoopJoin") &&
@@ -728,7 +728,7 @@ object Stress {
     lazy val evS = Amplify.events(ev0, amps.max)
     for (chunks <- Seq(4, 8, 16) if sections("chunks")) {
       run(s"stream_interval_join_chunks$chunks", amps.max, ev0.count() * amps.max) {
-        val root = s"${graft.CoreQueries.scratchDir("stress_stream")}/ch$chunks-amp${amps.max}-$sfKey"
+        val root = s"${graft.certs.CertSupport.scratchDir("stress_stream")}/ch$chunks-amp${amps.max}-$sfKey"
         def src() = StreamRun.chunkedSource(spark, evS, s"$root/src", chunks)
         val (res, st) = StreamRun.runAvailableNowObserved(
           EventWindows.correlateStreams(

@@ -63,7 +63,7 @@ class AdaptivePlannerSpec extends SparkFunSuite {
   }
 
   test("ANALYZE TABLE stats drive the optimizer's exact row-count estimate") {
-    val wh = CoreQueries.scratchDir("stats_cat")
+    val wh = certs.CertSupport.scratchDir("stats_cat")
     spark.sql("DROP TABLE IF EXISTS graft_stats_cat")
     core.Scratch.rmTree(wh)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(wh))
