@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Local simulation of the driver's correctness gate (dev tool only, not
 part of the shipped library): run graft.Verify first, then this script
-compares each dumped parquet against its DuckDB oracle on the same sfdir.
+compares each dumped parquet against its DuckDB oracle on the same sfdir,
+and fails on every name Verify recorded in `_failures.json` (a query that
+threw, or whose run contradicted its declared tier, still dumps a result).
 
 Usage: python3 scripts/check_oracle.py /root/testdata/sf0.01 /tmp/verify_out
 """
-import json, sys, math
+import json, os, sys
 import duckdb
 import pandas as pd
 
@@ -56,4 +58,9 @@ for name, sql in sorted(oracle.items()):
     except Exception as e:
         print(f"ERROR {name}: {e}")
         fails += 1
+failures_path = f"{outdir}/_failures.json"
+recorded = json.load(open(failures_path)) if os.path.exists(failures_path) else {}
+for name, msg in sorted(recorded.items()):
+    print(f"FAILED {name}: {msg}")
+fails += len(recorded)
 sys.exit(1 if fails else 0)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.sources.v2.DelimV2
+import graft.sources.v2.{DelimScanMetrics, DelimV2}
 
 import CertSupport._
 
@@ -183,8 +183,8 @@ object DelimV2Certs {
     // status as a PARTITION column (it is not in the file bytes at
     // all). The pushed status predicate prunes at FILE level: the
     // require pins (a) the partition-column marker and the absorbed
-    // predicate in the plan, and (b) via the planned-splits hook after
-    // a pushed-limit probe, that the two non-matching directories
+    // predicate in the plan, and (b) via the scan metrics of a
+    // pushed-limit probe, that the two non-matching directories
     // contributed ZERO splits. At 100 TB this is the reference's own
     // abstraction — `WHERE dt='2024-01-01'` opens one directory, not
     // the table — now native to the delimited-text tier.
@@ -222,11 +222,11 @@ object DelimV2Certs {
       require(plan.contains("EqualTo(o_orderstatus,F)"),
         s"partition predicate not absorbed into the scan:\n$plan")
       // file-level proof: a pushed-limit probe with the same partition
-      // predicate (reads ~1 line) — the hook records (discovered files,
-      // files kept after pruning, planned splits)
-      DelimV2.recordPlannedSplits(fact, -1, -1, -1)
-      reader.filter(col("o_orderstatus") === "F").limit(1).collect()
-      val (disc, kept, _) = DelimV2.plannedSplitsFor(fact).get
+      // predicate (reads ~1 line) — its scan reports files listed and
+      // files kept after pruning as SQL metrics
+      val probe = reader.filter(col("o_orderstatus") === "F").limit(1)
+      probe.collect()
+      val DelimScanMetrics(_, disc, kept, _, _, _) = DelimScanMetrics.one(probe)
       require(disc == 3 && kept == 1,
         s"pruned directories must contribute ZERO splits: " +
           s"discovered=$disc kept=$kept")
@@ -239,8 +239,8 @@ object DelimV2Certs {
     // RE-PLANNED under it, and non-matching partition directories
     // contribute zero splits (`delim_v2_runtime_prune` can
     // only drop their rows after reading the bytes). The require pins
-    // `dynamicpruningexpression` in the plan AND the planned-splits
-    // hook after execution; correctness does not depend on the pruning
+    // `dynamicpruningexpression` in the plan AND the executed scan's
+    // files-kept metric; correctness does not depend on the pruning
     // (the join re-checks the key), which is why file-level
     // application is legal — the oracle certifies the join, the
     // requires certify the pruning.
@@ -278,9 +278,8 @@ object DelimV2Certs {
       val plan = df.queryExecution.executedPlan.toString
       require(plan.contains("dynamicpruningexpression"),
         s"runtime filter not planned onto the delim scan:\n$plan")
-      DelimV2.recordPlannedSplits(fact, -1, -1, -1)
       df.collect()
-      val (disc, kept, _) = DelimV2.plannedSplitsFor(fact).get
+      val DelimScanMetrics(_, disc, kept, _, _, _) = DelimScanMetrics.one(df)
       require(disc == types.length && kept == 1,
         s"runtime In must prune non-matching partition FILES: " +
           s"discovered=$disc kept=$kept")
@@ -295,8 +294,8 @@ object DelimV2Certs {
     // replaces whole partition subtrees. Read back through the same
     // connector with the partition column typed from the directory,
     // statically pruned to one partition (zero splits from the other
-    // four — require'd via the planned-splits hook), aggregated under
-    // the parquet oracle: a row routed to the wrong directory, a
+    // four — require'd via the scan's files-kept metric), aggregated
+    // under the parquet oracle: a row routed to the wrong directory, a
     // partition value mangled in formatting, or a leaked staged file
     // anywhere hash-mismatches.
     Cert.scratch("delim_v2_partition_write",
@@ -323,9 +322,9 @@ object DelimV2Certs {
       val plan = df.queryExecution.explainString(FormattedMode)
       require(plan.contains("PartitionColumns: [event_type]"),
         s"written layout not discovered as partitioned:\n$plan")
-      DelimV2.recordPlannedSplits(fact, -1, -1, -1)
-      reader.filter(col("event_type") === "click").limit(1).collect()
-      val (disc, kept, _) = DelimV2.plannedSplitsFor(fact).get
+      val probe = reader.filter(col("event_type") === "click").limit(1)
+      probe.collect()
+      val DelimScanMetrics(_, disc, kept, _, _, _) = DelimScanMetrics.one(probe)
       require(kept < disc,
         s"pruned partitions must contribute zero splits: ($disc, $kept)")
       df
@@ -372,7 +371,8 @@ object DelimV2Certs {
     // plain SQL aggregate with a partition predicate — no DataFrame
     // reader call anywhere. The table-level OPTIONS (path, partitionBy)
     // resolve through the catalog hop into the scan, the partition
-    // predicate still prunes at FILE level (require'd via the hook),
+    // predicate still prunes at FILE level (require'd via the executed
+    // scan's files-kept metric),
     // and the pushed filter marker survives. DROP IF EXISTS first: the
     // bench constructs every query twice in one session.
     Cert.scratch("delim_v2_sql_table",
@@ -396,18 +396,13 @@ object DelimV2Certs {
           |FROM graft_delim_events_t
           |WHERE event_type IN ('click', 'purchase')
           |GROUP BY event_type""".stripMargin)
-      // reset the hook BEFORE touching the plan: rendering the executed
-      // plan materializes the scan's lazy input partitions (which is
-      // when the hook records), so a reset after it would erase the
-      // real counts
-      DelimV2.recordPlannedSplits(fact, -1, -1, -1)
       val plan = df.queryExecution.executedPlan.toString
       require(plan.contains("PartitionColumns: [event_type]"),
         s"catalog hop lost the partition layout:\n$plan")
       require(plan.contains("In(event_type"),
         s"partition predicate not absorbed through the catalog:\n$plan")
       df.collect()
-      val (disc, kept, _) = DelimV2.plannedSplitsFor(fact).get
+      val DelimScanMetrics(_, disc, kept, _, _, _) = DelimScanMetrics.one(df)
       require(kept < disc && kept > 0,
         s"partition predicate must prune files through SQL: ($disc, $kept)")
       df
@@ -708,7 +703,7 @@ object DelimV2Certs {
     // key-CLUSTERED (repartitionByRange + sortWithinPartitions, the
     // layout discipline that makes key-range queries cheap at 100 TB),
     // so an o_orderkey range keeps ~1 of 8 files — require'd via the
-    // planned-splits observability hook — while the aggregate must
+    // executed scan's files-kept metric — while the aggregate must
     // still equal the parquet-derived oracle exactly (skipping a file
     // with a matching row would break all three columns).
     Cert.scratch("delim_v2_stats_skipping",
@@ -736,7 +731,7 @@ object DelimV2Certs {
           round(sum(col("o_totalprice")), 2).as("revenue"),
           sum(col("o_orderkey")).as("key_sig"))
       df.collect()
-      val (disc, kept, _) = graft.sources.v2.DelimV2.plannedSplitsFor(t).get
+      val DelimScanMetrics(_, disc, kept, _, _, _) = DelimScanMetrics.one(df)
       require(kept < disc && kept >= 1,
         s"file stats failed to skip clustered files: discovered=$disc kept=$kept")
       df
@@ -772,7 +767,7 @@ object DelimV2Certs {
       require(plan.contains("PushedAggregation: [stats-complete]"),
         s"aggregate not answered from manifest stats:\n$plan")
       df.collect()
-      val (_, kept, splits) = graft.sources.v2.DelimV2.plannedSplitsFor(t).get
+      val DelimScanMetrics(_, _, kept, splits, _, _) = DelimScanMetrics.one(df)
       require(kept == 0 && splits == 1,
         s"stats-complete aggregate opened data files: kept=$kept splits=$splits")
       df
@@ -1065,7 +1060,7 @@ object DelimV2Certs {
     // Spark range-partitions the job and every output file carries a
     // DISJOINT key range; the writer's recorded min/max bounds are
     // then tight and a key-range query's stats skipping opens only
-    // the overlapping files — require'd via the planned-splits hook
+    // the overlapping files — require'd via the scan's files-kept metric
     // (kept ≤ discovered/4), the non-partition-directory analogue of
     // partition pruning that key-clustered 100 TB tables live on.
     Cert.scratch("delim_v2_sorted_skipping",
@@ -1108,8 +1103,9 @@ object DelimV2Certs {
           round(sum(col("o_totalprice")), 2).as("revenue"),
           min(col("o_orderkey")).as("min_key"),
           max(col("o_orderkey")).as("max_key"))
-      df.collect() // plan + execute so the hook records this query's pruning
-      val (discovered, kept, _) = DelimV2.plannedSplitsFor(t).get
+      df.collect() // execute so the scan reports this query's pruning
+      val DelimScanMetrics(_, discovered, kept, _, _, _) =
+        DelimScanMetrics.one(df)
       require(kept >= 1 && kept * 3 <= discovered,
         s"sorted write must make the 10%-span query skip most files: " +
           s"kept=$kept of discovered=$discovered")
@@ -1133,7 +1129,6 @@ object DelimV2Certs {
         |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
         |  AND ts < TIMESTAMP '2024-01-13 00:00:00'
         |GROUP BY 1""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       Tables.events(s, dir)
@@ -1155,8 +1150,9 @@ object DelimV2Certs {
           countDistinct(col("user_id")).as("n_users"),
           min(col("ts")).as("first_ts"),
           max(col("ts")).as("last_ts"))
-      df.collect() // execute so the planned-splits hook records pruning
-      val (discovered, kept, _) = DelimV2.plannedSplitsFor(t).get
+      df.collect() // execute so the scan reports its pruning
+      val DelimScanMetrics(_, discovered, kept, _, _, _) =
+        DelimScanMetrics.one(df)
       require(discovered >= 10 && kept >= 1 && kept * 3 <= discovered,
         s"ts-sorted landing must skip non-overlapping files: " +
           s"kept=$kept of discovered=$discovered")
@@ -1179,7 +1175,6 @@ object DelimV2Certs {
         |SELECT 'price', count(*), round(sum(o_totalprice), 2),
         |       CAST(sum(o_orderkey) AS BIGINT)
         |FROM orders WHERE o_totalprice BETWEEN 400000.0 AND 450000.0""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       graft.ext.ZOrder.writeDelim(
@@ -1195,8 +1190,9 @@ object DelimV2Certs {
             sum(col("o_orderkey")).as("key_sig"))
           .select(lit(tag).as("slice"), col("n_rows"), col("revenue"),
             col("key_sig"))
-        df.collect() // execute so the hook records this slice's pruning
-        val (discovered, kept, _) = DelimV2.plannedSplitsFor(t).get
+        df.collect() // execute so the scan reports this slice's pruning
+        val DelimScanMetrics(_, discovered, kept, _, _, _) =
+          DelimScanMetrics.one(df)
         require(discovered >= 12 && kept >= 1 && kept * 2 <= discovered,
           s"z-order must prune the $tag slice: kept=$kept of $discovered")
         df
@@ -1506,15 +1502,13 @@ object DelimV2Certs {
       require(DelimV2.readManifest(fs, hp).get.gen == m0.gen + 1,
         "the append must advance the index generation")
       // (2) pushed partition equality loads < 20% of segments
-      val rootKey = fs.makeQualified(hp).toUri.getPath
-      DelimV2.clearSegmentReads()
-      val p03 = s.read.format("graft-delim")
+      val p03Df = s.read.format("graft-delim")
         .schema("o_orderkey BIGINT, pc STRING").load(t)
         .filter(col("pc") === "p03")
         .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("sig"))
-        .collect()(0)
-      val (total, read) = DelimV2.segmentReads(rootKey).getOrElse(
-        throw new IllegalStateException("no segmented read recorded"))
+      val p03 = p03Df.collect()(0)
+      val DelimScanMetrics(_, _, _, _, total, read) =
+        DelimScanMetrics.one(p03Df)
       require(read >= 1 && read * 5 <= total,
         s"pruned planning must load < 20% of segments, read $read of $total")
       // (3) full-content oracle: p03 slice + whole-table signature
@@ -2022,16 +2016,13 @@ object DelimV2Certs {
         "fixture must commit a segmented index")
       val nSegs = doc.linesIterator.count(_.startsWith("#segment\t"))
       require(nSegs == 32, s"expected 32 leaf-partition segments, got $nSegs")
-      val rootKey = fs.makeQualified(hp).toUri.getPath
-      DelimV2.clearSegmentReads()
       // equality on the SECOND partition column only
-      val b3 = s.read.format("graft-delim")
+      val b3Df = s.read.format("graft-delim")
         .schema("o_orderkey BIGINT, k1 STRING, k2 STRING").load(t)
         .filter(col("k2") === "b3")
         .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("sig"))
-        .collect()(0)
-      val (total, read) = DelimV2.segmentReads(rootKey).getOrElse(
-        throw new IllegalStateException("no segmented read recorded"))
+      val b3 = b3Df.collect()(0)
+      val DelimScanMetrics(_, _, _, _, total, read) = DelimScanMetrics.one(b3Df)
       require(read >= 1 && read * 5 <= total,
         s"a k2-only equality must load < 20% of segments, read $read of $total")
       val full = s.read.format("graft-delim")
@@ -2052,9 +2043,9 @@ object DelimV2Certs {
     // predicate contradicts the file's k=v values. The requires pin
     // both sides with a LIVE tombstone on partition 'F': the same
     // aggregate over untouched partition 'O' is answered stats-
-    // complete with ZERO data reads (plan marker + planned-splits
-    // probe), while over the tombstoned partition 'F' it correctly
-    // declines the metadata path and excludes the deleted rows.
+    // complete with ZERO data reads (plan marker + the executed scan's
+    // kept/splits metrics), while over the tombstoned partition 'F' it
+    // correctly declines the metadata path and excludes the deleted rows.
     Cert.scratch("delim_v2_stats_agg_mor",
       // the tombstone suppresses only the F partition's metadata path;
       // results both sides recompute directly from orders
@@ -2105,7 +2096,7 @@ object DelimV2Certs {
         "aggregate over the untouched partition must stay stats-served " +
           s"under a live tombstone on another partition:\n$oPlan")
       val oRow = oDf.collect()(0)
-      val (_, kept, splits) = DelimV2.plannedSplitsFor(t).get
+      val DelimScanMetrics(_, _, kept, splits, _, _) = DelimScanMetrics.one(oDf)
       require(kept == 0 && splits == 1,
         s"stats-complete aggregate opened data files: kept=$kept splits=$splits")
       // tombstoned partition: the metadata path must DECLINE (counts

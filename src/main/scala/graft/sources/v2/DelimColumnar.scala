@@ -95,16 +95,8 @@ private[v2] class DelimColumnarReader(
 
   private val outputIdx: Array[Int] = required.fieldNames.map(idxOf)
   private val filterIdx: Array[Int] = filters.flatMap(_.references).distinct.map(idxOf)
-  private val filterSet: Set[Int] = filterIdx.toSet
   private val maxIdx: Int = (outputIdx ++ filterIdx)
     .map(filePos).foldLeft(-1)(math.max)
-  // file positions something consumes (walk bound is maxIdx; this mask
-  // decides whether a stepped-over field gets its span recorded)
-  private val fieldNeeded: Array[Boolean] = {
-    val m = new Array[Boolean](math.max(nFilePos, 1))
-    (outputIdx ++ filterIdx).foreach(i => if (filePos(i) >= 0) m(filePos(i)) = true)
-    m
-  }
   private val schemaIdxAt: Array[Int] = {
     val m = Array.fill(math.max(nFilePos, 1))(-1)
     var i = 0

@@ -7,12 +7,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, Path => HPath}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -613,7 +616,8 @@ private[v2] class DelimScanBuilder(fullSchema: StructType, options: CaseInsensit
       // own files (generation numbers are per-lineage); bloom headers
       // UNION safely across roots
       snapshot.rootTombstones,
-      snapshot.unionBloomCols)
+      snapshot.unionBloomCols,
+      snapshot.segmentCounts)
 }
 
 /** One pushed sort key: column, direction, null placement. */
@@ -650,7 +654,10 @@ class DelimScan(
     rootTombs: Seq[(String, Seq[(Long, String)])] = Nil,
     /** Bloom-sidecar columns from the snapshot's manifest header —
       * readers probe `<file>.bloom` for equality filters on these. */
-    bloomCols: Seq[String] = Nil)
+    bloomCols: Seq[String] = Nil,
+    /** (segments in the index, segments loaded) of the listing this
+      * scan plans from — see [[DelimV2.ListingSnapshot.segmentCounts]]. */
+    segmentCounts: (Int, Int) = (0, 0))
     extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
 
@@ -755,10 +762,8 @@ class DelimScan(
     else StructType(fullSchema.fields :+
       StructField(DelimV2.FileMetaCol, StringType, nullable = false))
 
-  override def filter(filters: Array[Filter]): Unit = {
+  override def filter(filters: Array[Filter]): Unit =
     runtimeFilters = filters.filter(DelimV2.supportedFilter(_, extendedSchema))
-    DelimV2.recordRuntimeFilters(paths.mkString(","), runtimeFilters)
-  }
 
   /** What actually arrived at runtime — asserted by the DPP spec. */
   def runtimeAppliedFilters: Array[Filter] = runtimeFilters
@@ -769,6 +774,23 @@ class DelimScan(
     */
   @volatile private var plannedFiles: Seq[String] = Nil
   private[v2] def lastPlannedFiles: Seq[String] = plannedFiles
+
+  /** (files listed, files kept, splits) of the last split planning —
+    * with the segment counts, this scan node's SQL metrics, reported
+    * once Spark has built its input RDD (see [[DelimScanMetrics]]). */
+  @volatile private var plannedCounts: (Int, Int, Int) = (0, 0, 0)
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = Array(
+    new FilesListedMetric, new FilesKeptMetric, new SplitsPlannedMetric,
+    new SegmentsIndexedMetric, new SegmentsLoadedMetric)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val (listed, kept, splits) = plannedCounts
+    supportedCustomMetrics().zip(Array[Long](listed, kept, splits,
+      segmentCounts._1, segmentCounts._2)).map { case (m, v) =>
+      new CustomTaskMetric { def name(): String = m.name(); def value(): Long = v }
+    }
+  }
 
   private val paths = DelimV2.paths(options)
   private val delim = DelimV2.delimiter(options)
@@ -906,7 +928,7 @@ class DelimScan(
     if (completeAggRow != null) {
       // stats-answered aggregate: one partition, one precomputed row,
       // zero file opens
-      DelimV2.recordPlannedSplits(paths.mkString(","), allFiles.size, 0, 1)
+      plannedCounts = (allFiles.size, 0, 1)
       return Array(DelimConstRowPartition(completeAggRow))
     }
     val splitBytes = math.max(1L, options.getLong("splitBytes",
@@ -950,8 +972,7 @@ class DelimScan(
       }
     plannedFiles = kept.map(_.status.getPath.toString)
     val splits = makeSplits(kept, splitBytes, rootTombs, bloomCols)
-    DelimV2.recordPlannedSplits(paths.mkString(","),
-      allFiles.size, kept.size, splits.length)
+    plannedCounts = (allFiles.size, kept.size, splits.length)
     splits
   }
 
@@ -1186,6 +1207,55 @@ class DelimScan(
     }
   }
 }
+
+/** What one executed graft-delim scan decided, read back from the DSv2
+  * driver metrics on its own `BatchScanExec` node — so concurrent
+  * queries over one table each see their own numbers. Every count is
+  * zero until the plan has built its input RDD (an unexecuted plan).
+  */
+private[graft] final case class DelimScanMetrics(
+    scan: DelimScan, filesListed: Long, filesKept: Long, splits: Long,
+    segmentsIndexed: Long, segmentsLoaded: Long)
+
+private[graft] object DelimScanMetrics extends AdaptiveSparkPlanHelper {
+  /** Every graft-delim scan in `df`'s executed plan, the AQE final plan
+    * and subqueries included. Read after executing `df` itself: an
+    * action that builds its own plan (`count()`, `head()`, `as[T]`)
+    * leaves `df`'s plan unexecuted. */
+  def of(df: DataFrame): Seq[DelimScanMetrics] =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case b @ BatchScanExec(_, scan: DelimScan, _, _, _, _) =>
+        val Array(listed, kept, splits, segsIndexed, segsLoaded) =
+          scan.supportedCustomMetrics().map(m => b.metrics(m.name()).value)
+        DelimScanMetrics(scan, listed, kept, splits, segsIndexed, segsLoaded)
+    }
+
+  /** The one graft-delim scan in `df`'s executed plan. */
+  def one(df: DataFrame): DelimScanMetrics = of(df) match {
+    case Seq(m) => m
+    case ms => throw new IllegalStateException(
+      s"expected one graft-delim scan in the plan, found ${ms.size}")
+  }
+}
+
+/** A driver-side sum metric. Spark's SQL listener re-instantiates each
+  * metric class reflectively to aggregate it, so every name is its own
+  * no-argument subclass. */
+private[v2] abstract class DelimSumMetric(n: String, d: String)
+    extends CustomSumMetric {
+  override def name(): String = n
+  override def description(): String = d
+}
+private[v2] class FilesListedMetric
+    extends DelimSumMetric("filesListed", "files listed")
+private[v2] class FilesKeptMetric
+    extends DelimSumMetric("filesKept", "files kept")
+private[v2] class SplitsPlannedMetric
+    extends DelimSumMetric("splits", "splits planned")
+private[v2] class SegmentsIndexedMetric
+    extends DelimSumMetric("segmentsIndexed", "segments in the index")
+private[v2] class SegmentsLoadedMetric
+    extends DelimSumMetric("segmentsLoaded", "segments loaded")
 
 /** Pushed-COUNT(*) readers: one output row per split carrying the
   * owned-line count (Spark's partial-agg rewrite sums them).
@@ -2773,35 +2843,6 @@ private[v2] class DelimDataWriter(
 
 private[graft] object DelimV2 {
 
-  /** Test observability hook: the most recent runtime-filter set each
-    * scan TARGET (its path list) received via `filter()` (the Scan
-    * instance is buried inside adaptive query stages at execution time —
-    * this sidesteps the traversal). Keyed per target so two concurrent
-    * DPP queries over different tables cannot race each other's
-    * observation; written only on the driver (scan.filter runs
-    * driver-side before reader-factory creation).
-    */
-  private val runtimeFilterLog =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Filter]]()
-
-  // a CATALOG table's location carries the scheme (file:/... or
-  // file:///...), a path read does not — key both observability hooks
-  // scheme-free with leading slashes collapsed, so a test addresses
-  // the target the same way regardless of the front door
-  private def hookKey(pathKey: String): String = {
-    val p = pathKey.stripPrefix("file:")
-    if (p.startsWith("/")) "/" + p.dropWhile(_ == '/') else p
-  }
-
-  private[graft] def recordRuntimeFilters(pathKey: String, fs: Array[Filter]): Unit =
-    runtimeFilterLog.put(hookKey(pathKey), fs)
-
-  private[graft] def runtimeFiltersFor(pathKey: String): Array[Filter] =
-    runtimeFilterLog.getOrDefault(hookKey(pathKey), Array.empty)
-
-  private[graft] def clearRuntimeFilters(pathKey: String): Unit =
-    runtimeFilterLog.remove(hookKey(pathKey))
-
   def delimiter(options: CaseInsensitiveStringMap): Char = {
     val d = options.getOrDefault("delimiter", "|")
     require(d.length == 1, s"graft-delim: delimiter must be one char, got '$d'")
@@ -3207,10 +3248,7 @@ private[graft] object DelimV2 {
     * are the file's POSITIONAL field layout.
     */
   private[graft] final case class ManifestSchema(
-      partCols: Seq[String], struct: StructType) {
-    def dataFieldNames: Array[String] =
-      struct.fieldNames.filterNot(partCols.contains)
-  }
+      partCols: Seq[String], struct: StructType)
 
   /** The committed snapshot: file entries, the MULTILINE flag (true
     * when any live file contains quoted newlines, so readers engage
@@ -3258,12 +3296,12 @@ private[graft] object DelimV2 {
         * entries while 100 TB implies ~800k (STRESS §15). A table
         * property carried forward by every commit like `retain`. */
       segSize: Int = 0,
-      /** True when this instance was loaded with SEGMENT PRUNING
-        * (files = only the entries from the segments a scan's
-        * partition predicate kept). A pruned snapshot is a planning
-        * artifact — committing it would silently drop the
-        * pruned-away files, so commitManifest rejects it. */
-      pruned: Boolean = false,
+      /** Segments in a SEGMENTED index and how many this instance
+        * loaded (0/0 single-document). Fewer loaded = SEGMENT PRUNING
+        * (only the segments a scan's partition predicate kept): a
+        * planning artifact that commitManifest rejects, since
+        * committing it would silently drop the pruned-away files. */
+      segsIndexed: Int = 0, segsLoaded: Int = 0,
       /** Named snapshot TAGS (tag → generation): a tagged generation's
         * versioned manifest — and with it every file and segment that
         * snapshot references — is EXEMPT from retention expiry and the
@@ -3273,6 +3311,7 @@ private[graft] object DelimV2 {
         * commit like `retain`; CALL create_tag/drop_tag manage it. */
       tags: Map[String, Long] = Map.empty) {
     def entries: Seq[(Long, String)] = files.map(e => (e.len, e.rel))
+    def pruned: Boolean = segsLoaded != segsIndexed
   }
 
   /** Parse one manifest FILE (current or versioned), or None when
@@ -3301,16 +3340,6 @@ private[graft] object DelimV2 {
     new java.util.concurrent.ConcurrentHashMap[String, Seq[ManifestEntry]]()
   private val SegCacheCap = 4096
 
-  /** Observability: per table root (qualified URI path), (total
-    * segments in the index, segments actually loaded) for the most
-    * recent segmented read — the `delim_v2_manifest_segmented` oracle
-    * query's "planning reads < 20% of segments" mechanism pin.
-    */
-  private val segmentReadLog =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-  private[graft] def segmentReads(rootPath: String): Option[(Int, Int)] =
-    Option(segmentReadLog.get(rootPath))
-  private[graft] def clearSegmentReads(): Unit = segmentReadLog.clear()
   /** Drop the parsed-segment and known-on-disk caches — the stress
     * sweep's cold-path protocol (a fresh driver pays the disk parse). */
   private[graft] def clearSegCaches(): Unit = {
@@ -3457,9 +3486,6 @@ private[graft] object DelimV2 {
                 }
               }
             }
-          segmentReadLog.put(
-            fs.makeQualified(root).toUri.getPath,
-            (segRefs.size, selected.size))
           val segEntries = selected.flatMap { r =>
             val sp = new HPath(root, r.name)
             val key = fs.makeQualified(sp).toUri.toString
@@ -3479,7 +3505,8 @@ private[graft] object DelimV2 {
           }
           Some(DelimManifest(entries ++ segEntries, multi, gen, retain,
             schemas, ts, tombs, bloomCols, segSize,
-            pruned = selected.size != segRefs.size, tags = tags))
+            segsIndexed = segRefs.size, segsLoaded = selected.size,
+            tags = tags))
         }
       } finally in.close()
     }
@@ -4370,6 +4397,9 @@ private[graft] object DelimV2 {
       rootManifests: Seq[(String, DelimManifest)] = Nil) {
     def manifests: Seq[DelimManifest] = rootManifests.map(_._2)
     def unionBloomCols: Seq[String] = manifests.flatMap(_.bloomCols).distinct
+    /** (segments in the index, segments loaded), summed over roots. */
+    def segmentCounts: (Int, Int) =
+      (manifests.map(_.segsIndexed).sum, manifests.map(_.segsLoaded).sum)
     /** (root key, that root's tombstones) for roots that carry any. */
     def rootTombstones: Seq[(String, Seq[(Long, String)])] =
       rootManifests.collect {
@@ -4605,24 +4635,6 @@ private[graft] object DelimV2 {
         e.gen)
     }
   }
-
-  /** Test observability hook for FILE-level pruning, keyed per scan
-    * target like the runtime-filter log: (discovered files, files kept
-    * after static+runtime partition pruning, planned splits).
-    */
-  private val plannedSplitsLog =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int, Int)]()
-
-  private[graft] def recordPlannedSplits(
-      pathKey: String, discovered: Int, kept: Int, splits: Int): Unit =
-    plannedSplitsLog.put(hookKey(pathKey), (discovered, kept, splits))
-
-  private[graft] def plannedSplitsFor(pathKey: String): Option[(Int, Int, Int)] =
-    Option(plannedSplitsLog.get(hookKey(pathKey)))
-
-  /** Diagnostic: the hook keys currently recorded (failure messages). */
-  private[graft] def plannedSplitsKeys: Seq[String] =
-    plannedSplitsLog.keySet().asScala.toSeq.sorted
 
   private val pushableTypes: Set[DataType] =
     Set(StringType, IntegerType, LongType, DoubleType, DateType,

@@ -2,8 +2,8 @@ package graft.stream
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{
-  ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig}
+  ExpiredTimerInfo, OutputMode, StatefulProcessor, StatefulProcessorHandle,
+  TimeMode, TimerValues, TTLConfig}
 
 import SessionClose.{Closed, Event, Open}
 
@@ -21,8 +21,9 @@ import SessionClose.{Closed, Event, Open}
   *    of one opaque blob, so schema evolution is per-variable;
   *  - timeouts are first-class TIMERS (`registerTimer`/`deleteTimer`/
   *    `listTimers`), many per key if wanted, fired via
-  *    `handleExpiredTimer` when the watermark passes them — the same
-  *    floored-millisecond strict-`<` arithmetic the oracle mirrors;
+  *    `handleExpiredTimer` when the watermark reaches them — armed 1 ms
+  *    past the floored-millisecond timeout so the close matches the
+  *    strict-`<` timeout the oracle mirrors (see [[armCloseTimer]]);
   *  - the operator REQUIRES the RocksDB state store provider, so this
   *    queries riding it certify the RocksDB provider as a side effect.
   *
@@ -30,6 +31,14 @@ import SessionClose.{Closed, Event, Open}
   * timer per active user, pruned as the watermark advances.
   */
 object SessionCloseTws {
+
+  /** Arm a session's close timer 1 ms past its [[SessionClose]] timeout:
+    * that tier times out strictly below the watermark, a timer fires at
+    * or below it, so both close a session on the same watermark. */
+  private def armCloseTimer(handle: StatefulProcessorHandle, lastUs: Long,
+      gapMs: Long, timerValues: TimerValues): Unit =
+    handle.registerTimer(math.max(Math.floorDiv(lastUs, 1000L) + gapMs,
+      timerValues.getCurrentWatermarkInMs() + 1) + 1)
 
   private class SessionProcessor(gapMinutes: Int)
       extends StatefulProcessor[Long, Event, Closed] {
@@ -55,16 +64,14 @@ object SessionCloseTws {
       // superseded session end, then arm the new close time (same
       // max-guard as SessionClose — ordered sources never hit it)
       getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(math.max(
-        Math.floorDiv(s.lastUs, 1000L) + gapMs,
-        timerValues.getCurrentWatermarkInMs() + 1))
+      armCloseTimer(getHandle, s.lastUs, gapMs, timerValues)
       closed.iterator
     }
 
     override def handleExpiredTimer(
         userId: Long, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[Closed] = {
-      // watermark passed session end + gap: final emission, state freed
+      // watermark reached the close timer: final emission, state freed
       if (session.exists()) {
         val s = session.get()
         session.clear()
@@ -124,9 +131,7 @@ object SessionCloseTws {
       session.update(s)
       bump(closed.size)
       getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(math.max(
-        Math.floorDiv(s.lastUs, 1000L) + gapMs,
-        timerValues.getCurrentWatermarkInMs() + 1))
+      armCloseTimer(getHandle, s.lastUs, gapMs, timerValues)
       closed.iterator
     }
 
@@ -176,9 +181,7 @@ object SessionCloseTws {
       session.update(initial)
       // arm the snapshot session's close timer exactly as a live run
       // would have (initial watermark is 0 — the max-guard is inert)
-      getHandle.registerTimer(math.max(
-        Math.floorDiv(initial.lastUs, 1000L) + gapMs,
-        timerValues.getCurrentWatermarkInMs() + 1))
+      armCloseTimer(getHandle, initial.lastUs, gapMs, timerValues)
     }
 
     override def handleInputRows(
@@ -188,9 +191,7 @@ object SessionCloseTws {
       val (closed, s) = SessionClose.foldBatch(userId, prior, rows, gapUs)
       session.update(s)
       getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(math.max(
-        Math.floorDiv(s.lastUs, 1000L) + gapMs,
-        timerValues.getCurrentWatermarkInMs() + 1))
+      armCloseTimer(getHandle, s.lastUs, gapMs, timerValues)
       closed.iterator
     }
 

@@ -141,7 +141,7 @@ class PlanAuditSpec extends SparkFunSuite {
       // round 15: same shape against the evolving dimension (per-batch
       // snapshot as-of, exec require'd per trigger); plus the two
       // connector partition-pruning queries whose requires execute a
-      // probe/collect at construction to read the planned-splits hook
+      // probe/collect at construction to read their scans' metrics
       "asof_stream_enrich_evolving", "delim_v2_partition_prune",
       "delim_v2_partition_dpp", "delim_v2_partition_write",
       "delim_v2_partition_overwrite", "delim_v2_sql_table",

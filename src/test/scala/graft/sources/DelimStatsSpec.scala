@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
-import graft.sources.v2.DelimV2
+import graft.sources.v2.{DelimScanMetrics, DelimV2}
 
 /** Certifies manifest FILE STATS (per-column min/max/null-count,
   * recorded by the writer) and the data skipping they drive: a file
@@ -16,10 +16,11 @@ import graft.sources.v2.DelimV2
 class DelimStatsSpec extends SparkFunSuite {
   import spark.implicits._
 
-  private def keptOf(t: String): (Int, Int) = {
-    val (disc, kept, _) = DelimV2.plannedSplitsFor(t).getOrElse(
-      fail(s"no planned-splits record for $t; have ${DelimV2.plannedSplitsKeys}"))
-    (disc, kept)
+  /** (files listed, files kept) of `df`'s executed scan. */
+  private def keptOf(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val m = DelimScanMetrics.one(df)
+    assert(m.filesListed > 0, "the scan has not executed")
+    (m.filesListed, m.filesKept)
   }
 
   test("range filters skip files via min/max stats; results exact") {
@@ -36,18 +37,20 @@ class DelimStatsSpec extends SparkFunSuite {
     def q(cond: org.apache.spark.sql.Column) = spark.read.format("graft-delim")
       .schema("id BIGINT, v DOUBLE, name STRING").load(t).filter(cond)
     // a 1/8th key slice keeps ~1 file of 8
-    val hits = q($"id" >= 2000 && $"id" < 3000).collect()
+    val slice = q($"id" >= 2000 && $"id" < 3000)
+    val hits = slice.collect()
     assert(hits.length == 1000)
     assert(hits.map(_.getLong(0)).toSet == (2000L until 3000L).toSet)
-    val (disc, kept) = keptOf(t)
+    val (disc, kept) = keptOf(slice)
     assert(disc == 8 && kept <= 2, s"stats skipping missed: $disc/$kept")
     // string equality prunes too (names are clustered with ids only
     // loosely — the point is correctness stays exact whatever is kept)
     val one = q($"name" === "name-4242").collect()
     assert(one.length == 1 && one(0).getLong(0) == 4242L)
     // impossible ranges keep zero files
-    q($"id" > 1000000).collect()
-    assert(keptOf(t)._2 == 0)
+    val none = q($"id" > 1000000)
+    none.collect()
+    assert(keptOf(none)._2 == 0)
   }
 
   test("null-count stats: IsNull skips all-non-null files, IsNotNull skips all-null") {
@@ -62,10 +65,12 @@ class DelimStatsSpec extends SparkFunSuite {
       .toDF("id", "v").repartition(1)
       .write.format("graft-delim").mode("append").save(t)
     def rd = spark.read.format("graft-delim").schema("id BIGINT, v DOUBLE").load(t)
-    assert(rd.filter($"v".isNull).collect().map(_.getLong(0)).toSet == Set(3L, 4L))
-    assert(keptOf(t)._2 == 1, "IsNull should keep only the null-bearing file")
-    assert(rd.filter($"v".isNotNull).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    assert(keptOf(t)._2 == 1, "IsNotNull should keep only the non-null file")
+    val nulls = rd.filter($"v".isNull)
+    assert(nulls.collect().map(_.getLong(0)).toSet == Set(3L, 4L))
+    assert(keptOf(nulls)._2 == 1, "IsNull should keep only the null-bearing file")
+    val nonNulls = rd.filter($"v".isNotNull)
+    assert(nonNulls.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(keptOf(nonNulls)._2 == 1, "IsNotNull should keep only the non-null file")
   }
 
   test("conservatism: NaN doubles and long strings invalidate their columns only") {
@@ -109,8 +114,9 @@ class DelimStatsSpec extends SparkFunSuite {
     // the merged bound skips the compacted pc=a file for a pc=b-range key
     val rd = spark.read.format("graft-delim")
       .schema("id BIGINT, pc STRING").load(t).filter($"id" >= 1000)
-    assert(rd.count() == 100)
-    assert(keptOf(t)._2 == 1, "merged stats failed to skip the compacted file")
+      .groupBy().count()
+    assert(rd.collect().head.getLong(0) == 100)
+    assert(keptOf(rd)._2 == 1, "merged stats failed to skip the compacted file")
   }
 
   test("complete MIN/MAX/COUNT pushdown answers from the manifest, zero data reads") {
@@ -133,7 +139,7 @@ class DelimStatsSpec extends SparkFunSuite {
     val r = agg.collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getString(4), r.getString(5)) == (1L, 9L, 3L, 2L, "a", "b"))
-    val (_, kept, splits) = DelimV2.plannedSplitsFor(t).get
+    val DelimScanMetrics(_, _, kept, splits, _, _) = DelimScanMetrics.one(agg)
     assert(kept == 0 && splits == 1, s"stats agg opened files: $kept/$splits")
     // a data filter disables the complete path; the answer stays exact
     val filtered = rd.filter($"id" >= 2).agg(min($"id"), count(lit(1)))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
-import graft.sources.v2.DelimScan
+import graft.sources.v2.{DelimScan, DelimScanMetrics}
 
 /** Certifies the graft-delim DataSource V2 connector (sources/v2/DelimV2):
   * the exactly-once split contract at adversarial split sizes, schema
@@ -173,7 +173,6 @@ class DelimV2Spec extends SparkFunSuite {
     val fact = spark.read.format("graft-delim")
       .schema("k BIGINT, payload STRING").load(s"$dir/fact.txt")
     val dim = spark.read.parquet(s"$dir/dim").filter($"grp" === 3)
-    graft.sources.v2.DelimV2.clearRuntimeFilters(s"$dir/fact.txt")
     val joined = fact.join(dim, "k")
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruningexpression"),
@@ -181,7 +180,7 @@ class DelimV2Spec extends SparkFunSuite {
     val rows = joined.collect()
     // 14 surviving keys (3, 10, …, 94) × 200 fact rows each
     assert(rows.length === 14 * 200)
-    val applied = graft.sources.v2.DelimV2.runtimeFiltersFor(s"$dir/fact.txt")
+    val applied = DelimScanMetrics.one(joined).scan.runtimeAppliedFilters
     assert(applied.exists {
       case org.apache.spark.sql.sources.In("k", vs) => vs.length === 14
       case _ => false
@@ -223,14 +222,13 @@ class DelimV2Spec extends SparkFunSuite {
   test("static partition pruning drops whole files at planning") {
     val dir = tempDir("delimv2-part-static")
     writePartitioned(dir)
-    graft.sources.v2.DelimV2.recordPlannedSplits(dir, -1, -1, -1)
     val df = spark.read.format("graft-delim").schema(partSchema).load(dir)
       .filter($"region" === "east" && $"pday" === java.sql.Date.valueOf("2024-01-01"))
       .select($"k", $"v")
-    assert(df.as[(Long, Double)].collect().sorted.toSeq ===
+    assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq ===
       Seq((1L, 10.5), (2L, 20.0)))
-    val Some((discovered, kept, splits)) =
-      graft.sources.v2.DelimV2.plannedSplitsFor(dir)
+    val DelimScanMetrics(_, discovered, kept, splits, _, _) =
+      DelimScanMetrics.one(df)
     assert(discovered === 4 && kept === 1 && splits === 1,
       s"expected 4 files -> 1 kept, got ($discovered, $kept, $splits)")
   }
@@ -239,9 +237,9 @@ class DelimV2Spec extends SparkFunSuite {
     val dir = tempDir("delimv2-part-null")
     writePartitioned(dir)
     val df = spark.read.format("graft-delim").schema(partSchema).load(dir)
-      .filter($"region".isNull)
-    assert(df.select($"k").as[Long].collect().toSeq === Seq(6L))
-    val Some((_, kept, _)) = graft.sources.v2.DelimV2.plannedSplitsFor(dir)
+      .filter($"region".isNull).select($"k")
+    assert(df.collect().map(_.getLong(0)).toSeq === Seq(6L))
+    val kept = DelimScanMetrics.one(df).filesKept
     assert(kept === 1)
   }
 
@@ -261,7 +259,6 @@ class DelimV2Spec extends SparkFunSuite {
     val fact = spark.read.format("graft-delim")
       .schema("k BIGINT, v DOUBLE, region STRING").load(s"$dir/fact")
     val dim = spark.read.parquet(s"$dir/dim").filter($"grp" === "hot")
-    graft.sources.v2.DelimV2.recordPlannedSplits(s"$dir/fact", -1, -1, -1)
     val joined = fact.join(broadcast(dim), "region")
       .agg(count(lit(1)).as("n"), sum($"v").as("sv"))
     val plan = joined.queryExecution.executedPlan.toString
@@ -269,8 +266,8 @@ class DelimV2Spec extends SparkFunSuite {
       s"no runtime filter planned on the delim scan:\n$plan")
     val Array(row) = joined.collect()
     assert(row.getLong(0) === 200)
-    val Some((discovered, kept, splits)) =
-      graft.sources.v2.DelimV2.plannedSplitsFor(s"$dir/fact")
+    val DelimScanMetrics(_, discovered, kept, splits, _, _) =
+      DelimScanMetrics.one(joined)
     assert(discovered === 4 && kept === 1 && splits === 1,
       s"runtime In must prune non-matching partition FILES: " +
         s"($discovered, $kept, $splits)")
@@ -487,10 +484,10 @@ class DelimV2Spec extends SparkFunSuite {
     assert(back.count() === 300)
     assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
     // and the written layout prunes at file level like any k=v tree
-    graft.sources.v2.DelimV2.recordPlannedSplits(s"$dir/t", -1, -1, -1)
-    back.filter($"region" === "r1" && $"grp".isNull).count()
-    val Some((disc, kept, _)) =
-      graft.sources.v2.DelimV2.plannedSplitsFor(s"$dir/t")
+    val pruned = back.filter($"region" === "r1" && $"grp".isNull)
+      .groupBy().count()
+    pruned.collect()
+    val DelimScanMetrics(_, disc, kept, _, _, _) = DelimScanMetrics.one(pruned)
     assert(kept < disc, s"written partitions must prune: ($disc, $kept)")
   }
 
@@ -569,13 +566,10 @@ class DelimV2Spec extends SparkFunSuite {
         .queryExecution.executedPlan.toString
       assert(plan.contains("EqualTo(pc,g1)") &&
         plan.contains("PartitionColumns: [pc]"), plan)
-      // and the partition filter prunes at FILE level through SQL (the
-      // catalog stores the location WITH the scheme — the hook keys on
-      // the scan's own path string)
-      graft.sources.v2.DelimV2.recordPlannedSplits(s"$dir/t", -1, -1, -1)
-      spark.sql("SELECT count(*) FROM delim_spec_t WHERE pc = 'g1'").collect()
-      val Some((disc, kept, _)) =
-        graft.sources.v2.DelimV2.plannedSplitsFor(s"$dir/t")
+      // and the partition filter prunes at FILE level through SQL
+      val g1 = spark.sql("SELECT count(*) FROM delim_spec_t WHERE pc = 'g1'")
+      g1.collect()
+      val DelimScanMetrics(_, disc, kept, _, _, _) = DelimScanMetrics.one(g1)
       assert(kept < disc, s"catalog read must file-prune: ($disc, $kept)")
       // INSERT INTO appends THROUGH the partitioned sink (table-level
       // partitionBy option routes the new row into its k=v dir)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
-import graft.sources.v2.DelimV2
+import graft.sources.v2.{DelimScanMetrics, DelimV2}
 
 /** Certifies the GraftCatalog partition-DDL front door (the reference's
   * S1 surface): SHOW PARTITIONS lists the k=v directory tree,
@@ -54,10 +54,9 @@ class GraftCatalogSpec extends SparkFunSuite {
 
     // a subsequent partition-filtered scan file-prunes to the surviving
     // partition (the DDL is visible to the planner, not just the tree)
-    DelimV2.recordPlannedSplits(s"$dir/t", -1, -1, -1)
     val df = spark.table("graft_cat.default.ddl_t").filter($"pc" === "b")
     assert(df.collect().map(_.getLong(0)).toSeq === Seq(2L))
-    val (disc, kept, _) = DelimV2.plannedSplitsFor(s"$dir/t").get
+    val DelimScanMetrics(_, disc, kept, _, _, _) = DelimScanMetrics.one(df)
     assert(kept < disc && kept > 0, s"no file-level pruning: ($disc, $kept)")
   }
 

@@ -34,9 +34,6 @@ class ManifestSegmentSpec extends SparkFunSuite {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
-  private def rootKey(t: String): String =
-    fs(t).makeQualified(new HPath(t)).toUri.getPath
-
   /** 8 partitions x `appends` generations, one file per (partition,
     * append); segSize 8 so each partition's run stays one chunk. */
   private def build(t: String, appends: Int = 4): Unit = {
@@ -93,24 +90,27 @@ class ManifestSegmentSpec extends SparkFunSuite {
     build(t)
     val df = spark.read.format("graft-delim")
       .schema("id BIGINT, pc STRING").load(t)
-    DelimV2.clearSegmentReads()
-    val got = df.filter($"pc" === "p03")
-      .agg(org.apache.spark.sql.functions.sum($"id")).head.getLong(0)
+    /** `q`'s single row's first long, and its scan's segment counts. */
+    def run(q: org.apache.spark.sql.DataFrame): (Long, (Long, Long)) = {
+      val v = q.collect().head.getLong(0)
+      val m = DelimScanMetrics.one(q)
+      (v, (m.segmentsIndexed, m.segmentsLoaded))
+    }
+    val (got, (total, read)) = run(df.filter($"pc" === "p03")
+      .agg(org.apache.spark.sql.functions.sum($"id")))
     val expect = (0 until 4).flatMap(a =>
       (0 until 64).filter(_ % 8 == 3).map(i => a * 64L + i)).sum
     assert(got == expect)
-    val (total, read) = DelimV2.segmentReads(rootKey(t)).getOrElse(
-      fail("no segmented read recorded"))
     assert(total == 8, s"expected 8 segments, index has $total")
     assert(read == 1, s"pruned plan read $read of $total segments")
     // IN over two partitions reads exactly two
-    DelimV2.clearSegmentReads()
-    assert(df.filter($"pc".isin("p01", "p06")).count() == 64L)
-    assert(DelimV2.segmentReads(rootKey(t)).exists(_._2 == 2))
+    val (n2, segs2) = run(df.filter($"pc".isin("p01", "p06")).groupBy().count())
+    assert(n2 == 64L)
+    assert(segs2._2 == 2)
     // an unfiltered read loads everything
-    DelimV2.clearSegmentReads()
-    assert(df.count() == 256L)
-    assert(DelimV2.segmentReads(rootKey(t)).exists(r => r._2 == r._1))
+    val (nAll, segsAll) = run(df.groupBy().count())
+    assert(nAll == 256L)
+    assert(segsAll._1 > 0 && segsAll._2 == segsAll._1)
   }
 
   test("time travel reads an older segmented snapshot verbatim") {

@@ -22,6 +22,9 @@ class SessionCloseTwsSpec extends SparkFunSuite {
       (1L, ts(0), 1.0), (1L, ts(10), 2.0), (1L, ts(120), 4.0),
       (2L, ts(5), 8.0),
       (3L, ts(0), 16.0), (3L, ts(30), 32.0),
+      // session end + gap = 540 min = the final watermark (600 min - 1 h):
+      // flatMapGroupsWithState's strict `<` keeps it open, so must tws
+      (4L, ts(510), 128.0),
       (99L, ts(600), 64.0))
     val df = rows.toDF("user_id", "ts", "value")
     val root = java.nio.file.Files.createTempDirectory("session_tws").toString
