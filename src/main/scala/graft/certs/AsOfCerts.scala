@@ -509,9 +509,8 @@ object AsOfCerts {
         .select(col("o_custkey"), col("o_orderdate"),
           col("o_orderdate").as("matched_order_date"))
       val batchesWithAsOf = new java.util.concurrent.atomic.AtomicInteger
-      val (result, stats) = StreamRun.runAvailableNowSummarized(
-        src, s"$out/run",
-        batch => {
+      val (result, stats) = StreamRun.runAvailableNow(
+        src, s"$out/run", StreamRun.Sink.PerBatch { (batch, _) =>
           val enriched = plans.AsOfJoinNative.join(
               batch.select("event_id", "user_id", "ts"), dim,
               "user_id", "o_custkey", "ts", "o_orderdate",
@@ -606,9 +605,8 @@ object AsOfCerts {
         pmod(col("o_orderkey"), lit(nChunks.toLong)).as("gen"))
       val batchesWithAsOf = new java.util.concurrent.atomic.AtomicInteger
       val seenBatches = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-      val (result, stats) = StreamRun.runAvailableNowSummarizedById(
-        src, s"$out/run",
-        (batch, id) => {
+      val (result, stats) = StreamRun.runAvailableNow(
+        src, s"$out/run", StreamRun.Sink.PerBatch { (batch, id) =>
           seenBatches.add(id)
           // the snapshot: generations landed before this trigger
           val snap = dim.filter(col("gen") <= lit(id)).drop("gen")

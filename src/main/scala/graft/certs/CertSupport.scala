@@ -2,6 +2,7 @@ package graft
 package certs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, max, min}
 
 import graft.core.Tables
 import graft.stream.StreamRun
@@ -59,6 +60,17 @@ object CertSupport {
   private[graft] def eventsChunks(s: SparkSession, dir: String): DataFrame =
     StreamRun.chunkedSource(s, Tables.events(s, dir),
       s"${scratchDir("stream_src")}/events-4-${dir.replaceAll("[^A-Za-z0-9.]", "_")}", 4)
+
+  /** `ev` split at the midpoint of its `ts` range into the rows before
+    * it and the rest: the two phases of the stop/restart and bootstrap
+    * scenarios.
+    */
+  private[graft] def splitAtMidpoint(ev: DataFrame): (DataFrame, DataFrame) = {
+    val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
+    val mid = new java.sql.Timestamp(
+      (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
+    (ev.filter(col("ts") < lit(mid)), ev.filter(col("ts") >= lit(mid)))
+  }
 
   /** The natural point-in-interval SQL — ONE text, run verbatim by BOTH
     * engines (only the event-table name differs): Spark executes it via

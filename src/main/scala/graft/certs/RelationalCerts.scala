@@ -833,9 +833,9 @@ object RelationalCerts {
       val ev = Tables.events(s, dir)
       val src = StreamRun.chunkedSource(s, ev,
         s"$out/src-${dir.replaceAll("[^A-Za-z0-9.]", "_")}", 4)
-      val (shards, stats) = StreamRun.runAvailableNowSummarized(src,
-        s"$out/run",
-        b => b.agg(CmsSketch.buildLong(col("user_id")).as("sk")))
+      val (shards, stats) = StreamRun.runAvailableNow(src, s"$out/run",
+        StreamRun.Sink.PerBatch((b, _) =>
+          b.agg(CmsSketch.buildLong(col("user_id")).as("sk"))))
       require(stats.count(_.inputRows > 0) == 4,
         s"the backlog must stream as 4 data triggers: $stats")
       require(shards.count() == 4L, "one shard sketch per data trigger")

@@ -8,6 +8,7 @@ import graft.core.Tables
 import graft.ext.Funnel
 import graft.stream.{EventWindows, SessionClose, SessionCloseTws,
   SessionTracker, StreamRun, StreamingReconcile, UserProfileTws}
+import graft.stream.StreamRun.Sink
 
 import CertSupport._
 
@@ -161,9 +162,9 @@ object StreamCerts {
       val ev = src.select(col("user_id"), col("ts"), col("value"))
         .withWatermark("ts", "1 hour")
         .as[SessionClose.Event]
-      val (res, stats) = StreamRun.runAvailableNowUpdateObserved(
+      val (res, stats) = StreamRun.runAvailableNow(
         SessionClose.close(ev, gapMinutes = 30).toDF(),
-        s"$out/run", noDataBatch = true)
+        s"$out/run", Sink.Update, noDataBatch = true)
       val last = stats.last
       require(last.inputRows == 0L,
         s"final trigger must be the engine's no-data batch: $stats")
@@ -187,9 +188,9 @@ object StreamCerts {
         .withWatermark("ts", "1 hour")
         .as[SessionClose.Event]
       ensureRocksDb(s)
-      val (res, stats) = StreamRun.runAvailableNowUpdateObserved(
+      val (res, stats) = StreamRun.runAvailableNow(
         SessionCloseTws.close(ev, gapMinutes = 30).toDF(),
-        s"$out/run", noDataBatch = true)
+        s"$out/run", Sink.Update, noDataBatch = true)
       val last = stats.last
       require(last.inputRows == 0L,
         s"final trigger must be the engine's no-data batch: $stats")
@@ -216,18 +217,16 @@ object StreamCerts {
       // registered timers were restored from the checkpoint
       sessionCloseOracle("WHERE user_id < 150"), stream = true) { (s, dir, out) =>
       val ev = Tables.events(s, dir).filter(col("user_id") < 150)
-      val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
-      val mid = new java.sql.Timestamp(
-        (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
+      val (early, late) = splitAtMidpoint(ev)
       import s.implicits._
       ensureRocksDb(s)
-      val (res, _, run2) = StreamRun.runRestartUpdateObserved(
-        ev.filter(col("ts") < lit(mid)), ev.filter(col("ts") >= lit(mid)),
+      val (res, _, run2) = StreamRun.runRestart(
+        early, late,
         src => SessionCloseTws.close(
           src.select(col("user_id"), col("ts"), col("value"))
             .withWatermark("ts", "1 hour")
             .as[SessionClose.Event], gapMinutes = 30).toDF(),
-        s"$out/run")
+        s"$out/run", Sink.Update)
       require(run2.last.inputRows == 0L,
         s"run 2 must end in a no-data batch firing recovered timers: $run2")
       res.drop("batch_id")
@@ -238,7 +237,7 @@ object StreamCerts {
     // to local disk with incremental checkpointing and is the provider
     // a production deployment of every stateful query here would run.
     // Same scenario and invariants as events_restart_stream
-    // (runRestartObserved `require`s resumed batch numbering +
+    // (runRestart `require`s resumed batch numbering +
     // late-files-only reads; the oracle certifies the restored-state
     // aggregation), on the user_id<150 bench-cost prefix — which at the
     // sf0.01 correctness gate is the whole table.
@@ -250,14 +249,12 @@ object StreamCerts {
         |       event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
         |FROM events WHERE user_id < 150 GROUP BY 1, 2""".stripMargin, stream = true) { (s, dir, out) =>
       val ev = Tables.events(s, dir).filter(col("user_id") < 150)
-      val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
-      val mid = new java.sql.Timestamp(
-        (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
+      val (early, late) = splitAtMidpoint(ev)
       ensureRocksDb(s)
-      val (result, _, _) = StreamRun.runRestartObserved(
-        ev.filter(col("ts") < lit(mid)), ev.filter(col("ts") >= lit(mid)),
+      val (result, _, _) = StreamRun.runRestart(
+        early, late,
         src => EventWindows.tumblingStream(src, "1 hour", "1 hour"),
-        s"$out/run")
+        s"$out/run", Sink.Complete)
       result
     },
     // X6 observability — the WATERMARK LATE-DATA drop audit (the
@@ -301,9 +298,9 @@ object StreamCerts {
       // certified output are chunk-count-invariant
       val src = StreamRun.chunkedSourceWithLate(
         s, ev.filter(!isLate), ev.filter(isLate), s"$out/src", 2)
-      val (streamed, stats) = StreamRun.runAvailableNowObserved(
+      val (streamed, stats) = StreamRun.runAvailableNow(
         EventWindows.tumblingStream(src, "1 hour", "1 hour"),
-        s"$out/run", complete = false)
+        s"$out/run", Sink.Append)
       val nLate = ev.filter(isLate).count()
       require(nLate > 0, "fixture must yield displaced rows for the audit")
       // numRowsDroppedByWatermark counts rows reaching the STATE
@@ -378,7 +375,7 @@ object StreamCerts {
             .agg(count(lit(1)).as("n_users"))
             .select(col("window.start").as("window_start"),
               col("event_type"), col("n_users")),
-          s"$out/run", complete = false)
+          s"$out/run", Sink.Append)._1
     },
     // X6, stream-stream LEFT OUTER interval join EXECUTED BY THE
     // ENGINE — the join form where the WATERMARK ITSELF produces rows:
@@ -436,8 +433,8 @@ object StreamCerts {
       val joined = EventWindows.correlateStreamsOuter(
         src(), src().filter(col("event_type") === "purchase"),
         "user_id", "10 MINUTES", "1 minute")
-      StreamRun.runAvailableNow(joined, s"$out/run", complete = false,
-          noDataBatch = true)
+      StreamRun.runAvailableNow(joined, s"$out/run", Sink.Append,
+          noDataBatch = true)._1
         .groupBy(col("type_left"),
           coalesce(col("type_right"), lit("__unmatched")).as("type_right"))
         .agg(count(lit(1)).as("n_pairs"))
@@ -517,9 +514,9 @@ object StreamCerts {
         .withWatermark("ts", "1 hour")
         .as[SessionClose.Event]
       ensureRocksDb(s)
-      StreamRun.runAvailableNowUpdate(
+      StreamRun.runAvailableNow(
         SessionCloseTws.close(ev, gapMinutes = 30).toDF(),
-        s"$out/run", noDataBatch = true)
+        s"$out/run", Sink.Update, noDataBatch = true)
       s.read.format("statestore")
         .option("stateVarName", "session")
         .load(s"$out/run/ckpt")
@@ -546,20 +543,18 @@ object StreamCerts {
       // the evolved restart must still produce the single-run answer
       sessionCloseOracle("WHERE user_id < 150"), stream = true) { (s, dir, out) =>
       val ev = Tables.events(s, dir).filter(col("user_id") < 150)
-      val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
-      val mid = new java.sql.Timestamp(
-        (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
+      val (early, late) = splitAtMidpoint(ev)
       import s.implicits._
       ensureRocksDb(s)
       def toTyped(src: DataFrame) =
         src.select(col("user_id"), col("ts"), col("value"))
           .withWatermark("ts", "1 hour").as[SessionClose.Event]
-      val (res, _, run2) = StreamRun.runRestartUpdateObserved(
-        ev.filter(col("ts") < lit(mid)), ev.filter(col("ts") >= lit(mid)),
+      val (res, _, run2) = StreamRun.runRestart(
+        early, late,
         src => SessionCloseTws.close(toTyped(src), gapMinutes = 30).toDF(),
-        s"$out/run",
-        restartTransform =
-          src => SessionCloseTws.closeEvolved(toTyped(src), gapMinutes = 30).toDF())
+        s"$out/run", Sink.Update,
+        restartTransform = Some(
+          src => SessionCloseTws.closeEvolved(toTyped(src), gapMinutes = 30).toDF()))
       val run2Emissions = res.filter(
         col("batch_id").isInCollection(run2.map(_.batchId))).count()
       val exportedClosed = s.read.format("statestore")
@@ -587,8 +582,8 @@ object StreamCerts {
       val ev = src.select(col("user_id"), col("event_type"), col("value"),
           col("event_id")).as[UserProfileTws.Event]
       ensureRocksDb(s)
-      StreamRun.runAvailableNowUpdate(
-        UserProfileTws.profiles(ev).toDF(), s"$out/run")
+      StreamRun.runAvailableNow(
+        UserProfileTws.profiles(ev).toDF(), s"$out/run", Sink.Update)
       def stateVar(name: String) = s.read.format("statestore")
         .option("stateVarName", name).load(s"$out/run/ckpt")
       val fromMap = stateVar("typeCounts")
@@ -627,15 +622,13 @@ object StreamCerts {
       sessionCloseOracle("WHERE user_id < 150"), stream = true) { (s, dir, out) =>
       import s.implicits._
       val ev = Tables.events(s, dir).filter(col("user_id") < 150)
-      val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
-      val mid = new java.sql.Timestamp(
-        (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
+      val (early, late) = splitAtMidpoint(ev)
       val gapUs = 30L * 60L * 1000000L
       // batch sessionization of the history half, in the same µs
       // arithmetic as the streaming fold
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("us")
-      val sess = ev.filter(col("ts") < lit(mid))
+      val sess = early
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("new_s",
           when(lag("us", 1).over(w).isNull ||
@@ -658,13 +651,13 @@ object StreamCerts {
         .map { case (u, st, la, n, sv) =>
           (u, SessionClose.Open(st, la, n, sv)) }
       ensureRocksDb(s)
-      val src = StreamRun.chunkedSource(s, ev.filter(col("ts") >= lit(mid)),
+      val src = StreamRun.chunkedSource(s, late,
         s"$out/src-${dir.replaceAll("[^A-Za-z0-9.]", "_")}", 4)
       val evS = src.select(col("user_id"), col("ts"), col("value"))
         .withWatermark("ts", "1 hour").as[SessionClose.Event]
-      val streamed = StreamRun.runAvailableNowUpdate(
+      val streamed = StreamRun.runAvailableNow(
         SessionCloseTws.closeWithBootstrap(evS, open, gapMinutes = 30).toDF(),
-        s"$out/run", noDataBatch = true)
+        s"$out/run", Sink.Update, noDataBatch = true)._1
         .drop("batch_id")
       closedBatch.unionByName(streamed)
     },
@@ -690,8 +683,8 @@ object StreamCerts {
       val ev = src.select(col("user_id"), col("event_type"), col("value"),
           col("event_id")).as[UserProfileTws.Event]
       ensureRocksDb(s)
-      StreamRun.runAvailableNowUpdate(
-          UserProfileTws.profiles(ev).toDF(), s"$out/run")
+      StreamRun.runAvailableNow(
+          UserProfileTws.profiles(ev).toDF(), s"$out/run", Sink.Update)._1
         .groupBy(col("user_id"))
         .agg(max_by(
           struct(col("n_events"), col("n_types"), col("top3_sum"),
@@ -760,8 +753,8 @@ object StreamCerts {
         s"$out/src-$t-${dir.replaceAll("[^A-Za-z0-9.]", "_")}", 2)
       val joined = EventWindows.correlateStreamsFull(
         src("click"), src("purchase"), "user_id", "10 MINUTES", "1 minute")
-      StreamRun.runAvailableNow(joined, s"$out/run", complete = false,
-          noDataBatch = true)
+      StreamRun.runAvailableNow(joined, s"$out/run", Sink.Append,
+          noDataBatch = true)._1
         .groupBy(coalesce(col("type_left"), lit("__none")).as("type_left"),
           coalesce(col("type_right"), lit("__none")).as("type_right"))
         .agg(count(lit(1)).as("n_pairs"))
@@ -793,8 +786,7 @@ object StreamCerts {
         s, ev, ev.filter(isReplayed), s"$out/src", 4)
       val dd = src.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
-      val (res, stats) = StreamRun.runAvailableNowObserved(
-        dd, s"$out/run", complete = false)
+      val (res, stats) = StreamRun.runAvailableNow(dd, s"$out/run", Sink.Append)
       val nReplay = ev.filter(isReplayed).count()
       require(nReplay > 0, "fixture must yield replayed rows for the audit")
       require(stats.map(_.rowsRemoved).sum > 0,
@@ -849,8 +841,7 @@ object StreamCerts {
         s"$out/srcR-${dir.replaceAll("[^A-Za-z0-9.]", "_")}", 2)
       val joined = EventWindows.correlateStreams(
         left, right, "user_id", "10 MINUTES", "1 minute")
-      val (res, stats) = StreamRun.runAvailableNowObserved(
-        joined, s"$out/run", complete = false)
+      val (res, stats) = StreamRun.runAvailableNow(joined, s"$out/run", Sink.Append)
       val nLate = ev.filter(isLate).count()
       require(nLate > 0, "fixture must yield displaced lefts for the audit")
       val dropped = stats.map(_.rowsDroppedByWatermark).sum
@@ -1077,7 +1068,7 @@ object StreamCerts {
       val src = eventsChunks(s, dir)
       StreamRun.runAvailableNow(
         EventWindows.tumblingStream(src, "1 hour", "1 hour"),
-        s"$out/run", complete = true)
+        s"$out/run", Sink.Complete)._1
     },
     // X6, append mode — the variant that certifies WATERMARK EVICTION
     // under the oracle: each trigger emits only the windows the advancing
@@ -1098,7 +1089,7 @@ object StreamCerts {
       val src = eventsChunks(s, dir)
       StreamRun.runAvailableNow(
         EventWindows.tumblingStream(src, "1 hour", "1 hour"),
-        s"$out/run", complete = false)
+        s"$out/run", Sink.Append)._1
     },
     // X6, session windows EXECUTED BY THE STREAMING ENGINE: unlike
     // tumbling windows, session state MERGES across micro-batches (a
@@ -1113,7 +1104,7 @@ object StreamCerts {
       val src = eventsChunks(s, dir)
       StreamRun.runAvailableNow(
         EventWindows.sessionsStream(src, "30 minutes", "1 hour"),
-        s"$out/run", complete = true)
+        s"$out/run", Sink.Complete)._1
     },
     // X6, stream-STREAM interval join EXECUTED BY THE STREAMING ENGINE —
     // the hardest stateful path X6 has (two buffered sides, state
@@ -1157,8 +1148,8 @@ object StreamCerts {
         src(), src(), "user_id", "10 MINUTES", "1 minute")
       // inner joins emit eagerly in the data batch — the trailing
       // no-data batch would only evict state, so it is skipped
-      StreamRun.runAvailableNow(joined, s"$out/run", complete = false,
-          noDataBatch = false)
+      StreamRun.runAvailableNow(joined, s"$out/run", Sink.Append,
+          noDataBatch = false)._1
         .groupBy(col("type_left"), col("type_right"))
         .agg(count(lit(1)).as("n_pairs"))
     },
@@ -1184,7 +1175,7 @@ object StreamCerts {
       // trailing no-data batch only evicts state, so it is skipped
       StreamRun.runAvailableNow(
           EventWindows.dedupStream(src, Seq("user_id", "event_type"), "1 hour"),
-          s"$out/run", complete = false, noDataBatch = false)
+          s"$out/run", Sink.Append, noDataBatch = false)._1
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).as("n_emits"))
         .select(col("user_id"), col("event_type"),
@@ -1205,8 +1196,9 @@ object StreamCerts {
       """SELECT event_type, count(*) AS cnt, true AS updates_bounded
         |FROM events GROUP BY 1""".stripMargin, stream = true) { (s, dir, out) =>
       val src = eventsChunks(s, dir)
-      StreamRun.runAvailableNowUpdate(
-          StreamingReconcile.runningCounts(src, "event_type"), s"$out/run")
+      StreamRun.runAvailableNow(
+          StreamingReconcile.runningCounts(src, "event_type"), s"$out/run",
+          Sink.Update)._1
         .groupBy(col("event_type"))
         .agg(max_by(col("cnt"), col("batch_id")).as("cnt"),
           count(lit(1)).as("n_updates"))
@@ -1234,7 +1226,7 @@ object StreamCerts {
       val tracked = SessionTracker.track(s,
         src.select(col("user_id"), col("ts"), col("value"))
           .as[SessionTracker.Event]).toDF()
-      StreamRun.runAvailableNowUpdate(tracked, s"$out/run")
+      StreamRun.runAvailableNow(tracked, s"$out/run", Sink.Update)._1
         .groupBy(col("user_id"))
         .agg(max_by(
           struct(col("n_events"), col("total_value"), col("last_ts")),
@@ -1256,12 +1248,12 @@ object StreamCerts {
       val src = eventsChunks(s, dir)
       StreamRun.runAvailableNow(
         EventWindows.slidingStream(src, "1 hour", "30 minutes", "1 hour"),
-        s"$out/run", complete = true)
+        s"$out/run", Sink.Complete)._1
     },
     // X6, stop/restart RECOVERY executed by the streaming engine: drain
     // the first half of the events (split at the midpoint timestamp) to
     // completion, stop, land the second half as new files, restart
-    // against the SAME checkpoint. runRestartObserved `require`s the
+    // against the SAME checkpoint. runRestart `require`s the
     // engine-level invariants (batch numbering resumes, only the late
     // files are read); the oracle certifies the result: the final
     // complete-mode emission must equal the batch aggregation over the
@@ -1276,13 +1268,11 @@ object StreamCerts {
       // restored across the stop/restart boundary included
       TumblingOracle, stream = true) { (s, dir, out) =>
       val ev = Tables.events(s, dir)
-      val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
-      val mid = new java.sql.Timestamp(
-        (bounds.getTimestamp(0).getTime + bounds.getTimestamp(1).getTime) / 2)
-      val (result, _, _) = StreamRun.runRestartObserved(
-        ev.filter(col("ts") < lit(mid)), ev.filter(col("ts") >= lit(mid)),
+      val (early, late) = splitAtMidpoint(ev)
+      val (result, _, _) = StreamRun.runRestart(
+        early, late,
         src => EventWindows.tumblingStream(src, "1 hour", "1 hour"),
-        s"$out/run")
+        s"$out/run", Sink.Complete)
       result
     },
     // X6, stream-STATIC broadcast enrichment EXECUTED BY THE STREAMING
@@ -1314,7 +1304,7 @@ object StreamCerts {
       val dim = Tables.customer(s, dir).select(col("c_custkey"), col("c_mktsegment"))
       StreamRun.runAvailableNow(
           EventWindows.enrichStream(src, dim, "user_id", "c_custkey"),
-          s"$out/run", complete = false)
+          s"$out/run", Sink.Append)._1
         .groupBy(col("c_mktsegment"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(floor(col("value") * 100 + lit(0.5)).cast("long")).as("sum_cents"))

@@ -102,9 +102,9 @@ object ClusterChaos {
       // executor halts — the guard file makes it exactly once overall
       killOnce(marker2, driverPid); it
     }(org.apache.spark.sql.Encoders.row(src.schema))
-    val got = graft.stream.StreamRun.runAvailableNow(
+    val (got, _) = graft.stream.StreamRun.runAvailableNow(
       graft.stream.EventWindows.tumblingStream(armed, "1 hour", "1 hour"),
-      s"$root/run", complete = true)
+      s"$root/run", graft.stream.StreamRun.Sink.Complete)
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(marker2)),
       "the streaming chaos task never ran")
     val want = graft.stream.EventWindows.tumbling(ev, "1 hour")

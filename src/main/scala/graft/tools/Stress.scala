@@ -88,6 +88,34 @@ object Stress {
         f"max_task_s=${acc.maxTaskMs / 1e3}%.1f|$extra")
     }
 
+    // One stream-stream interval join over `ev` in `chunks` chunks, with
+    // the progress-trail evidence the amp and chunks sweeps report.
+    def intervalJoinRun(ev: DataFrame, root: String, chunks: Int): (Long, String) = {
+      def src() = StreamRun.chunkedSource(spark, ev, s"$root/src", chunks)
+      val (res, st) = StreamRun.runAvailableNow(
+        EventWindows.correlateStreams(
+          src(), src(), "user_id", "10 MINUTES", "1 minute"),
+        s"$root/run", StreamRun.Sink.Append)
+      val maxState = if (st.isEmpty) 0L else st.map(_.stateRows).max
+      (res.count(),
+        s"triggers=${st.length}|max_state_rows=$maxState|" +
+          s"rows_removed=${st.map(_.rowsRemoved).sum}|" +
+          s"streamed_rows=${st.map(_.inputRows).sum}")
+    }
+
+    // The EventTimeTimeout session machine over `ev` in 8 chunks,
+    // trailing no-data batch included (it fires the final timeouts).
+    def sessionCloseRun(ev: DataFrame, root: String) = {
+      import spark.implicits._
+      val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 8)
+      StreamRun.runAvailableNow(
+        graft.stream.SessionClose.close(
+          src.select(col("user_id"), col("ts"), col("value"))
+            .withWatermark("ts", "1 hour")
+            .as[graft.stream.SessionClose.Event], gapMinutes = 30).toDF(),
+        s"$root/run", StreamRun.Sink.Update, noDataBatch = true)
+    }
+
     val lshParams = Dedup.MinHashParams(
       numBands = 16, rowsPerBand = 2, bruteForceMaxDocs = 0L)
 
@@ -164,18 +192,8 @@ object Stress {
         // records chunk count + ts dtype, so an amp-only key would serve
         // a DIFFERENT sf dir's stale layout (observed: an sf0.01 run
         // reused the previous sf0.1 sweep's chunks)
-        val root = s"${graft.certs.CertSupport.scratchDir("stress_stream")}/amp$amp-$sfKey"
-        def src() = StreamRun.chunkedSource(spark, evA, s"$root/src", 8)
-        val (res, st) = StreamRun.runAvailableNowObserved(
-          EventWindows.correlateStreams(
-            src(), src(), "user_id", "10 MINUTES", "1 minute"),
-          s"$root/run", complete = false)
-        val n = res.count()
-        val maxState = if (st.isEmpty) 0L else st.map(_.stateRows).max
-        (n,
-          s"triggers=${st.length}|max_state_rows=$maxState|" +
-            s"rows_removed=${st.map(_.rowsRemoved).sum}|" +
-            s"streamed_rows=${st.map(_.inputRows).sum}")
+        intervalJoinRun(evA,
+          s"${graft.certs.CertSupport.scratchDir("stress_stream")}/amp$amp-$sfKey", 8)
       }
     }
 
@@ -189,18 +207,10 @@ object Stress {
     // must drain every closed session (rows_removed ≈ state churn).
     // Emissions scale ×amp with the user population.
     for (amp <- amps if sections("sessions")) {
-      import spark.implicits._
       val evA = Amplify.events(ev0, amp)
       run("session_close_stream", amp, ev0.count() * amp) {
-        val root =
-          s"${graft.certs.CertSupport.scratchDir("stress_sessions")}/amp$amp-$sfKey"
-        val src = StreamRun.chunkedSource(spark, evA, s"$root/src", 8)
-        val ev = src.select(col("user_id"), col("ts"), col("value"))
-          .withWatermark("ts", "1 hour")
-          .as[graft.stream.SessionClose.Event]
-        val (res, st) = StreamRun.runAvailableNowUpdateObserved(
-          graft.stream.SessionClose.close(ev, gapMinutes = 30).toDF(),
-          s"$root/run", noDataBatch = true)
+        val (res, st) = sessionCloseRun(evA,
+          s"${graft.certs.CertSupport.scratchDir("stress_sessions")}/amp$amp-$sfKey")
         val n = res.count()
         val maxState = if (st.isEmpty) 0L else st.map(_.stateRows).max
         (n,
@@ -220,18 +230,10 @@ object Stress {
     // uniform session sweep's is the measured ceiling; hot_rows is the
     // concentration actually delivered.
     for (amp <- amps if sections("hotkey")) {
-      import spark.implicits._
       val evA = Amplify.eventsHotKey(ev0, amp, hotPermille = 10)
       run("session_close_hotkey", amp, ev0.count() * amp) {
-        val root =
-          s"${graft.certs.CertSupport.scratchDir("stress_hotkey")}/amp$amp-$sfKey"
-        val src = StreamRun.chunkedSource(spark, evA, s"$root/src", 8)
-        val ev = src.select(col("user_id"), col("ts"), col("value"))
-          .withWatermark("ts", "1 hour")
-          .as[graft.stream.SessionClose.Event]
-        val (res, st) = StreamRun.runAvailableNowUpdateObserved(
-          graft.stream.SessionClose.close(ev, gapMinutes = 30).toDF(),
-          s"$root/run", noDataBatch = true)
+        val (res, st) = sessionCloseRun(evA,
+          s"${graft.certs.CertSupport.scratchDir("stress_hotkey")}/amp$amp-$sfKey")
         val n = res.count()
         val hotRows = evA.filter(col("user_id") === -1L).count()
         val maxState = if (st.isEmpty) 0L else st.map(_.stateRows).max
@@ -728,18 +730,9 @@ object Stress {
     lazy val evS = Amplify.events(ev0, amps.max)
     for (chunks <- Seq(4, 8, 16) if sections("chunks")) {
       run(s"stream_interval_join_chunks$chunks", amps.max, ev0.count() * amps.max) {
-        val root = s"${graft.certs.CertSupport.scratchDir("stress_stream")}/ch$chunks-amp${amps.max}-$sfKey"
-        def src() = StreamRun.chunkedSource(spark, evS, s"$root/src", chunks)
-        val (res, st) = StreamRun.runAvailableNowObserved(
-          EventWindows.correlateStreams(
-            src(), src(), "user_id", "10 MINUTES", "1 minute"),
-          s"$root/run", complete = false)
-        val n = res.count()
-        val maxState = if (st.isEmpty) 0L else st.map(_.stateRows).max
-        (n,
-          s"triggers=${st.length}|max_state_rows=$maxState|" +
-            s"rows_removed=${st.map(_.rowsRemoved).sum}|" +
-            s"streamed_rows=${st.map(_.inputRows).sum}")
+        intervalJoinRun(evS,
+          s"${graft.certs.CertSupport.scratchDir("stress_stream")}/ch$chunks-amp${amps.max}-$sfKey",
+          chunks)
       }
     }
 

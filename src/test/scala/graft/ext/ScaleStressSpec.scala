@@ -63,9 +63,9 @@ class ScaleStressSpec extends SparkFunSuite {
     val ev = Amplify.events(Tables.events(spark, sf001), 4)
     val root = java.nio.file.Files.createTempDirectory("stress_stream").toString
     def src() = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
-    val (res, st) = StreamRun.runAvailableNowObserved(
+    val (res, st) = StreamRun.runAvailableNow(
       EventWindows.correlateStreams(src(), src(), "user_id", "10 MINUTES", "1 minute"),
-      s"$root/run", complete = false)
+      s"$root/run", StreamRun.Sink.Append)
     assert(res.count() > 0)
     val streamed = st.map(_.inputRows).sum
     val maxState = st.map(_.stateRows).max

@@ -34,8 +34,8 @@ class SessionCloseTwsSpec extends SparkFunSuite {
       val ev = src.withWatermark("ts", "1 hour").as[SessionClose.Event]
       val closed =
         if (variant == "tws") SessionCloseTws.close(ev, 30) else SessionClose.close(ev, 30)
-      StreamRun.runAvailableNowUpdate(closed.toDF(), s"$root/run-$variant",
-          noDataBatch = true)
+      StreamRun.runAvailableNow(closed.toDF(), s"$root/run-$variant",
+          StreamRun.Sink.Update, noDataBatch = true)._1
         .select("user_id", "session_start", "n_events", "sum_value")
         .collect()
         .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))

@@ -33,12 +33,12 @@ class SessionRestartSpec extends SparkFunSuite {
     val root = java.nio.file.Files.createTempDirectory("session_restart").toString
 
     val (res, run1, run2) = withRocksDb {
-      StreamRun.runRestartUpdateObserved(
+      StreamRun.runRestart(
         early, late,
         src => SessionCloseTws.close(
           src.withWatermark("ts", "1 hour").as[SessionClose.Event],
           gapMinutes = 30).toDF(),
-        s"$root/run", chunksPerPhase = 1)
+        s"$root/run", StreamRun.Sink.Update, chunksPerPhase = 1)
     }
 
     val got = res.select("user_id", "session_start", "n_events", "sum_value")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
 import graft.core.Tables
+import graft.stream.StreamRun.Sink
 
 /** Bounded micro-batch executions (StreamRun): the streaming engine must
   * reproduce the batch aggregation (complete mode), honor watermark
@@ -25,7 +26,7 @@ class StreamRunSpec extends SparkFunSuite {
     val root = tmp("streamrun_c")
     val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
     val got = StreamRun.runAvailableNow(
-      EventWindows.tumblingStream(src, "1 hour", "1 hour"), s"$root/run", complete = true)
+      EventWindows.tumblingStream(src, "1 hour", "1 hour"), s"$root/run", Sink.Complete)._1
     val want = EventWindows.tumbling(ev, "1 hour")
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
     assert(got.count() == want.count())
@@ -36,7 +37,7 @@ class StreamRunSpec extends SparkFunSuite {
     val root = tmp("streamrun_a")
     val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
     val got = StreamRun.runAvailableNow(
-      EventWindows.tumblingStream(src, "1 hour", "1 hour"), s"$root/run", complete = false)
+      EventWindows.tumblingStream(src, "1 hour", "1 hour"), s"$root/run", Sink.Append)._1
     val wm = new Timestamp(
       ev.agg(max(col("ts"))).head.getTimestamp(0).getTime - 3600 * 1000L)
     val want = EventWindows.tumbling(ev, "1 hour")
@@ -60,7 +61,7 @@ class StreamRunSpec extends SparkFunSuite {
     val root = tmp("streamrun_b")
     val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 2)
     val got = StreamRun.runAvailableNow(
-      EventWindows.tumblingStream(src, "1 hour", "1 hour"), s"$root/run", complete = false)
+      EventWindows.tumblingStream(src, "1 hour", "1 hour"), s"$root/run", Sink.Append)._1
     val starts = got.select(col("window_start").cast("string")).as[String].collect().toSet
     assert(starts.contains("2024-01-01 02:00:00"), s"boundary window missing: $starts")
     assert(!starts.contains("2024-01-01 03:00:00"), s"unfinalized window emitted: $starts")
@@ -83,7 +84,7 @@ class StreamRunSpec extends SparkFunSuite {
     val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 2)
     val got = StreamRun.runAvailableNow(
       EventWindows.sessionsStream(src, "30 minutes", "1 hour"),
-      s"$root/run", complete = true).collect()
+      s"$root/run", Sink.Complete)._1.collect()
     assert(got.length == 1, s"expected one merged session, got ${got.toSeq}")
     assert(got(0).getAs[Long]("n_events") == 4L)
   }
@@ -92,8 +93,8 @@ class StreamRunSpec extends SparkFunSuite {
     val ev = Tables.events(spark, sf001)
     val root = tmp("streamrun_u")
     val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
-    val log = StreamRun.runAvailableNowUpdate(
-      StreamingReconcile.runningCounts(src, "event_type"), s"$root/run")
+    val (log, _) = StreamRun.runAvailableNow(
+      StreamingReconcile.runningCounts(src, "event_type"), s"$root/run", Sink.Update)
     // a group updates at most once per trigger
     val perBatch = log.groupBy(col("event_type"), col("batch_id"))
       .agg(count(lit(1)).as("n")).agg(max(col("n"))).head.getLong(0)
@@ -127,7 +128,7 @@ class StreamRunSpec extends SparkFunSuite {
     val tracked = SessionTracker.track(spark,
       src.select(col("user_id"), col("ts"), col("value"))
         .as[SessionTracker.Event]).toDF()
-    val log = StreamRun.runAvailableNowUpdate(tracked, s"$root/run")
+    val (log, _) = StreamRun.runAvailableNow(tracked, s"$root/run", Sink.Update)
     // one emission per batch the user appeared in, monotone n_events
     assert(log.count() == 4)
     val ns = log.orderBy(col("batch_id")).select(col("n_events"))
@@ -139,7 +140,7 @@ class StreamRunSpec extends SparkFunSuite {
   }
 
   test("update-mode no-data batch is result-neutral for NoTimeout state") {
-    // the documented contract behind runAvailableNowUpdate's default:
+    // the documented contract behind Sink.Update's default:
     // for emission-on-data queries the trailing no-data micro-batch
     // must not add, drop, or change any emitted row — so the two
     // settings produce identical update logs (an EventTimeTimeout
@@ -148,11 +149,11 @@ class StreamRunSpec extends SparkFunSuite {
     val ev = Tables.events(spark, sf001)
     val root = tmp("streamrun_nd")
     def src() = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
-    val off = StreamRun.runAvailableNowUpdate(
-      StreamingReconcile.runningCounts(src(), "event_type"), s"$root/off")
-    val on = StreamRun.runAvailableNowUpdate(
+    val (off, _) = StreamRun.runAvailableNow(
+      StreamingReconcile.runningCounts(src(), "event_type"), s"$root/off", Sink.Update)
+    val (on, _) = StreamRun.runAvailableNow(
       StreamingReconcile.runningCounts(src(), "event_type"), s"$root/on",
-      noDataBatch = true)
+      Sink.Update, noDataBatch = true)
     assert(off.exceptAll(on).count() == 0 && on.exceptAll(off).count() == 0,
       "no-data batch changed the update log for a NoTimeout query")
   }
@@ -186,7 +187,7 @@ class StreamRunSpec extends SparkFunSuite {
     val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
     val got = StreamRun.runAvailableNow(
       EventWindows.enrichStream(src, dim, "user_id", "c_custkey"),
-      s"$root/run", complete = false)
+      s"$root/run", Sink.Append)._1
     val want = EventWindows.enrichStream(ev, dim, "user_id", "c_custkey")
     // multiset equality: a micro-batch emitted twice (or dropped)
     // leaves a residue in one exceptAll direction
@@ -216,12 +217,12 @@ class StreamRunSpec extends SparkFunSuite {
         ev.agg(max(col("ts"))).head.getTimestamp(0).getTime) / 2)
     val early = ev.filter(col("ts") < lit(mid))
     val root = tmp("streamrun_ckpt")
-    // runRestartObserved itself requires batch-id resumption and
+    // runRestart itself requires batch-id resumption and
     // late-files-only input — a violation aborts the run loudly
-    val (got, first, second) = StreamRun.runRestartObserved(
+    val (got, first, second) = StreamRun.runRestart(
       early, ev.filter(col("ts") >= lit(mid)),
       src => EventWindows.tumblingStream(src, "1 hour", "1 hour"),
-      s"$root/run")
+      s"$root/run", Sink.Complete)
     assert(first.map(_.inputRows).sum == early.count(),
       "run 1 must drain the early files")
     // state restoration evidence from the engine's own progress trail:
@@ -257,6 +258,55 @@ class StreamRunSpec extends SparkFunSuite {
       s"engine must run a no-data batch after the last arrival: $stats")
   }
 
+  test("a live run whose query fails ends at once with the query's failure") {
+    val ev = Tables.events(spark, sf001)
+    val root = tmp("streamrun_live_fail")
+    val t0 = System.nanoTime()
+    val e = intercept[Exception] {
+      StreamRun.runProcessingTimeLive(
+        ev, src => src.withColumn("boom", raise_error(lit("live query failed")).cast("string")),
+        s"$root/run")
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("live query failed")),
+      s"the query's own failure must surface: $e")
+    // the live deadline is 120 s: a run that waits it out never noticed
+    // that its query had died
+    assert(secs < 30, f"the failure surfaced only after $secs%.1f s")
+  }
+
+  test("each sink keeps its no-data batch default and its batch_id column") {
+    val ev = Tables.events(spark, sf001)
+    val root = tmp("streamrun_sinks")
+    def src() = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
+    def windows() = EventWindows.tumblingStream(src(), "1 hour", "1 hour")
+    // the watermarked dedup asks for a no-data batch in any output mode
+    // (a complete-mode aggregation alone never does), so Complete's
+    // forced-off shows in the trail
+    def dedupCounts() = src().withWatermark("ts", "1 hour")
+      .dropDuplicates("event_id", "ts").groupBy("event_type").count()
+    // (label, query, sink, noDataBatch passed, ends in a no-data batch,
+    // batch_id read back)
+    val cases = Seq[(String, DataFrame, Sink, Option[Boolean], Boolean, Boolean)](
+      ("complete", dedupCounts(), Sink.Complete, None, false, false),
+      ("complete, no-data batch asked for", dedupCounts(), Sink.Complete, Some(true),
+        false, false),
+      ("append", windows(), Sink.Append, None, true, false),
+      ("update", windows(), Sink.Update, None, false, true),
+      ("per-batch", src(), Sink.PerBatch((b, _) => b.groupBy("event_type").count()), None,
+        false, true))
+    for (((label, query, sink, noData, endsNoData, hasBatchId), i) <- cases.zipWithIndex) {
+      val (res, stats) = noData match {
+        case Some(on) => StreamRun.runAvailableNow(query, s"$root/run$i", sink, on)
+        case None => StreamRun.runAvailableNow(query, s"$root/run$i", sink)
+      }
+      assert((stats.last.inputRows == 0L) == endsNoData, s"$label: $stats")
+      assert(res.columns.contains("batch_id") == hasBatchId,
+        s"$label: ${res.columns.toSeq}")
+    }
+  }
+
   test("RocksDB changelog checkpointing leaves changelog files in the checkpoint") {
     val ev = Tables.events(spark, sf001)
     val root = tmp("streamrun_clog")
@@ -267,7 +317,7 @@ class StreamRunSpec extends SparkFunSuite {
       val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
       StreamRun.runAvailableNow(
         EventWindows.tumblingStream(src, "1 hour", "1 hour"),
-        s"$root/run", complete = true)
+        s"$root/run", Sink.Complete)
       // the conf being set is not the certification — the OBSERVED
       // checkpoint layout is: per-commit .changelog deltas (and not a
       // full .zip snapshot per batch, which is what the conf replaces)

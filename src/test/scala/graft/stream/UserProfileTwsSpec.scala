@@ -31,8 +31,9 @@ class UserProfileTwsSpec extends SparkFunSuite {
     val src = StreamRun.chunkedSource(spark, df, s"$root/src", 2, tsCol = "event_id")
     val ev = src.as[UserProfileTws.Event]
     withRocksDb {
-      StreamRun.runAvailableNowUpdate(
-          UserProfileTws.profiles(ev, k = 3, ttl = ttl).toDF(), s"$root/run")
+      StreamRun.runAvailableNow(
+          UserProfileTws.profiles(ev, k = 3, ttl = ttl).toDF(), s"$root/run",
+          StreamRun.Sink.Update)._1
         .groupBy(col("user_id"))
         .agg(max_by(struct(col("n_events"), col("n_types"), col("top3_sum"),
           col("top_event_id")), col("batch_id")).as("p"))
