@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.sources.v2.{DelimScanMetrics, DelimV2}
+import graft.sources.v2.{DelimLog, DelimScanMetrics, DelimV2}
 
 import CertSupport._
 
@@ -798,7 +798,7 @@ object DelimV2Certs {
           .write.format("graft-delim").mode("append").save(s"$out/t")
       val hp = new org.apache.hadoop.fs.Path(s"$out/t")
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      require(graft.sources.v2.DelimV2.readManifest(fs, hp).get.gen == 3L,
+      require(graft.sources.v2.DelimLog.readManifest(fs, hp).get.gen == 3L,
         "fixture must land three generations")
       val q = s.readStream.format("graft-delim")
         .schema("o_orderkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING")
@@ -850,13 +850,13 @@ object DelimV2Certs {
         val i = rel.lastIndexOf('/')
         if (i < 0) "" else rel.substring(0, i)
       }
-      val before = DelimV2.readManifest(fs, hp).get.files
+      val before = DelimLog.readManifest(fs, hp).get.files
       val nParts = before.map(e => parent(e.rel)).distinct.size
       require(before.size > nParts,
         s"expected epoch-accumulated small files, got ${before.size} over " +
           s"$nParts partitions")
       DelimCompact.compact(s, sink)
-      val after = DelimV2.readManifest(fs, hp).get.files
+      val after = DelimLog.readManifest(fs, hp).get.files
       require(after.size == nParts,
         s"OPTIMIZE must leave one file per partition: ${after.size} vs $nParts")
       s.read.format("graft-delim")
@@ -898,7 +898,7 @@ object DelimV2Certs {
         val i = rel.lastIndexOf('/')
         if (i < 0) "" else rel.substring(0, i)
       }
-      val before = DelimV2.readManifest(fs, hp).get.files
+      val before = DelimLog.readManifest(fs, hp).get.files
       val byPart = before.groupBy(e => parent(e.rel))
       require(byPart.values.forall(_.size == 6),
         s"fixture must land 6 files per partition, got " +
@@ -919,7 +919,7 @@ object DelimV2Certs {
       val expected = byPart.view.mapValues(es =>
         greedyBins(es.sortBy(_.rel).map(_.len))).toMap
       DelimCompact.compact(s, t, targetFileSize = target)
-      val after = DelimV2.readManifest(fs, hp).get.files
+      val after = DelimLog.readManifest(fs, hp).get.files
         .groupBy(e => parent(e.rel)).view.mapValues(_.size).toMap
       expected.foreach { case (p, exp) =>
         require(after.getOrElse(p, 0) == exp,
@@ -973,9 +973,9 @@ object DelimV2Certs {
         .write.format("graft-delim").mode("append").save(t)
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      val ts1 = DelimV2.readManifestFile(
+      val ts1 = DelimLog.readManifestFile(
         fs, new org.apache.hadoop.fs.Path(hp, "_manifest.v1")).get.ts
-      val ts2 = DelimV2.readManifestFile(
+      val ts2 = DelimLog.readManifestFile(
         fs, new org.apache.hadoop.fs.Path(hp, "_manifest.v2")).get.ts
       require(ts1 > 0 && ts2 > ts1,
         s"commits must carry increasing timestamps, got $ts1 then $ts2")
@@ -1037,13 +1037,13 @@ object DelimV2Certs {
           .writeTo("graft_cat.default.opt18_t").append()
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      val before = DelimV2.readManifest(fs, hp).get.files
+      val before = DelimLog.readManifest(fs, hp).get.files
       require(before.size == 6, s"fixture must land 6 files, got ${before.size}")
       val target = before.map(_.len).sum * 5 / (before.size * 2)
       val r = s.sql("CALL graft_cat.system.optimize(" +
         s"table => 'default.opt18_t', target_file_size => ${target}L)")
         .collect()(0)
-      val after = DelimV2.readManifest(fs, hp).get
+      val after = DelimLog.readManifest(fs, hp).get
       require(r.getInt(1) == 6 && r.getInt(2) == after.files.size &&
         r.getLong(0) == after.gen,
         s"CALL summary (${r.toSeq}) disagrees with the manifest " +
@@ -1082,7 +1082,7 @@ object DelimV2Certs {
         .mode("overwrite").save(t)
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      val files = DelimV2.readManifest(fs, hp).get.files
+      val files = DelimLog.readManifest(fs, hp).get.files
       require(files.size >= 8,
         s"fixture must range-partition into many files, got ${files.size}")
       // SCALE-INDEPENDENT bounds: a fixed 10% slice of the key span
@@ -1237,7 +1237,7 @@ object DelimV2Certs {
         .mode("overwrite").save(t)
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      val m = DelimV2.readManifest(fs, hp).get
+      val m = DelimLog.readManifest(fs, hp).get
       require(m.files.size == 12 && m.bloomCols == Seq("o_orderkey"),
         s"fixture: ${m.files.size} files, bloomCols=${m.bloomCols}")
       val Array(mn, mx) = Tables.orders(s, dir)
@@ -1258,7 +1258,7 @@ object DelimV2Certs {
       // maintenance instead of silently degrading to full scans
       graft.sources.v2.DelimCompact.compact(s, t,
         targetFileSize = m.files.map(_.len).sum / 4)
-      val m2 = DelimV2.readManifest(fs, hp).get
+      val m2 = DelimLog.readManifest(fs, hp).get
       require(m2.files.size < m.files.size && m2.bloomCols == Seq("o_orderkey"),
         s"compaction fixture: ${m2.files.size} files")
       def skips2(key: Long): Int = m2.files.count(e =>
@@ -1347,7 +1347,7 @@ object DelimV2Certs {
       base.writeTo("graft_cat.default.mor18_t").append()
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      def snap() = DelimV2.readManifest(fs, hp).get
+      def snap() = DelimLog.readManifest(fs, hp).get
       val before = snap()
       val beforeSet = before.files.map(e => (e.rel, e.len, e.gen)).toSet
       // 1) data-column DELETE → tombstone; every data file survives
@@ -1466,9 +1466,9 @@ object DelimV2Certs {
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
       def segs(): Set[String] =
         Option(fs.globStatus(new org.apache.hadoop.fs.Path(t,
-          s"${DelimV2.SegPrefix}*")))
+          s"${DelimLog.SegPrefix}*")))
           .map(_.toSeq).getOrElse(Nil).map(_.getPath.getName).toSet
-      val m0 = DelimV2.readManifest(fs, hp).get
+      val m0 = DelimLog.readManifest(fs, hp).get
       require(m0.files.size == 64,
         s"fixture must land 64 entries, got ${m0.files.size}")
       // the pointer is an INDEX: no inline entry lines past threshold.
@@ -1477,7 +1477,7 @@ object DelimV2Certs {
       // the GC grace window (readers mid-plan on an old index), so the
       // structural requires read the INDEX, not the directory.
       def pointerDoc(): String = {
-        val in = fs.open(new org.apache.hadoop.fs.Path(t, DelimV2.ManifestFile))
+        val in = fs.open(new org.apache.hadoop.fs.Path(t, DelimLog.ManifestFile))
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
       }
@@ -1499,7 +1499,7 @@ object DelimV2Certs {
       require(born.size == 1,
         s"a one-partition append must commit exactly one new segment, " +
           s"got ${born.size}: ${born.mkString(", ")}")
-      require(DelimV2.readManifest(fs, hp).get.gen == m0.gen + 1,
+      require(DelimLog.readManifest(fs, hp).get.gen == m0.gen + 1,
         "the append must advance the index generation")
       // (2) pushed partition equality loads < 20% of segments
       val p03Df = s.read.format("graft-delim")
@@ -1554,7 +1554,7 @@ object DelimV2Certs {
       base.writeTo("graft_cat.default.mor19_t").append()
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      def snap() = DelimV2.readManifest(fs, hp).get
+      def snap() = DelimLog.readManifest(fs, hp).get
       val before = snap()
       s.sql("DELETE FROM graft_cat.default.mor19_t WHERE o_totalprice > 100000.0")
       val tombed = snap()
@@ -1631,7 +1631,7 @@ object DelimV2Certs {
         .writeTo("graft_cat.default.ro19_t").append()
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      val m = DelimV2.readManifest(fs, hp).get
+      val m = DelimLog.readManifest(fs, hp).get
       def md5Of(p: org.apache.hadoop.fs.Path): String = {
         val md = java.security.MessageDigest.getInstance("MD5")
         val in = fs.open(p)
@@ -1706,7 +1706,7 @@ object DelimV2Certs {
         .writeTo("graft_cat.default.cr19_t").append()
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      def snap() = DelimV2.readManifest(fs, hp).get
+      def snap() = DelimLog.readManifest(fs, hp).get
       val before = snap()
       val beforeSet = before.files.map(e => (e.rel, e.len, e.gen)).toSet
       s.sql("ALTER TABLE graft_cat.default.cr19_t " +
@@ -1735,10 +1735,10 @@ object DelimV2Certs {
       Seq((1L, "classified"), (2L, "hidden")).toDF("id", "secret")
         .writeTo("graft_cat.default.cr19_side").append()
       val hp2 = new org.apache.hadoop.fs.Path(t2)
-      val sideBefore = DelimV2.readManifest(fs, hp2).get.files
+      val sideBefore = DelimLog.readManifest(fs, hp2).get.files
         .map(e => (e.rel, e.len, e.gen)).toSet
       s.sql("ALTER TABLE graft_cat.default.cr19_side DROP COLUMN secret")
-      require(DelimV2.readManifest(fs, hp2).get.files
+      require(DelimLog.readManifest(fs, hp2).get.files
         .map(e => (e.rel, e.len, e.gen)).toSet == sideBefore,
         "DROP COLUMN must rewrite ZERO data files")
       require(!s.table("graft_cat.default.cr19_side").schema
@@ -2008,7 +2008,7 @@ object DelimV2Certs {
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
       val doc = {
-        val in = fs.open(new org.apache.hadoop.fs.Path(t, DelimV2.ManifestFile))
+        val in = fs.open(new org.apache.hadoop.fs.Path(t, DelimLog.ManifestFile))
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
       }
@@ -2078,7 +2078,7 @@ object DelimV2Certs {
         WHERE o_orderstatus = 'F' AND o_totalprice > 100000.0""")
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      val m = DelimV2.readManifest(fs, hp).get
+      val m = DelimLog.readManifest(fs, hp).get
       require(m.tombstones.size == 1,
         s"fixture expects one live tombstone, got ${m.tombstones.size}")
       def tbl = s.read.format("graft-delim")

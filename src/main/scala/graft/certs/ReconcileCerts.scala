@@ -678,7 +678,7 @@ object ReconcileCerts {
         |  SELECT o_orderkey + 2000000000, o_totalprice * 2.0, 'X'
         |  FROM orders WHERE o_orderkey % 1000 = 0
         |) GROUP BY 1""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
+      import graft.sources.v2.{DelimLog, DelimV2}
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       s.sql("DROP TABLE IF EXISTS graft_cat.default.wm19_t")
@@ -692,7 +692,7 @@ object ReconcileCerts {
       base.writeTo("graft_cat.default.wm19_t").append()
       val hp = new org.apache.hadoop.fs.Path(t)
       val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      def snap() = DelimV2.readManifest(fs, hp).get
+      def snap() = DelimLog.readManifest(fs, hp).get
       val before = snap()
       val beforeSet = before.files.map(e => (e.rel, e.len, e.gen)).toSet
       // the narrow source: updates for keys % 1000 == 0, brand-new

@@ -108,12 +108,12 @@ private[graft] object DelimBloom {
     filters.flatMap {
       case EqualTo(c, v) if bloomCols.contains(c) && v != null =>
         typeOf(c).map(dt =>
-          c -> Seq(DelimV2.externalToText(DelimV2.normValuePub(v, dt), dt)))
+          c -> Seq(DelimV2.externalToText(DelimV2.normValue(v, dt), dt)))
       case In(c, vs) if bloomCols.contains(c) &&
           vs != null && vs.nonEmpty && vs.forall(_ != null) &&
           vs.length <= 256 => // bounded probe work per task
         typeOf(c).map(dt => c -> vs.toSeq.map(v =>
-          DelimV2.externalToText(DelimV2.normValuePub(v, dt), dt)))
+          DelimV2.externalToText(DelimV2.normValue(v, dt), dt)))
       case _ => None
     }
 

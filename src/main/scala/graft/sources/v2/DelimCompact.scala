@@ -67,15 +67,11 @@ object DelimCompact {
     val target = new HPath(tablePath)
     val conf = DelimV2.driverConf()
     val fs = target.getFileSystem(conf)
-    val m = DelimV2.readManifest(fs, target).getOrElse(
+    val m = DelimLog.readManifest(fs, target).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $tablePath — " +
           "compaction operates on manifest-committed tables"))
     val newGen = m.gen + 1
-    def parentOf(rel: String): String = {
-      val i = rel.lastIndexOf('/')
-      if (i < 0) "" else rel.substring(0, i)
-    }
     // a compacted entry carries a REPRESENTATIVE generation of its
     // group (the newest member with that layout) so readers keep
     // resolving its fields through the same recorded schema; legacy
@@ -83,8 +79,8 @@ object DelimCompact {
     // merged data-skipping stats: sound only when EVERY member carries
     // stats (min of mins, max of maxes, null/row sums over the columns
     // every member bounded) — any gap merges to "no stats"
-    def mergeStats(entries: Seq[DelimV2.ManifestEntry],
-        layout: Option[DelimV2.ManifestSchema]): String = {
+    def mergeStats(entries: Seq[DelimLog.ManifestEntry],
+        layout: Option[DelimLog.ManifestSchema]): String = {
       val decoded = entries.map(e => DelimV2.decodeStats(e.stats, layout))
       if (layout.isEmpty || decoded.exists(_.isEmpty)) return ""
       val all = decoded.map(_.get)
@@ -114,12 +110,12 @@ object DelimCompact {
     }
     // greedy size-bounded binning over the group's entries in
     // deterministic rel order; target <= 0 = one bin (legacy merge)
-    def bins(entries: Seq[DelimV2.ManifestEntry])
-        : Seq[Seq[DelimV2.ManifestEntry]] = {
+    def bins(entries: Seq[DelimLog.ManifestEntry])
+        : Seq[Seq[DelimLog.ManifestEntry]] = {
       val sorted = entries.sortBy(_.rel)
       if (targetFileSize <= 0L) return Seq(sorted)
-      val out = Seq.newBuilder[Seq[DelimV2.ManifestEntry]]
-      var cur = Vector.empty[DelimV2.ManifestEntry]
+      val out = Seq.newBuilder[Seq[DelimLog.ManifestEntry]]
+      var cur = Vector.empty[DelimLog.ManifestEntry]
       var curLen = 0L
       sorted.foreach { e =>
         if (cur.nonEmpty && curLen + e.len > targetFileSize) {
@@ -141,7 +137,7 @@ object DelimCompact {
     // pushdowns table-wide; compaction is where that debt is repaid.
     val (tombFiles, plainFiles) =
       m.files.partition(e => m.tombstones.exists(_._1 >= e.gen))
-    val curSchema: Option[DelimV2.ManifestSchema] =
+    val curSchema: Option[DelimLog.ManifestSchema] =
       m.schemas.get(m.gen)
         .orElse(m.schemas.toSeq.sortBy(_._1).lastOption.map(_._2))
     if (tombFiles.nonEmpty && curSchema.isEmpty)
@@ -151,7 +147,7 @@ object DelimCompact {
     // plain files byte-concatenate as before, grouped per (partition
     // directory, recorded field LAYOUT) — layouts must match for a
     // byte-level merge to stay parseable per file schema mapping
-    val groups = plainFiles.groupBy(e => (parentOf(e.rel), m.schemas.get(e.gen)))
+    val groups = plainFiles.groupBy(e => (DelimLog.dirOf(e.rel), m.schemas.get(e.gen)))
       .filter(_._2.size >= math.max(minFilesPerGroup, 2))
       .toSeq
       .flatMap { case ((sub, layout), entries) =>
@@ -165,13 +161,13 @@ object DelimCompact {
       .sortBy(t => (t._1, t._3.head))
     // tombstoned groups always rewrite (even a lone file: the rewrite
     // physically drops deleted rows — real work, not amplification)
-    val tombJobs = tombFiles.groupBy(e => parentOf(e.rel)).toSeq.sortBy(_._1)
+    val tombJobs = tombFiles.groupBy(e => DelimLog.dirOf(e.rel)).toSeq.sortBy(_._1)
       .flatMap { case (sub, es) => bins(es).map(bin => (sub, bin)) }
       .zipWithIndex
     if (groups.isEmpty && tombJobs.isEmpty) return m.gen
     val stagingName = s"_staging_compact_$newGen"
     val staging = new HPath(target, stagingName)
-    DelimV2.fastMkdirs(fs, staging)
+    DelimLog.fastMkdirs(fs, staging)
     val confMap = DelimV2.shippableConf(conf)
     val targetStr = target.toString
     val statsByIdx = groups.map(_._4).toArray
@@ -194,7 +190,7 @@ object DelimCompact {
         val fsx = root.getFileSystem(c)
         val outName = f"compact-$newGen-$i%05d.txt"
         val outPath = new HPath(new HPath(root, stagingName), outName)
-        val out = DelimV2.fastCreate(fsx, outPath, overwrite = true)
+        val out = DelimLog.fastCreate(fsx, outPath, overwrite = true)
         var total = 0L
         try {
           val buf = new Array[Byte](1 << 16)
@@ -250,7 +246,7 @@ object DelimCompact {
                 }
                 (cl, acc)
               }
-              val so = DelimV2.fastCreate(fsx, new HPath(
+              val so = DelimLog.fastCreate(fsx, new HPath(
                 new HPath(root, stagingName), outName + DelimBloom.Suffix),
                 overwrite = true)
               try so.write(DelimBloom.serialize(cols)) finally so.close()
@@ -280,12 +276,9 @@ object DelimCompact {
         // absent and null it out
         val layout = DelimV2.layoutTranslations(m)
         val jobs = tombJobs.map { case ((sub, bin), i) =>
+          val kv = DelimV2.partValues(sub)
           val partVals: Array[String] = pCols.map { pc =>
-            sub.split('/').collectFirst {
-              case seg if seg.startsWith(pc + "=") =>
-                val v = seg.substring(pc.length + 1)
-                if (v == DelimV2.HiveDefaultPartition) null else v
-            }.orNull
+            kv.collectFirst { case (k, v) if k == pc => v }.orNull
           }.toArray
           val members = bin.sortBy(_.rel).map { e =>
             (e.rel, e.len,
@@ -320,61 +313,43 @@ object DelimCompact {
             writer.commit().asInstanceOf[DelimCommit]
           }.collect().toSeq
       }
-    if (retireMsgs.nonEmpty)
-      DelimWrite.promote(fs, target, retireMsgs.toArray)
-    val retireEntries = retireMsgs.flatMap { dc =>
-      dc.staged.filterNot(_.sidecar).map(sf =>
-        DelimV2.ManifestEntry(sf.length, newGen,
-          if (sf.subdir.isEmpty) sf.finalName
-          else s"${sf.subdir}/${sf.finalName}", sf.stats))
+    // compacted outputs promote like any staged write (the OR-merged
+    // sidecar rides along), but their entries KEEP their group's
+    // representative generation: their bytes carry that layout
+    val compactedStaged = compacted.toSeq.flatMap {
+      case (sub, _, _, outName, len, gi, side) =>
+        DelimStagedFile(sub, new HPath(staging, outName).toString, outName, len,
+          statsByIdx(gi)) +:
+          (if (side) Seq(DelimStagedFile(sub,
+            new HPath(staging, outName + DelimBloom.Suffix).toString,
+            outName + DelimBloom.Suffix, sidecar = true))
+          else Nil)
     }
+    val groupGen: Map[String, Long] = compacted.map {
+      case (sub, gen, _, outName, _, _, _) =>
+        (if (sub.isEmpty) outName else s"$sub/$outName") -> gen
+    }.toMap
     val replaced = compacted.flatMap(_._3).toSet ++ tombFiles.map(_.rel)
-    val newEntries0 = compacted.map { case (sub, gen, _, outName, len, gi, side) =>
-      val dstDir = if (sub.isEmpty) target else new HPath(target, sub)
-      if (sub.nonEmpty) DelimV2.fastMkdirs(fs, dstDir)
-      if (!fs.rename(new HPath(staging, outName), new HPath(dstDir, outName)))
-        throw new java.io.IOException(
-          s"graft-delim: compaction promote failed for $outName")
-      // the OR-merged sidecar rides along: promotion failure degrades
-      // to "no sidecar" (cannot skip), never to a wrong skip
-      if (side)
-        fs.rename(new HPath(staging, outName + DelimBloom.Suffix),
-          new HPath(dstDir, outName + DelimBloom.Suffix))
-      DelimV2.ManifestEntry(len, gen,
-        if (sub.isEmpty) outName else s"$sub/$outName", statsByIdx(gi))
-    }.toSeq
-    val newEntries = newEntries0 ++ retireEntries
-    val live =
-      try DelimV2.commitManifest(fs, target, m.copy(
-        files = m.files.filterNot(e => replaced.contains(e.rel)) ++ newEntries,
-        gen = newGen,
-        // retired entries were written NOW, under the current schema:
-        // record it for the new generation. The commit still carries
-        // m.tombstones verbatim — serialization GCs every tombstone no
-        // live file is old enough for, which after full retirement is
-        // ALL of them.
-        schemas =
-          if (tombJobs.nonEmpty) m.schemas + (newGen -> curSchema.get)
-          else m.schemas,
-        multiLine = m.multiLine || retireMsgs.exists(_.multiLine)))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // a real writer won the race: roll back the compacted files —
-          // the table keeps the writer's snapshot, nothing is lost
-          newEntries.foreach { ne =>
-            fs.delete(new HPath(target, ne.rel), false)
-            fs.delete(new HPath(target, ne.rel + DelimBloom.Suffix), false)
-          }
-          fs.delete(staging, true)
-          throw e
-      }
-    replaced.filterNot(live).foreach { rel =>
-      fs.delete(new HPath(target, rel), false)
-      // a replaced member's sidecar dies with it (the merged sidecar
-      // on the compacted file carries its bits forward)
-      fs.delete(new HPath(target, rel + DelimBloom.Suffix), false)
+    // a lost claim means a real writer won the race: the commit rolls
+    // back the compacted files and the table keeps the writer's
+    // snapshot; a replaced member's sidecar dies with it (the merged
+    // sidecar on the compacted file carries its bits forward)
+    DelimLog.commit(fs, target, m,
+      compactedStaged ++ retireMsgs.flatMap(_.staged), Some(staging)) {
+      (_, newEntries) =>
+        m.copy(
+          files = m.files.filterNot(e => replaced.contains(e.rel)) ++
+            newEntries.map(e => groupGen.get(e.rel).fold(e)(g => e.copy(gen = g))),
+          // retired entries were written NOW, under the current schema:
+          // record it for the new generation. The commit still carries
+          // m.tombstones verbatim — serialization GCs every tombstone no
+          // live file is old enough for, which after full retirement is
+          // ALL of them.
+          schemas =
+            if (tombJobs.nonEmpty) m.schemas + (newGen -> curSchema.get)
+            else m.schemas,
+          multiLine = m.multiLine || retireMsgs.exists(_.multiLine))
     }
-    fs.delete(staging, true)
     newGen
   }
 }

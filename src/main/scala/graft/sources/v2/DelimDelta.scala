@@ -128,7 +128,7 @@ private[v2] class DelimDeltaWrite(
     // the full (possibly segmented) manifest commit() re-reads anyway
     val bloomFor = {
       val fs0 = staging.getFileSystem(DelimV2.driverConf())
-      DelimV2.headerBloomCols(fs0, new HPath(path))
+      DelimLog.headerBloomCols(fs0, new HPath(path))
         .filter(c => schema.fieldNames.contains(c) && !partCols.contains(c))
     }
     val cm = DelimV2.shippableConf(DelimV2.driverConf())
@@ -153,7 +153,7 @@ private[v2] class DelimDeltaWrite(
       case other => throw new IllegalStateException(
         s"graft-delim: foreign delta commit message $other")
     }
-    val prevM = DelimV2.snapshotManifest(fs, target, fs.getConf)
+    val prevM = DelimLog.snapshotManifest(fs, target, fs.getConf)
     // optimistic concurrency: a commit that landed between this
     // operation's scan and now means the tombstone could delete rows
     // it never matched (or miss rows it should have) — abort loudly
@@ -173,52 +173,31 @@ private[v2] class DelimDeltaWrite(
           s"deltaMaxKeys cap ($maxKeys) — run this operation against a " +
           "copy-on-write table (mergeMode 'copy-on-write') instead")
     }
-    DelimWrite.promote(fs, target,
-      deltas.map(d => DelimCommit(d.staged, d.multiLine):
-        WriterCommitMessage).toArray)
-    val newGen = prevM.gen + 1
-    val newEntries = deltas.flatMap(_.staged).filterNot(_.sidecar).map(sf =>
-      DelimV2.ManifestEntry(sf.length, newGen,
-        if (sf.subdir.isEmpty) sf.finalName
-        else s"${sf.subdir}/${sf.finalName}", sf.stats))
-    val tombs =
-      if (keys.isEmpty) prevM.tombstones
-      else prevM.tombstones :+ ((prevM.gen,
-        DelimV2.encodeTombstone(
-          Seq(In(rowIdCol, keys.toArray[Any])), tableSchema)))
-    // record a generation schema ONLY when the delta landed files (it
-    // describes their layout). A deletes-only commit has an EMPTY
-    // write schema — recording it would become the "latest" schema and
-    // poison the field-ID lineage (translation, inheritance, and
-    // tombstone retirement all resolve against the latest recorded
-    // schema); with no entry, the previous generation's stays latest.
-    val schemas =
-      if (newEntries.isEmpty) prevM.schemas
-      else prevM.schemas + (newGen -> DelimV2.ManifestSchema(partCols,
-        DelimV2.assignFieldIds(info.schema(), prevM.schemas)))
-    val manifest = DelimV2.DelimManifest(
-      prevM.files ++ newEntries,
-      prevM.multiLine || deltas.exists(_.multiLine),
-      newGen, prevM.retain,
-      schemas,
-      tombstones = tombs,
-      bloomCols = prevM.bloomCols,
-      segSize = prevM.segSize,
-      tags = prevM.tags)
-    try DelimV2.commitManifest(fs, target, manifest)
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        newEntries.foreach { ne =>
-          fs.delete(new HPath(target, ne.rel), false)
-          // the promoted bloom sidecar too, or the rollback leaves an
-          // orphan .bloom next to a deleted data file (DelimCompact's
-          // CME handler deletes both)
-          fs.delete(new HPath(target, ne.rel + DelimBloom.Suffix), false)
-        }
-        fs.delete(staging, true)
-        throw e
+    DelimLog.commit(fs, target, prevM, deltas.flatMap(_.staged), Some(staging)) {
+      (newGen, newEntries) =>
+        prevM.copy(
+          files = prevM.files ++ newEntries,
+          multiLine = prevM.multiLine || deltas.exists(_.multiLine),
+          // record a generation schema ONLY when the delta landed files
+          // (it describes their layout). A deletes-only commit has an
+          // EMPTY write schema — recording it would become the "latest"
+          // schema and poison the field-ID lineage (translation,
+          // inheritance, and tombstone retirement all resolve against
+          // the latest recorded schema); with no entry, the previous
+          // generation's stays latest.
+          schemas =
+            if (newEntries.isEmpty) prevM.schemas
+            else prevM.schemas + (newGen -> DelimLog.ManifestSchema(partCols,
+              DelimV2.assignFieldIds(info.schema(), prevM.schemas))),
+          // the tombstone is recorded at the PREVIOUS generation: it
+          // applies to every pre-existing file, never to the delta's
+          // own inserts
+          tombstones =
+            if (keys.isEmpty) prevM.tombstones
+            else prevM.tombstones :+ ((prevM.gen,
+              DelimV2.encodeTombstone(
+                Seq(In(rowIdCol, keys.toArray[Any])), tableSchema))))
     }
-    fs.delete(staging, true)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -89,8 +89,8 @@ class DelimSource extends TableProvider with DataSourceRegister {
       Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
         .filter(_.isDirectory).flatMap { st =>
           val m = vAsOf match {
-            case Some(g) => Some(DelimV2.readManifestVersion(fs, st.getPath, g))
-            case None => DelimV2.readManifest(fs, st.getPath)
+            case Some(g) => Some(DelimLog.readManifestVersion(fs, st.getPath, g))
+            case None => DelimLog.readManifest(fs, st.getPath)
           }
           m.flatMap(mm => mm.schemas.get(mm.gen).map(_.struct))
         }
@@ -100,10 +100,10 @@ class DelimSource extends TableProvider with DataSourceRegister {
       val quote = DelimV2.quoteChar(options)
       val framing =
         if (DelimV2.multiLine(options) ||
-          DelimV2.manifestMultiLine(DelimV2.paths(options), conf, vAsOf))
+          DelimLog.manifestMultiLine(DelimV2.paths(options), conf, vAsOf))
           quote
         else -1
-      val files = DelimV2.listFiles2(DelimV2.paths(options), conf, vAsOf)
+      val files = DelimV2.listSnapshot(DelimV2.paths(options), conf, vAsOf).files
       val nCols = files.map(_.status).find(_.getLen > 0).map { f =>
         val fs = f.getPath.getFileSystem(conf)
         val in = fs.open(f.getPath)
@@ -232,7 +232,7 @@ private[v2] class DelimTable(tableSchema: StructType, options: CaseInsensitiveSt
     tableSchema.nonEmpty && filters.nonEmpty &&
       DelimV2.paths(options).size == 1 &&
       filters.forall(f => DelimV2.supportedFilter(f, tableSchema)) &&
-      DelimV2.readManifest(rootFs, tableRoot).isDefined
+      DelimLog.readManifest(rootFs, tableRoot).isDefined
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(canDeleteWhere(filters),
@@ -240,46 +240,32 @@ private[v2] class DelimTable(tableSchema: StructType, options: CaseInsensitiveSt
         s"rejected: ${filters.mkString(", ")}")
     val fs = rootFs
     val root = tableRoot
-    val m = DelimV2.readManifest(fs, root).get
-    val newGen = m.gen + 1
+    val m = DelimLog.readManifest(fs, root).get
     val partKeys = DelimV2.listedFromManifest(root, m)
       .flatMap(_.pvals.map(_._1)).toSet
-    val next =
-      if (filters.forall(_.references.forall(partKeys.contains))) {
-        // partition-only: the matched files leave the manifest (their
-        // bytes stay for retained versionAsOf snapshots and die with
-        // retention) — zero data reads, zero tombstone debt
-        val partFields = tableSchema.fields.filter(f => partKeys.contains(f.name))
-        val idxOf = partFields.map(_.name).zipWithIndex.toMap
-        val types = partFields.map(_.dataType)
-        val preds = filters.map(DelimV2.compileFilter(_, idxOf, types))
-        def matches(pvals: Seq[(String, String)]): Boolean = {
-          val ext = partFields.map(pf => DelimV2.parseExternal(
-            pvals.collectFirst { case (k, v) if k == pf.name => v }.orNull,
-            pf.dataType)).toArray[Any]
-          preds.forall(_(ext))
-        }
-        m.copy(gen = newGen, files = m.files.filterNot { e =>
-          val pvals = e.rel.split('/').dropRight(1).toSeq.flatMap { seg =>
-            val eq = seg.indexOf('=')
-            if (eq <= 0) None
-            else Some(seg.substring(0, eq) -> {
-              val v = seg.substring(eq + 1)
-              if (v == DelimV2.HiveDefaultPartition) null else v
-            })
-          }
-          matches(pvals)
-        })
-      } else
-        m.copy(gen = newGen, tombstones = m.tombstones :+
+    if (filters.forall(_.references.forall(partKeys.contains))) {
+      // partition-only: the matched files leave the manifest (their
+      // bytes stay for retained versionAsOf snapshots and die with
+      // retention) — zero data reads, zero tombstone debt
+      val partFields = tableSchema.fields.filter(f => partKeys.contains(f.name))
+      val idxOf = partFields.map(_.name).zipWithIndex.toMap
+      val types = partFields.map(_.dataType)
+      val preds = filters.map(DelimV2.compileFilter(_, idxOf, types))
+      def matches(pvals: Seq[(String, String)]): Boolean = {
+        val ext = partFields.map(pf => DelimV2.parseExternal(
+          pvals.collectFirst { case (k, v) if k == pf.name => v }.orNull,
+          pf.dataType)).toArray[Any]
+        preds.forall(_(ext))
+      }
+      DelimLog.commit(fs, root, m) { (_, _) =>
+        m.copy(files = m.files.filterNot(e =>
+          matches(DelimV2.partValues(DelimLog.dirOf(e.rel)))))
+      }
+    } else
+      DelimLog.commit(fs, root, m) { (newGen, _) =>
+        m.copy(tombstones = m.tombstones :+
           (newGen -> DelimV2.encodeTombstone(filters.toSeq, tableSchema)))
-    val liveRetained = DelimV2.commitManifest(fs, root, next)
-    // files no retained snapshot references die with the commit (the
-    // partition-only branch; the tombstone branch removes nothing)
-    m.files.map(_.rel).filterNot(liveRetained).foreach { rel =>
-      fs.delete(new HPath(root, rel), false)
-      fs.delete(new HPath(root, rel + DelimBloom.Suffix), false)
-    }
+      }
   }
 
   /** TRUNCATE TABLE (TruncatableTable default routes here): an empty
@@ -289,7 +275,7 @@ private[v2] class DelimTable(tableSchema: StructType, options: CaseInsensitiveSt
   override def truncateTable(): Boolean = {
     val fs = rootFs
     val root = tableRoot
-    DelimV2.readManifest(fs, root) match {
+    DelimLog.readManifest(fs, root) match {
       case None =>
         // Spark's TruncateTableExec treats a false return as SUCCESS
         // (it only skips cache refresh) — returning false here would
@@ -300,12 +286,7 @@ private[v2] class DelimTable(tableSchema: StructType, options: CaseInsensitiveSt
             s"table; '$root' has no _manifest (legacy directory) — " +
             "overwrite it with an empty dataset instead")
       case Some(m) =>
-        val liveRetained = DelimV2.commitManifest(fs, root,
-          m.copy(gen = m.gen + 1, files = Nil))
-        m.files.map(_.rel).filterNot(liveRetained).foreach { rel =>
-          fs.delete(new HPath(root, rel), false)
-          fs.delete(new HPath(root, rel + DelimBloom.Suffix), false)
-        }
+        DelimLog.commit(fs, root, m)((_, _) => m.copy(files = Nil))
         true
     }
   }
@@ -663,8 +644,8 @@ class DelimScan(
 
   private lazy val allFiles: Seq[DelimV2.ListedFile] =
     Option(filesWithParts).getOrElse(
-      DelimV2.listFiles2(DelimV2.paths(options), DelimV2.driverConf(),
-        DelimV2.asOfGen(options)))
+      DelimV2.listSnapshot(DelimV2.paths(options), DelimV2.driverConf(),
+        DelimV2.asOfGen(options)).files)
 
   /** Partition columns = schema fields matching a discovered `k=v`
     * directory key; every other field maps POSITIONALLY (in schema
@@ -799,7 +780,7 @@ class DelimScan(
   // writer recorded that it quoted newlines, so readers frame
   // whole-file automatically instead of silently misframing
   private val multiLine = DelimV2.multiLine(options) || {
-    val m = DelimV2.manifestMultiLine(paths, DelimV2.driverConf(),
+    val m = DelimLog.manifestMultiLine(paths, DelimV2.driverConf(),
       DelimV2.asOfGen(options))
     if (m) require(DelimV2.quoteChar(options) >= 0,
       "graft-delim: this table's manifest flags quoted newlines; " +
@@ -1093,7 +1074,7 @@ class DelimScan(
       // counter never decreases, so neither may the reported offset.
       private val maxSeenGen = new java.util.concurrent.atomic.AtomicLong(-1L)
       override def latestOffset(): Offset = {
-        val g = DelimV2.readManifest(fs, root).map(_.gen).getOrElse(-1L)
+        val g = DelimLog.readManifest(fs, root).map(_.gen).getOrElse(-1L)
         DelimGenOffset(maxSeenGen.accumulateAndGet(g, math.max))
       }
 
@@ -1135,9 +1116,9 @@ class DelimScan(
         // prefer the immutable retained snapshot at `end`; else the
         // current manifest (its (s, e] entries are identical under
         // the append-only contract)
-        val m = DelimV2.readManifestFile(fs,
-            new HPath(root, s"${DelimV2.ManifestFile}.v$e"))
-          .orElse(DelimV2.readManifest(fs, root))
+        val m = DelimLog.readManifestFile(fs,
+            new HPath(root, s"${DelimLog.ManifestFile}.v$e"))
+          .orElse(DelimLog.readManifest(fs, root))
           .getOrElse(return Array.empty)
         val ranged = m.copy(files = m.files.filter(f => f.gen > s && f.gen <= e))
         val preds = pushedFilters.filter(partitionOnly).map(partPredicate)
@@ -2121,29 +2102,21 @@ private[v2] class DelimWrite(
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val hc = DelimV2.driverConf()
     val fs = staging.getFileSystem(hc)
-    DelimV2.fastMkdirs(fs, staging)
+    DelimLog.fastMkdirs(fs, staging)
     val confMap = DelimV2.shippableConf(hc)
     new DelimWriterFactory(schema, delim, staging.toString, confMap, partCols, quote,
       genToken = queryId.replace("-", "").take(8), bloomFor = bloomFor)
   }
 
-  /** MANIFEST-SWAP commit — the snapshot-isolation sequence:
-    *  1. promote the new generation's files (their names carry the
-    *     job's generation token, so they coexist with the live files);
-    *  2. claim generation G+1 with a create-no-overwrite versioned
-    *     manifest, then atomically swap `_manifest` to it — the single
-    *     visibility flip: a reader planning before it sees exactly the
-    *     old generation, after it exactly the new one, never a mix. A
-    *     concurrent committer that also read generation G loses the
-    *     claim race and FAILS LOUDLY (its promoted files are rolled
-    *     back) instead of silently unlisting this job's files;
-    *  3. delete the files no RETAINED snapshot references (static
-    *     overwrite: the expired generations; dynamic: only the
-    *     replaced partitions' expired files) — inside the retention
-    *     window, replaced generations stay readable via `versionAsOf`.
-    * A failure between 1 and 2 leaves orphan unreferenced files (and
-    * the old snapshot intact); between 2 and 3 leaves the new snapshot
-    * live with dead bytes on disk — both are garbage, never corruption.
+  /** Job commit through [[DelimLog.commit]] (see README, "How a
+    * graft-delim commit works"): this site contributes only the
+    * copy-on-write base check, run before anything is promoted, and
+    * its edit — which previous entries survive beside the new files.
+    * A static overwrite then sweeps EVERYTHING dead, not just the files
+    * the previous snapshot listed: crash-orphans from failed commits die
+    * here, and emptied k=v directories are pruned so directory-identity
+    * surfaces (SHOW PARTITIONS) don't keep listing partitions the
+    * overwrite deleted.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = staging.getFileSystem(DelimV2.driverConf())
@@ -2159,13 +2132,8 @@ private[v2] class DelimWrite(
     }
     // previous snapshot: the manifest when present, else the legacy
     // recursive listing (first manifest-commit over a legacy layout)
-    val prevM = DelimV2.snapshotManifest(fs, target, fs.getConf)
-    val newGen = prevM.gen + 1
-    val newEntries = newFiles.filterNot(_.sidecar).map(sf =>
-      DelimV2.ManifestEntry(sf.length, newGen,
-        if (sf.subdir.isEmpty) sf.finalName else s"${sf.subdir}/${sf.finalName}",
-        sf.stats))
-    val survivors: Seq[DelimV2.ManifestEntry] = replaceScanned match {
+    val prevM = DelimLog.snapshotManifest(fs, target, fs.getConf)
+    val survivors: Seq[DelimLog.ManifestEntry] = replaceScanned match {
       case Some(thunk) =>
         // copy-on-write: drop exactly the files the operation's scan
         // read — the written rows are their replacement. VALIDATE the
@@ -2206,60 +2174,28 @@ private[v2] class DelimWrite(
         } else if (truncate) Nil
         else prevM.files
     }
-    DelimWrite.promote(fs, target, messages)
-    val newSet = newEntries.map(_.rel).toSet
-    // the multiline flag follows the LIVE files: a static overwrite
-    // carries only the new generation's evidence, append/dynamic OR in
-    // the previous flag (conservative — framing stays correct, only
-    // split parallelism is traded)
-    val flag = newMulti || (survivors.nonEmpty && prevM.multiLine)
-    val manifest = DelimV2.DelimManifest(
-      survivors.filterNot(e => newSet.contains(e.rel)) ++ newEntries,
-      flag, newGen, retainVersions.getOrElse(prevM.retain),
-      prevM.schemas + (newGen -> DelimV2.ManifestSchema(partCols,
-        DelimV2.assignFieldIds(schema, prevM.schemas))),
-      // delete tombstones ride every commit (a truncate drops the
-      // files they applied to, and serialization GCs them then);
-      // the new generation's own files are never subject to them
-      tombstones = prevM.tombstones,
-      // a static overwrite starts the bloom-column list fresh (the
-      // old generation's sidecars die with its files)
-      bloomCols =
-        if (truncate && !dynamicOverwrite) bloomFor.distinct
-        else (prevM.bloomCols ++ bloomFor).distinct,
-      segSize = segmentSize.getOrElse(prevM.segSize),
-      // tags survive every commit — INCLUDING a static overwrite: the
-      // tagged generations' retained manifests (and their files) are
-      // exactly what the tag pins against replacement
-      tags = prevM.tags)
-    val liveRetained =
-      try DelimV2.commitManifest(fs, target, manifest)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // roll back the promoted files: they are generation-token
-          // unique, so deleting them can never touch the winner's data
-          newFiles.foreach { sf =>
-            val dstDir =
-              if (sf.subdir.isEmpty) target else new HPath(target, sf.subdir)
-            fs.delete(new HPath(dstDir, sf.finalName), false)
-          }
-          fs.delete(staging, true)
-          throw e
-      }
-    if (truncate && !dynamicOverwrite)
-      // static overwrite sweeps EVERYTHING dead — not just the files
-      // the previous snapshot listed: crash-orphans from failed
-      // commits die here, and emptied k=v directories are pruned so
-      // directory-identity surfaces (SHOW PARTITIONS) don't keep
-      // listing partitions the overwrite deleted. "Dead" respects the
-      // retention window: files a retained snapshot still lists live on
-      // for versionAsOf readers.
-      DelimWrite.sweepDead(fs, target, liveRetained)
-    else prevM.files.map(_.rel).filterNot(liveRetained).foreach { rel =>
-      fs.delete(new HPath(target, rel), false)
-      fs.delete(new HPath(target, rel + DelimBloom.Suffix), false) // sidecar, if any
+    val staticOverwrite = truncate && !dynamicOverwrite
+    val live = DelimLog.commit(fs, target, prevM, newFiles, Some(staging)) {
+      (newGen, newEntries) =>
+        val newSet = newEntries.map(_.rel).toSet
+        prevM.copy(
+          files = survivors.filterNot(e => newSet.contains(e.rel)) ++ newEntries,
+          // the multiline flag follows the LIVE files: a static overwrite
+          // carries only the new generation's evidence, append/dynamic OR
+          // in the previous flag (conservative — framing stays correct,
+          // only split parallelism is traded)
+          multiLine = newMulti || (survivors.nonEmpty && prevM.multiLine),
+          retain = retainVersions.getOrElse(prevM.retain),
+          schemas = prevM.schemas + (newGen -> DelimLog.ManifestSchema(partCols,
+            DelimV2.assignFieldIds(schema, prevM.schemas))),
+          // a static overwrite starts the bloom-column list fresh (the
+          // old generation's sidecars die with its files)
+          bloomCols =
+            if (staticOverwrite) bloomFor.distinct
+            else (prevM.bloomCols ++ bloomFor).distinct,
+          segSize = segmentSize.getOrElse(prevM.segSize))
     }
-    fs.delete(staging, true) // drops any uncommitted stray files with it
+    if (staticOverwrite) DelimLog.sweepDead(fs, target, live)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -2289,14 +2225,14 @@ private[v2] class DelimWrite(
       // its own dead commit here is exactly the recovery the claim
       // protocol documents (without it the next epoch's claim would
       // collide forever)
-      DelimV2.recoverManifest(
+      DelimLog.recoverManifest(
         staging.getFileSystem(DelimV2.driverConf()), new HPath(path))
 
       override def createStreamingWriterFactory(
           info: PhysicalWriteInfo)
           : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
         val hc = DelimV2.driverConf()
-        DelimV2.fastMkdirs(staging.getFileSystem(hc), staging)
+        DelimLog.fastMkdirs(staging.getFileSystem(hc), staging)
         val confMap = DelimV2.shippableConf(hc)
         val stagingDir = staging.toString
         val s = schema; val d = delim; val pc = partCols; val q = quote
@@ -2312,44 +2248,36 @@ private[v2] class DelimWrite(
           messages: Array[WriterCommitMessage]): Unit = {
         val fs = staging.getFileSystem(DelimV2.driverConf())
         val target = new HPath(path)
-        DelimWrite.promote(fs, target, messages)
-        // manifest append, deduped by path: a REPLAYED epoch's files
-        // carry the same (epoch, partition) final names, so its
-        // entries REPLACE rather than duplicate — the manifest stays
-        // exactly-once like the landed bytes. Each epoch commits a new
-        // GENERATION through the same claim-race detector as batch
-        // jobs, so a batch writer racing the stream fails loudly
-        // instead of silently unlisting an epoch's files.
-        val prevM = DelimV2.snapshotManifest(fs, target, fs.getConf)
-        val newGen = prevM.gen + 1
-        val newEntries = messages.toSeq.flatMap {
-          case DelimCommit(staged, _) => staged.map(sf =>
-            DelimV2.ManifestEntry(sf.length, newGen,
-              if (sf.subdir.isEmpty) sf.finalName
-              else s"${sf.subdir}/${sf.finalName}", sf.stats))
+        val prevM = DelimLog.snapshotManifest(fs, target, fs.getConf)
+        // the epoch promotes its OWN files, outside the commit's
+        // rollback: a REPLAYED epoch's (epoch, partition) final names
+        // may be files an earlier committed attempt already listed, and
+        // a lost claim must never delete those
+        val staged = messages.toSeq.flatMap {
+          case DelimCommit(st, _) => st
           case _ => Nil
         }
+        val epochEntries = DelimLog.promote(fs, target, staged, prevM.gen + 1)
         val newMulti = messages.exists {
           case DelimCommit(_, m) => m
           case _ => false
         }
-        val newSet = newEntries.map(_.rel).toSet
-        DelimV2.commitManifest(fs, target, DelimV2.DelimManifest(
-          prevM.files.filterNot(e => newSet.contains(e.rel)) ++ newEntries,
-          prevM.multiLine || newMulti, newGen,
-          retainVersions.getOrElse(prevM.retain),
-          prevM.schemas + (newGen -> DelimV2.ManifestSchema(partCols,
-            DelimV2.assignFieldIds(schema, prevM.schemas))),
-          tombstones = prevM.tombstones,
-          // the bloom-column header must survive a streaming epoch:
-          // dropping it would silently stop probing every existing
-          // .bloom sidecar after the first stream write
-          bloomCols = prevM.bloomCols,
-          // the sink's own manifestSegmentSize option must ENGAGE the
-          // policy too (a fresh landing directory fed by a stream
-          // would otherwise never segment)
-          segSize = segmentSize.getOrElse(prevM.segSize),
-          tags = prevM.tags))
+        // manifest append, deduped by path: a replayed epoch's entries
+        // REPLACE rather than duplicate — the manifest stays
+        // exactly-once like the landed bytes
+        val newSet = epochEntries.map(_.rel).toSet
+        DelimLog.commit(fs, target, prevM) { (newGen, _) =>
+          prevM.copy(
+            files = prevM.files.filterNot(e => newSet.contains(e.rel)) ++ epochEntries,
+            multiLine = prevM.multiLine || newMulti,
+            retain = retainVersions.getOrElse(prevM.retain),
+            schemas = prevM.schemas + (newGen -> DelimLog.ManifestSchema(partCols,
+              DelimV2.assignFieldIds(schema, prevM.schemas))),
+            // the sink's own manifestSegmentSize option must ENGAGE the
+            // policy too (a fresh landing directory fed by a stream
+            // would otherwise never segment)
+            segSize = segmentSize.getOrElse(prevM.segSize))
+        }
       }
 
       override def abort(epochId: Long,
@@ -2361,79 +2289,6 @@ private[v2] class DelimWrite(
           case _ => ()
         }
       }
-    }
-}
-
-private[v2] object DelimWrite {
-  import org.apache.spark.sql.connector.write.WriterCommitMessage
-
-  /** Static-overwrite cleanup: delete every data file under `target`
-    * whose root-relative path is not in `live`, then prune k=v
-    * directories left empty. Underscore/dot entries at the ROOT
-    * (the manifest, markers, staging) survive; inside a dead partition
-    * directory they die with it (checksum sidecars must not keep a
-    * deleted partition listable). Foreign non-k=v subdirectories are
-    * left untouched.
-    */
-  private[v2] def sweepDead(
-      fs: FileSystem, target: HPath, live: DelimV2.LiveFileSet): Unit = {
-    sweepDeadCount(fs, target, live); ()
-  }
-
-  /** sweepDead returning how many data files died (the
-    * expire_snapshots procedure's summary row). */
-  private[v2] def sweepDeadCount(
-      fs: FileSystem, target: HPath, live: DelimV2.LiveFileSet): Long = {
-    val root = fs.makeQualified(target).toUri
-    var deleted = 0L
-    def walk(dir: HPath, isRoot: Boolean): Boolean = { // true = keep dir
-      var keep = false
-      Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (n.startsWith("_") || n.startsWith(".")) {
-            if (isRoot) keep = true // staging lives until the job ends
-          } else if (n.contains("=")) {
-            if (walk(st.getPath, isRoot = false)) keep = true
-            else fs.delete(st.getPath, true)
-          } else keep = true
-        } else if (n.startsWith("_") || n.startsWith(".")) {
-          if (isRoot) keep = true
-        } else {
-          val rel = root.relativize(fs.makeQualified(st.getPath).toUri).getPath
-          val liveHere = live.contains(rel) ||
-            (rel.endsWith(DelimBloom.Suffix) &&
-              live.contains(rel.stripSuffix(DelimBloom.Suffix)))
-          if (liveHere) keep = true
-          else { fs.delete(st.getPath, false); deleted += 1 }
-        }
-      }
-      keep
-    }
-    walk(target, isRoot = true)
-    deleted
-  }
-
-  /** Promote staged files to their final names (shared by the batch
-    * job commit and each streaming epoch commit): an existing file
-    * under the final name is REPLACED — a no-op for batch (staged
-    * names are attempt-unique) and the replay-idempotence rule for
-    * streaming epochs.
-    */
-  def promote(fs: FileSystem, target: HPath,
-      messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case DelimCommit(staged, _) => staged.foreach { sf =>
-        val src = new HPath(sf.path)
-        val dstDir = if (sf.subdir.isEmpty) target else new HPath(target, sf.subdir)
-        if (sf.subdir.nonEmpty) DelimV2.fastMkdirs(fs, dstDir)
-        val dst = new HPath(dstDir, sf.finalName)
-        if (fs.exists(dst)) fs.delete(dst, false)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"graft-delim: commit rename failed for $src")
-      }
-      case other =>
-        throw new IllegalStateException(s"graft-delim: foreign commit message $other")
     }
 }
 
@@ -2581,8 +2436,8 @@ private[v2] class DelimDataWriter(
     def seenString(v: String): Unit = {
       if (v.length > 64) { valid = false; return }
       any = true
-      if (smin == null || DelimV2.cmpCodePointsPub(v, smin) < 0) smin = v
-      if (smax == null || DelimV2.cmpCodePointsPub(v, smax) > 0) smax = v
+      if (smin == null || DelimV2.cmpCodePoints(v, smin) < 0) smin = v
+      if (smax == null || DelimV2.cmpCodePoints(v, smax) > 0) smax = v
     }
     /** (minText, maxText) in the same text forms parseExternal reads. */
     def bounds: (String, String) =
@@ -2700,7 +2555,7 @@ private[v2] class DelimDataWriter(
       val file = new HPath(stagingDir, s"$fileStem$suffix.txt")
       staged += DelimStagedFile(subdir, file.toString, s"$finStem.txt")
       val out = new java.io.BufferedOutputStream(
-        DelimV2.fastCreate(file.getFileSystem(conf()), file, overwrite = true),
+        DelimLog.fastCreate(file.getFileSystem(conf()), file, overwrite = true),
         1 << 16)
       streams(subdir) = out
       out
@@ -2818,7 +2673,7 @@ private[v2] class DelimDataWriter(
                 (schema.fieldNames(si), b.bits)
               })
             val side = new HPath(sf.path + DelimBloom.Suffix)
-            val out = DelimV2.fastCreate(side.getFileSystem(c), side, overwrite = true)
+            val out = DelimLog.fastCreate(side.getFileSystem(c), side, overwrite = true)
             try out.write(bytes) finally out.close()
             DelimStagedFile(sf.subdir, side.toString,
               sf.finalName + DelimBloom.Suffix, bytes.length.toLong,
@@ -2968,7 +2823,7 @@ private[graft] object DelimV2 {
     tag.foreach { name =>
       val root = new HPath(paths(options).head)
       val fs = root.getFileSystem(driverConf())
-      val m = readManifest(fs, root).getOrElse(
+      val m = DelimLog.readManifest(fs, root).getOrElse(
         throw new IllegalArgumentException(
           s"graft-delim: tagAsOf requires a manifest-bearing table, " +
             s"$root has none"))
@@ -2981,8 +2836,8 @@ private[graft] object DelimV2 {
     v.orElse(t.map { ts =>
       val root = new HPath(paths(options).head)
       val fs = root.getFileSystem(driverConf())
-      val candidates = retainedVersions(fs, root).flatMap { g =>
-        readManifestFile(fs, new HPath(root, s"$ManifestFile.v$g"))
+      val candidates = DelimLog.retainedVersions(fs, root).flatMap { g =>
+        DelimLog.readManifestFile(fs, new HPath(root, s"${DelimLog.ManifestFile}.v$g"))
           .map(m => (g, m.ts))
       }
       if (candidates.isEmpty)
@@ -3022,40 +2877,25 @@ private[graft] object DelimV2 {
   /** Hive's null-partition directory token. */
   val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
+  /** One `k=v` partition path segment as (k, v) — the one parser of the
+    * layout (listing, manifest entries, compaction, partition DDL):
+    * [[HiveDefaultPartition]] decodes to a null value, and a segment
+    * not in k=v form is None. */
+  private[graft] def partSegment(seg: String): Option[(String, String)] = {
+    val eq = seg.indexOf('=')
+    if (eq <= 0) None
+    else {
+      val v = seg.substring(eq + 1)
+      Some(seg.substring(0, eq) -> (if (v == HiveDefaultPartition) null else v))
+    }
+  }
+
+  /** The `k=v` pairs of a root-relative DIRECTORY path, in path order. */
+  private[graft] def partValues(dir: String): Seq[(String, String)] =
+    if (dir.isEmpty) Nil else dir.split('/').toSeq.flatMap(partSegment)
+
   /** Name of the `_file` metadata column (see DelimTable.metadataColumns). */
   val FileMetaCol = "_file"
-
-  /** SNAPSHOT MANIFEST: the committed-files list a writing job swaps in
-    * atomically at commit (a `#graft-delim-manifest` header line, then
-    * `length<TAB>relative/path` lines). When present at a table root,
-    * readers list FROM it — a planning-time snapshot: a reader planned
-    * mid-overwrite sees exactly the old or the new generation, never a
-    * mix — and skip the recursive directory walk entirely (at 100 TB,
-    * one small-file read instead of a namespace crawl). Directories
-    * without one (legacy layouts, text fixtures) fall back to the
-    * recursive listing.
-    *
-    * CONCURRENCY CONTRACT: one committer at a time per table. The swap
-    * itself is atomic, but the commit sequence is read-modify-write on
-    * the previous snapshot — two simultaneous committers (two appends,
-    * a batch job racing a streaming epoch, a commit racing a DROP
-    * PARTITION) are last-writer-wins, and the loser's files end up
-    * unlisted. This is the same single-writer assumption Spark's own
-    * file sources make for a directory; multi-writer coordination needs
-    * an external lock or a CAS-capable metastore, deliberately out of
-    * scope for a landing-directory format.
-    */
-  val ManifestFile = "_manifest"
-
-  /** One committed data file: byte length, the GENERATION whose commit
-    * wrote it (keys the writer schema its lines were laid out under —
-    * the schema-evolution contract), the table-root-relative path, and
-    * the file's encoded column STATS (min/max/null-count per pushable
-    * column, recorded by the writer — the data-skipping index; empty =
-    * none).
-    */
-  private[graft] final case class ManifestEntry(
-      len: Long, gen: Long, rel: String, stats: String = "")
 
   /** Decoded per-file statistics: row count plus, per column, the
     * EXTERNAL-typed min/max (null min = the column is all-null in this
@@ -3073,7 +2913,7 @@ private[graft] object DelimV2 {
   // stats text encoding: `rows=N;<col>:<nulls>:<min>:<max>;...` with
   // %-escaping of the separator characters; "%n" spells a null bound
   // (all-null column) min/max
-  private def statEsc(s: String): String = {
+  private[v2] def statEsc(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length)
     s.foreach {
       case '%' => sb.append("%25")
@@ -3086,7 +2926,7 @@ private[graft] object DelimV2 {
     }
     sb.toString
   }
-  private def statUnesc(s: String): String = {
+  private[v2] def statUnesc(s: String): String = {
     if (!s.contains('%')) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
@@ -3126,7 +2966,7 @@ private[graft] object DelimV2 {
     * schema-less stats decode to None — "cannot skip", never an error.
     */
   private[graft] def decodeStats(
-      encoded: String, schema: Option[ManifestSchema]): Option[FileStats] = {
+      encoded: String, schema: Option[DelimLog.ManifestSchema]): Option[FileStats] = {
     if (encoded == null || encoded.isEmpty || schema.isEmpty) return None
     val st = schema.get.struct
     try {
@@ -3242,1025 +3082,6 @@ private[graft] object DelimV2 {
     }
   }
 
-  /** The writer schema of one generation: the full write schema
-    * (including partition columns) plus which of its fields were
-    * partition columns — the non-partition fields, in schema order,
-    * are the file's POSITIONAL field layout.
-    */
-  private[graft] final case class ManifestSchema(
-      partCols: Seq[String], struct: StructType)
-
-  /** The committed snapshot: file entries, the MULTILINE flag (true
-    * when any live file contains quoted newlines, so readers engage
-    * quote-aware whole-file framing automatically), the snapshot
-    * GENERATION (monotonic; each commit claims gen+1 via a
-    * create-no-overwrite versioned manifest — the conflict detector),
-    * the RETENTION policy (how many generations' manifests + files are
-    * kept for time travel; a table property carried forward by every
-    * commit), and the per-generation writer SCHEMAS for the
-    * generations that still own live files.
-    */
-  private[graft] final case class DelimManifest(
-      files: Seq[ManifestEntry], multiLine: Boolean,
-      gen: Long = 0L, retain: Int = 1,
-      schemas: Map[Long, ManifestSchema] = Map.empty,
-      /** Commit wall-clock (epoch millis; 0 = pre-timestamp manifest) —
-        * stamped by commitManifest, resolved by `timestampAsOf`. */
-      ts: Long = 0L,
-      /** MERGE-ON-READ delete TOMBSTONES: (generation recorded,
-        * encoded predicate conjunction). A DELETE whose condition is
-        * fully pushable commits one of these instead of rewriting the
-        * matched files (copy-on-write amplifies a 10-row correction
-        * into a full-file rewrite at 100 TB); scans apply the
-        * complement per row, but ONLY to files whose generation is at
-        * or before the tombstone's — rows written after the delete are
-        * never affected (the resurrection/re-delete hazard). Encoding:
-        * `;`-joined leaves, each `op:col:value...` with %-escaping
-        * (see encodeTombstone).
-        */
-      tombstones: Seq[(Long, String)] = Nil,
-      /** Columns some generation wrote bloom sidecars for — readers
-        * probe `<file>.bloom` for equality filters on these (a file
-        * written without one simply cannot skip). Header-level so
-        * un-bloomed tables never pay a sidecar existence check. */
-      bloomCols: Seq[String] = Nil,
-      /** Manifest SEGMENTATION threshold (0 = single-document). When
-        * set and the snapshot holds >= segSize entries, the committed
-        * `_manifest.v<gen>` is a small INDEX of immutable
-        * content-addressed SEGMENT files (entries grouped per leaf
-        * partition directory, chunked every segSize) — a commit
-        * writes only the segments whose membership changed plus the
-        * index, and planning loads only the segments partition
-        * pruning keeps. The single-document design serializes every
-        * live entry on every commit, which caps the table at ~100k
-        * entries while 100 TB implies ~800k (STRESS §15). A table
-        * property carried forward by every commit like `retain`. */
-      segSize: Int = 0,
-      /** Segments in a SEGMENTED index and how many this instance
-        * loaded (0/0 single-document). Fewer loaded = SEGMENT PRUNING
-        * (only the segments a scan's partition predicate kept): a
-        * planning artifact that commitManifest rejects, since
-        * committing it would silently drop the pruned-away files. */
-      segsIndexed: Int = 0, segsLoaded: Int = 0,
-      /** Named snapshot TAGS (tag → generation): a tagged generation's
-        * versioned manifest — and with it every file and segment that
-        * snapshot references — is EXEMPT from retention expiry and the
-        * sweeps that key off it, pinning the snapshot for audits and
-        * reproducible reads (`tagAsOf` resolves a tag to its
-        * generation). A table property carried forward by every
-        * commit like `retain`; CALL create_tag/drop_tag manage it. */
-      tags: Map[String, Long] = Map.empty) {
-    def entries: Seq[(Long, String)] = files.map(e => (e.len, e.rel))
-    def pruned: Boolean = segsLoaded != segsIndexed
-  }
-
-  /** Parse one manifest FILE (current or versioned), or None when
-    * absent. Accepts both the v1 format (`len\trel` entries, no
-    * generations) and v2 (`len\tgen\trel` entries, `#schema` lines,
-    * gen/retain header attributes). Malformed content (e.g. a FOREIGN
-    * file that happens to be named `_manifest`) fails loudly with the
-    * path in the message — silently treating it as an empty snapshot
-    * would hide the table.
-    */
-  /** One segment reference in a segmented manifest INDEX: immutable
-    * content-addressed file name, entry count, and the lexicographic
-    * [minRel, maxRel] range of its entries — the per-segment metadata
-    * partition pruning decides on without loading the segment.
-    */
-  private[graft] final case class SegRef(
-      name: String, count: Int, minRel: String, maxRel: String)
-
-  /** Parsed-segment cache: content-addressed segment files are
-    * immutable, so a (qualified path → entries) mapping can never go
-    * stale — repeated plans and append commits re-read only the index
-    * and any segments they have not seen. Crudely bounded: a full
-    * clear past the cap beats an LRU's locking here.
-    */
-  private val segCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[ManifestEntry]]()
-  private val SegCacheCap = 4096
-
-  /** Drop the parsed-segment and known-on-disk caches — the stress
-    * sweep's cold-path protocol (a fresh driver pays the disk parse). */
-  private[graft] def clearSegCaches(): Unit = {
-    segCache.clear(); runChunkCache.clear()
-  }
-
-  private[graft] def readManifestFile(
-      fs: FileSystem, mf: HPath,
-      prune: Seq[(String, Seq[String])] = Nil): Option[DelimManifest] = {
-    // the local ChecksumFs renames a file's data and its .crc sidecar
-    // SEPARATELY, so a reader racing the pointer swap can catch a torn
-    // pair (observed live: "Checksum error: .../_manifest" killing a
-    // stream's trigger). The tear is sub-millisecond by construction —
-    // retry briefly before treating it as real corruption.
-    var attempt = 0
-    while (true) {
-      try return readManifestFileOnce(fs, mf, prune)
-      catch {
-        case e: org.apache.hadoop.fs.ChecksumException =>
-          attempt += 1
-          if (attempt >= 4) throw e
-          Thread.sleep(25L * attempt)
-      }
-    }
-    None // unreachable
-  }
-
-  private def parseEntryLine(
-      l: String, bad: (String, String) => Nothing): ManifestEntry = {
-    val parts = l.split('\t')
-    try parts.length match {
-      case 2 => ManifestEntry(parts(0).toLong, 0L, parts(1))
-      case 3 => ManifestEntry(parts(0).toLong, parts(1).toLong, parts(2))
-      case 4 => ManifestEntry(parts(0).toLong, parts(1).toLong,
-        parts(2), parts(3))
-      case _ => bad(l, "line")
-    } catch { case _: NumberFormatException => bad(l, "length") }
-  }
-
-  private def readManifestFileOnce(
-      fs: FileSystem, mf: HPath,
-      prune: Seq[(String, Seq[String])] = Nil): Option[DelimManifest] = {
-    if (!fs.exists(mf)) None
-    else {
-      val in = fs.open(mf)
-      try {
-        val src = scala.io.Source.fromInputStream(in, "UTF-8")
-        var multi = false
-        var gen = 0L
-        var retain = 1
-        var ts = 0L
-        var segSize = 0
-        var schemas = Map.empty[Long, ManifestSchema]
-        var tombs = Vector.empty[(Long, String)]
-        var bloomCols = Seq.empty[String]
-        var tags = Map.empty[String, Long]
-        var segRefs = Vector.empty[SegRef]
-        def bad(l: String, what: String): Nothing =
-          throw new IllegalStateException(
-            s"graft-delim: malformed manifest $what in $mf: '${l.take(80)}'" +
-              " (a foreign file named _manifest?)")
-        val entries = src.getLines().filter(_.nonEmpty).flatMap { l =>
-          if (l.startsWith("#schema\t")) {
-            val parts = l.split('\t')
-            if (parts.length != 4) bad(l, "schema line")
-            val pc = parts(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
-            val st =
-              try DataType.fromJson(parts(3)).asInstanceOf[StructType]
-              catch { case scala.util.control.NonFatal(_) => bad(l, "schema json") }
-            schemas += (parts(1).toLong -> ManifestSchema(pc, st))
-            None
-          } else if (l.startsWith("#tombstone\t")) {
-            val parts = l.split('\t')
-            if (parts.length != 3) bad(l, "tombstone line")
-            tombs :+= (parts(1).toLong -> parts(2))
-            None
-          } else if (l.startsWith("#segment\t")) {
-            val parts = l.split('\t')
-            if (parts.length != 5) bad(l, "segment line")
-            try segRefs :+= SegRef(parts(1), parts(2).toInt, parts(3), parts(4))
-            catch { case _: NumberFormatException => bad(l, "segment count") }
-            None
-          } else if (l.startsWith("#")) {
-            if (l.contains("multiline=true")) multi = true
-            l.split(' ').foreach { a =>
-              if (a.startsWith("gen=")) gen = a.stripPrefix("gen=").toLong
-              if (a.startsWith("retain=")) retain = a.stripPrefix("retain=").toInt
-              if (a.startsWith("ts=")) ts = a.stripPrefix("ts=").toLong
-              if (a.startsWith("segsize=")) segSize = a.stripPrefix("segsize=").toInt
-              if (a.startsWith("bloomcols=")) bloomCols =
-                a.stripPrefix("bloomcols=").split(',').toSeq
-                  .map(statUnesc).filter(_.nonEmpty)
-              if (a.startsWith("tags=")) tags =
-                a.stripPrefix("tags=").split(',').toSeq
-                  .flatMap { t =>
-                    val c = t.lastIndexOf(':')
-                    if (c <= 0) None
-                    else try Some(statUnesc(t.substring(0, c)) ->
-                      t.substring(c + 1).toLong)
-                    catch { case _: NumberFormatException => None }
-                  }.toMap
-            }
-            None
-          } else {
-            Some(parseEntryLine(l, bad))
-          }
-        }.toList
-        if (segRefs.isEmpty)
-          Some(DelimManifest(entries, multi, gen, retain, schemas, ts, tombs,
-            bloomCols, segSize, tags = tags))
-        else {
-          // SEGMENTED index: load entries from the referenced segment
-          // files — only those a pushed partition equality keeps. A
-          // segment spans exactly ONE leaf partition directory
-          // (ensureSegments chunks per-dir runs), so its full k=v map
-          // reads straight off the rel paths and ANY candidate
-          // column prunes — not just the leading one (round-20;
-          // round 19's lexicographic range test was first-column-
-          // only, so a k1=/k2= table filtered on k2 loaded every
-          // segment). A segment whose min/max dirs differ (foreign
-          // layout) or whose dir lacks the candidate column is KEPT
-          // (conservative: file-level pruning still applies); the
-          // candidate value strings are the same raw dir-text forms
-          // the file-level compare uses, so pruning here can never
-          // drop a file the pushed filters would keep.
-          val root = mf.getParent
-          def dirOf(rel: String): String = {
-            val i = rel.lastIndexOf('/')
-            if (i < 0) "" else rel.substring(0, i)
-          }
-          val selected =
-            if (prune.isEmpty || tombs.nonEmpty) segRefs
-            else segRefs.filter { r =>
-              val d = dirOf(r.minRel)
-              if (d != dirOf(r.maxRel)) true
-              else {
-                val kv = d.split('/').flatMap { seg =>
-                  val eq = seg.indexOf('=')
-                  if (eq <= 0) None
-                  else Some(seg.substring(0, eq) -> seg.substring(eq + 1))
-                }.toMap
-                prune.forall { case (c, vs) =>
-                  kv.get(c).forall(vs.contains)
-                }
-              }
-            }
-          val segEntries = selected.flatMap { r =>
-            val sp = new HPath(root, r.name)
-            val key = fs.makeQualified(sp).toUri.toString
-            Option(segCache.get(key)).getOrElse {
-              val sin = fs.open(sp)
-              val es =
-                try scala.io.Source.fromInputStream(sin, "UTF-8")
-                  .getLines().filter(_.nonEmpty)
-                  .map(parseEntryLine(_, bad)).toList
-                finally sin.close()
-              if (es.size != r.count)
-                bad(r.name, s"segment (expected ${r.count} entries, read ${es.size})")
-              if (segCache.size > SegCacheCap) segCache.clear()
-              segCache.put(key, es)
-              es
-            }
-          }
-          Some(DelimManifest(entries ++ segEntries, multi, gen, retain,
-            schemas, ts, tombs, bloomCols, segSize,
-            segsIndexed = segRefs.size, segsLoaded = selected.size,
-            tags = tags))
-        }
-      } finally in.close()
-    }
-  }
-
-  /** The CURRENT committed snapshot at a table root, or None.
-    *
-    * SWAP-WINDOW GUARD: the pointer swap is a rename-with-overwrite,
-    * which on rename-non-atomic filesystems (local file://) exposes a
-    * sub-millisecond NO-POINTER window. A missing `_manifest` beside
-    * existing versioned manifests therefore means "mid-swap or crashed
-    * between claim and swap", never "not a manifest table" — fall back
-    * to the HIGHEST versioned manifest, which is always a consistent
-    * snapshot (a claimed generation's files are promoted before the
-    * claim), instead of degrading to the recursive listing (which
-    * would see a MIX of generations — the exact window the manifest
-    * exists to close). This also makes a crashed claim self-heal: the
-    * next committer reads the claimed snapshot, claims the successor,
-    * and its own pointer swap completes the dead commit.
-    */
-  private[graft] def readManifest(
-      fs: FileSystem, target: HPath,
-      prune: Seq[(String, Seq[String])] = Nil): Option[DelimManifest] =
-    readManifestFile(fs, new HPath(target, ManifestFile), prune).orElse {
-      retainedVersions(fs, target).maxOption.flatMap(g =>
-        readManifestFile(fs, new HPath(target, s"$ManifestFile.v$g"), prune))
-    }
-
-  /** A RETAINED historical snapshot: `_manifest.v<gen>`, kept for the
-    * table's retention window to serve `option("versionAsOf", gen)`
-    * reads. Fails loudly (listing what IS retained) rather than
-    * silently falling back to the live generation.
-    */
-  private[graft] def readManifestVersion(
-      fs: FileSystem, target: HPath, gen: Long,
-      prune: Seq[(String, Seq[String])] = Nil): DelimManifest =
-    readManifestFile(fs, new HPath(target, s"$ManifestFile.v$gen"), prune)
-      .getOrElse {
-      val have = retainedVersions(fs, target)
-      throw new IllegalArgumentException(
-        s"graft-delim: versionAsOf=$gen not retained at $target " +
-          s"(retained generations: ${if (have.isEmpty) "none" else have.mkString(", ")})")
-    }
-
-  /** Generations with a retained versioned manifest, ascending. */
-  private[graft] def retainedVersions(fs: FileSystem, target: HPath): Seq[Long] =
-    Option(fs.globStatus(new HPath(target, s"$ManifestFile.v*")))
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .flatMap { st =>
-        val s = st.getPath.getName.stripPrefix(s"$ManifestFile.v")
-        try Some(s.toLong) catch { case _: NumberFormatException => None }
-      }.sorted
-
-  private def appendEntryLine(
-      sb: java.lang.StringBuilder, e: ManifestEntry): Unit = {
-    sb.append(s"${e.len}\t${e.gen}\t${e.rel}")
-    if (e.stats.nonEmpty) sb.append('\t').append(e.stats)
-    sb.append('\n')
-  }
-
-  private def headerAndMeta(m: DelimManifest): java.lang.StringBuilder = {
-    val sb = new java.lang.StringBuilder(64 + m.files.size * 48)
-    sb.append(s"#graft-delim-manifest v2 multiline=${m.multiLine}" +
-      s" gen=${m.gen} retain=${m.retain}" +
-      (if (m.ts > 0) s" ts=${m.ts}" else "") +
-      (if (m.segSize > 0) s" segsize=${m.segSize}" else "") +
-      (if (m.bloomCols.nonEmpty)
-        s" bloomcols=${m.bloomCols.map(statEsc).mkString(",")}" else "") +
-      (if (m.tags.nonEmpty)
-        s" tags=${m.tags.toSeq.sortBy(_._1)
-          .map { case (n, g) => s"${statEsc(n)}:$g" }.mkString(",")}"
-      else "") +
-      "\n")
-    val liveGens = m.files.map(_.gen).toSet
-    m.schemas.toSeq.sortBy(_._1).foreach { case (g, sch) =>
-      if (liveGens.contains(g) || g == m.gen) // GC schemas of dead generations
-        sb.append(s"#schema\t$g\t${sch.partCols.mkString(",")}\t${sch.struct.json}\n")
-    }
-    // GC tombstones no live file can still match: a tombstone applies
-    // only to files at or before its generation, so once every live
-    // file is newer it is inert forever (static overwrite and full
-    // compaction cycles clear them automatically)
-    m.tombstones.foreach { case (g, enc) =>
-      if (m.files.exists(_.gen <= g))
-        sb.append(s"#tombstone\t$g\t$enc\n")
-    }
-    sb
-  }
-
-  private def serializeManifest(m: DelimManifest): Array[Byte] = {
-    val sb = headerAndMeta(m)
-    m.files.foreach(appendEntryLine(sb, _))
-    sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** Prefix a segment file name must carry — underscore-prefixed so
-    * listings ignore segments like the manifest itself. */
-  private[graft] val SegPrefix = s"$ManifestFile.seg-"
-
-  // ------------------------------------------------ local-fs fast path
-  //
-  // On file:// the Hadoop facade FORKS A PROCESS per created file
-  // (RawLocalFileSystem.setPermission shells `chmod` when the native
-  // lib is absent) and per FileContext status probe (`readlink`) —
-  // sampled at roughly half the non-job driver time of commit-heavy
-  // certifications (~10-25 ms per fork, several per commit). java.nio
-  // issues the same create/move as plain syscalls. Only the file
-  // scheme takes these branches; HDFS and object stores keep the
-  // Hadoop semantics unchanged — and at cluster scale the forks never
-  // happen anyway (native lib present or remote scheme).
-
-  private[v2] def isLocalFs(fs: FileSystem): Boolean = {
-    val s = fs.getUri.getScheme
-    s == null || s == "file"
-  }
-
-  private[v2] def localPath(p: HPath): java.nio.file.Path =
-    java.nio.file.Paths.get(p.toUri.getPath)
-
-  /** `fs.mkdirs` minus the per-directory fork on file:// (the Hadoop
-    * local fs shells `chmod` once per created level). */
-  private[v2] def fastMkdirs(fs: FileSystem, dir: HPath): Unit =
-    if (isLocalFs(fs)) { java.nio.file.Files.createDirectories(localPath(dir)); () }
-    else { fs.mkdirs(dir); () }
-
-  /** `fs.create` minus the per-file fork on file://: parents created,
-    * any stale checksum sidecar removed (a checksummed reader must not
-    * verify new bytes against an old `.crc`); other schemes delegate.
-    */
-  private[v2] def fastCreate(
-      fs: FileSystem, file: HPath, overwrite: Boolean): java.io.OutputStream =
-    if (!isLocalFs(fs)) fs.create(file, overwrite)
-    else {
-      import java.nio.file.{Files, StandardOpenOption => O}
-      val p = localPath(file)
-      val dir = p.getParent
-      if (dir != null) {
-        Files.createDirectories(dir)
-        // BOTH branches clear a stale checksum sidecar (round-22
-        // advice): a file once written by the checksummed facade,
-        // deleted via a raw/nio path (orphaning its .crc), then
-        // recreated here would otherwise fail checksum verification on
-        // its next checksummed read. The non-overwrite branch clears it
-        // only when the destination is absent — if CREATE_NEW is about
-        // to fail on an existing file, its live sidecar must survive.
-        if (overwrite || !Files.exists(p))
-          Files.deleteIfExists(dir.resolve("." + p.getFileName + ".crc"))
-      }
-      if (overwrite) Files.newOutputStream(p, O.CREATE, O.TRUNCATE_EXISTING, O.WRITE)
-      else Files.newOutputStream(p, O.CREATE_NEW, O.WRITE)
-    }
-
-  /** Per-RUN chunking memo: (table, partition dir) → the run's exact
-    * entry list and its segment refs from the last commit in this
-    * JVM. A nightly-load commit changes one or two partitions; every
-    * other run's membership is EXACTLY the previous commit's, so its
-    * chunks need no re-serialization, no hashing, and no existence
-    * probes — the equality check against the cached entries (cheap:
-    * case-class equality, reference-equal fast path) is what makes
-    * commits O(changed partitions) instead of O(table). Entries are
-    * stored by reference; the memory cost is pointers, not copies.
-    */
-  private val runChunkCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[ManifestEntry], Seq[SegRef])]()
-  private val RunCacheCap = 131072
-  /** Last generation this JVM committed per table root — the
-    * lineage-reset detector (see commitManifest). */
-  private val lastGenSeen =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Cache eviction for EXTERNAL segment deletions (remove_orphans):
-    * drop the parsed entries and any run memo vouching for a deleted
-    * chunk — a later commit must re-prove existence, not trust a
-    * memo of a file that is gone. */
-  private[v2] def noteSegmentsDeleted(
-      fs: FileSystem, target: HPath, names: Set[String]): Unit = {
-    if (names.isEmpty) return
-    val tableKey = fs.makeQualified(target).toUri.toString
-    names.foreach(n => segCache.remove(s"$tableKey/$n"))
-    runChunkCache.entrySet().removeIf(e =>
-      e.getKey.startsWith(tableKey + "\u0000") &&
-        e.getValue._2.exists(r => names.contains(r.name)))
-  }
-
-  /** Deterministic, append-localized chunking: entries grouped into
-    * RUNS per leaf partition directory, each run sorted by rel and
-    * split every segSize entries. A commit touching one partition
-    * changes only that partition's chunks; every other run hits the
-    * memo (or, cache-cold, serializes to identical bytes → identical
-    * content hash → the already-landed segment file is reused without
-    * a write). Returns the index's segment references in run order
-    * (runs sorted by directory, entries sorted within each run — so
-    * each SegRef's [minRel, maxRel] brackets its entries exactly).
-    */
-  private def ensureSegments(
-      fs: FileSystem, target: HPath, m: DelimManifest): Seq[SegRef] = {
-    val tableKey = fs.makeQualified(target).toUri.toString
-    def dirOf(rel: String): String = {
-      val i = rel.lastIndexOf('/')
-      if (i < 0) "" else rel.substring(0, i)
-    }
-    // group by leaf partition directory WITHOUT a global sort: the
-    // memo is checked against each run's ARRIVAL order (stable across
-    // commits -- a snapshot's entries are the previous index's order
-    // plus appended entries), so an unchanged run pays one O(n)
-    // equality walk and nothing else: no sort, no serialization, no
-    // hashing, no filesystem probes. Only changed runs sort + chunk.
-    val byDir = m.files.groupBy(e => dirOf(e.rel))
-    val refs = Vector.newBuilder[SegRef]
-    byDir.keys.toSeq.sorted.foreach { runDir =>
-      val es0 = byDir(runDir)
-      val memoKey = tableKey + "\u0000" + runDir
-      val memo = runChunkCache.get(memoKey)
-      if (memo != null && memo._1 == es0) refs ++= memo._2
-      else {
-        val es = es0.sortBy(_.rel)(Ordering.String)
-        val runRefs = Vector.newBuilder[SegRef]
-        es.grouped(m.segSize).foreach { chunk =>
-          val sb = new java.lang.StringBuilder(chunk.size * 48)
-          chunk.foreach(appendEntryLine(sb, _))
-          val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val md = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-          val hex = md.take(8).map(b => f"${b & 0xff}%02x").mkString
-          val name = s"$SegPrefix$hex-${chunk.size}"
-          val sp = new HPath(target, name)
-          val key = fs.makeQualified(sp).toUri.toString
-          if (!fs.exists(sp)) {
-            // create-no-overwrite via tmp + rename: a concurrent commit
-            // writing the SAME content races benignly (identical bytes)
-            val tmp = new HPath(target,
-              s"$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-            if (isLocalFs(fs)) {
-              import java.nio.file.{Files, StandardCopyOption => C}
-              val t = localPath(tmp)
-              Files.write(t, bytes)
-              try Files.move(t, localPath(sp), C.ATOMIC_MOVE)
-              catch { // lost a benign same-content race
-                case _: java.nio.file.FileAlreadyExistsException => ()
-              } finally Files.deleteIfExists(t)
-            } else {
-              val out = fs.create(tmp, false)
-              try out.write(bytes) finally out.close()
-              try {
-                if (!fs.rename(tmp, sp) && !fs.exists(sp))
-                  throw new java.io.IOException(
-                    s"graft-delim: could not land manifest segment $sp")
-              } finally fs.delete(tmp, false)
-            }
-          }
-          if (segCache.size > SegCacheCap) segCache.clear()
-          segCache.put(key, chunk)
-          runRefs += SegRef(name, chunk.size, chunk.head.rel, chunk.last.rel)
-        }
-        val rr = runRefs.result()
-        if (runChunkCache.size > RunCacheCap) runChunkCache.clear()
-        runChunkCache.put(memoKey, (es0, rr))
-        refs ++= rr
-      }
-    }
-    refs.result()
-  }
-
-  private def serializeIndex(
-      m: DelimManifest, refs: Seq[SegRef]): Array[Byte] = {
-    val sb = headerAndMeta(m)
-    refs.foreach(r =>
-      sb.append(s"#segment\t${r.name}\t${r.count}\t${r.minRel}\t${r.maxRel}\n"))
-    sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** The committed document for this snapshot: the segmented INDEX
-    * (landing any missing segment files as a side effect) once the
-    * table is past its threshold, else the single inline document.
-    */
-  private def manifestBytes(
-      fs: FileSystem, target: HPath, m: DelimManifest): Array[Byte] =
-    if (m.segSize > 0 && m.files.size >= m.segSize)
-      serializeIndex(m, ensureSegments(fs, target, m))
-    else serializeManifest(m)
-
-  /** Atomically swap the CURRENT manifest pointer: write a tmp file,
-    * then FileContext rename with OVERWRITE — atomic on HDFS and the
-    * local FS, so there is neither a partial-manifest nor a
-    * missing-manifest window (a delete+rename pair would expose the
-    * fallback listing — and with it a mixed generation — between the
-    * two calls).
-    */
-  private def swapCurrentManifest(
-      fs: FileSystem, target: HPath, bytes: Array[Byte]): Unit = {
-    val tmp = new HPath(target,
-      s"$ManifestFile.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (isLocalFs(fs)) {
-      // same tmp-then-atomic-replace shape, via java.nio (rename(2) is
-      // the atomic-overwrite primitive; no forks, no .crc sidecars).
-      // A pointer landed by an earlier checksummed writer may carry a
-      // `.crc` sidecar; it must go BEFORE the swap or a checksummed
-      // reader verifies the new bytes against the old sum (between the
-      // two steps the pointer is simply unchecksummed — still the old
-      // complete document).
-      import java.nio.file.{Files, StandardCopyOption => C}
-      val t = localPath(tmp)
-      Files.write(t, bytes)
-      val dst = localPath(new HPath(target, ManifestFile))
-      Files.deleteIfExists(dst.getParent.resolve(s".$ManifestFile.crc"))
-      Files.move(t, dst, C.ATOMIC_MOVE)
-      return
-    }
-    // FileContext for BOTH create and rename: the FileSystem facade is
-    // checksum-wrapped on file:// and would leave orphan .crc sidecars
-    // behind the raw rename
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      target.toUri, fs.getConf)
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE))
-    try out.write(bytes) finally out.close()
-    fc.rename(tmp, new HPath(target, ManifestFile),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Raw bytes of an existing manifest document — the pointer swap and
-    * crash recovery copy the claimed version VERBATIM (re-serializing
-    * a parsed snapshot would inline a segmented index). */
-  private def readRawManifest(fs: FileSystem, mf: HPath): Array[Byte] = {
-    val len = fs.getFileStatus(mf).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(mf)
-    try in.readFully(0, buf) finally in.close()
-    buf
-  }
-
-  /** COMMIT a new generation — the concurrency-safe sequence:
-    *  1. CAS: create `_manifest.v<gen>` with create-NO-overwrite (an
-    *     atomic claim of the generation number). Two committers that
-    *     both read generation G race to create `.v(G+1)`; the loser's
-    *     create throws and its commit FAILS LOUDLY — never the silent
-    *     last-writer-wins file loss of a bare read-modify-write.
-    *  2. Swap the CURRENT `_manifest` pointer atomically (readers flip
-    *     from exactly the old snapshot to exactly the new one).
-    *  3. Retention: delete versioned manifests older than the window
-    *     (`retain` generations, counting this one).
-    * A crash between 1 and 2 leaves an orphan `.v(G+1)` that blocks
-    * the NEXT commit with the same loud error — recover with
-    * [[recoverManifest]] (roll the current pointer forward) once no
-    * writer is active. Returns the set of file paths referenced by ANY
-    * retained snapshot (the commit's must-not-delete set).
-    */
-  /** Must-not-delete set returned by commitManifest, materialized
-    * LAZILY: building a Set over every live rel is an O(table) driver
-    * pass per commit, and append commits never consult the result —
-    * only overwrite sweeps, truncates, and compaction's replaced-file
-    * cleanup do (they pay the build exactly when they need it).
-    */
-  final class LiveFileSet(thunk: () => Set[String])
-      extends (String => Boolean) {
-    lazy val toSet: Set[String] = thunk()
-    def contains(rel: String): Boolean = toSet.contains(rel)
-    override def apply(rel: String): Boolean = toSet.contains(rel)
-  }
-
-  private[graft] def commitManifest(
-      fs: FileSystem, target: HPath, m0: DelimManifest): LiveFileSet = {
-    // stamp the commit wall-clock: timestampAsOf resolves against it.
-    // Clamped monotonic per table would need the previous ts threaded
-    // through every caller; millis skew between successive commits on
-    // one box is below the resolution story's granularity.
-    require(!m0.pruned,
-      "graft-delim: refusing to commit a SEGMENT-PRUNED snapshot — " +
-        "it lists only the files a partition predicate kept; " +
-        "committing it would silently unlist the rest of the table")
-    val m = m0.copy(ts = math.max(System.currentTimeMillis(), 1L))
-    // LINEAGE-RESET detector: a commit whose generation is not above
-    // the last one this JVM committed for the same root means the
-    // table was recreated externally (rmTree + rebuild restarts at
-    // gen 1) — the per-run chunk memo would then vouch for segment
-    // files that no longer exist. Purge the table's memo entries.
-    val tableKey = fs.makeQualified(target).toUri.toString
-    val lastGen = lastGenSeen.put(tableKey, m.gen)
-    if (lastGen != null && m.gen <= lastGen)
-      runChunkCache.keySet.removeIf(_.startsWith(tableKey + "\u0000"))
-    // the claimed document and the pointer carry IDENTICAL bytes; for
-    // a segmented table this also lands any new segment files first
-    // (unreferenced until the claim succeeds — a failed claim leaves
-    // only unreferenced content-addressed files the next commit's
-    // segment GC sweeps)
-    // stamp BEFORE the segments start landing: until the generation
-    // claim below succeeds they are UNREFERENCED, and a concurrent
-    // commit's segment GC (or remove_orphans) sweeps unreferenced
-    // chunks older than the grace window — the vulnerable window opens
-    // when the FIRST chunk lands (a slow ensureSegments can itself
-    // outlive the grace), so the re-verify gate below measures from
-    // here, not from when landing finished
-    val tLand = System.currentTimeMillis()
-    val bytes = manifestBytes(fs, target, m)
-    val vf = new HPath(target, s"$ManifestFile.v${m.gen}")
-    // the claim lands as tmp + rename-NO-OVERWRITE: still an atomic
-    // compare-and-set on the generation number, but the claimed file
-    // is COMPLETE from its first visible instant — a bare create would
-    // expose a partially-written snapshot to the swap-window fallback
-    // readers
-    val tmp = new HPath(target,
-      s"$ManifestFile.claim-${java.util.UUID.randomUUID().toString.take(8)}")
-    def claimLost(): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"graft-delim: generation ${m.gen} already claimed at $target — " +
-          "either a concurrent committer won the race (re-run this job " +
-          "against the new snapshot) or a previous commit crashed between " +
-          "its version claim and the pointer swap (run " +
-          "DelimV2.recoverManifest once no writer is active)")
-    if (isLocalFs(fs)) {
-      // java.nio claim via link(2): createLink fails with EEXIST
-      // ATOMICALLY, a genuine kernel-level compare-and-set on the
-      // generation file (round-22 advice: Files.move without
-      // REPLACE_EXISTING is an existence check followed by rename(2),
-      // which overwrites — two racing committers could both believe
-      // they won). Filesystems without hard links fall back to the
-      // move form, which matches the Hadoop facade's own TOCTOU.
-      import java.nio.file.Files
-      val t = localPath(tmp)
-      Files.write(t, bytes)
-      val dst = localPath(vf)
-      // a retention-deleted older claim of this generation may have
-      // left a checksum sidecar behind a non-checksummed delete
-      Files.deleteIfExists(dst.getParent.resolve(s".${vf.getName}.crc"))
-      try {
-        Files.createLink(dst, t)
-        Files.deleteIfExists(t)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(t)
-          claimLost()
-        case _: UnsupportedOperationException =>
-          try Files.move(t, dst)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              Files.deleteIfExists(t)
-              claimLost()
-          }
-      }
-    } else {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        target.toUri, fs.getConf)
-      val out = fc.create(tmp,
-        java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-          org.apache.hadoop.fs.CreateFlag.OVERWRITE))
-      try out.write(bytes) finally out.close()
-      try fc.rename(tmp, vf)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-            _: java.nio.file.FileAlreadyExistsException =>
-          fc.delete(tmp, false)
-          claimLost()
-      }
-    }
-    // GC-RACE RE-VERIFY: the claim above now references this commit's
-    // segments (protected from every future sweep), but a sweep that
-    // ran while they were still unreferenced — this commit stalled
-    // past the grace window between landing them and claiming, or a
-    // cross-process remove_orphans whose memo eviction we never saw —
-    // already deleted them, and the claimed index would point at
-    // missing files. Gated on elapsed time so the common fast commit
-    // pays ZERO extra I/O; on the rare slow path, fs.exists-walk the
-    // claimed refs and re-land any missing chunk (content-addressed →
-    // the rebuild is byte-identical and deterministic).
-    if (m.segSize > 0 && m.files.size >= m.segSize) {
-      val graceMs = sys.props.get("graft.segment.gc.graceMs")
-        .map(_.toLong).getOrElse(600000L)
-      if (System.currentTimeMillis() - tLand >= graceMs / 2) {
-        val refs = segmentNamesOf(fs, vf)
-        if (refs.exists(n => !fs.exists(new HPath(target, n)))) {
-          runChunkCache.keySet.removeIf(_.startsWith(tableKey + "\u0000"))
-          refs.foreach(n => segCache.remove(
-            fs.makeQualified(new HPath(target, n)).toUri.toString))
-          val relanded = ensureSegments(fs, target, m).map(_.name).toSet
-          require(refs.forall(relanded.contains),
-            s"graft-delim: segment re-land after a GC race produced a " +
-              s"different chunk set at $target — claimed " +
-              s"${refs.mkString(",")} vs relanded ${relanded.mkString(",")}")
-        }
-      }
-    }
-    // never swap the pointer BACKWARD: if a higher generation is
-    // already claimed (a successor committer built on this snapshot
-    // through the swap-window fallback while this commit was between
-    // claim and swap), its pointer swap supersedes ours — writing ours
-    // would regress the pointer below a durable commit
-    if (retainedVersions(fs, target).max == m.gen)
-      swapCurrentManifest(fs, target, bytes)
-    // the guard above is check-then-act: a successor can claim (and
-    // swap) between our max-check and our rename, after which our
-    // rename regressed the pointer below a durable commit — re-check
-    // and roll the pointer forward onto the highest claim (the same
-    // self-heal recoverManifest performs after a crash). One pass
-    // shrinks the exposure from the whole swap duration to
-    // recoverManifest's own read-swap window; the successor's commit
-    // runs the same pass, so a residual regression heals at the next
-    // commit rather than wedging claim collisions forever.
-    recoverManifest(fs, target)
-    val floor = m.gen - math.max(m.retain, 1) + 1
-    // TAGGED generations are exempt from retention expiry: keeping the
-    // versioned manifest is what pins the snapshot — the LiveFileSet,
-    // the dead-file sweeps, and the segment GC all derive their
-    // must-keep sets from the versioned manifests present on disk, so
-    // sparing the one file spares everything it references
-    val tagged = m.tags.values.toSet
-    retainedVersions(fs, target)
-      .filter(g => g < floor && !tagged.contains(g)).foreach { g =>
-        fs.delete(new HPath(target, s"$ManifestFile.v$g"), false)
-      }
-    // must-not-delete set: every file some retained snapshot still
-    // references (time travel reads plan from those snapshots) —
-    // resolved lazily inside the LiveFileSet below
-    lazy val retained = retainedVersions(fs, target).filter(_ != m.gen)
-      .flatMap(g => readManifestFile(fs, new HPath(target, s"$ManifestFile.v$g")))
-    // SEGMENT GC: a content-addressed segment referenced by NO
-    // retained snapshot is dead — a replaced chunk whose last
-    // referencing generation just expired, or a crash-orphaned claim's
-    // leftovers. Safe against concurrent committers: any commit in
-    // flight right now either bases on a retained snapshot (and so
-    // reuses only segments that snapshot references — kept here) or
-    // will lose the generation-claim CAS and recompute from scratch.
-    if (m.segSize > 0) {
-      val referenced = retainedVersions(fs, target)
-        .map(g => new HPath(target, s"$ManifestFile.v$g"))
-        .flatMap(segmentNamesCached(fs, _)).toSet
-      // GRACE WINDOW: a reader that opened the pointer just before
-      // this commit may still be loading the OLD index's segments —
-      // deleting them instantly would turn a bounded snapshot race
-      // into a FileNotFound mid-plan. Unreferenced chunks linger for
-      // the window (harmless garbage), then the next commit or
-      // remove_orphans sweeps them. Tests/stress pin it to 0.
-      val graceMs = sys.props.get("graft.segment.gc.graceMs")
-        .map(_.toLong).getOrElse(600000L)
-      val cutoff = System.currentTimeMillis() - graceMs
-      val swept = scala.collection.mutable.HashSet.empty[String]
-      Option(fs.globStatus(new HPath(target, s"$SegPrefix*")))
-        .map(_.toSeq).getOrElse(Nil).foreach { st =>
-          val n = st.getPath.getName
-          if (!referenced.contains(n) && !n.contains(".tmp-") &&
-            st.getModificationTime <= cutoff) {
-            fs.delete(st.getPath, false)
-            segCache.remove(fs.makeQualified(st.getPath).toUri.toString)
-            swept += n
-          }
-        }
-      // the run memo may still point at a swept chunk (a run whose
-      // membership reverts to an expired state would otherwise reuse
-      // a deleted file) — drop EXACTLY the memo entries referencing
-      // one; the untouched partitions' memos survive, which is what
-      // keeps commits O(changed partitions)
-      if (swept.nonEmpty) {
-        val pfx = fs.makeQualified(target).toUri.toString + "\u0000"
-        runChunkCache.entrySet().removeIf(e =>
-          e.getKey.startsWith(pfx) &&
-            e.getValue._2.exists(r => swept.contains(r.name)))
-      }
-    }
-    new LiveFileSet(() =>
-      (m.files.map(_.rel) ++ retained.flatMap(_.files.map(_.rel))).toSet)
-  }
-
-  /** The generation in a manifest document's header — a one-line
-    * read, never loading segments. None when absent or unreadable
-    * (a torn pointer mid-swap reads as "needs recovery", which the
-    * caller's roll-forward handles). */
-  private def manifestGenOf(fs: FileSystem, mf: HPath): Option[Long] =
-    try {
-      if (!fs.exists(mf)) None
-      else {
-        val in = fs.open(mf)
-        try {
-          val br = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in,
-              java.nio.charset.StandardCharsets.UTF_8))
-          val first = br.readLine()
-          if (first == null || !first.startsWith("#")) None
-          else first.split(' ').collectFirst {
-            case a if a.startsWith("gen=") => a.stripPrefix("gen=").toLong
-          }
-        } finally in.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** segmentNamesOf for the maintenance procedures. */
-  private[v2] def segmentNamesPub(fs: FileSystem, mf: HPath): Seq[String] =
-    segmentNamesOf(fs, mf)
-
-  /** The table's bloom columns from the pointer's FIRST line — for
-    * writers that need only the bloom config (the delta writer factory
-    * previously parsed the full manifest, segments and all, once per
-    * MERGE just to learn this). Nil on a missing/torn pointer: blooms
-    * are an optimization, and a file landed without a sidecar simply
-    * never skips. */
-  private[v2] def headerBloomCols(fs: FileSystem, root: HPath): Seq[String] =
-    try {
-      val mf = new HPath(root, ManifestFile)
-      if (!fs.exists(mf)) Nil
-      else {
-        val in = fs.open(mf)
-        try {
-          val br = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in,
-              java.nio.charset.StandardCharsets.UTF_8))
-          val first = br.readLine()
-          if (first == null || !first.startsWith("#")) Nil
-          else first.split(' ').collectFirst {
-            case a if a.startsWith("bloomcols=") =>
-              a.stripPrefix("bloomcols=").split(',').toSeq
-                .map(statUnesc).filter(_.nonEmpty)
-          }.getOrElse(Nil)
-        } finally in.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => Nil }
-
-  /** The segment file names a manifest document references — a
-    * line-scan of the (small) index, never loading the segments. */
-  private def segmentNamesOf(fs: FileSystem, mf: HPath): Seq[String] =
-    if (!fs.exists(mf)) Nil
-    else {
-      val in = fs.open(mf)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.startsWith("#segment\t"))
-        .flatMap(_.split('\t').lift(1)).toList
-      finally in.close()
-    }
-
-  /** segmentNamesOf through a per-JVM memo: the per-commit segment GC
-    * re-read EVERY retained version doc on EVERY commit to build its
-    * referenced set — `retain` extra file reads per commit (part of
-    * the round-19 measured write tax). A `.v<gen>` doc is immutable
-    * once landed, so (length, mtime) validates an entry; a recreated
-    * table's reused generation number changes both. Capped, clear-on-
-    * overflow like the segment caches. */
-  private val segNamesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Long, Seq[String])]()
-  private def segmentNamesCached(fs: FileSystem, mf: HPath): Seq[String] = {
-    val st =
-      try fs.getFileStatus(mf)
-      catch { case _: java.io.FileNotFoundException => return Nil }
-    val key = fs.makeQualified(mf).toUri.toString
-    val cached = segNamesCache.get(key)
-    if (cached != null && cached._1 == st.getLen &&
-      cached._2 == st.getModificationTime) cached._3
-    else {
-      val names = segmentNamesOf(fs, mf)
-      if (segNamesCache.size > 1024) segNamesCache.clear()
-      segNamesCache.put(key, (st.getLen, st.getModificationTime, names))
-      names
-    }
-  }
-
-  /** CRASH RECOVERY: a commit that died between its version claim
-    * (`_manifest.v<G+1>` exists) and the pointer swap (`_manifest`
-    * still at G) blocks subsequent commits loudly. Rolling FORWARD is
-    * always sound once no writer is active: the claimed version's
-    * files were already promoted before the claim, so swapping the
-    * current pointer onto it completes the dead commit exactly as it
-    * would have completed itself. Returns the recovered generation, or
-    * None when the table needs no recovery.
-    */
-  def recoverManifest(fs: FileSystem, target: HPath): Option[Long] = {
-    // the RAW pointer, not readManifest: its swap-window fallback
-    // already reports the claimed generation, which would mask the
-    // stale pointer this repair exists to fix. Header-only read: this
-    // probe runs on EVERY commit, and parsing a segmented index here
-    // would load every segment just to read one number. An unreadable
-    // pointer degrades to gen 0 — the roll-forward below then swaps
-    // onto the highest claim, which IS the repair.
-    val cur = manifestGenOf(fs, new HPath(target, ManifestFile)).getOrElse(0L)
-    // roll straight to the HIGHEST claim: every claimed generation's
-    // files were promoted before its claim, so the newest claim is the
-    // most complete durable snapshot
-    val next = retainedVersions(fs, target).filter(_ > cur).maxOption
-    next.map { g =>
-      // VERBATIM byte copy of the claimed document: re-serializing a
-      // parsed snapshot would inline a segmented index
-      swapCurrentManifest(fs, target,
-        readRawManifest(fs, new HPath(target, s"$ManifestFile.v$g")))
-      g
-    }
-  }
-
-  /** The live snapshot of every data file — the manifest when present,
-    * else the recursive listing (the previous-generation input to a
-    * committing writer; legacy files carry gen 0 = positional layout).
-    */
-  private[v2] def snapshotManifest(
-      fs: FileSystem, target: HPath, conf: Configuration): DelimManifest =
-    readManifest(fs, target).getOrElse {
-      val root = fs.makeQualified(target).toUri
-      DelimManifest(
-        listFilesWithPartitions(Seq(target.toString), conf).map { case (st, _) =>
-          val rel = root.relativize(fs.makeQualified(st.getPath).toUri).getPath
-          ManifestEntry(st.getLen, 0L, rel)
-        }, multiLine = false)
-    }
-
-  /** True when any listed root carries a manifest flagged multiline —
-    * the reader then engages quote-aware whole-file framing without
-    * any option (the WRITER knows it quoted a newline; forcing every
-    * reader to also know is how silent misframing happens).
-    */
-  private[v2] def manifestMultiLine(paths: Seq[String], conf: Configuration,
-      versionAsOf: Option[Long] = None): Boolean =
-    paths.exists { p =>
-      val hp = new HPath(p)
-      val fs = hp.getFileSystem(conf)
-      Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty).exists { st =>
-        // a FILE or glob match (load("t/*.txt")) still belongs to its
-        // table: probe the enclosing table ROOT — the file's directory,
-        // walking up out of any k=v partition levels — so a file-level
-        // read of a multiline-flagged table frames correctly instead
-        // of silently misframing (the failure the flag exists to stop)
-        val dir: HPath =
-          if (st.isDirectory) st.getPath
-          else {
-            var d = st.getPath.getParent
-            while (d != null && d.getParent != null && d.getName.contains("="))
-              d = d.getParent
-            d
-          }
-        dir != null && {
-          // header-only read: the flag is line 1 — parsing a large
-          // table's whole entry list for one bit would tax every scan
-          val mf = new HPath(dir,
-            versionAsOf.map(g => s"$ManifestFile.v$g").getOrElse(ManifestFile))
-          fs.exists(mf) && {
-            val in = fs.open(mf)
-            try {
-              val br = new java.io.BufferedReader(
-                new java.io.InputStreamReader(in,
-                  java.nio.charset.StandardCharsets.UTF_8))
-              val first = br.readLine()
-              first != null && first.startsWith("#") &&
-                first.contains("multiline=true")
-            } finally in.close()
-          }
-        }
-      }
-    }
-
-  /** A missing path yields NO files rather than an error: schema
-    * inference runs on the WRITE path too, where the target directory
-    * may not exist yet (a read of a truly missing path then surfaces
-    * as an empty/zero-column table, which the typed `.schema(...)`
-    * reads every caller uses never hit).
-    */
-  def listFiles(paths: Seq[String], conf: Configuration): Seq[FileStatus] =
-    listFilesWithPartitions(paths, conf).map(_._1)
-
-  def listFilesWithPartitions(
-      paths: Seq[String], conf: Configuration): Seq[(FileStatus, Seq[(String, String)])] =
-    listFiles2(paths, conf).map(f => (f.status, f.pvals))
-
   /** One listed data file: its status, the `k=v` partition values on
     * its path, and — when the manifest recorded a writer schema for
     * its generation — the file's POSITIONAL field names (the writer
@@ -4356,25 +3177,6 @@ private[graft] object DelimV2 {
     }
   }
 
-  /** Recursive listing with `k=v` partition-directory discovery — the
-    * reference's central table layout (dt=.../hr=... directories)
-    * understood by the connector itself. Each data file carries the
-    * (key, value) pairs of the partition directories on its path, in
-    * path order; `__HIVE_DEFAULT_PARTITION__` decodes to null. A
-    * subdirectory NOT in k=v form is ignored (like `_temporary`): the
-    * layout contract is flat files or partition trees, never loose
-    * nesting.
-    *
-    * `versionAsOf` lists from the RETAINED snapshot `_manifest.v<gen>`
-    * instead of the current one — time travel over the table's
-    * retention window (fails loudly when the generation is expired or
-    * the directory carries no manifest at all).
-    */
-  private[v2] def listFiles2(
-      paths: Seq[String], conf: Configuration,
-      versionAsOf: Option[Long] = None): Seq[ListedFile] =
-    listSnapshot(paths, conf, versionAsOf).files
-
   /** A listing plus the MANIFEST it planned from (the first
     * manifest-bearing root's — single-root for every table-format
     * operation). The manifest generation anchors optimistic-concurrency
@@ -4383,7 +3185,7 @@ private[graft] object DelimV2 {
     * commit (see DelimWrite.commit).
     */
   private[graft] final case class ListingSnapshot(
-      files: Seq[ListedFile], manifest: Option[DelimManifest],
+      files: Seq[ListedFile], manifest: Option[DelimLog.DelimManifest],
       /** EVERY manifest-bearing root's (root key, manifest), in path
         * order — a multi-root read (paths=a,b or a glob over several
         * table roots) must not apply the first root's tombstones/bloom
@@ -4394,8 +3196,8 @@ private[graft] object DelimV2 {
         * Bloom headers UNION safely (sidecars are per-file truth — a
         * probe against a file lacking the column never skips).
         */
-      rootManifests: Seq[(String, DelimManifest)] = Nil) {
-    def manifests: Seq[DelimManifest] = rootManifests.map(_._2)
+      rootManifests: Seq[(String, DelimLog.DelimManifest)] = Nil) {
+    def manifests: Seq[DelimLog.DelimManifest] = rootManifests.map(_._2)
     def unionBloomCols: Seq[String] = manifests.flatMap(_.bloomCols).distinct
     /** (segments in the index, segments loaded), summed over roots. */
     def segmentCounts: (Int, Int) =
@@ -4407,6 +3209,21 @@ private[graft] object DelimV2 {
       }
   }
 
+  /** THE listing: recursive, with `k=v` partition-directory discovery —
+    * the reference's central table layout (dt=.../hr=... directories)
+    * understood by the connector itself. Each data file carries the
+    * (key, value) pairs of the partition directories on its path, in
+    * path order (see [[partSegment]]). A subdirectory NOT in k=v form is
+    * ignored (like `_temporary`): the layout contract is flat files or
+    * partition trees, never loose nesting. A missing path yields NO
+    * files rather than an error: schema inference runs on the WRITE
+    * path too, where the target directory may not exist yet.
+    *
+    * `versionAsOf` lists from the RETAINED snapshot `_manifest.v<gen>`
+    * instead of the current one — time travel over the table's
+    * retention window (fails loudly when the generation is expired or
+    * the directory carries no manifest at all).
+    */
   private[graft] def listSnapshot(
       paths: Seq[String], conf: Configuration,
       versionAsOf: Option[Long] = None,
@@ -4422,19 +3239,11 @@ private[graft] object DelimV2 {
         val n = c.getPath.getName
         if (n.startsWith("_") || n.startsWith(".")) Nil
         else if (c.isFile) Seq(ListedFile(c, pvals))
-        else {
-          val eq = n.indexOf('=')
-          if (eq <= 0) Nil
-          else {
-            val v0 = n.substring(eq + 1)
-            val v = if (v0 == HiveDefaultPartition) null else v0
-            recurse(fs, c, pvals :+ (n.substring(0, eq) -> v))
-          }
-        }
+        else partSegment(n).toSeq.flatMap(kv => recurse(fs, c, pvals :+ kv))
       }
-    var firstManifest: Option[DelimManifest] = None
+    var firstManifest: Option[DelimLog.DelimManifest] = None
     val allManifests =
-      scala.collection.mutable.ArrayBuffer.empty[(String, DelimManifest)]
+      scala.collection.mutable.ArrayBuffer.empty[(String, DelimLog.DelimManifest)]
     val rootKeySets = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     val files = paths.flatMap { p =>
       val hp = new HPath(p)
@@ -4451,8 +3260,8 @@ private[graft] object DelimV2 {
         val manifest =
           if (!st.isDirectory) None
           else versionAsOf match {
-            case Some(g) => Some(readManifestVersion(fs, st.getPath, g, segPrune))
-            case None => readManifest(fs, st.getPath, segPrune)
+            case Some(g) => Some(DelimLog.readManifestVersion(fs, st.getPath, g, segPrune))
+            case None => DelimLog.readManifest(fs, st.getPath, segPrune)
           }
         if (firstManifest.isEmpty) firstManifest = manifest
         val listed = manifest match {
@@ -4549,7 +3358,7 @@ private[graft] object DelimV2 {
     */
   private[graft] def assignFieldIds(
       schema: StructType,
-      schemas: Map[Long, ManifestSchema],
+      schemas: Map[Long, DelimLog.ManifestSchema],
       preferRecorded: Boolean = false,
       fallbackByName: Map[String, Long] = Map.empty,
       reservedMax: Long = 0L): StructType = {
@@ -4578,7 +3387,7 @@ private[graft] object DelimV2 {
     * rewrite that read recorded names directly would NULL any column
     * renamed after the member was written.
     */
-  private[graft] def layoutTranslations(m: DelimManifest)
+  private[graft] def layoutTranslations(m: DelimLog.DelimManifest)
       : Long => Option[(Array[String], Map[String, String])] = {
     val cur = m.schemas.get(m.gen)
       .orElse(m.schemas.toSeq.sortBy(_._1).lastOption.map(_._2))
@@ -4606,18 +3415,10 @@ private[graft] object DelimV2 {
   }
 
   private[graft] def listedFromManifest(
-      root: HPath, m: DelimManifest): Seq[ListedFile] = {
+      root: HPath, m: DelimLog.DelimManifest): Seq[ListedFile] = {
     val layout = layoutTranslations(m)
     m.files.map { e =>
-      val pvals = e.rel.split('/').dropRight(1).toSeq.flatMap { seg =>
-        val eq = seg.indexOf('=')
-        if (eq <= 0) None
-        else {
-          val v0 = seg.substring(eq + 1)
-          Some(seg.substring(0, eq) ->
-            (if (v0 == HiveDefaultPartition) null else v0))
-        }
-      }
+      val pvals = partValues(DelimLog.dirOf(e.rel))
       val lay = layout(e.gen)
       val stats0 = decodeStats(e.stats, m.schemas.get(e.gen)).orNull
       // stats were recorded under the WRITE-TIME names: translate the
@@ -4734,7 +3535,7 @@ private[graft] object DelimV2 {
       case _ => ext // TimestampType: external micros == internal micros
     }
 
-  private def normValue(v: Any, dt: DataType): Any = dt match {
+  private[graft] def normValue(v: Any, dt: DataType): Any = dt match {
     case DateType => v match {
       case d: java.sql.Date => d.toLocalDate.toEpochDay
       case d: LocalDate => d.toEpochDay
@@ -4776,12 +3577,7 @@ private[graft] object DelimV2 {
     * code-UNIT order, which diverges for supplementary-plane chars vs
     * U+E000–U+FFFF. Allocation-free (no UTF8String round-trip per row).
     */
-  private[v2] def cmpCodePointsPub(a: String, b: String): Int = cmpCodePoints(a, b)
-
-  /** normValue for the bloom-probe canonicalization (DelimBloom). */
-  private[graft] def normValuePub(v: Any, dt: DataType): Any = normValue(v, dt)
-
-  private def cmpCodePoints(a: String, b: String): Int = {
+  private[v2] def cmpCodePoints(a: String, b: String): Int = {
     var i = 0; var j = 0
     while (i < a.length && j < b.length) {
       val ca = a.codePointAt(i); val cb = b.codePointAt(j)

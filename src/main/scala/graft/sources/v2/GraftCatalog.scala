@@ -161,7 +161,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         touched: String): Unit = {
       val root = new HPath(props("path"))
       val fs = root.getFileSystem(DelimV2.driverConf())
-      DelimV2.readManifest(fs, root).foreach { m =>
+      DelimLog.readManifest(fs, root).foreach { m =>
         m.tombstones.foreach { case (_, enc) =>
           val refs = DelimV2.tombstoneFilter(enc, schema).references
           if (refs.contains(touched))
@@ -190,19 +190,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           }.toMap
         val lineageMax = m.schemas.values.flatMap(_.struct.fields)
           .flatMap(DelimV2.fieldId).foldLeft(0L)(math.max)
-        var acc = Map.empty[Long, DelimV2.ManifestSchema]
+        var acc = Map.empty[Long, DelimLog.ManifestSchema]
         m.schemas.toSeq.sortBy(_._1).foreach { case (g, ms) =>
-          acc += (g -> DelimV2.ManifestSchema(ms.partCols,
+          acc += (g -> DelimLog.ManifestSchema(ms.partCols,
             DelimV2.assignFieldIds(ms.struct, acc, preferRecorded = true,
               fallbackByName = recordedByName, reservedMax = lineageMax)))
         }
         val latest = acc.toSeq.sortBy(_._1).lastOption.map(_._2)
-          .getOrElse(DelimV2.ManifestSchema(partCols,
+          .getOrElse(DelimLog.ManifestSchema(partCols,
             DelimV2.assignFieldIds(schema, Map.empty)))
-        val changed = DelimV2.ManifestSchema(latest.partCols,
+        val changed = DelimLog.ManifestSchema(latest.partCols,
           change(latest.struct))
-        DelimV2.commitManifest(fs, root, m.copy(gen = m.gen + 1,
-          schemas = acc + ((m.gen + 1) -> changed)))
+        DelimLog.commit(fs, root, m) { (newGen, _) =>
+          m.copy(schemas = acc + (newGen -> changed))
+        }
       }
     }
     changes.foreach {
@@ -446,23 +447,17 @@ private[v2] class DelimPartitionedTable(
     // generation through the same claim-race detector as writes, so a
     // DROP racing a commit fails loudly instead of silently resurrecting
     // (or unlisting) files.
-    DelimV2.readManifest(fs, root) match {
+    DelimLog.readManifest(fs, root) match {
       case Some(m) =>
-        val live = DelimV2.commitManifest(fs, root, m.copy(
-          files = m.files.filterNot(_.rel.startsWith(sub + "/")),
-          gen = m.gen + 1))
         // inside a retention window, a versionAsOf reader may still
-        // plan the dropped partition's files — delete only the expired
-        // ones, and the directory only once nothing retained remains
-        val retainedHere = live.toSet.filter(_.startsWith(sub + "/"))
-        if (retainedHere.isEmpty) fs.delete(d, true)
-        else {
-          Option(fs.listStatus(d)).getOrElse(Array.empty).foreach { st =>
-            val rel = s"$sub/${st.getPath.getName}"
-            if (st.isFile && !live.contains(rel)) fs.delete(st.getPath, false)
-          }
-          true
+        // plan the dropped partition's files: the commit deletes only
+        // the expired ones (with their sidecars), and the directory
+        // goes only once nothing retained remains under it
+        val live = DelimLog.commit(fs, root, m) { (_, _) =>
+          m.copy(files = m.files.filterNot(_.rel.startsWith(sub + "/")))
         }
+        if (live.toSet.exists(_.startsWith(sub + "/"))) true
+        else fs.delete(d, true)
       case None => fs.delete(d, true)
     }
   }
@@ -487,16 +482,12 @@ private[v2] class DelimPartitionedTable(
       else Option(fs.listStatus(dir)).getOrElse(Array.empty).toSeq
         .filter(_.isDirectory)
         .flatMap { st =>
-          val n = st.getPath.getName
-          val eq = n.indexOf('=')
-          if (eq <= 0 || n.substring(0, eq) != partCols(depth)) Nil
-          else {
-            val raw = n.substring(eq + 1)
-            val ext =
-              if (raw == DelimV2.HiveDefaultPartition) null
-              else DelimV2.parseExternal(raw, types(depth))
-            walk(st.getPath, depth + 1,
-              acc :+ DelimV2.toInternal(ext, types(depth)))
+          DelimV2.partSegment(st.getPath.getName) match {
+            case Some((k, raw)) if k == partCols(depth) =>
+              val ext = DelimV2.parseExternal(raw, types(depth))
+              walk(st.getPath, depth + 1,
+                acc :+ DelimV2.toInternal(ext, types(depth)))
+            case _ => Nil
           }
         }
     val rows = walk(root, 0, Array.empty).map(vs => new GenericInternalRow(vs))

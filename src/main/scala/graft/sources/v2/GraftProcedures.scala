@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    versioned manifests, and sweep data files no retained snapshot
   *    references.
   *  - `recover_manifest(table)` — roll a crashed commit's claimed
-  *    generation forward (DelimV2.recoverManifest).
+  *    generation forward (DelimLog.recoverManifest).
   *  - `snapshots(table)` — retained snapshot history (DESCRIBE
   *    HISTORY shape).
   *  - `remove_orphans(table, older_than_ms)` — delete files no
@@ -96,7 +96,7 @@ private[v2] class OptimizeProcedure(cat: GraftCatalog)
     val target = if (input.isNullAt(1)) 0L else input.getLong(1)
     val minFiles = if (input.isNullAt(2)) 2 else input.getInt(2)
     val fs = root.getFileSystem(DelimV2.driverConf())
-    val before = DelimV2.readManifest(fs, root).map(_.files.size).getOrElse(0)
+    val before = DelimLog.readManifest(fs, root).map(_.files.size).getOrElse(0)
     // the TABLE's line format, not the defaults: tombstone retirement
     // rewrites through the parse path, and parsing a ','-delimited
     // table with the default '|' would re-land garbage
@@ -108,7 +108,7 @@ private[v2] class OptimizeProcedure(cat: GraftCatalog)
     val gen = DelimCompact.compact(SparkSession.active, root.toString,
       minFilesPerGroup = minFiles, targetFileSize = target,
       delimiter = DelimV2.delimiter(opts), quote = DelimV2.quoteChar(opts))
-    val after = DelimV2.readManifest(fs, root).map(_.files.size).getOrElse(0)
+    val after = DelimLog.readManifest(fs, root).map(_.files.size).getOrElse(0)
     GraftProcedures.single(GraftProcedures.SummaryScan(
       StructType.fromDDL(
         "generation BIGINT, files_before INT, files_after INT"),
@@ -133,16 +133,15 @@ private[v2] class ExpireSnapshotsProcedure(cat: GraftCatalog)
     require(retain >= 1,
       s"graft-delim: expire_snapshots retain must be >= 1, got $retain")
     val fs = root.getFileSystem(DelimV2.driverConf())
-    val m = DelimV2.readManifest(fs, root).getOrElse(
+    val m = DelimLog.readManifest(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $root"))
-    // the same files under a new generation with the new policy;
-    // commitManifest prunes expired manifests and returns the
-    // must-not-delete set, and the static-overwrite sweeper deletes
-    // everything outside it (crash orphans included)
-    val live = DelimV2.commitManifest(fs, root,
-      m.copy(gen = m.gen + 1, retain = retain))
-    val removed = DelimWrite.sweepDeadCount(fs, root, live)
+    // the same files under a new generation with the new policy; the
+    // commit prunes expired manifests and returns the must-not-delete
+    // set, and the static-overwrite sweeper deletes everything outside
+    // it (crash orphans included)
+    val live = DelimLog.commit(fs, root, m)((_, _) => m.copy(retain = retain))
+    val removed = DelimLog.sweepDead(fs, root, live)
     GraftProcedures.single(GraftProcedures.SummaryScan(
       StructType.fromDDL(
         "generation BIGINT, retained INT, deleted_files BIGINT"),
@@ -164,12 +163,12 @@ private[v2] class SnapshotsProcedure(cat: GraftCatalog)
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val root = cat.tableRootOf(input.getUTF8String(0).toString)
     val fs = root.getFileSystem(DelimV2.driverConf())
-    val gens = DelimV2.retainedVersions(fs, root)
+    val gens = DelimLog.retainedVersions(fs, root)
     if (gens.isEmpty)
       throw new IllegalArgumentException(
         s"graft-delim: no retained snapshots at $root")
     val rows = gens.map { g =>
-      val m = DelimV2.readManifestVersion(fs, root, g)
+      val m = DelimLog.readManifestVersion(fs, root, g)
       val stats = m.files.map(e =>
         DelimV2.decodeStats(e.stats, m.schemas.get(e.gen)))
       val nRows: Any =
@@ -219,23 +218,23 @@ private[v2] class RemoveOrphansProcedure(cat: GraftCatalog)
       s"graft-delim: remove_orphans older_than_ms must be >= 0, got $grace")
     val cutoff = System.currentTimeMillis() - grace
     val fs = root.getFileSystem(DelimV2.driverConf())
-    val m = DelimV2.readManifest(fs, root).getOrElse(
+    val m = DelimLog.readManifest(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $root — remove_orphans " +
           "operates on manifest-committed tables"))
     // the must-not-delete universe: every rel ANY retained snapshot
     // lists, every segment file any retained index references, and
     // the manifest documents themselves
-    val gens = DelimV2.retainedVersions(fs, root)
+    val gens = DelimLog.retainedVersions(fs, root)
     // the current generation is already parsed in `m` — only the
     // OLDER retained snapshots need their own read
     val referencedRels: Set[String] =
       (m.files.map(_.rel) ++ gens.filter(_ != m.gen).flatMap(g =>
-        DelimV2.readManifestVersion(fs, root, g).files.map(_.rel))).toSet
+        DelimLog.readManifestVersion(fs, root, g).files.map(_.rel))).toSet
     val referencedSegs: Set[String] =
-      ((new HPath(root, DelimV2.ManifestFile)) +:
-        gens.map(g => new HPath(root, s"${DelimV2.ManifestFile}.v$g")))
-        .flatMap(DelimV2.segmentNamesPub(fs, _)).toSet
+      ((new HPath(root, DelimLog.ManifestFile)) +:
+        gens.map(g => new HPath(root, s"${DelimLog.ManifestFile}.v$g")))
+        .flatMap(DelimLog.segmentNamesOf(fs, _)).toSet
     val rootUri = fs.makeQualified(root).toUri
     var deleted = 0L
     var freed = 0L
@@ -258,8 +257,8 @@ private[v2] class RemoveOrphansProcedure(cat: GraftCatalog)
           } else if (!n.startsWith("_") && !n.startsWith(".") &&
             n.contains("="))
             walk(st.getPath, isRoot = false)
-        } else if (isRoot && n.startsWith(DelimV2.ManifestFile)) {
-          val isSeg = n.startsWith(s"${DelimV2.ManifestFile}.seg-")
+        } else if (isRoot && n.startsWith(DelimLog.ManifestFile)) {
+          val isSeg = n.startsWith(s"${DelimLog.ManifestFile}.seg-")
           if (isSeg && !n.contains(".tmp-") && !referencedSegs.contains(n) &&
             old(st)) { sweptSegs += n; drop(st, recursive = false) }
           else if ((n.contains(".claim-") || n.contains(".tmp-")) && old(st))
@@ -267,16 +266,13 @@ private[v2] class RemoveOrphansProcedure(cat: GraftCatalog)
         } else if (!n.startsWith("_") && !n.startsWith(".")) {
           val rel = rootUri.relativize(
             fs.makeQualified(st.getPath).toUri).getPath
-          val live = referencedRels.contains(rel) ||
-            (rel.endsWith(DelimBloom.Suffix) &&
-              referencedRels.contains(rel.stripSuffix(DelimBloom.Suffix)))
-          if (!live && old(st)) drop(st, recursive = false)
+          if (!DelimLog.isLive(referencedRels, rel) && old(st)) drop(st, recursive = false)
         }
       }
     walk(root, isRoot = true)
     // a swept segment must leave the JVM caches too, or a later run
     // memo could vouch for a file that is gone
-    DelimV2.noteSegmentsDeleted(fs, root, sweptSegs.toSet)
+    DelimLog.noteSegmentsDeleted(fs, root, sweptSegs.toSet)
     GraftProcedures.single(GraftProcedures.SummaryScan(
       StructType.fromDDL("deleted BIGINT, freed_bytes BIGINT"),
       Array(deleted, freed)))
@@ -296,7 +292,7 @@ private[v2] class RecoverManifestProcedure(cat: GraftCatalog)
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val root = cat.tableRootOf(input.getUTF8String(0).toString)
     val fs = root.getFileSystem(DelimV2.driverConf())
-    val recovered = DelimV2.recoverManifest(fs, root)
+    val recovered = DelimLog.recoverManifest(fs, root)
     GraftProcedures.single(GraftProcedures.SummaryScan(
       StructType.fromDDL("recovered_generation BIGINT"),
       Array(recovered.map(Long.box).orNull)))
@@ -332,19 +328,18 @@ private[v2] class CreateTagProcedure(cat: GraftCatalog)
       s"graft-delim: tag names must be non-empty with no ',', ':' or " +
         s"whitespace, got '$tag'")
     val fs = root.getFileSystem(DelimV2.driverConf())
-    val m = DelimV2.readManifest(fs, root).getOrElse(
+    val m = DelimLog.readManifest(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $root"))
     val gen = if (input.isNullAt(2)) m.gen else input.getLong(2)
-    require(gen == m.gen || DelimV2.retainedVersions(fs, root).contains(gen),
+    require(gen == m.gen || DelimLog.retainedVersions(fs, root).contains(gen),
       s"graft-delim: generation $gen is not retained at $root — a tag " +
         "can only pin a snapshot that still exists (retained: " +
-        s"${DelimV2.retainedVersions(fs, root).mkString(", ")})")
+        s"${DelimLog.retainedVersions(fs, root).mkString(", ")})")
     require(!m.tags.contains(tag),
       s"graft-delim: tag '$tag' already exists (at generation " +
         s"${m.tags(tag)}) — drop_tag it first")
-    DelimV2.commitManifest(fs, root,
-      m.copy(gen = m.gen + 1, tags = m.tags + (tag -> gen)))
+    DelimLog.commit(fs, root, m)((_, _) => m.copy(tags = m.tags + (tag -> gen)))
     GraftProcedures.single(GraftProcedures.SummaryScan(
       StructType.fromDDL("tag STRING, pinned_generation BIGINT, " +
         "committed_generation BIGINT"),
@@ -372,7 +367,7 @@ private[v2] class DropTagProcedure(cat: GraftCatalog)
     val root = cat.tableRootOf(input.getUTF8String(0).toString)
     val tag = input.getUTF8String(1).toString.trim
     val fs = root.getFileSystem(DelimV2.driverConf())
-    val m = DelimV2.readManifest(fs, root).getOrElse(
+    val m = DelimLog.readManifest(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $root"))
     val gen = m.tags.getOrElse(tag,
@@ -380,8 +375,7 @@ private[v2] class DropTagProcedure(cat: GraftCatalog)
         s"graft-delim: no snapshot tag '$tag' on $root (tags: " +
           s"${if (m.tags.isEmpty) "<none>"
           else m.tags.keys.toSeq.sorted.mkString(", ")})"))
-    DelimV2.commitManifest(fs, root,
-      m.copy(gen = m.gen + 1, tags = m.tags - tag))
+    DelimLog.commit(fs, root, m)((_, _) => m.copy(tags = m.tags - tag))
     GraftProcedures.single(GraftProcedures.SummaryScan(
       StructType.fromDDL("tag STRING, released_generation BIGINT"),
       Array(org.apache.spark.unsafe.types.UTF8String.fromString(tag), gen)))

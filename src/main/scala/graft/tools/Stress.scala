@@ -753,7 +753,7 @@ object Stress {
         .mode("overwrite").save(root)
       val conf = spark.sessionState.newHadoopConf()
       def listN(): Long =
-        graft.sources.v2.DelimV2.listFilesWithPartitions(Seq(root), conf).size
+        graft.sources.v2.DelimV2.listSnapshot(Seq(root), conf).files.size
       // warm the FS metadata cache once so both sides race warm
       listN()
       var manifestFiles = 0L
@@ -766,7 +766,7 @@ object Stress {
       val hp = new org.apache.hadoop.fs.Path(root)
       val fs = hp.getFileSystem(conf)
       fs.delete(new org.apache.hadoop.fs.Path(hp,
-        graft.sources.v2.DelimV2.ManifestFile), false)
+        graft.sources.v2.DelimLog.ManifestFile), false)
       run("recursive_listing", amp, nParts.toLong) {
         var n = 0L
         for (_ <- 1 to 20) n = listN()
@@ -952,7 +952,7 @@ object Stress {
     // segmentation becomes mandatory — see STRESS.md.
     for (nEntries <- Seq(1000, 10000, 100000)
         if sections("manifestscale") && amps.contains(1)) {
-      import graft.sources.v2.DelimV2
+      import graft.sources.v2.{DelimLog, DelimV2}
       val root = s"/tmp/graft_stress_manifest_scale/n$nEntries"
       graft.core.Scratch.rmTree(root)
       val hp = new org.apache.hadoop.fs.Path(root)
@@ -961,21 +961,22 @@ object Stress {
       fs.mkdirs(hp)
       val struct = org.apache.spark.sql.types.StructType.fromDDL(
         "id BIGINT, v DOUBLE, s STRING, pc STRING")
-      val schema = DelimV2.ManifestSchema(Seq("pc"), struct)
+      val schema = DelimLog.ManifestSchema(Seq("pc"), struct)
       val entries = (0 until nEntries).map { i =>
         val lo = i.toLong * 1000
-        DelimV2.ManifestEntry(1L << 27, 1L, f"pc=p${i % 1000}%04d/part-$i%07d.txt",
+        DelimLog.ManifestEntry(1L << 27, 1L, f"pc=p${i % 1000}%04d/part-$i%07d.txt",
           DelimV2.encodeStats(50000L, Seq(
             ("id", lo.toString, (lo + 999).toString, 0L),
             ("v", "0.0", "1.0", 10L),
             ("s", "aaaa", "zzzz", 0L))))
       }
-      val m = DelimV2.DelimManifest(entries, multiLine = false, gen = 1L,
+      val m = DelimLog.DelimManifest(entries, multiLine = false, gen = 1L,
         retain = 1, schemas = Map(1L -> schema))
       var mGen = 1L
       run("manifest_commit", nEntries, nEntries.toLong) {
         for (_ <- 1 to 5) {
-          DelimV2.commitManifest(fs, hp, m.copy(gen = mGen))
+          // each rep commits the same entries as the next generation
+          DelimLog.commit(fs, hp, m.copy(gen = mGen - 1))((_, _) => m)
           mGen += 1
         }
         (nEntries.toLong, "reps=5")
@@ -983,7 +984,7 @@ object Stress {
       run("manifest_parse", nEntries, nEntries.toLong) {
         var parsed = 0L
         for (_ <- 1 to 5)
-          parsed = DelimV2.readManifest(fs, hp).get.files.size.toLong
+          parsed = DelimLog.readManifest(fs, hp).get.files.size.toLong
         require(parsed == nEntries)
         (parsed, "reps=5")
       }
@@ -993,7 +994,7 @@ object Stress {
         // planInputPartitions does after pruning)
         var kept = 0L
         for (_ <- 1 to 5) {
-          val mm = DelimV2.readManifest(fs, hp).get
+          val mm = DelimLog.readManifest(fs, hp).get
           val listed = DelimV2.listedFromManifest(hp, mm)
           val pred = DelimV2.compileStatsPredicate(
             org.apache.spark.sql.sources.GreaterThanOrEqual(
@@ -1019,7 +1020,7 @@ object Stress {
     // inline design is also priced once for the direct comparison.
     for (nEntries <- Seq(100000, 300000, 1000000)
         if sections("manifestscale") && amps.contains(1)) {
-      import graft.sources.v2.DelimV2
+      import graft.sources.v2.{DelimLog, DelimV2}
       val root = s"/tmp/graft_stress_manifest_seg/n$nEntries"
       graft.core.Scratch.rmTree(root)
       val hp = new org.apache.hadoop.fs.Path(root)
@@ -1028,7 +1029,7 @@ object Stress {
       fs.mkdirs(hp)
       val struct = org.apache.spark.sql.types.StructType.fromDDL(
         "id BIGINT, v DOUBLE, s STRING, pc STRING")
-      val schema = DelimV2.ManifestSchema(Seq("pc"), struct)
+      val schema = DelimLog.ManifestSchema(Seq("pc"), struct)
       def mkStats(i: Int): String = {
         val lo = i.toLong * 1000
         DelimV2.encodeStats(50000L, Seq(
@@ -1037,11 +1038,11 @@ object Stress {
           ("s", "aaaa", "zzzz", 0L)))
       }
       val entries = (0 until nEntries).map { i =>
-        DelimV2.ManifestEntry(1L << 27, 1L,
+        DelimLog.ManifestEntry(1L << 27, 1L,
           f"pc=p${i % 1000}%04d/part-$i%07d.txt", mkStats(i))
       }
       val perPart = nEntries / 1000
-      val m = DelimV2.DelimManifest(entries, multiLine = false, gen = 1L,
+      val m = DelimLog.DelimManifest(entries, multiLine = false, gen = 1L,
         retain = 1, schemas = Map(1L -> schema), segSize = 2048)
       if (nEntries == 1000000) {
         // the inline document at 1M entries, priced once: the number
@@ -1053,7 +1054,8 @@ object Stress {
         var g = 1L
         run("manifest_inline_commit", nEntries, nEntries.toLong) {
           for (_ <- 1 to 2) {
-            DelimV2.commitManifest(fs, hpI, m.copy(gen = g, segSize = 0))
+            DelimLog.commit(fs, hpI, m.copy(gen = g - 1))(
+              (_, _) => m.copy(segSize = 0))
             g += 1
           }
           (nEntries.toLong, "reps=2|segsize=0")
@@ -1061,22 +1063,22 @@ object Stress {
         run("manifest_inline_parse", nEntries, nEntries.toLong) {
           var parsed = 0L
           for (_ <- 1 to 2)
-            parsed = DelimV2.readManifest(fs, hpI).get.files.size.toLong
+            parsed = DelimLog.readManifest(fs, hpI).get.files.size.toLong
           require(parsed == nEntries)
           (parsed, "reps=2|segsize=0")
         }
         graft.core.Scratch.rmTree(rootI)
       }
       run("manifest_seg_commit_cold", nEntries, nEntries.toLong) {
-        DelimV2.clearSegCaches()
-        DelimV2.commitManifest(fs, hp, m)
+        DelimLog.clearSegCaches()
+        DelimLog.commit(fs, hp, m.copy(gen = 0L))((_, _) => m)
         (nEntries.toLong, "reps=1|segsize=2048")
       }
       run("manifest_seg_parse_cold", nEntries, nEntries.toLong) {
         var parsed = 0L
         for (_ <- 1 to 5) {
-          DelimV2.clearSegCaches()
-          parsed = DelimV2.readManifest(fs, hp).get.files.size.toLong
+          DelimLog.clearSegCaches()
+          parsed = DelimLog.readManifest(fs, hp).get.files.size.toLong
         }
         require(parsed == nEntries)
         (parsed, "reps=5|segsize=2048")
@@ -1084,15 +1086,15 @@ object Stress {
       run("manifest_seg_parse_warm", nEntries, nEntries.toLong) {
         var parsed = 0L
         for (_ <- 1 to 5)
-          parsed = DelimV2.readManifest(fs, hp).get.files.size.toLong
+          parsed = DelimLog.readManifest(fs, hp).get.files.size.toLong
         require(parsed == nEntries)
         (parsed, "reps=5|segsize=2048")
       }
       run("manifest_seg_plan_pruned", nEntries, nEntries.toLong) {
         var kept = 0L
         for (_ <- 1 to 5) {
-          DelimV2.clearSegCaches()
-          kept = DelimV2.readManifest(fs, hp,
+          DelimLog.clearSegCaches()
+          kept = DelimLog.readManifest(fs, hp,
             prune = Seq(("pc", Seq("p0500")))).get.files.size.toLong
         }
         require(kept == perPart, s"pruned plan kept $kept, expected $perPart")
@@ -1104,10 +1106,11 @@ object Stress {
         // warm driver (segKnown primed): each rep appends ONE file to
         // one partition — the re-chunk touches that partition's run
         for (_ <- 1 to 5) {
+          val prev = m.copy(gen = mGen, files = all)
           mGen += 1
-          all = all :+ DelimV2.ManifestEntry(1L << 27, mGen,
+          all = all :+ DelimLog.ManifestEntry(1L << 27, mGen,
             f"pc=p0001/part-x$mGen%07d.txt", mkStats(nEntries + mGen.toInt))
-          DelimV2.commitManifest(fs, hp, m.copy(gen = mGen, files = all))
+          DelimLog.commit(fs, hp, prev)((_, _) => prev.copy(files = all))
         }
         (nEntries.toLong, "reps=5|segsize=2048|one_partition_append")
       }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{Path => HPath}
 
 import graft.SparkFunSuite
-import graft.sources.v2.DelimV2
+import graft.sources.v2.DelimLog
 
 /** Certifies SQL row-level operations (MERGE INTO / UPDATE / DELETE)
   * against graft-delim catalog tables via the group-based copy-on-write
@@ -31,7 +31,7 @@ class DelimMergeSpec extends SparkFunSuite {
       .toDF("id", "v", "pc")
       .writeTo("graft_cat.default.merge_t").append()
     val calmBefore = fileOf(t, "pc=c")
-    val genBefore = DelimV2.readManifest(
+    val genBefore = DelimLog.readManifest(
       new HPath(t).getFileSystem(spark.sessionState.newHadoopConf()),
       new HPath(t)).get.gen
     Seq((2L, 20.0, "a"), (5L, 50.0, "b")).toDF("id", "v", "pc")
@@ -46,7 +46,7 @@ class DelimMergeSpec extends SparkFunSuite {
     assert(got.toSeq == Seq((1L, 1.0, "a"), (2L, 20.0, "a"), (3L, 3.0, "b"),
       (4L, 4.0, "c"), (5L, 50.0, "b")))
     // the commit went through the generation protocol
-    val m = DelimV2.readManifest(
+    val m = DelimLog.readManifest(
       new HPath(t).getFileSystem(spark.sessionState.newHadoopConf()),
       new HPath(t)).get
     assert(m.gen == genBefore + 1)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{Path => HPath}
 
 import graft.SparkFunSuite
-import graft.sources.v2.{DelimCompact, DelimV2}
+import graft.sources.v2.{DelimCompact, DelimLog}
 
 /** Merge-on-read DELETE corner cases the oracle query cannot reach:
   * columnar/row read parity under tombstones, tombstone interaction
@@ -17,7 +17,7 @@ class DelimMorSpec extends SparkFunSuite {
   private def fs(t: String) =
     new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
   private def manifest(t: String) =
-    DelimV2.readManifest(fs(t), new HPath(t)).get
+    DelimLog.readManifest(fs(t), new HPath(t)).get
 
   private def mkTable(name: String, t: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS graft_cat.default.$name")

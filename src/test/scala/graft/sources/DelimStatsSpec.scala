@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
-import graft.sources.v2.{DelimScanMetrics, DelimV2}
+import graft.sources.v2.{DelimLog, DelimScanMetrics, DelimV2}
 
 /** Certifies manifest FILE STATS (per-column min/max/null-count,
   * recorded by the writer) and the data skipping they drive: a file
@@ -31,7 +31,7 @@ class DelimStatsSpec extends SparkFunSuite {
       .repartitionByRange(8, $"id").sortWithinPartitions("id")
       .write.format("graft-delim").mode("overwrite").save(t)
     val fs = new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
-    val m = DelimV2.readManifest(fs, new HPath(t)).get
+    val m = DelimLog.readManifest(fs, new HPath(t)).get
     assert(m.files.size == 8 && m.files.forall(_.stats.nonEmpty),
       s"expected 8 stats-bearing files: ${m.files}")
     def q(cond: org.apache.spark.sql.Column) = spark.read.format("graft-delim")
@@ -81,7 +81,7 @@ class DelimStatsSpec extends SparkFunSuite {
       .toDF("id", "v", "s").repartition(1)
       .write.format("graft-delim").mode("overwrite").save(t)
     val fs = new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
-    val m = DelimV2.readManifest(fs, new HPath(t)).get
+    val m = DelimLog.readManifest(fs, new HPath(t)).get
     val st = DelimV2.decodeStats(m.files.head.stats,
       m.schemas.get(m.files.head.gen)).get
     assert(st.cols.contains("id") && !st.cols.contains("v") &&
@@ -106,7 +106,7 @@ class DelimStatsSpec extends SparkFunSuite {
       .mode("append").save(t)
     graft.sources.v2.DelimCompact.compact(spark, t)
     val fs = new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
-    val m = DelimV2.readManifest(fs, new HPath(t)).get
+    val m = DelimLog.readManifest(fs, new HPath(t)).get
     val aEntry = m.files.find(_.rel.startsWith("pc=a/")).get
     val aStats = DelimV2.decodeStats(aEntry.stats, m.schemas.get(aEntry.gen))
     assert(aStats.isDefined && aStats.get.rows == 300, aEntry.stats)
@@ -162,7 +162,7 @@ class DelimStatsSpec extends SparkFunSuite {
       .repartition(1)
       .write.format("graft-delim").mode("overwrite").save(t)
     val fs = new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
-    val m = DelimV2.readManifest(fs, new HPath(t)).get
+    val m = DelimLog.readManifest(fs, new HPath(t)).get
     val st = DelimV2.decodeStats(m.files.head.stats,
       m.schemas.get(m.files.head.gen)).get
     assert(st.cols("s").min == vals.min && st.cols("s").max == vals.max,

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
-import graft.sources.v2.DelimV2
+import graft.sources.v2.DelimLog
 
 /** Certifies the graft-delim manifest GENERATION protocol added for the
   * table-format tier: versioned snapshot manifests claimed with
@@ -45,7 +45,7 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
     assert(err.getMessage.contains("versionAsOf"), err.getMessage)
     // retention policy is a TABLE property: carried by later commits
     // that did not re-specify it
-    val m = DelimV2.readManifest(fsFor(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fsFor(t), new HPath(t)).get
     assert(m.retain == 3 && m.gen == 3L)
   }
 
@@ -57,7 +57,7 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
         .write.format("graft-delim").option("retainVersions", "2")
         .mode("overwrite").save(t)
     val fs = fsFor(t)
-    assert(DelimV2.retainedVersions(fs, new HPath(t)) == Seq(3L, 4L))
+    assert(DelimLog.retainedVersions(fs, new HPath(t)) == Seq(3L, 4L))
     // gen 3 still time-travels (its file survived the gen-4 overwrite)
     val old = spark.read.format("graft-delim").schema("id BIGINT, name STRING")
       .option("versionAsOf", "3").load(t).collect()
@@ -81,14 +81,14 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
       .write.format("graft-delim").mode("overwrite").save(t)
     val fs = fsFor(t)
     val hp = new HPath(t)
-    val prev = DelimV2.readManifest(fs, hp).get
+    val prev = DelimLog.readManifest(fs, hp).get
     // two committers both read generation 1 and race to claim 2:
     // the first claim wins ...
-    DelimV2.commitManifest(fs, hp, prev.copy(gen = prev.gen + 1))
+    DelimLog.commitManifest(fs, hp, prev.copy(gen = prev.gen + 1))
     // ... the second must fail loudly (this was the silent
     // last-writer-wins data-loss window of a bare read-modify-write)
     val e = intercept[java.util.ConcurrentModificationException] {
-      DelimV2.commitManifest(fs, hp, prev.copy(gen = prev.gen + 1))
+      DelimLog.commitManifest(fs, hp, prev.copy(gen = prev.gen + 1))
     }
     assert(e.getMessage.contains("already claimed"), e.getMessage)
   }
@@ -103,15 +103,15 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
     // steal the next generation between the writer's snapshot read and
     // its commit is not interceptable here; instead pre-claim gen 2 so
     // the APPEND below loses the race at its commit
-    val prev = DelimV2.readManifest(fs, hp).get
-    DelimV2.commitManifest(fs, hp, prev.copy(gen = prev.gen + 1))
+    val prev = DelimLog.readManifest(fs, hp).get
+    DelimLog.commitManifest(fs, hp, prev.copy(gen = prev.gen + 1))
     // make _manifest look like gen 1 again (the appender will read it
     // and try to claim gen 2, which is taken)
-    DelimV2.recoverManifest(fs, hp) // no-op guard: pointer already at 2
+    DelimLog.recoverManifest(fs, hp) // no-op guard: pointer already at 2
     val mfBytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$t/${DelimV2.ManifestFile}"))
+      java.nio.file.Paths.get(s"$t/${DelimLog.ManifestFile}"))
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$t/${DelimV2.ManifestFile}"),
+      java.nio.file.Paths.get(s"$t/${DelimLog.ManifestFile}"),
       new String(mfBytes, java.nio.charset.StandardCharsets.UTF_8)
         .replace("gen=2", "gen=1")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -138,9 +138,9 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
     // simulate a commit that died between its claim and the pointer
     // swap: the claimed version exists, the POINTER is gone (the crash
     // landed inside the swap window)
-    val prev = DelimV2.readManifest(fs, hp).get
+    val prev = DelimLog.readManifest(fs, hp).get
     val claimed = prev.copy(gen = prev.gen + 1)
-    val vf = s"$t/${DelimV2.ManifestFile}.v${claimed.gen}"
+    val vf = s"$t/${DelimLog.ManifestFile}.v${claimed.gen}"
     java.nio.file.Files.write(java.nio.file.Paths.get(vf),
       ("#graft-delim-manifest v2 multiline=false " +
         s"gen=${claimed.gen} retain=1\n" +
@@ -149,14 +149,14 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
     // ... and the pointer is GONE (mid-swap), with an uncommitted
     // stray file on disk: readers must see the CLAIMED snapshot — a
     // recursive-listing fallback would surface the stray
-    fs.delete(new HPath(t, DelimV2.ManifestFile), false)
+    fs.delete(new HPath(t, DelimLog.ManifestFile), false)
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$t/stray.txt"),
       "999|9.9\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     assert(spark.read.format("graft-delim").schema("id BIGINT, v DOUBLE")
       .load(t).collect().map(_.getLong(0)).toSet == Set(1L))
     // explicit repair rolls the stale pointer forward
-    assert(DelimV2.recoverManifest(fs, hp).contains(claimed.gen))
-    assert(DelimV2.recoverManifest(fs, hp).isEmpty) // idempotent
+    assert(DelimLog.recoverManifest(fs, hp).contains(claimed.gen))
+    assert(DelimLog.recoverManifest(fs, hp).isEmpty) // idempotent
     // and the NEXT commit builds on the claimed snapshot and completes
     // normally (self-healing: no operator intervention required)
     Seq((2L, 2.0)).toDF("id", "v")
@@ -164,7 +164,7 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
     val back = spark.read.format("graft-delim").schema("id BIGINT, v DOUBLE")
       .load(t).collect().map(_.getLong(0)).toSet
     assert(back == Set(1L, 2L))
-    assert(DelimV2.readManifest(fs, hp).get.gen == claimed.gen + 1)
+    assert(DelimLog.readManifest(fs, hp).get.gen == claimed.gen + 1)
   }
 
   test("schema evolution: a column added later reads null from older generations") {
@@ -253,13 +253,13 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
         .mode(if (g == 0) "overwrite" else "append").save(t)
     val fs = fsFor(t)
     val hp = new HPath(t)
-    val before = DelimV2.readManifest(fs, hp).get
+    val before = DelimLog.readManifest(fs, hp).get
     assert(before.files.size == 6, s"expected 6 files, got ${before.files}")
     val beforeRows = spark.read.format("graft-delim")
       .schema("id BIGINT, pc STRING").load(t)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val newGen = graft.sources.v2.DelimCompact.compact(spark, t)
-    val after = DelimV2.readManifest(fs, hp).get
+    val after = DelimLog.readManifest(fs, hp).get
     assert(after.gen == newGen && newGen == before.gen + 1)
     assert(after.files.size == 2,
       s"one file per partition expected, got ${after.files}")
@@ -288,7 +288,7 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
       .write.format("graft-delim").mode("append").save(t)
     graft.sources.v2.DelimCompact.compact(spark, t)
     val fs = fsFor(t)
-    val m = DelimV2.readManifest(fs, new HPath(t)).get
+    val m = DelimLog.readManifest(fs, new HPath(t)).get
     assert(m.files.size == 2,
       s"expected one file per layout, got ${m.files}")
     val got = spark.read.format("graft-delim")
@@ -308,7 +308,7 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
       .mode("overwrite").save(t)
     Seq((2L, "b")).toDF("id", "name")
       .write.format("graft-delim").mode("append").save(t)
-    val preGen = DelimV2.readManifest(fsFor(t), new HPath(t)).get.gen
+    val preGen = DelimLog.readManifest(fsFor(t), new HPath(t)).get.gen
     graft.sources.v2.DelimCompact.compact(spark, t)
     val old = spark.read.format("graft-delim").schema("id BIGINT, name STRING")
       .option("versionAsOf", preGen.toString).load(t)

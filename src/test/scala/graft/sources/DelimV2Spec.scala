@@ -903,7 +903,7 @@ class DelimV2Spec extends SparkFunSuite {
     // manifest lengths match the files (readers never stat data files)
     val fs = new org.apache.hadoop.fs.Path(s"$dir/out")
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val entries = graft.sources.v2.DelimV2.readManifest(
+    val entries = graft.sources.v2.DelimLog.readManifest(
       fs, new org.apache.hadoop.fs.Path(s"$dir/out")).get.entries
     entries.foreach { case (len, rel) =>
       assert(len === new java.io.File(s"$dir/out/$rel").length(), rel)
@@ -928,10 +928,10 @@ class DelimV2Spec extends SparkFunSuite {
     // PHASE 2: the generation claim + atomic manifest swap — readers
     // now see exactly the new snapshot (old files still on disk until
     // phase 3 deletes them)
-    val gen1 = graft.sources.v2.DelimV2.readManifest(fs, hp).get.gen
-    graft.sources.v2.DelimV2.commitManifest(fs, hp,
-      graft.sources.v2.DelimV2.DelimManifest(
-        Seq(graft.sources.v2.DelimV2.ManifestEntry(
+    val gen1 = graft.sources.v2.DelimLog.readManifest(fs, hp).get.gen
+    graft.sources.v2.DelimLog.commitManifest(fs, hp,
+      graft.sources.v2.DelimLog.DelimManifest(
+        Seq(graft.sources.v2.DelimLog.ManifestEntry(
           18L, gen1 + 1, "part-00000-777-deadbeef.txt")),
         multiLine = false, gen = gen1 + 1))
     assert(total() === 300.0, "reader saw a mixed or stale generation")
@@ -939,7 +939,7 @@ class DelimV2Spec extends SparkFunSuite {
     Seq((9L, 9.0)).toDF("id", "v")
       .write.format("graft-delim").mode("overwrite").save(s"$dir/out")
     assert(total() === 9.0)
-    val live = graft.sources.v2.DelimV2.readManifest(fs, hp).get.entries.map(_._2)
+    val live = graft.sources.v2.DelimLog.readManifest(fs, hp).get.entries.map(_._2)
     assert(live.size === 1)
     // dead generations' files were deleted at commit
     assert(!new java.io.File(s"$dir/out/part-00000-777-deadbeef.txt").exists())
@@ -961,7 +961,7 @@ class DelimV2Spec extends SparkFunSuite {
     q.awaitTermination()
     val hp = new org.apache.hadoop.fs.Path(s"$dir/out")
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries = graft.sources.v2.DelimV2.readManifest(fs, hp).get.entries
+    val entries = graft.sources.v2.DelimLog.readManifest(fs, hp).get.entries
     assert(entries.size === entries.map(_._2).distinct.size)
     val back = spark.read.format("graft-delim")
       .schema("id BIGINT").load(s"$dir/out")

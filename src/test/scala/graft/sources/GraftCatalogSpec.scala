@@ -2,10 +2,12 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
-import graft.sources.v2.{DelimScanMetrics, DelimV2}
+import graft.sources.v2.{DelimLog, DelimScanMetrics}
 
 /** Certifies the GraftCatalog partition-DDL front door (the reference's
   * S1 surface): SHOW PARTITIONS lists the k=v directory tree,
@@ -49,7 +51,7 @@ class GraftCatalogSpec extends SparkFunSuite {
     assert(spark.table("graft_cat.default.ddl_t").count() === 2)
     val hp = new org.apache.hadoop.fs.Path(s"$dir/t")
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = DelimV2.readManifest(fs, hp).get.entries.map(_._2)
+    val manifest = DelimLog.readManifest(fs, hp).get.entries.map(_._2)
     assert(!manifest.exists(_.startsWith("pc=a/")), manifest.mkString(","))
 
     // a subsequent partition-filtered scan file-prunes to the surviving
@@ -134,5 +136,30 @@ class GraftCatalogSpec extends SparkFunSuite {
     spark.sql("ALTER TABLE graft_cat.default.typed_t DROP PARTITION (k=10)")
     assert(parts("graft_cat.default.typed_t") === Seq("k=20"))
     assert(spark.table("graft_cat.default.typed_t").count() === 1)
+  }
+
+  test("DROP PARTITION keeps a retained data file's bloom sidecar") {
+    val dir = tempDir("graftcat-dropbloom")
+    Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "pc")
+      .coalesce(1).write.format("graft-delim").option("partitionBy", "pc")
+      .option("bloomFor", "id").option("retainVersions", "3")
+      .mode("overwrite").save(s"$dir/t")
+    spark.sql("DROP TABLE IF EXISTS graft_cat.default.dropbloom_t")
+    spark.sql(s"""CREATE TABLE graft_cat.default.dropbloom_t (id BIGINT, pc STRING)
+      USING `graft-delim` PARTITIONED BY (pc) LOCATION '$dir/t'""")
+    def inA(): Seq[String] = {
+      val ls = Files.list(Paths.get(s"$dir/t/pc=a"))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toSeq.sorted
+      finally ls.close()
+    }
+    val before = inA()
+    assert(before.size == 2 && before.exists(_.endsWith(".bloom")),
+      s"fixture must land one data file and its sidecar: $before")
+    spark.sql("ALTER TABLE graft_cat.default.dropbloom_t DROP PARTITION (pc='a')")
+    // the dropped generation is still retained (versionAsOf reads it):
+    // its data file AND the sidecar that lets that read skip both stay
+    assert(inA() == before, s"retained partition files changed: ${inA()}")
+    assert(spark.table("graft_cat.default.dropbloom_t").count() === 1)
   }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{Path => HPath}
 
 import graft.SparkFunSuite
-import graft.sources.v2.DelimV2
+import graft.sources.v2.DelimLog
 
 /** SQL `CALL graft_cat.system.*` maintenance procedures: compaction,
   * snapshot expiry, and manifest recovery through Spark 4's connector
@@ -15,7 +15,7 @@ class GraftProceduresSpec extends SparkFunSuite {
   private def fs(t: String) =
     new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
   private def manifest(t: String) =
-    DelimV2.readManifest(fs(t), new HPath(t)).get
+    DelimLog.readManifest(fs(t), new HPath(t)).get
 
   test("CALL system.optimize compacts through SQL and reports the file counts") {
     val t = s"${tempDir("proc-opt")}/t"
@@ -117,7 +117,7 @@ class GraftProceduresSpec extends SparkFunSuite {
       "table => 'default.proc_delim', min_files => 2147483647)")
     val fsx = new org.apache.hadoop.fs.Path(t)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val m = graft.sources.v2.DelimV2.readManifest(fsx,
+    val m = graft.sources.v2.DelimLog.readManifest(fsx,
       new org.apache.hadoop.fs.Path(t)).get
     assert(m.tombstones.isEmpty, "CALL optimize must retire the tombstone")
     val got = spark.sql(

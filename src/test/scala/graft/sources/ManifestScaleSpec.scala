@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{Path => HPath}
 
 import graft.SparkFunSuite
-import graft.sources.v2.DelimV2
+import graft.sources.v2.{DelimLog, DelimV2}
 
 /** CI pin for the manifest's metadata scale envelope (STRESS.md §15):
   * the driver-side commit/parse/prune paths must stay within loose
@@ -21,24 +21,24 @@ class ManifestScaleSpec extends SparkFunSuite {
     fs.mkdirs(hp)
     val struct = org.apache.spark.sql.types.StructType.fromDDL(
       "id BIGINT, v DOUBLE, pc STRING")
-    val schema = DelimV2.ManifestSchema(Seq("pc"), struct)
+    val schema = DelimLog.ManifestSchema(Seq("pc"), struct)
     val n = 20000
     val entries = (0 until n).map { i =>
       val lo = i.toLong * 1000
-      DelimV2.ManifestEntry(1L << 20, 1L, f"pc=p${i % 100}%03d/part-$i%06d.txt",
+      DelimLog.ManifestEntry(1L << 20, 1L, f"pc=p${i % 100}%03d/part-$i%06d.txt",
         DelimV2.encodeStats(1000L, Seq(
           ("id", lo.toString, (lo + 999).toString, 0L),
           ("v", "0.0", "1.0", 5L))))
     }
-    val m = DelimV2.DelimManifest(entries, multiLine = false, gen = 1L,
+    val m = DelimLog.DelimManifest(entries, multiLine = false, gen = 1L,
       retain = 1, schemas = Map(1L -> schema))
     def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = body
       (r, (System.nanoTime() - t0) / 1e9)
     }
-    val (_, commitS) = timed(DelimV2.commitManifest(fs, hp, m))
+    val (_, commitS) = timed(DelimLog.commitManifest(fs, hp, m))
     assert(commitS < 3.0, f"20k-entry commit took $commitS%.2fs (envelope 3s)")
-    val (parsed, parseS) = timed(DelimV2.readManifest(fs, hp).get)
+    val (parsed, parseS) = timed(DelimLog.readManifest(fs, hp).get)
     assert(parsed.files.size == n)
     assert(parseS < 1.5, f"20k-entry parse took $parseS%.2fs (envelope 1.5s)")
     val (kept, pruneS) = timed {

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{Path => HPath}
 
 import graft.SparkFunSuite
-import graft.sources.v2.{DelimBloom, DelimV2}
+import graft.sources.v2.{DelimBloom, DelimLog}
 
 /** Round-19 code-health regressions (ADVICE.md):
   * - a literal two-character "\N" string value must survive a
@@ -26,7 +26,7 @@ class Round19AdviceSpec extends SparkFunSuite {
   private def fs(t: String) =
     new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
   private def manifest(t: String) =
-    DelimV2.readManifest(fs(t), new HPath(t)).get
+    DelimLog.readManifest(fs(t), new HPath(t)).get
 
   test("a literal \\N string survives the write-read round trip quoted") {
     val t = s"${tempDir("advice-litn")}/t"

@@ -98,7 +98,7 @@ class CboNdvSpec extends SparkFunSuite {
     DelimCompact.compact(spark, t)
     val fs = new org.apache.hadoop.fs.Path(t)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val m = DelimV2.readManifest(fs, new org.apache.hadoop.fs.Path(t)).get
+    val m = DelimLog.readManifest(fs, new org.apache.hadoop.fs.Path(t)).get
     assert(m.files.size == 1)
     val listed = DelimV2.listedFromManifest(
       new org.apache.hadoop.fs.Path(t), m)

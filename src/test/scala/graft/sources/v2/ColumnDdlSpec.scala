@@ -70,7 +70,7 @@ class ColumnDdlSpec extends SparkFunSuite {
     // through its field ID, not null it out
     spark.sql("ALTER TABLE graft_cat.default.ddl_retire RENAME COLUMN s TO label")
     DelimCompact.compact(spark, t, minFilesPerGroup = Int.MaxValue)
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     assert(m.tombstones.isEmpty)
     val got = spark.sql("SELECT id, label FROM graft_cat.default.ddl_retire ORDER BY id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -90,7 +90,7 @@ class ColumnDdlSpec extends SparkFunSuite {
         .coalesce(1).writeTo("graft_cat.default.ddl_stats").append()
     spark.sql("ALTER TABLE graft_cat.default.ddl_stats RENAME COLUMN id TO key")
     val hp = new HPath(t)
-    val m = DelimV2.readManifest(fs(t), hp).get
+    val m = DelimLog.readManifest(fs(t), hp).get
     assert(m.files.size == 4)
     val df = spark.table("graft_cat.default.ddl_stats")
     assert(df.filter($"key" === 150L).count() == 1L)

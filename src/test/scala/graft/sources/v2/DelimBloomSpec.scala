@@ -30,7 +30,7 @@ class DelimBloomSpec extends SparkFunSuite {
   test("sidecars land beside every data file and the header records the column") {
     val t = s"${tempDir("bloom-land")}/t"
     mk(t)
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     assert(m.bloomCols == Seq("id"))
     m.files.foreach { e =>
       assert(fs(t).exists(new HPath(t, e.rel + DelimBloom.Suffix)),
@@ -42,7 +42,7 @@ class DelimBloomSpec extends SparkFunSuite {
   test("an absent key's probe skips every file; a present key's keeps its file") {
     val t = s"${tempDir("bloom-skip")}/t"
     mk(t)
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     def skips(key: Long): Int = m.files.count { e =>
       DelimBloom.fileSkips(fs(t), new HPath(t, e.rel),
         Seq(("id", Seq(key.toString))))
@@ -73,7 +73,7 @@ class DelimBloomSpec extends SparkFunSuite {
       .coalesce(1)
       .write.format("graft-delim").option("bloomFor", "id")
       .mode("overwrite").save(t)
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     assert(m.files.size == 1)
     // delete the DATA bytes, keep manifest + sidecar: a gated read of
     // an absent key returns empty without ever opening the file; an
@@ -90,7 +90,7 @@ class DelimBloomSpec extends SparkFunSuite {
     val t = s"${tempDir("bloom-compact")}/t"
     mk(t)
     DelimCompact.compact(spark, t)
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     assert(m.files.size == 1 && m.bloomCols == Seq("id"))
     // the merged sidecar rides the compacted file: OR of the members'
     // bitsets (fixed geometry), so an absent-key probe STILL skips and
@@ -126,7 +126,7 @@ class DelimBloomSpec extends SparkFunSuite {
     spark.range(101L, 201L).select($"id", ($"id" * 1.5).as("v"))
       .coalesce(1).write.format("graft-delim").mode("append").save(t)
     DelimCompact.compact(spark, t)
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     assert(m.files.size == 1)
     assert(!fs(t).exists(new HPath(t, m.files.head.rel + DelimBloom.Suffix)),
       "a partial group must not merge a lying sidecar")
@@ -140,7 +140,7 @@ class DelimBloomSpec extends SparkFunSuite {
     mk(t)
     spark.range(1L, 11L).select($"id", ($"id" * 1.0).as("v"))
       .write.format("graft-delim").mode("overwrite").save(t)
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     assert(m.bloomCols.isEmpty)
     val leftover = fs(t).listStatus(new HPath(t))
       .map(_.getPath.getName).filter(_.endsWith(DelimBloom.Suffix))

@@ -32,7 +32,7 @@ class DelimCowGuardSpec extends SparkFunSuite {
     val t = s"${tempDir("cow-gen")}/t"
     mkTable(t)
     val fs = fsOf(t)
-    val scanned = DelimV2.readManifest(fs, new HPath(t)).get.files
+    val scanned = DelimLog.readManifest(fs, new HPath(t)).get.files
       .map(e => s"$t/${e.rel}")
     // a concurrent commit lands between "scan" and commit
     Seq((3L, 3.0)).toDF("id", "v").coalesce(1)
@@ -61,11 +61,11 @@ class DelimCowGuardSpec extends SparkFunSuite {
     val t = s"${tempDir("cow-ok")}/t"
     mkTable(t)
     val fs = fsOf(t)
-    val scanned = DelimV2.readManifest(fs, new HPath(t)).get.files
+    val scanned = DelimLog.readManifest(fs, new HPath(t)).get.files
       .map(e => s"$t/${e.rel}")
     // zero replacement rows = a DELETE of everything the scan read
     cowWrite(t, scanned, baseGen = 1L).commit(Array.empty)
-    val m = DelimV2.readManifest(fs, new HPath(t)).get
+    val m = DelimLog.readManifest(fs, new HPath(t)).get
     assert(m.gen == 2L && m.files.isEmpty)
   }
 }

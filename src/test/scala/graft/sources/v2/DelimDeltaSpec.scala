@@ -16,7 +16,7 @@ class DelimDeltaSpec extends SparkFunSuite {
   private def fs(t: String) =
     new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
   private def manifest(t: String) =
-    DelimV2.readManifest(fs(t), new HPath(t)).get
+    DelimLog.readManifest(fs(t), new HPath(t)).get
   private def fileSet(t: String) =
     manifest(t).files.map(e => (e.rel, e.len, e.gen)).toSet
 

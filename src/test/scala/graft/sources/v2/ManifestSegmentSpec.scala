@@ -25,12 +25,12 @@ class ManifestSegmentSpec extends SparkFunSuite {
   private def fs(t: String) =
     new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
   private def manifest(t: String) =
-    DelimV2.readManifest(fs(t), new HPath(t)).get
+    DelimLog.readManifest(fs(t), new HPath(t)).get
   private def segFiles(t: String): Set[String] =
-    Option(fs(t).globStatus(new HPath(t, s"${DelimV2.SegPrefix}*")))
+    Option(fs(t).globStatus(new HPath(t, s"${DelimLog.SegPrefix}*")))
       .map(_.toSeq).getOrElse(Nil).map(_.getPath.getName).toSet
   private def rawPointer(t: String): String = {
-    val in = fs(t).open(new HPath(t, DelimV2.ManifestFile))
+    val in = fs(t).open(new HPath(t, DelimLog.ManifestFile))
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
@@ -283,9 +283,9 @@ class ManifestSegmentSpec extends SparkFunSuite {
     build(t)
     val m = manifest(t)
     // simulate a racing committer that claimed the next generation
-    DelimV2.commitManifest(fs(t), new HPath(t), m.copy(gen = m.gen + 1))
+    DelimLog.commitManifest(fs(t), new HPath(t), m.copy(gen = m.gen + 1))
     intercept[java.util.ConcurrentModificationException] {
-      DelimV2.commitManifest(fs(t), new HPath(t), m.copy(gen = m.gen + 1))
+      DelimLog.commitManifest(fs(t), new HPath(t), m.copy(gen = m.gen + 1))
     }
   }
 }

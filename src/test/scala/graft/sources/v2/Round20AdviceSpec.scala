@@ -26,7 +26,7 @@ class Round20AdviceSpec extends SparkFunSuite {
   private def fs(t: String) =
     new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
   private def manifest(t: String) =
-    DelimV2.readManifest(fs(t), new HPath(t)).get
+    DelimLog.readManifest(fs(t), new HPath(t)).get
 
   test("a second ALTER keeps the field IDs a prior RENAME committed") {
     val t = s"${tempDir("advice20-fid")}/t"
@@ -71,7 +71,7 @@ class Round20AdviceSpec extends SparkFunSuite {
           .mode(if (a == 0) "overwrite" else "append").save(t)
       }
       val pointer = {
-        val in = fs(t).open(new HPath(t, DelimV2.ManifestFile))
+        val in = fs(t).open(new HPath(t, DelimLog.ManifestFile))
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
       }
@@ -174,13 +174,13 @@ class Round20AdviceSpec extends SparkFunSuite {
     // pre-ID-scheme table
     (1L to 5L).map(i => (i, i * 1.1)).toDF("id", "a")
       .coalesce(1).write.format("graft-delim").mode("overwrite").save(t)
-    val m1 = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m1 = DelimLog.readManifest(fs(t), new HPath(t)).get
     val stripped = m1.schemas.map { case (g, ms) =>
-      g -> DelimV2.ManifestSchema(ms.partCols,
+      g -> DelimLog.ManifestSchema(ms.partCols,
         org.apache.spark.sql.types.StructType(ms.struct.fields.map(
           _.copy(metadata = org.apache.spark.sql.types.Metadata.empty))))
     }
-    DelimV2.commitManifest(fs(t), new HPath(t),
+    DelimLog.commitManifest(fs(t), new HPath(t),
       m1.copy(gen = m1.gen + 1, schemas = stripped))
     // a scheme-era append with a DIFFERENT column set: its write
     // records {id->1, q->2} (minted against the ID-less lineage)
@@ -192,7 +192,7 @@ class Round20AdviceSpec extends SparkFunSuite {
       (id BIGINT, q STRING) USING `graft-delim` LOCATION '$t'""")
     spark.sql("ALTER TABLE graft_cat.default.presch20_t RENAME COLUMN q TO r")
     // no two schemas may record the same ID for different names
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     val idToNames = m.schemas.values.flatMap(_.struct.fields)
       .flatMap(f => DelimV2.fieldId(f).map(_ -> f.name)).toSeq
       .groupBy(_._1).map { case (i, ns) => i -> ns.map(_._2).distinct }
@@ -257,7 +257,7 @@ class Round20AdviceSpec extends SparkFunSuite {
     assert(m1.bloomCols == Seq("id"))
     // claim the next generation out-of-band: the MERGE's delta commit
     // loses the CAS and must roll back its promoted files AND sidecars
-    val fake = new HPath(t, s"${DelimV2.ManifestFile}.v${m1.gen + 1}")
+    val fake = new HPath(t, s"${DelimLog.ManifestFile}.v${m1.gen + 1}")
     val out = fs(t).create(fake, false); out.close()
     Seq((5L, 500.0), (105L, 1050.0)).toDF("id", "v")
       .createOrReplaceTempView("dbr20_src")

@@ -19,7 +19,7 @@ class SnapshotTagSpec extends SparkFunSuite {
   private def fs(t: String) =
     new HPath(t).getFileSystem(spark.sessionState.newHadoopConf())
   private def manifest(t: String) =
-    DelimV2.readManifest(fs(t), new HPath(t)).get
+    DelimLog.readManifest(fs(t), new HPath(t)).get
 
   private def mk(name: String, t: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS graft_cat.default.$name")
@@ -93,8 +93,8 @@ class SnapshotTagSpec extends SparkFunSuite {
       val genTagged = manifest(t).gen
       spark.sql("CALL graft_cat.system.create_tag(" +
         "table => 'default.tags_t', tag => 'pin')")
-      val pinnedSegs = DelimV2.segmentNamesPub(fs(t),
-        new HPath(t, s"${DelimV2.ManifestFile}.v$genTagged")).toSet
+      val pinnedSegs = DelimLog.segmentNamesOf(fs(t),
+        new HPath(t, s"${DelimLog.ManifestFile}.v$genTagged")).toSet
       assert(pinnedSegs.nonEmpty, "fixture must be segmented")
       // churn: overwrite the whole table (new segments), expire hard
       (100L to 131L).map(i => (i, if (i % 2 == 0) "a" else "b"))

@@ -34,7 +34,7 @@ class StatsTombScopeSpec extends SparkFunSuite {
     // UNSCOPED delete predicate (no partition conjunct): every file at
     // gen <= 2 is uncertain
     spark.sql("DELETE FROM graft_cat.default.tsg_t WHERE v > 15.0") // gen 2
-    val m = DelimV2.readManifest(fs(t), new HPath(t)).get
+    val m = DelimLog.readManifest(fs(t), new HPath(t)).get
     assert(m.tombstones.size == 1 && m.tombstones.head._1 == 2L)
     // a NEWER generation lands a fresh partition
     (100L to 110L).map(i => (i, i.toDouble, "b")).toDF("id", "v", "pc")
@@ -74,7 +74,7 @@ class StatsTombScopeSpec extends SparkFunSuite {
       .coalesce(1).writeTo("graft_cat.default.tsp_t").append()
     spark.sql(
       "DELETE FROM graft_cat.default.tsp_t WHERE pc = 'x' AND v > 20.0")
-    assert(DelimV2.readManifest(fs(t), new HPath(t)).get.tombstones.size == 1)
+    assert(DelimLog.readManifest(fs(t), new HPath(t)).get.tombstones.size == 1)
     def rd = spark.read.format("graft-delim")
       .schema("id BIGINT, v DOUBLE, pc STRING").load(t)
     val y = rd.filter($"pc" === "y").agg(count(lit(1)).as("n"))
