@@ -1,8 +1,17 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.certs.{Cert, TierCheck}
 
 object Bench {
+
+  /** One query's measured pass: wall seconds, the error if it failed,
+    * and the JVM-wide GC seconds and Janino compiles during it.
+    */
+  private final case class Sample(
+      name: String, sec: Double, err: Option[String], gc: Double, compiles: Long)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default to the machine's full parallelism (capped at 32, the target
@@ -26,7 +35,9 @@ object Bench {
     // of each query's generated code — and the per-query min() over
     // passes (below) discards it. Data caches are flushed between
     // passes and queries; only the JVM-wide codegen cache stays warm,
-    // which is the steady state a resident engine runs in.
+    // which is the steady state a resident engine runs in
+    // (`codegen_compiles` shows whether it did: a warm pass compiles
+    // next to nothing).
     spark.range(1000).selectExpr("sum(id)").collect()
     // Alphabetical order (map iteration order shifts whenever a query is
     // added, silently reshuffling which queries absorb residual JIT) and
@@ -52,10 +63,12 @@ object Bench {
     import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def measureHere(certs: Seq[Cert]): Seq[(String, Double, Option[String], Double)] =
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def measureHere(certs: Seq[Cert]): Seq[Sample] =
       certs.map { c =>
         tiers.reset()
         val g0 = gcMillis
+        val c0 = compiles
         val t0 = System.nanoTime()
         // a failed query is NOT a fast query: record the error message so
         // the bench json distinguishes the two, and exit nonzero below
@@ -64,8 +77,9 @@ object Bench {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         val gc = (gcMillis - g0) / 1e3
+        val nc = compiles - c0
         spark.catalog.clearCache()
-        (c.name, dt, err, gc)
+        Sample(c.name, dt, err, gc, nc)
       }
     // MIN-OF-N PASSES (round-20 ask #1): one measured pass is one
     // sample of the shared box, and a load>2 contention phase inflated
@@ -105,7 +119,7 @@ object Bench {
           .filter(w => w.isDirectory && w.getPath != d.getPath)
           .map(_.getPath)
       }
-    def measureMin(certs: Seq[Cert]): Seq[(String, Double, Option[String], Double)] = {
+    def measureMin(certs: Seq[Cert]): Seq[Sample] = {
       warmSfDir.foreach { w =>
         certs.foreach { c =>
           try c.run(spark, w).count() catch { case _: Throwable => () }
@@ -114,12 +128,12 @@ object Bench {
       }
       (1 to passes).map(_ => measureHere(certs))
         .reduce { (a, b) =>
-          a.zip(b).map { case ((n, dt1, e1, g1), (_, dt2, e2, g2)) =>
+          a.zip(b).map { case (s1, s2) =>
             // prefer a pass that succeeded; among successes, the faster
-            (e1, e2) match {
-              case (None, Some(_)) => (n, dt1, e1, g1)
-              case (Some(_), None) => (n, dt2, e2, g2)
-              case _ => if (dt1 <= dt2) (n, dt1, e1, g1) else (n, dt2, e2, g2)
+            (s1.err, s2.err) match {
+              case (None, Some(_)) => s1
+              case (Some(_), None) => s2
+              case _ => if (s1.sec <= s2.sec) s1 else s2
             }
           }
         }
@@ -149,7 +163,7 @@ object Bench {
     val canFork = only.isEmpty && streamSel.nonEmpty &&
       new java.io.File(System.getProperty("java.home"), "bin/java").exists()
 
-    def forkChunk(names: Seq[String]): Option[Seq[(String, Double, Option[String], Double)]] = {
+    def forkChunk(names: Seq[String]): Option[Seq[Sample]] = {
       val javaBin = new java.io.File(System.getProperty("java.home"), "bin/java").getPath
       val jvmOpts = java.lang.management.ManagementFactory.getRuntimeMXBean
         .getInputArguments.asScala.toSeq
@@ -179,14 +193,16 @@ object Bench {
           case Some(l) =>
             val om = new com.fasterxml.jackson.databind.ObjectMapper()
             val root = om.readTree(l)
-            val qs = root.get("queries"); val gcs = root.get("gc_sec")
-            val errs = root.get("errors")
+            val qs = root.get("queries")
+            def field(key: String, n: String) =
+              Option(root.get(key)).flatMap(m => Option(m.get(n)))
             val parsed = names.map { n =>
               val q = Option(qs.get(n))
-              if (q.isEmpty) (n, 0.0, Some("missing from child bench output"), 0.0)
-              else (n, q.get.asDouble(),
-                Option(errs).flatMap(e => Option(e.get(n))).map(_.asText()),
-                Option(gcs).flatMap(g => Option(g.get(n))).map(_.asDouble()).getOrElse(0.0))
+              if (q.isEmpty) Sample(n, 0.0, Some("missing from child bench output"), 0.0, 0L)
+              else Sample(n, q.get.asDouble(),
+                field("errors", n).map(_.asText()),
+                field("gc_sec", n).map(_.asDouble()).getOrElse(0.0),
+                field("codegen_compiles", n).map(_.asLong()).getOrElse(0L))
             }
             // exit != 0 with a parsed line = per-query errors already
             // recorded above; trust the parsed values either way
@@ -207,7 +223,7 @@ object Bench {
     }
 
     val batchResults = measureMin(batchSel)
-    val streamResults: Seq[(String, Double, Option[String], Double)] =
+    val streamResults: Seq[Sample] =
       if (!canFork) measureMin(streamSel)
       else streamSel.grouped(chunkSize).toSeq.flatMap { chunk =>
         forkChunk(chunk.map(_.name)).getOrElse {
@@ -219,29 +235,22 @@ object Bench {
     tiers.close()
     val declaredStream = selected.map(c => c.name -> c.stream).toMap
     // merged, alphabetical (stable output regardless of tier routing)
-    val results = (batchResults ++ streamResults).sortBy(_._1)
-      .map { case (n, dt, err, gc) =>
-        (n, dt, err, gc, declaredStream(n)) }
-    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val results = (batchResults ++ streamResults).sortBy(_.name)
+    def perQuery(v: Sample => Any): String =
+      results.map(r => s"\"${r.name}\":${v(r)}").mkString("{", ",", "}")
     val errs = results
-      .collect { case (k, _, Some(e), _, _) => s"${Verify.jsonString(k)}:${Verify.jsonString(e)}" }
+      .collect { case Sample(k, _, Some(e), _, _) => s"${Verify.jsonString(k)}:${Verify.jsonString(e)}" }
       .mkString("{", ",", "}")
-    val gcs = results.map { case (k, _, _, g, _) => s"\"" + k + "\":" + g }
-      .mkString("{", ",", "}")
-    // declared tier per query
-    val tierMap = results.map { case (k, _, _, _, s) => s"\"" + k + "\":" + s }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"gc_sec":$gcs,"stream":$tierMap,"sf":"$sfDir"}""")
+    val total = results.map(_.sec).sum
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${perQuery(_.sec)},"errors":$errs,"gc_sec":${perQuery(_.gc)},"codegen_compiles":${perQuery(_.compiles)},"stream":${perQuery(r => declaredStream(r.name))},"sf":"$sfDir"}""")
     // Compact headline line, printed LAST: the driver keeps only a
     // 2000-char tail of this stdout, and the full per-query maps above
     // overflow it (round 13's artifact carried only the gc_sec tail —
     // no wall times survived). Everything a cross-round comparison
     // needs — total, s/q, the top-10 slowest with times — must fit in
     // the tail, so it goes on its own short final line.
-    val slowest = results.sortBy(-_._2).take(10)
-      .map { case (k, v, _, _, _) => f""""$k":${v}%.2f""" }
+    val slowest = results.sortBy(-_.sec).take(10)
+      .map(r => f""""${r.name}":${r.sec}%.2f""")
       .mkString("{", ",", "}")
     val nq = results.length
     val spq = if (nq == 0) 0.0 else total / nq
@@ -249,17 +258,17 @@ object Bench {
     // batch tier (plan-governed, measured in this JVM) separately from
     // the streaming-cert tier (trigger-cadence wall time, measured in
     // fresh child JVMs — `isolated` says whether forking was active)
-    val (streamQ, batchQ) = results.partition(_._5)
-    val batchSec = batchQ.map(_._2).sum
-    val streamSec = streamQ.map(_._2).sum
+    val (streamQ, batchQ) = results.partition(r => declaredStream(r.name))
+    val batchSec = batchQ.map(_.sec).sum
+    val streamSec = streamQ.map(_.sec).sum
     // box-load transparency: the 1-minute load average at the end of
     // the run, so a contaminated reading is diagnosable from the
     // artifact alone (round-19 postmortem: a load>2 phase inflated the
     // driver reading 2.5-3.9x on shuffle tails with zero plan change)
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    println(f"""{"metric":"bench_summary","total_sec":$total%.1f,"n_queries":$nq,"sec_per_query":$spq%.3f,"batch_sec":$batchSec%.1f,"n_batch":${batchQ.length},"stream_sec":$streamSec%.1f,"n_stream":${streamQ.length},"stream_isolated":$canFork,"passes":$passes,"load_avg":$loadAvg%.2f,"slowest":$slowest,"n_errors":${results.count(_._3.isDefined)},"sf":"$sfDir"}""")
+    println(f"""{"metric":"bench_summary","total_sec":$total%.1f,"n_queries":$nq,"sec_per_query":$spq%.3f,"batch_sec":$batchSec%.1f,"n_batch":${batchQ.length},"stream_sec":$streamSec%.1f,"n_stream":${streamQ.length},"stream_isolated":$canFork,"passes":$passes,"load_avg":$loadAvg%.2f,"slowest":$slowest,"n_errors":${results.count(_.err.isDefined)},"sf":"$sfDir"}""")
     spark.stop()
-    if (results.exists(_._3.isDefined)) sys.exit(1)
+    if (results.exists(_.err.isDefined)) sys.exit(1)
   }
 }

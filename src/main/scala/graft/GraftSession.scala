@@ -24,6 +24,14 @@ import graft.functions.GraftFunctions
   */
 object GraftSession {
 
+  /** Size of the JVM-wide compiled-class cache. One cold pass over all
+    * 233 certifications in one JVM compiles 2,996 distinct classes
+    * (sf0.01); a second pass at another scale adds about 1,300 more,
+    * most of them per-session streaming classes no cache can reuse.
+    * 4,000 holds the first with room for those.
+    */
+  val CodegenCacheEntries: Int = 4000
+
   /** Build a new session with the engine's recommended configuration.
     * `cores` sizes both the local master and shuffle parallelism —
     * on a real cluster pass a master URL instead and size
@@ -109,6 +117,13 @@ object GraftSession {
       // store. Both are overridable downstream.
       .config("spark.cleaner.periodicGC.interval", "1min")
       .config("spark.sql.ui.retainedExecutions", "8")
+      // Compiled generated classes must outlive the query that made
+      // them: Spark's default cache of 100 classes is smaller than the
+      // engine's working set (one nearDupClusters call alone needs about
+      // 180), so with it the LRU evicts each class before its next use
+      // and every call pays Janino again. Static and JVM-wide: it takes
+      // effect only if set before the first query compiles anything.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     if (shufflePartitions > 0)
       b.config("spark.sql.shuffle.partitions", shufflePartitions)
     else b

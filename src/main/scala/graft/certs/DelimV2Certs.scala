@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.sources.v2.{DelimLog, DelimScanMetrics, DelimV2}
+import graft.sources.v2.{DelimLog, DelimScanMetrics}
 
 import CertSupport._
 
@@ -829,7 +829,7 @@ object DelimV2Certs {
       // compaction is content-preserving: the oracle is the same
       // per-partition rollup the stream-sink certification uses
       EventTypeSummaryOracle, stream = true) { (s, dir, out) =>
-      import graft.sources.v2.{DelimCompact, DelimV2}
+      import graft.sources.v2.DelimCompact
       val sink = s"$out/landed"
       graft.core.Scratch.rmTree(sink)
       graft.core.Scratch.rmTree(s"$out/ckpt")
@@ -882,7 +882,7 @@ object DelimV2Certs {
         |       round(sum(o_totalprice), 2) AS revenue,
         |       CAST(sum(o_orderkey) AS BIGINT) AS key_sig
         |FROM orders GROUP BY 1""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.{DelimCompact, DelimV2}
+      import graft.sources.v2.DelimCompact
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       val orders = Tables.orders(s, dir)
@@ -958,7 +958,6 @@ object DelimV2Certs {
         |       round(sum(o_totalprice), 2),
         |       CAST(sum(o_orderkey) AS BIGINT)
         |FROM orders""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       val orders = Tables.orders(s, dir)
@@ -1023,7 +1022,6 @@ object DelimV2Certs {
         |       round(sum(o_totalprice), 2) AS revenue,
         |       CAST(sum(o_orderkey) AS BIGINT) AS key_sig
         |FROM orders GROUP BY 1""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       s.sql("DROP TABLE IF EXISTS graft_cat.default.opt18_t")
@@ -1071,7 +1069,6 @@ object DelimV2Certs {
         |FROM orders, b
         |WHERE o_orderkey >= mn + (mx - mn) // 20
         |  AND o_orderkey <  mn + 3 * (mx - mn) // 20""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       Tables.orders(s, dir)
@@ -1222,7 +1219,7 @@ object DelimV2Certs {
         |SELECT 'miss', count(*), round(sum(o_totalprice), 2)
         |FROM orders
         |WHERE o_orderkey * 2 = (SELECT min(o_orderkey) * 2 + 1 FROM orders)""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.{DelimBloom, DelimV2}
+      import graft.sources.v2.DelimBloom
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       // keys DOUBLED: the fixture's orderkeys are dense, and an
@@ -1335,7 +1332,6 @@ object DelimV2Certs {
         |       CAST(sum(o_orderkey) AS BIGINT) AS key_sig
         |FROM (SELECT * FROM kept UNION ALL SELECT * FROM reinserted)
         |GROUP BY 1""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       s.sql("DROP TABLE IF EXISTS graft_cat.default.mor18_t")
@@ -1445,7 +1441,6 @@ object DelimV2Certs {
         |       CAST((SELECT sum(o_orderkey) FROM orders)
         |         + (SELECT sum(o_orderkey + 100000000) FROM orders
         |            WHERE o_orderkey % 128 = 7) AS BIGINT)""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       val orders = Tables.orders(s, dir)
@@ -1542,7 +1537,7 @@ object DelimV2Certs {
         |  SELECT o_orderkey + 1000000000, o_totalprice, o_orderstatus
         |  FROM orders WHERE o_totalprice > 100000.0
         |) GROUP BY 1""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.{DelimCompact, DelimV2}
+      import graft.sources.v2.DelimCompact
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       s.sql("DROP TABLE IF EXISTS graft_cat.default.mor19_t")
@@ -1615,7 +1610,6 @@ object DelimV2Certs {
     // visible to queries.
     Cert.scratch("delim_v2_remove_orphans",
       OrderStatusSummaryOracle) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       s.sql("DROP TABLE IF EXISTS graft_cat.default.ro19_t")
@@ -1692,7 +1686,6 @@ object DelimV2Certs {
     // name gets a fresh ID — the old bytes must NOT resurrect.
     Cert.scratch("delim_v2_column_rename",
       OrderStatusSummaryOracle) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       s.sql("DROP TABLE IF EXISTS graft_cat.default.cr19_t")
@@ -1993,7 +1986,6 @@ object DelimV2Certs {
         |UNION ALL
         |SELECT 'all', count(*), CAST(sum(o_orderkey) AS BIGINT)
         |FROM orders""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       core.Tables.orders(s, dir)
@@ -2061,7 +2053,6 @@ object DelimV2Certs {
         |     WHERE o_orderstatus = 'F' AND NOT o_totalprice > 100000.0) AS f_max_key,
         |  (SELECT round(sum(o_totalprice), 2) FROM orders
         |     WHERE o_orderstatus = 'F' AND NOT o_totalprice > 100000.0) AS f_revenue""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.DelimV2
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       s.sql("DROP TABLE IF EXISTS graft_cat.default.sam20_t")

@@ -678,7 +678,7 @@ object ReconcileCerts {
         |  SELECT o_orderkey + 2000000000, o_totalprice * 2.0, 'X'
         |  FROM orders WHERE o_orderkey % 1000 = 0
         |) GROUP BY 1""".stripMargin) { (s, dir, out) =>
-      import graft.sources.v2.{DelimLog, DelimV2}
+      import graft.sources.v2.DelimLog
       val t = s"$out/t"
       graft.core.Scratch.rmTree(t)
       s.sql("DROP TABLE IF EXISTS graft_cat.default.wm19_t")

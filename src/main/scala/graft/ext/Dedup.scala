@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.CacheScope
@@ -220,8 +220,6 @@ object Dedup {
     def k: Int = numBands * rowsPerBand
   }
 
-  private val Prime = 2147483647L // 2^31 - 1, Mersenne
-
   /** k-permutation MinHash signature of a string array, as array<bigint>.
     * Universal hashing (a*h + b) mod p over 31-bit reduced xxhash64
     * values, computed by the codegen'd MinHashSig kernel over pre-hashed
@@ -292,16 +290,6 @@ object Dedup {
       CacheScope.cached(minhashBands(docs, idCol, textCol, params)),
       params.numBands, params.maxBucketSize)
 
-  /** Skew-cap drop audit for the SimHash pigeonhole join — same contract
-    * as [[minhashDropAudit]], over the block index.
-    */
-  def simhashDropAudit(
-      spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 2000): DataFrame =
-    LshJoin.dropAudit(
-      CacheScope.cached(simhashBlocks(spark, docs, idCol, textCol, maxHamming)),
-      maxHamming + 1, maxBucketSize)
-
   /** X2 end-to-end: LSH candidates verified with exact shingle Jaccard.
     * Verification joins the (small) candidate pair set back to the
     * shingle sets — broadcast-able when candidates fit, shuffle join
@@ -331,8 +319,9 @@ object Dedup {
     // broadcast, ship IT to the candidates (pairs never shuffle and the
     // failed ones are dropped during the broadcast-hash probe); beyond
     // broadcast size, fall back to shuffle joins on the pair ids.
-    val side = (df: DataFrame) =>
-      if (sets.count() <= params.maxBroadcastDocs) broadcast(df) else df
+    // decided once: both join sides share the one count job
+    val broadcastSets = sets.count() <= params.maxBroadcastDocs
+    val side = (df: DataFrame) => if (broadcastSets) broadcast(df) else df
     val withA = cand
       .join(side(sets.select(col("id").as("id_a"), col("s").as("s_a"))), Seq("id_a"))
     val bSets = sets.select(col("id").as("rid"), col("s").as("s_b"))
@@ -632,7 +621,7 @@ object Dedup {
     // rounds on a 4k-node graph). Sized from the EDGE count (known for
     // free from the materialized p; the hop join's shuffle volume is
     // edge-sized — 2·nEdges rows — so edges, not nodes, are the right
-    // unit). The loop runs on a CLONED session carrying the reduced
+    // unit). The loop runs on a separate session carrying the reduced
     // setting — mutating the shared session conf would shrink every
     // concurrent query's shuffles for the duration of the loop. The
     // final (lazy) expansion join runs on the caller's session at full
@@ -641,8 +630,7 @@ object Dedup {
       spark.conf.get("spark.sql.shuffle.partitions").toLong)
       .getOrElse(spark.sparkContext.defaultParallelism.toLong)
     val nParts = math.max(1L, math.min(sessParts, 2L * nEdges / 500000L + 1L))
-    val loop = spark.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", nParts.toString)
+    val loop = loopSession(spark, nParts)
     // one Row-conversion pass moves a frame into the loop session; the
     // result is immediately localCheckpoint'd, so the cost is paid once
     def inLoop(df: DataFrame): DataFrame =
@@ -706,25 +694,32 @@ object Dedup {
     var iters = 0
     var converged = false
     while (!converged && iters < maxIters) {
-      // TWO hop+jump steps per materialization: the checkpoint and the
-      // convergence probe are the expensive fixed costs per round, so
-      // batching steps halves them; labels only ever decrease, so
-      // `label < orig` detects a change anywhere in the batch, and the
-      // half-step past fixpoint is a no-op. (Round-22 measured FOUR
-      // steps per materialization — one fewer round (3→2) on the
-      // certification graph but a SLOWER wall (5.1 s vs 3.9 s warm):
-      // the per-step plan execution, not the checkpoint/probe, is the
-      // per-round cost at fixture scale, so deeper batches lose.)
+      // TWO hop+jump steps per materialization: the checkpoint is the
+      // expensive fixed cost per round, so batching steps halves it;
+      // labels only ever decrease, so `label < orig` detects a change
+      // anywhere in the batch, and the half-step past fixpoint is a
+      // no-op. (Round-22 measured FOUR steps per materialization — one
+      // fewer round (3→2) on the certification graph but a SLOWER wall
+      // (5.1 s vs 3.9 s warm): the per-step plan execution, not the
+      // checkpoint, is the per-round cost at fixture scale, so deeper
+      // batches lose.)
+      //
+      // The change count is observed by the checkpoint's own job. A
+      // separate `limit(1)` probe would cost two more jobs per round and
+      // compile a fresh class each time (the limit counter's name comes
+      // from a JVM-global sequence, so no codegen cache can hit it).
+      val changed = new Observation("cc_changed")
       val next = step(step(labels.withColumn("orig", col("label"))))
-        .select(col("id"), col("label"), (col("label") < col("orig")).as("chg"))
+        .observe(changed, count_if(col("label") < col("orig")).as("n"))
+        .select(col("id"), col("label"))
         .localCheckpoint(true)
-      converged = next.filter(col("chg")).limit(1).count() == 0
+      converged = changed.get("n") == 0L
       // `next` is materialized: the round that produced the previous
       // label checkpoint is fully consumed — release those blocks now,
       // not at GC time
       prevCkpt.foreach(_.unpersist(blocking = false))
       prevCkpt = Some(next)
-      labels = next.select("id", "label")
+      labels = next
       iters += 1
     }
     withSelf.unpersist(blocking = false)
@@ -736,6 +731,33 @@ object Dedup {
       .select(col("id"), coalesce(col("label"), col("id")).as("cluster_rep")),
       CcStats(iters, converged, nEdges, nActive))
   }
+
+  /** The CC loop's sessions, one per (SparkContext, shuffle width),
+    * each dropped when its SparkContext ends. A session per call would
+    * cost a recompile of the loop's generated code on every call:
+    * Spark's compiled-class cache is keyed by the class loader, and each
+    * new session gets its own loader on the executors. A loop session
+    * carries nothing but its shuffle width, so concurrent calls of the
+    * same width share it safely.
+    */
+  private val loopSessions =
+    new java.util.concurrent.ConcurrentHashMap[
+      org.apache.spark.SparkContext,
+      java.util.concurrent.ConcurrentHashMap[Long, SparkSession]]()
+
+  private[ext] def loopSession(spark: SparkSession, nParts: Long): SparkSession =
+    loopSessions.computeIfAbsent(spark.sparkContext, { sc =>
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          loopSessions.remove(sc)
+      })
+      new java.util.concurrent.ConcurrentHashMap[Long, SparkSession]()
+    }).computeIfAbsent(nParts, { _ =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", nParts.toString)
+      s
+    })
 
   /** Unsigned lexicographic order on UTF-8 bytes — matches Spark's
     * UTF8String binary comparison (code-point order), which the

@@ -479,7 +479,7 @@ object SimSearch {
           case e: java.util.concurrent.ExecutionException =>
             failures += e.getCause
             fs.foreach(_.cancel(false))
-          case e: java.util.concurrent.CancellationException => ()
+          case _: java.util.concurrent.CancellationException => ()
         }
       }
       val errs = failures.result()

@@ -154,12 +154,6 @@ object GraftFunctions {
     call_function("graft_simhash64", tokenHashes)
   }
 
-  /** Intersection size of two sorted distinct string arrays. */
-  def sortedIntersectCount(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_sorted_intersect_count", a, b)
-  }
-
   /** Double-precision dot product over float/double arrays. */
   def dot(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)

@@ -135,8 +135,8 @@ case class AsOfRewriteRule(session: SparkSession)
   }
 
   private def rewrite(p: Project): Option[LogicalPlan] = p.child match {
-    case j @ Join(l,
-        agg @ Aggregate(gExprs, aExprs,
+    case Join(l,
+        Aggregate(gExprs, aExprs,
           Join(domAgg: Aggregate, r, Inner, Some(theta), _), _),
         LeftOuter, Some(cond), _) =>
 

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.DataType
 
 /** Per-file BLOOM SIDECARS: equality skipping for columns the layout
   * does NOT cluster. Min/max stats prune range queries on sorted or

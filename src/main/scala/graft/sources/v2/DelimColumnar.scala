@@ -97,12 +97,6 @@ private[v2] class DelimColumnarReader(
   private val filterIdx: Array[Int] = filters.flatMap(_.references).distinct.map(idxOf)
   private val maxIdx: Int = (outputIdx ++ filterIdx)
     .map(filePos).foldLeft(-1)(math.max)
-  private val schemaIdxAt: Array[Int] = {
-    val m = Array.fill(math.max(nFilePos, 1))(-1)
-    var i = 0
-    while (i < filePos.length) { if (filePos(i) >= 0) m(filePos(i)) = i; i += 1 }
-    m
-  }
 
   // split constants at their schema slots (external representation),
   // for filter evaluation

@@ -190,7 +190,7 @@ private[graft] object DelimLog {
 
   private def readManifestFileOnce(
       fs: FileSystem, mf: HPath,
-      prune: Seq[(String, Seq[String])] = Nil): Option[DelimManifest] = {
+      prune: Seq[(String, Seq[String])]): Option[DelimManifest] = {
     if (!fs.exists(mf)) None
     else {
       val in = fs.open(mf)

@@ -3,8 +3,6 @@ package graft.sources.v2
 import java.time.LocalDate
 import java.util.OptionalLong
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -968,7 +966,7 @@ class DelimScan(
   private def makeSplits(
       kept: Seq[DelimV2.ListedFile], splitBytes: Long,
       tombs: Seq[(String, Seq[(Long, String)])],
-      blooms: Seq[String] = Nil): Array[InputPartition] = {
+      blooms: Seq[String]): Array[InputPartition] = {
     val tombFilters: Seq[(String, Long, Filter)] =
       if (tombs.isEmpty || kept.isEmpty) Nil
       else tombs.flatMap { case (r, ts) =>

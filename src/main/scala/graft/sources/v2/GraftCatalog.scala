@@ -428,19 +428,58 @@ private[v2] class DelimPartitionedTable(
     }.mkString("/")
   }
 
+  /** Marks a directory ADD PARTITION made: a partition with no data
+    * file yet is known by it, not by its directory (see
+    * [[partitionDirs]]). Hidden (`_`) from every listing and sweep.
+    */
+  private val AddedMarker = "_graft_partition"
+
+  /** Root-relative `k=v/...` directories of the table's partitions.
+    * With a manifest, a partition is a directory the current manifest
+    * lists a file under, or one ADD PARTITION marked: a directory that
+    * only holds files a retained snapshot lists — what DROP PARTITION
+    * leaves inside a retention window — is no partition. Without a
+    * manifest the directory tree is the table.
+    */
+  private def partitionDirs(): Seq[String] = {
+    val manifest = DelimLog.readManifest(fs, root)
+    def walk(rel: String, depth: Int): Seq[String] =
+      if (depth == partCols.length) {
+        if (manifest.isEmpty || fs.exists(new HPath(new HPath(root, rel), AddedMarker)))
+          Seq(rel)
+        else Nil
+      } else Option(fs.listStatus(if (rel.isEmpty) root else new HPath(root, rel)))
+        .getOrElse(Array.empty).toSeq
+        .filter(_.isDirectory)
+        .flatMap { st =>
+          val n = st.getPath.getName
+          DelimV2.partSegment(n) match {
+            case Some((k, _)) if k == partCols(depth) =>
+              walk(if (rel.isEmpty) n else s"$rel/$n", depth + 1)
+            case _ => Nil
+          }
+        }
+    val listed = manifest.toSeq.flatMap(_.files.map(e => DelimLog.dirOf(e.rel)))
+      .filter(d => DelimV2.partValues(d).map(_._1) == partCols.toSeq)
+    (walk("", 0) ++ listed).distinct
+  }
+
   override def createPartition(
       ident: InternalRow, properties: java.util.Map[String, String]): Unit = {
-    val d = new HPath(root, subdirOf(ident))
-    if (fs.exists(d))
+    val sub = subdirOf(ident)
+    if (partitionDirs().contains(sub))
       throw new org.apache.spark.sql.catalyst.analysis
         .PartitionsAlreadyExistException(name(), ident, partitionSchema())
+    val d = new HPath(root, sub)
     fs.mkdirs(d)
+    fs.create(new HPath(d, AddedMarker), true).close()
   }
 
   override def dropPartition(ident: InternalRow): Boolean = {
     val sub = subdirOf(ident)
     val d = new HPath(root, sub)
-    if (!fs.exists(d)) return false
+    if (!partitionDirs().contains(sub)) return false
+    fs.delete(new HPath(d, AddedMarker), false)
     // manifest swap FIRST: readers stop seeing the partition's rows
     // atomically; the delete that follows only reclaims bytes no
     // RETAINED snapshot references anymore. The drop commits a new
@@ -469,28 +508,19 @@ private[v2] class DelimPartitionedTable(
       ident: InternalRow): java.util.Map[String, String] =
     java.util.Collections.emptyMap()
 
-  /** Partition identifiers from the DIRECTORY tree (in path order),
-    * optionally prefix-filtered by `names`/`ident` (the
+  /** Partition identifiers of [[partitionDirs]], optionally
+    * prefix-filtered by `names`/`ident` (the
     * `SHOW PARTITIONS ... PARTITION(k=v)` form).
     */
   override def listPartitionIdentifiers(
       names: Array[String], ident: InternalRow): Array[InternalRow] = {
     val ps = partitionSchema()
     val types = ps.fields.map(_.dataType)
-    def walk(dir: HPath, depth: Int, acc: Array[Any]): Seq[Array[Any]] =
-      if (depth == partCols.length) Seq(acc)
-      else Option(fs.listStatus(dir)).getOrElse(Array.empty).toSeq
-        .filter(_.isDirectory)
-        .flatMap { st =>
-          DelimV2.partSegment(st.getPath.getName) match {
-            case Some((k, raw)) if k == partCols(depth) =>
-              val ext = DelimV2.parseExternal(raw, types(depth))
-              walk(st.getPath, depth + 1,
-                acc :+ DelimV2.toInternal(ext, types(depth)))
-            case _ => Nil
-          }
-        }
-    val rows = walk(root, 0, Array.empty).map(vs => new GenericInternalRow(vs))
+    val rows = partitionDirs().map { d =>
+      new GenericInternalRow(DelimV2.partValues(d).zip(types).map { case ((_, raw), t) =>
+        DelimV2.toInternal(DelimV2.parseExternal(raw, t), t)
+      }.toArray[Any])
+    }
     val nameIdx = names.map(n => partCols.indexOf(n))
     rows.filter { r =>
       nameIdx.zipWithIndex.forall { case (pi, fi) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the formatted physical plan of every SparkEntry query plus a
   * quick scan for the plan properties that matter at scale:
   * parquet pushdown (PushedFilters / ReadSchema), broadcast joins,

@@ -21,7 +21,6 @@ import org.apache.spark.sql.functions._
   *    stats-driven join decision (reorder, broadcast) consumes.
   */
 class AdaptivePlannerSpec extends SparkFunSuite {
-  import spark.implicits._
 
   private def withConf[A](pairs: (String, String)*)(body: => A): A = {
     val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }

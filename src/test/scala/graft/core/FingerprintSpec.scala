@@ -1,7 +1,6 @@
 package graft.core
 
 import graft.SparkFunSuite
-import org.apache.spark.sql.functions.col
 
 class FingerprintSpec extends SparkFunSuite {
   import spark.implicits._

@@ -3,7 +3,6 @@ package graft.core
 import java.sql.Timestamp
 
 import graft.SparkFunSuite
-import org.apache.spark.sql.functions._
 
 class RangeJoinSpec extends SparkFunSuite {
   import spark.implicits._

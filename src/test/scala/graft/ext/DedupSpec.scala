@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.SparkFunSuite
 import graft.core.Tables
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkFunSuite {
@@ -159,6 +160,58 @@ class DedupSpec extends SparkFunSuite {
       // representative is always the component minimum: rep <= every member
       assert(uf.forall { case (id, rep) => rep <= id })
     }
+  }
+
+  test("connectedComponentsWithStats: a repeated distributed call compiles no new class") {
+    val nodes = (0L until 200L).toDF("id")
+    // a 150-edge chain: several rounds of the loop
+    val pairs = (0L until 150L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    def run() = {
+      val (labels, stats) =
+        Dedup.connectedComponentsWithStats(nodes, pairs, maxDriverEdges = 0)
+      (labels.as[(Long, Long)].collect().toMap, stats)
+    }
+    val first = run()
+    assert(first._2.iters > 1 && first._2.converged)
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0 == 0)
+    assert(second == first)
+  }
+
+  test("connectedComponentsWithStats: concurrent calls of different loop widths keep their own results") {
+    // 250k disjoint pairs size the loop at 2 shuffle partitions, the
+    // 40-edge chain at 1 (the session default here is 4)
+    val bigNodes = spark.range(500000L).toDF("id")
+    val bigPairs = spark.range(250000L)
+      .select((col("id") * 2 + 1).as("id_a"), (col("id") * 2).as("id_b"))
+    val smallNodes = (0L until 50L).toDF("id")
+    val smallPairs = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def small() = {
+      val (l, st) = Dedup.connectedComponentsWithStats(smallNodes, smallPairs, maxDriverEdges = 0)
+      (l.as[(Long, Long)].collect().toMap, st)
+    }
+    def big() = {
+      val (l, st) = Dedup.connectedComponentsWithStats(bigNodes, bigPairs, maxDriverEdges = 0)
+      // every pair's representative is its even member
+      (l.filter(col("cluster_rep") =!= col("id") - col("id") % 2).count(), st)
+    }
+    val smallAlone = small()
+    assert(smallAlone._1 == (0L until 50L).map(i => i -> (if (i <= 40L) 0L else i)).toMap)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val fb = Future(big())
+    val fs = Future((1 to 3).map(_ => small()))
+    val (bigWrong, bigStats) = Await.result(fb, 5.minutes)
+    assert(bigWrong == 0L)
+    assert(bigStats == Dedup.CcStats(2, converged = true, 250000L, 500000L))
+    Await.result(fs, 5.minutes).foreach(r => assert(r == smallAlone))
+    // one loop session per width, reused, and the caller's width untouched
+    assert(Dedup.loopSession(spark, 2) eq Dedup.loopSession(spark, 2))
+    assert(Dedup.loopSession(spark, 1) ne Dedup.loopSession(spark, 2))
+    assert(Dedup.loopSession(spark, 2).conf.get("spark.sql.shuffle.partitions") == "2")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
   test("connectedComponents: both strategies agree on the fixture pair graph") {

@@ -2,7 +2,6 @@ package graft.ext
 
 import graft.SparkFunSuite
 import graft.core.Tables
-import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkFunSuite {
   import spark.implicits._
@@ -106,7 +105,7 @@ class MultimodalSpec extends SparkFunSuite {
   }
 
   test("parsePng verifies big-endian fields, chunk CRCs, and structure") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     val ok = spark.range(1).select(
         Multimodal.pngBytes(lit("hello png"), lit(0L)).as("b"))
       .head.getAs[Array[Byte]](0)

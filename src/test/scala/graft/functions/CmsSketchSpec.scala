@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
 class CmsSketchSpec extends graft.SparkFunSuite {
-  import spark.implicits._
 
   // 0..999 keyed id % 97: key k occurs 11 times for k < 30 (ids 970..999 wrap to keys 0..29), else 10
   private def keys = spark.range(0, 1000).select((col("id") % 97).as("k"))

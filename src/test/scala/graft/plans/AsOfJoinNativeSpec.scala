@@ -289,7 +289,7 @@ class AsOfJoinNativeSpec extends SparkFunSuite {
     }
     val left = mk(300, "l").toDF("k", "t", "id")
     val right = mk(200, "r")
-      .map { case (k, t, id) => (k, t, t) }.toDF("rk", "rt", "pay")
+      .map { case (k, t, _) => (k, t, t) }.toDF("rk", "rt", "pay")
       // pre-reduce ties: payload must be deterministic under equal (k, t)
       .groupBy("rk", "rt").agg(max("pay").as("pay"))
     for (fwd <- Seq(false, true)) {

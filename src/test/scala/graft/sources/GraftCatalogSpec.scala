@@ -4,13 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkFunSuite
 import graft.sources.v2.{DelimLog, DelimScanMetrics}
 
 /** Certifies the GraftCatalog partition-DDL front door (the reference's
-  * S1 surface): SHOW PARTITIONS lists the k=v directory tree,
+  * S1 surface): SHOW PARTITIONS lists the manifest's k=v partitions
+  * plus the ones ADD PARTITION made,
   * ALTER TABLE ADD/DROP PARTITION are reflected in both the file tree
   * and subsequent pruned scans, and DROP swaps the snapshot manifest
   * before deleting bytes.
@@ -161,5 +160,28 @@ class GraftCatalogSpec extends SparkFunSuite {
     // its data file AND the sidecar that lets that read skip both stay
     assert(inA() == before, s"retained partition files changed: ${inA()}")
     assert(spark.table("graft_cat.default.dropbloom_t").count() === 1)
+  }
+
+  test("DROP PARTITION inside a retention window unlists the partition") {
+    val dir = tempDir("graftcat-dropretained")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "pc")
+      .write.format("graft-delim").option("partitionBy", "pc")
+      .option("retainVersions", "3").mode("overwrite").save(s"$dir/t")
+    val tbl = "graft_cat.default.dropretained_t"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"""CREATE TABLE $tbl (id BIGINT, pc STRING)
+      USING `graft-delim` PARTITIONED BY (pc) LOCATION '$dir/t'""")
+    spark.sql(s"ALTER TABLE $tbl DROP PARTITION (pc='a')")
+    // the retained generation still lists pc=a's file, so its directory
+    // stays; the partition does not
+    assert(Files.isDirectory(Paths.get(s"$dir/t/pc=a")))
+    assert(parts(tbl) === Seq("pc=b"))
+    intercept[Exception](spark.sql(s"ALTER TABLE $tbl DROP PARTITION (pc='a')"))
+    // ADD over the leftover directory makes an empty partition again
+    spark.sql(s"ALTER TABLE $tbl ADD PARTITION (pc='a')")
+    assert(parts(tbl) === Seq("pc=a", "pc=b"))
+    assert(spark.table(tbl).count() === 1)
+    spark.sql(s"ALTER TABLE $tbl DROP PARTITION (pc='a')")
+    assert(parts(tbl) === Seq("pc=b"))
   }
 }

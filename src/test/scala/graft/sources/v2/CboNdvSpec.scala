@@ -12,7 +12,6 @@ import graft.SparkFunSuite
   * first.
   */
 class CboNdvSpec extends SparkFunSuite {
-  import spark.implicits._
 
   private def mk(t: String, df: org.apache.spark.sql.DataFrame): Unit =
     df.coalesce(1).write.format("graft-delim").mode("overwrite").save(t)

@@ -196,7 +196,7 @@ class Round20AdviceSpec extends SparkFunSuite {
     val idToNames = m.schemas.values.flatMap(_.struct.fields)
       .flatMap(f => DelimV2.fieldId(f).map(_ -> f.name)).toSeq
       .groupBy(_._1).map { case (i, ns) => i -> ns.map(_._2).distinct }
-    val collided = idToNames.filter { case (i, ns) =>
+    val collided = idToNames.filter { case (_, ns) =>
       // a rename legitimately moves one column's ID to its new name;
       // a COLLISION is two names alive in the SAME generation family
       // (here: 'a' vs 'q'/'r')

@@ -71,7 +71,6 @@ class EventWindowsSpec extends SparkFunSuite {
   }
 
   test("streaming sessionization runs with watermark state cleanup") {
-    val ev = Tables.events(spark, sf001)
     val stream = EventWindows.readEventStream(spark, s"$sf001/events.parquet")
     val agg = EventWindows.sessionsStream(stream, "30 minutes", "10 minutes")
     val q = agg.writeStream.format("memory").queryName("sessions_out")

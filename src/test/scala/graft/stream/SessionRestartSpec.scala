@@ -2,8 +2,6 @@ package graft.stream
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkFunSuite
 
 /** Pins update-mode checkpoint recovery for the transformWithState
