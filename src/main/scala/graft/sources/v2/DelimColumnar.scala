@@ -10,11 +10,12 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** VECTORIZED read path: parses delimited lines straight from the
-  * framing reader's BYTE SPANS into Spark `ColumnarBatch`es — engaging
-  * the columnar scan pipeline (`ColumnarToRow` hands whole batches to
-  * whole-stage codegen) and deleting the row path's two per-row
-  * allocations (the line `String` and the `GenericInternalRow`):
+/** The one parser of graft-delim rows: every batch scan, stream
+  * micro-batch, pushed TopN and compaction retire rewrite reads
+  * through it. It parses delimited lines straight from the framing
+  * reader's BYTE SPANS into Spark `ColumnarBatch`es — engaging the
+  * columnar scan pipeline (`ColumnarToRow` hands whole batches to
+  * whole-stage codegen) with no per-row line `String` or row object:
   *
   *  - string columns copy UTF-8 bytes DIRECTLY into the vector — no
   *    UTF-16 decode/re-encode round trip at all (the dominant cost of
@@ -28,11 +29,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - pushed row filters evaluate on a scratch row of ONLY the filter
   *    columns before any output vector is touched.
   *
-  * Semantics are bit-identical to DelimPartitionReader (same framing
-  * reader, same null/empty/missing rules, same RFC-4180 quote walk,
-  * same -0.0 normalization) — certified by the differential spec and
-  * the full delim_v2_* oracle surface running through this path by
-  * default (`columnar=false` restores the row reader).
+  * Field semantics are those of decoding each line as UTF-8 and
+  * splitting it on the delimiter character: a non-ASCII delimiter is
+  * matched as its UTF-8 byte sequence (UTF-8 is self-synchronizing, so
+  * a byte match is a character match), malformed UTF-8 in a string
+  * field reads as U+FFFD, an unquoted `\N` is null, a malformed typed
+  * field is null, and -0.0 reads as 0.0 — certified by
+  * DelimColumnarSpec's exact-answer cases and the delim_v2_* oracle
+  * surface.
   */
 private[v2] class DelimColumnarReader(
     in: FSDataInputStream,
@@ -45,11 +49,9 @@ private[v2] class DelimColumnarReader(
     partCols: Array[String],
     quote: Int,
     multiLine: Boolean,
-    batchSize: Int,
     /** Pushed `ORDER BY ... LIMIT k`: the split drains through a
-      * k-bounded heap (same contract as the row reader's nextTopN) but
-      * parses VECTORIZED — the byte-span walk replaces the per-line
-      * String materialization on ranked exports. Empty = plain scan. */
+      * k-bounded heap and emits one batch of its survivors (see
+      * nextTopN). Empty = plain scan. */
     topN: Array[DelimSortKey] = Array.empty)
     extends PartitionReader[ColumnarBatch] {
 
@@ -57,7 +59,9 @@ private[v2] class DelimColumnarReader(
     new LineSplitReader(in, split.start, split.start + split.length, split.fileLen,
       if (multiLine) quote else -1)
 
-  // ---- field universe + file-position mapping (mirrors the row reader)
+  // ---- field universe + file-position mapping: the data schema plus
+  // the `_file` metadata column (a split constant, like partition
+  // values) unless a data column shadows it
   private val allFields: Array[StructField] =
     if (fullSchema.fieldNames.contains(DelimV2.FileMetaCol)) fullSchema.fields
     else fullSchema.fields :+
@@ -65,6 +69,14 @@ private[v2] class DelimColumnarReader(
   private val idxOf: Map[String, Int] = allFields.map(_.name).zipWithIndex.toMap
   private val types: Array[DataType] = allFields.map(_.dataType)
   private val partIdxSet: Set[Int] = partCols.map(idxOf).toSet
+  // schema index → FILE field position: positional in schema order, or
+  // BY NAME through the file generation's recorded layout
+  // (split.fileFields), where a column the generation never wrote has
+  // no position (-1) and reads as null. By-name mapping engages only
+  // when the read schema shares a name with that layout — a reader
+  // that renames every column keeps the positional contract instead of
+  // reading all-null. Partition fields and `_file` are -1: split
+  // constants.
   private val byName: Boolean = split.fileFields != null &&
     fullSchema.fieldNames.zipWithIndex.exists { case (n, i) =>
       !partIdxSet.contains(i) && split.fileFields.contains(n)
@@ -120,9 +132,9 @@ private[v2] class DelimColumnarReader(
   // for file fields
   private val vectors: Array[ColumnVector] = outputIdx.map { si =>
     val dt = types(si)
-    if (filePos(si) >= 0) new OnHeapColumnVector(batchSize, dt)
+    if (filePos(si) >= 0) new OnHeapColumnVector(DelimColumnarReader.BatchSize, dt)
     else {
-      val v = new ConstantColumnVector(batchSize, dt)
+      val v = new ConstantColumnVector(DelimColumnarReader.BatchSize, dt)
       DelimV2.toInternal(constExt(si), dt) match {
         case null => v.setNull()
         case u: UTF8String => v.setUtf8String(u)
@@ -156,11 +168,27 @@ private[v2] class DelimColumnarReader(
   // unescape buffer for quoted fields containing "" (rare)
   private var unesc = new Array[Byte](64)
 
-  private val delimByte: Byte = {
-    require(delim < 128, "graft-delim: columnar path requires an ASCII delimiter")
-    delim.toByte
-  }
+  // the delimiter as UTF-8 bytes: walkFields scans for the lead byte
+  // and verifies the tail (empty for an ASCII delimiter)
+  private val delimBytes: Array[Byte] =
+    String.valueOf(delim).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val delimLead: Byte = delimBytes(0)
+  private val delimLen: Int = delimBytes.length
   private val quoteByte: Byte = if (quote >= 0) quote.toByte else -1
+
+  /** Offset of the first delimiter in `buf(from until n)`, or `n`. */
+  private def findDelim(buf: Array[Byte], from: Int, n: Int): Int = {
+    var i = from
+    while (i < n) {
+      if (buf(i) == delimLead) {
+        var k = 1
+        while (k < delimLen && i + k < n && buf(i + k) == delimBytes(k)) k += 1
+        if (k == delimLen) return i
+      }
+      i += 1
+    }
+    n
+  }
 
   /** Walk one line's fields (quote-aware), recording spans for file
     * positions up to maxIdx; missing trailing fields get start -1.
@@ -183,15 +211,15 @@ private[v2] class DelimColumnarReader(
         if (close < 0) close = n
         fStart(fp) = fieldStart + 1; fEnd(fp) = close
         fEsc(fp) = escd; fQuoted(fp) = true
-        var d = close + 1
-        while (d < n && buf(d) != delimByte) d += 1
-        fieldStart = if (d < n) d + 1 else n + 1
+        // text between the closing quote and the next delimiter is
+        // ignored (the lenient stance of Spark's CSV parser)
+        val d = findDelim(buf, close + 1, n)
+        fieldStart = if (d < n) d + delimLen else n + 1
       } else {
-        var i = fieldStart
-        while (i < n && buf(i) != delimByte) i += 1
-        fStart(fp) = fieldStart; fEnd(fp) = if (i < n) i else n
+        val i = findDelim(buf, fieldStart, n)
+        fStart(fp) = fieldStart; fEnd(fp) = i
         fEsc(fp) = false; fQuoted(fp) = false
-        fieldStart = if (i < n) i + 1 else n + 1
+        fieldStart = if (i < n) i + delimLen else n + 1
       }
       fp += 1
     }
@@ -386,8 +414,8 @@ private[v2] class DelimColumnarReader(
     (day.toLong * 86400L + hh * 3600L + mm * 60L + ss) * 1000000L + frac
   }
 
-  /** Write one parsed field into its vector (null on malformed, the
-    * row path's permissive contract).
+  /** Write one parsed field into its vector (null on malformed: the
+    * permissive contract).
     */
   private def writeField(v: WritableColumnVector, rowId: Int, si: Int, fp: Int,
       buf: Array[Byte]): Unit = {
@@ -395,19 +423,17 @@ private[v2] class DelimColumnarReader(
     var s = fStart(fp)
     var e = fEnd(fp)
     var b = buf
-    // unquoted \N = the writer's null token (Hive convention; the row
-    // path decodes it identically)
+    // unquoted \N = the writer's null token (Hive convention)
     if (!fQuoted(fp) && e - s == 2 && buf(s) == '\\' && buf(s + 1) == 'N') {
       v.putNull(rowId); return
     }
     if (fEsc(fp)) { val n = unescape(buf, s, e); b = unesc; s = 0; e = n }
     types(si) match {
       case StringType =>
-        // bit-identical contract with the row path: the row reader
-        // round-trips bytes through java.lang.String, whose UTF-8
-        // decoder replaces malformed sequences with U+FFFD — copying
-        // raw invalid bytes into the vector would make filter/group
-        // results diverge between columnar=true and columnar=false on
+        // malformed UTF-8 reads as java.lang.String's decoder reads
+        // it (U+FFFD per bad sequence), the value filters compare
+        // against (externalOf) — copying raw invalid bytes into the
+        // vector would make filter and group results disagree on
         // non-UTF8 files. Valid spans (the overwhelming case — ASCII
         // short-circuits per byte) still copy directly.
         if (validUtf8(b, s, e)) v.putByteArray(rowId, b, s, e - s)
@@ -437,7 +463,7 @@ private[v2] class DelimColumnarReader(
             try {
               val d = java.lang.Double.parseDouble(
                 new String(b, ts, te - ts, java.nio.charset.StandardCharsets.US_ASCII))
-              v.putDouble(rowId, if (d == 0.0d) 0.0d else d) // -0.0 == 0.0 (row-path rule)
+              v.putDouble(rowId, if (d == 0.0d) 0.0d else d) // -0.0 == 0.0
             } catch { case _: NumberFormatException => v.putNull(rowId) }
           }
         }
@@ -474,8 +500,8 @@ private[v2] class DelimColumnarReader(
     }
   }
 
-  /** External value of a field for filter evaluation (same rules as
-    * the row path's parseLine + parseExternal composition).
+  /** External value of a field for filter evaluation: the field text
+    * through DelimV2.parseExternal, with writeField's null token.
     */
   private def externalOf(si: Int, fp: Int, buf: Array[Byte]): Any = {
     if (fStart(fp) < 0) return null
@@ -503,7 +529,7 @@ private[v2] class DelimColumnarReader(
     writable.foreach(_.reset())
     var n = 0
     var more = true
-    while (n < batchSize && more) {
+    while (n < DelimColumnarReader.BatchSize && more) {
       if (cap >= 0 && emitted >= cap) more = false
       else if (!lines.nextLineSpan()) more = false
       else {
@@ -700,7 +726,8 @@ private[v2] class DelimColumnarReader(
           if (heap.size < k) heap.add(buildRow(buf))
           else {
             // key-only parse + reject against the worst (strict-better
-            // enters, ties rejected — the row reader's rule)
+            // enters, ties rejected: Spark's final TakeOrderedAndProject
+            // re-sorts the survivors, so any k-best set will do)
             val worst = heap.peek()
             var better = false
             var decided = false
@@ -775,6 +802,10 @@ private[v2] class DelimColumnarReader(
 }
 
 private[v2] object DelimColumnarReader {
+  /** Rows per output batch (Spark's own vectorized readers default to
+    * 4096). */
+  val BatchSize = 4096
+
   /** Exact powers of ten (10^k is exactly representable for k ≤ 22). */
   val Pow10: Array[Double] = (0 to 22).map(k => math.pow(10, k)).toArray
 }

@@ -1,6 +1,5 @@
 package graft.sources.v2
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 
@@ -182,10 +181,8 @@ object DelimCompact {
       .parallelize(jobs, math.min(jobs.size,
         math.max(1, spark.sparkContext.defaultParallelism)))
       .map { case (sub, gen, rels, i) =>
-        val c = new Configuration(true)
-        confMap.foreach { case (k, v) => c.set(k, v) }
         val root = new HPath(targetStr)
-        val fsx = root.getFileSystem(c)
+        val fsx = root.getFileSystem(DelimV2.executorConf(confMap))
         val outName = f"compact-$newGen-$i%05d.txt"
         val outPath = new HPath(new HPath(root, stagingName), outName)
         val out = DelimLog.fastCreate(fsx, outPath, overwrite = true)
@@ -254,7 +251,7 @@ object DelimCompact {
         (sub, gen, rels, outName, total, i, mergedSide)
       }.collect() // bounded: one row of names/lengths per group
     // parse-path rewrite of tombstoned bins: one task per bin, each
-    // draining its members through the certified reader (tombstone
+    // draining its members through the scans' columnar reader (tombstone
     // complements applied per member generation, schema evolution
     // mapped per member layout) into the certified writer (stats and
     // bloom sidecars recorded like any write). Only metadata returns.
@@ -290,10 +287,8 @@ object DelimCompact {
           .parallelize(jobs, math.min(jobs.size,
             math.max(1, spark.sparkContext.defaultParallelism)))
           .map { case (partVals, members, i) =>
-            val c = new Configuration(true)
-            confMap.foreach { case (k, v) => c.set(k, v) }
             val root = new HPath(targetStr)
-            val fsx = root.getFileSystem(c)
+            val fsx = root.getFileSystem(DelimV2.executorConf(confMap))
             val writer = new DelimDataWriter(
               s"$targetStr/$stagingName", f"retire-$newGen-$i%05d",
               struct, dChar, confMap, pCols, quote = qInt,
@@ -302,11 +297,14 @@ object DelimCompact {
               val p = new HPath(root, rel)
               val split = DelimSplit(p.toString, 0L, len, len, partVals,
                 null, fields, Array.empty, Array.empty)
-              val rdr = new DelimPartitionReader(fsx.open(p), split, struct,
-                struct, tombs, dChar, -1, pCols.toArray,
-                Array.empty, qInt, multi)
-              try while (rdr.next()) writer.write(rdr.get())
-              finally rdr.close()
+              val rdr = new DelimColumnarReader(fsx.open(p), split, struct,
+                struct, tombs, dChar, -1, pCols.toArray, qInt, multi)
+              // the writer copies every value out (text and stats), so
+              // the batch's reused row view is safe to hand it
+              try while (rdr.next()) {
+                val rows = rdr.get().rowIterator()
+                while (rows.hasNext) writer.write(rows.next())
+              } finally rdr.close()
             }
             writer.commit().asInstanceOf[DelimCommit]
           }.collect().toSeq

@@ -777,15 +777,13 @@ object Stress {
       graft.core.Scratch.rmTree(root)
     }
 
-    // 13. VECTORIZED scan vs the row reader vs Spark's CSV source
-    // (round-16 verdict ask #7): one pipe-delimited lineitem fixture
-    // (amp × sf rows, 11 typed columns), read three ways over the SAME
-    // files — graft-delim columnar (the default), graft-delim
-    // columnar=false (the round-16 row path), and Spark CSV with the
-    // same schema. Three query shapes: the WIDE scan (every column
-    // consumed by an aggregate), a NARROW 2-column projection, and a
-    // SELECTIVE pushed filter. Checksums must agree across all nine
-    // cells — a fast wrong reader is not a reader.
+    // 13. VECTORIZED graft-delim scan vs Spark's CSV source: one
+    // pipe-delimited lineitem fixture (amp × sf rows, 11 typed
+    // columns), read both ways over the SAME files with the same
+    // schema. Three query shapes: the WIDE scan (every column consumed
+    // by an aggregate), a NARROW 2-column projection, and a SELECTIVE
+    // pushed filter. Checksums must agree across both readers — a fast
+    // wrong reader is not a reader.
     for (amp <- amps if sections("columnarscan")) {
       val p = s"/tmp/graft_stress_colscan_$sfKey/a$amp"
       graft.core.Scratch.rmTree(p)
@@ -808,12 +806,10 @@ object Stress {
       def reader(mode: String) = mode match {
         case "csv" => spark.read.format("csv")
           .option("sep", "|").option("quote", "\"").schema(schema).load(p)
-        case m => spark.read.format("graft-delim")
-          .option("columnar", (m == "columnar").toString)
-          .schema(schema).load(p)
+        case _ => spark.read.format("graft-delim").schema(schema).load(p)
       }
       val checks = scala.collection.mutable.Map.empty[String, Seq[Any]]
-      for (mode <- Seq("columnar", "row", "csv")) {
+      for (mode <- Seq("delim", "csv")) {
         // FRESH DataFrame per pass: re-collecting one DataFrame object
         // reuses AQE's already-materialized shuffle stages, so only
         // the final reduce re-runs and the "scan" measures nothing
@@ -850,10 +846,11 @@ object Stress {
       graft.core.Scratch.rmTree(p)
     }
 
-    // 14. Pushed-TopN scan: VECTORIZED heap vs the row reader (round-18
-    // verdict ask #8): same lineitem fixture as §13, `ORDER BY
-    // l_extendedprice DESC LIMIT 100` + a tiebreaker so the result set
-    // is deterministic; both paths must return identical rows.
+    // 14. Pushed-TopN scan: graft-delim's per-split VECTORIZED heap vs
+    // Spark's CSV source sorting the same files: same lineitem fixture
+    // as §13, `ORDER BY l_extendedprice DESC LIMIT 100` + a tiebreaker
+    // so the result set is deterministic; both must return identical
+    // rows.
     for (amp <- amps if sections("topnscan")) {
       val p = s"/tmp/graft_stress_topn_$sfKey/a$amp"
       graft.core.Scratch.rmTree(p)
@@ -869,20 +866,20 @@ object Stress {
       val n = li0.count() * amp
       val schema = "l_orderkey BIGINT, l_partkey BIGINT, " +
         "l_quantity DOUBLE, l_extendedprice DOUBLE, l_returnflag STRING"
-      def topn(columnar: Boolean) = spark.read.format("graft-delim")
-        .option("columnar", columnar.toString)
-        .schema(schema).load(p)
+      def topn(mode: String) = (mode match {
+        case "csv" => spark.read.format("csv").option("sep", "|")
+        case _ => spark.read.format("graft-delim")
+      }).schema(schema).load(p)
         .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc)
         .limit(100)
+      val plan = topn("delim").queryExecution.executedPlan.toString
+      require(plan.contains("PushedTopN"),
+        s"TopN must stay pushed on the graft-delim scan:\n$plan")
       var expect: Seq[Seq[Any]] = null
-      for (mode <- Seq("columnar", "row")) {
-        val colMode = mode == "columnar"
-        val plan = topn(colMode).queryExecution.executedPlan.toString
-        require(plan.contains("PushedTopN"),
-          s"TopN must stay pushed on the $mode path:\n$plan")
-        topn(colMode).collect() // warm
+      for (mode <- Seq("delim", "csv")) {
+        topn(mode).collect() // warm
         run(s"topn_scan_$mode", amp, n) {
-          val r = topn(colMode).collect().map(_.toSeq).toSeq
+          val r = topn(mode).collect().map(_.toSeq).toSeq
           if (expect == null) expect = r
           else require(r == expect, s"TopN rows diverged on $mode")
           (r.size.toLong, s"mode=$mode|k=100")

@@ -648,7 +648,7 @@ class DelimV2Spec extends SparkFunSuite {
   test("COUNT(*) pushdown: counted by newline scan, exact at every split size") {
     val dir = tempDir("delimv2-count")
     // empty line + unterminated last line: the count must mirror the
-    // row reader's line ownership exactly
+    // scan's line ownership exactly
     write(s"$dir/f.txt", "a|1\n\nb|2\nc|3")
     for (splitBytes <- Seq(1, 3, 7, 100000)) {
       val df = spark.read.format("graft-delim")
@@ -887,6 +887,28 @@ class DelimV2Spec extends SparkFunSuite {
     }
     assert(err.getMessage.contains("quoting is disabled") ||
       Option(err.getCause).exists(_.getMessage.contains("quoting is disabled")))
+  }
+
+  test("a delimiter that breaks line framing is rejected, naming the value") {
+    val dir = tempDir("delimv2-baddelim")
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+    Seq((1L, "a")).toDF("id", "s")
+      .write.format("graft-delim").mode("overwrite").save(s"$dir/ok")
+    for ((d, name) <- Seq("\n" -> "U+000A", "\r" -> "U+000D", "\ud800" -> "U+D800")) {
+      val w = intercept[Exception] {
+        Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+          .write.format("graft-delim").option("delimiter", d)
+          .mode("overwrite").save(s"$dir/out")
+      }
+      assert(messages(w).contains(name), messages(w))
+      val r = intercept[Exception] {
+        spark.read.format("graft-delim").schema("id BIGINT, s STRING")
+          .option("delimiter", d).load(s"$dir/ok").collect()
+      }
+      assert(messages(r).contains(name), messages(r))
+    }
   }
 
   test("manifest snapshot: committed list is authoritative, stray files invisible") {

@@ -40,15 +40,12 @@ class Round19AdviceSpec extends SparkFunSuite {
       try scala.io.Source.fromInputStream(in).mkString finally in.close()
     }
     assert(raw.contains("\"\\N\""), s"literal \\N not quoted on disk:\n$raw")
-    for (columnar <- Seq(true, false)) {
-      val back = spark.read.format("graft-delim")
-        .schema("id BIGINT, s STRING")
-        .option("columnar", columnar.toString)
-        .load(t).orderBy("id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(back == Seq((1L, "\\N"), (2L, null), (3L, "plain")),
-        s"columnar=$columnar round trip corrupted: $back")
-    }
+    val back = spark.read.format("graft-delim")
+      .schema("id BIGINT, s STRING")
+      .load(t).orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(back == Seq((1L, "\\N"), (2L, null), (3L, "plain")),
+      s"round trip corrupted: $back")
     // with quoting disabled the value is unrepresentable: fail loudly
     intercept[Exception] {
       Seq((1L, "\\N")).toDF("id", "s")

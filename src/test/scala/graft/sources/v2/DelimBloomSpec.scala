@@ -6,7 +6,7 @@ import graft.SparkFunSuite
 
 /** Bloom sidecar certification: equality skipping on unclustered
   * columns — the sidecar mechanism itself (fileSkips verdicts per
-  * file), reader-path correctness on both columnar and row paths,
+  * file), reader correctness through the gate,
   * manifest header carriage, compaction interplay (a compacted file
   * has no sidecar and simply cannot skip), and overwrite cleanup.
   */
@@ -56,15 +56,12 @@ class DelimBloomSpec extends SparkFunSuite {
   test("equality reads stay correct through the bloom gate on both paths") {
     val t = s"${tempDir("bloom-read")}/t"
     mk(t)
-    for (columnar <- Seq(true, false)) {
-      val df = spark.read.format("graft-delim")
-        .schema("id BIGINT, v DOUBLE")
-        .option("columnar", columnar.toString).load(t)
-      assert(df.filter($"id" === 1000L).collect().map(_.getDouble(1)).toSeq
-        == Seq(1500.0))
-      assert(df.filter($"id" === 999999L).count() == 0L)
-      assert(df.filter($"id".isin(7L, 999999L, 1234L)).count() == 2L)
-    }
+    val df = spark.read.format("graft-delim")
+      .schema("id BIGINT, v DOUBLE").load(t)
+    assert(df.filter($"id" === 1000L).collect().map(_.getDouble(1)).toSeq
+      == Seq(1500.0))
+    assert(df.filter($"id" === 999999L).count() == 0L)
+    assert(df.filter($"id".isin(7L, 999999L, 1234L)).count() == 2L)
   }
 
   test("the reader GATE fires before the data file is opened") {
