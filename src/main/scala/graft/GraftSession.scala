@@ -32,6 +32,19 @@ object GraftSession {
     */
   val CodegenCacheEntries: Int = 4000
 
+  /** The one local filesystem (`core/BareLocalFileSystem.scala`):
+    * `file://` without a forked `chmod`/`readlink` per call, through the
+    * `FileSystem` API (Spark's data and report writes) and through
+    * `FileContext` (streaming checkpoints, graft-delim commits), so
+    * checkpoint I/O needs no manager of its own. Scheme-scoped: hdfs and
+    * object stores are untouched. The builder and the test session set
+    * this same pair.
+    */
+  val LocalFsImpl: (String, String) =
+    "spark.hadoop.fs.file.impl" -> classOf[graft.core.BareLocalFileSystem].getName
+  val LocalAbstractFsImpl: (String, String) =
+    s"spark.hadoop.${graft.core.BareLocalFs.Key}" -> classOf[graft.core.BareLocalFs].getName
+
   /** Build a new session with the engine's recommended configuration.
     * `cores` sizes both the local master and shuffle parallelism —
     * on a real cluster pass a master URL instead and size
@@ -80,20 +93,11 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
-      // Forkless checkpoint I/O on file:// (offset/commit logs, state
-      // changelogs): the stock FileContext manager forks a process per
-      // local create/probe when the Hadoop native lib is absent —
-      // measured at ~half the wall of bounded streaming certifications.
-      // Non-local checkpoint schemes delegate to the stock manager
-      // inside this class, so cluster deployments are untouched.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.stream.LocalCheckpointFileManager")
-      // file:// minus the per-file chmod fork (see BareLocalFileSystem):
-      // every local create/mkdirs otherwise forks a process to chmod the
-      // file to the permission it was just created with. Scheme-scoped —
-      // hdfs/s3 untouched; clusters with the native lib never fork here.
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.core.BareLocalFileSystem].getName)
+      // file:// through graft's one local filesystem (LocalFsImpl and
+      // LocalAbstractFsImpl below): no forked process per call on either
+      // Hadoop API. Spark's stock checkpoint manager runs on it.
+      .config(LocalFsImpl._1, LocalFsImpl._2)
+      .config(LocalAbstractFsImpl._1, LocalAbstractFsImpl._2)
       // runtime bloom-filter join filtering: when one side of a shuffle
       // join carries a selective predicate, inject a bloom filter into
       // the other side's scan — at warehouse scale this drops

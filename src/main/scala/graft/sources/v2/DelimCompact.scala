@@ -164,7 +164,7 @@ object DelimCompact {
     if (groups.isEmpty && tombJobs.isEmpty) return m.gen
     val stagingName = s"_staging_compact_$newGen"
     val staging = new HPath(target, stagingName)
-    DelimLog.fastMkdirs(fs, staging)
+    fs.mkdirs(staging)
     val confMap = DelimV2.shippableConf(conf)
     val targetStr = target.toString
     val statsByIdx = groups.map(_._4).toArray
@@ -182,10 +182,11 @@ object DelimCompact {
         math.max(1, spark.sparkContext.defaultParallelism)))
       .map { case (sub, gen, rels, i) =>
         val root = new HPath(targetStr)
-        val fsx = root.getFileSystem(DelimV2.executorConf(confMap))
+        val cx = DelimV2.executorConf(confMap)
+        val fsx = root.getFileSystem(cx)
         val outName = f"compact-$newGen-$i%05d.txt"
         val outPath = new HPath(new HPath(root, stagingName), outName)
-        val out = DelimLog.fastCreate(fsx, outPath, overwrite = true)
+        val out = DelimLog.create(cx, outPath, overwrite = true)
         var total = 0L
         try {
           val buf = new Array[Byte](1 << 16)
@@ -241,7 +242,7 @@ object DelimCompact {
                 }
                 (cl, acc)
               }
-              val so = DelimLog.fastCreate(fsx, new HPath(
+              val so = DelimLog.create(cx, new HPath(
                 new HPath(root, stagingName), outName + DelimBloom.Suffix),
                 overwrite = true)
               try so.write(DelimBloom.serialize(cols)) finally so.close()

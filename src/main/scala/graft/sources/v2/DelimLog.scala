@@ -1,7 +1,7 @@
 package graft.sources.v2
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{CreateFlag, FileAlreadyExistsException, FileContext, FileSystem, FSDataOutputStream, Options, Path => HPath}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The graft-delim table LOG: the snapshot manifest (format, parsing,
@@ -147,35 +147,6 @@ private[graft] object DelimLog {
     segCache.clear(); runChunkCache.clear()
   }
 
-  /** Parse one manifest FILE (current or versioned), or None when
-    * absent. Accepts both the v1 format (`len\trel` entries, no
-    * generations) and v2 (`len\tgen\trel` entries, `#schema` lines,
-    * gen/retain header attributes). Malformed content (e.g. a FOREIGN
-    * file that happens to be named `_manifest`) fails loudly with the
-    * path in the message — silently treating it as an empty snapshot
-    * would hide the table.
-    */
-  private[graft] def readManifestFile(
-      fs: FileSystem, mf: HPath,
-      prune: Seq[(String, Seq[String])] = Nil): Option[DelimManifest] = {
-    // the local ChecksumFs renames a file's data and its .crc sidecar
-    // SEPARATELY, so a reader racing the pointer swap can catch a torn
-    // pair (observed live: "Checksum error: .../_manifest" killing a
-    // stream's trigger). The tear is sub-millisecond by construction —
-    // retry briefly before treating it as real corruption.
-    var attempt = 0
-    while (true) {
-      try return readManifestFileOnce(fs, mf, prune)
-      catch {
-        case e: org.apache.hadoop.fs.ChecksumException =>
-          attempt += 1
-          if (attempt >= 4) throw e
-          Thread.sleep(25L * attempt)
-      }
-    }
-    None // unreachable
-  }
-
   private def parseEntryLine(
       l: String, bad: (String, String) => Nothing): ManifestEntry = {
     val parts = l.split('\t')
@@ -188,9 +159,17 @@ private[graft] object DelimLog {
     } catch { case _: NumberFormatException => bad(l, "length") }
   }
 
-  private def readManifestFileOnce(
+  /** Parse one manifest FILE (current or versioned), or None when
+    * absent. Accepts both the v1 format (`len\trel` entries, no
+    * generations) and v2 (`len\tgen\trel` entries, `#schema` lines,
+    * gen/retain header attributes). Malformed content (e.g. a FOREIGN
+    * file that happens to be named `_manifest`) fails loudly with the
+    * path in the message — silently treating it as an empty snapshot
+    * would hide the table.
+    */
+  private[graft] def readManifestFile(
       fs: FileSystem, mf: HPath,
-      prune: Seq[(String, Seq[String])]): Option[DelimManifest] = {
+      prune: Seq[(String, Seq[String])] = Nil): Option[DelimManifest] = {
     if (!fs.exists(mf)) None
     else {
       val in = fs.open(mf)
@@ -320,7 +299,8 @@ private[graft] object DelimLog {
   /** The CURRENT committed snapshot at a table root, or None.
     *
     * SWAP-WINDOW GUARD: the pointer swap is a rename-with-overwrite,
-    * which on rename-non-atomic filesystems (local file://) exposes a
+    * which on rename-non-atomic filesystems (Hadoop's stock local
+    * `FileContext` deletes the destination first) exposes a
     * sub-millisecond NO-POINTER window. A missing `_manifest` beside
     * existing versioned manifests therefore means "mid-swap or crashed
     * between claim and swap", never "not a manifest table" — fall back
@@ -404,65 +384,56 @@ private[graft] object DelimLog {
   private def serializeManifest(m: DelimManifest): Array[Byte] = {
     val sb = headerAndMeta(m)
     m.files.foreach(appendEntryLine(sb, _))
-    sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    sb.toString.getBytes(Utf8)
   }
 
   /** Prefix a segment file name must carry — underscore-prefixed so
     * listings ignore segments like the manifest itself. */
   private[graft] val SegPrefix = s"$ManifestFile.seg-"
 
-  // ------------------------------------------------ local-fs fast path
-  //
-  // On file:// the Hadoop facade FORKS A PROCESS per created file
-  // (RawLocalFileSystem.setPermission shells `chmod` when the native
-  // lib is absent) and per FileContext status probe (`readlink`) —
-  // sampled at roughly half the non-job driver time of commit-heavy
-  // certifications (~10-25 ms per fork, several per commit). java.nio
-  // issues the same create/move as plain syscalls. Only the file
-  // scheme takes these branches; HDFS and object stores keep the
-  // Hadoop semantics unchanged — and at cluster scale the forks never
-  // happen anyway (native lib present or remote scheme).
+  private val Utf8 = scala.io.Codec.UTF8.charSet
 
-  private[v2] def isLocalFs(fs: FileSystem): Boolean = {
-    val s = fs.getUri.getScheme
-    s == null || s == "file"
+  // ------------------------------------------------------ file landing
+  //
+  // Every graft-delim file lands through FileContext, on every scheme:
+  // data files, bloom sidecars, compaction output, manifest segments,
+  // the generation claim and the pointer. On file:// the context binds
+  // core.BareLocalFs (DelimV2.withLocalFs pins it), which forks nothing
+  // and writes no `.crc` sidecar.
+
+  private def fileContext(conf: Configuration, p: HPath): FileContext = {
+    val c = DelimV2.withLocalFs(conf)
+    if (p.toUri.getScheme == null) FileContext.getFileContext(c)
+    else FileContext.getFileContext(p.toUri, c)
   }
 
-  private[v2] def localPath(p: HPath): java.nio.file.Path =
-    java.nio.file.Paths.get(p.toUri.getPath)
+  private def create(fc: FileContext, file: HPath, overwrite: Boolean): FSDataOutputStream =
+    fc.create(file,
+      if (overwrite) java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE)
+      else java.util.EnumSet.of(CreateFlag.CREATE),
+      Options.CreateOpts.createParent())
 
-  /** `fs.mkdirs` minus the per-directory fork on file:// (the Hadoop
-    * local fs shells `chmod` once per created level). */
-  private[v2] def fastMkdirs(fs: FileSystem, dir: HPath): Unit =
-    if (isLocalFs(fs)) { java.nio.file.Files.createDirectories(localPath(dir)); () }
-    else { fs.mkdirs(dir); () }
+  /** Create `file`, parents included. */
+  private[v2] def create(conf: Configuration, file: HPath, overwrite: Boolean): FSDataOutputStream =
+    create(fileContext(conf, file), file, overwrite)
 
-  /** `fs.create` minus the per-file fork on file://: parents created,
-    * any stale checksum sidecar removed (a checksummed reader must not
-    * verify new bytes against an old `.crc`); other schemes delegate.
-    */
-  private[v2] def fastCreate(
-      fs: FileSystem, file: HPath, overwrite: Boolean): java.io.OutputStream =
-    if (!isLocalFs(fs)) fs.create(file, overwrite)
-    else {
-      import java.nio.file.{Files, StandardOpenOption => O}
-      val p = localPath(file)
-      val dir = p.getParent
-      if (dir != null) {
-        Files.createDirectories(dir)
-        // BOTH branches clear a stale checksum sidecar (round-22
-        // advice): a file once written by the checksummed facade,
-        // deleted via a raw/nio path (orphaning its .crc), then
-        // recreated here would otherwise fail checksum verification on
-        // its next checksummed read. The non-overwrite branch clears it
-        // only when the destination is absent — if CREATE_NEW is about
-        // to fail on an existing file, its live sidecar must survive.
-        if (overwrite || !Files.exists(p))
-          Files.deleteIfExists(dir.resolve("." + p.getFileName + ".crc"))
-      }
-      if (overwrite) Files.newOutputStream(p, O.CREATE, O.TRUNCATE_EXISTING, O.WRITE)
-      else Files.newOutputStream(p, O.CREATE_NEW, O.WRITE)
-    }
+  /** Land `bytes` at `dst` whole: write a tmp sibling named `tmpName`
+    * plus a random suffix, then rename it onto `dst` — replacing it
+    * (`replace`), or as a compare-and-set that throws Hadoop's
+    * `FileAlreadyExistsException` when `dst` exists. Either way `dst`
+    * is complete from its first visible instant; a failed rename
+    * removes the tmp file. */
+  private def landWhole(fs: FileSystem, dst: HPath, tmpName: String,
+      bytes: Array[Byte], replace: Boolean): Unit = {
+    val fc = fileContext(fs.getConf, dst)
+    val tmp = new HPath(dst.getParent,
+      s"$tmpName-${java.util.UUID.randomUUID().toString.take(8)}")
+    val out = create(fc, tmp, overwrite = true)
+    try out.write(bytes) finally out.close()
+    try fc.rename(tmp, dst,
+      if (replace) Options.Rename.OVERWRITE else Options.Rename.NONE)
+    catch { case scala.util.control.NonFatal(e) => fc.delete(tmp, false); throw e }
+  }
 
   /** Per-RUN chunking memo: (table, partition dir) → the run's exact
     * entry list and its segment refs from the last commit in this
@@ -528,35 +499,17 @@ private[graft] object DelimLog {
         es.grouped(m.segSize).foreach { chunk =>
           val sb = new java.lang.StringBuilder(chunk.size * 48)
           chunk.foreach(appendEntryLine(sb, _))
-          val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          val bytes = sb.toString.getBytes(Utf8)
           val md = java.security.MessageDigest.getInstance("MD5").digest(bytes)
           val hex = md.take(8).map(b => f"${b & 0xff}%02x").mkString
           val name = s"$SegPrefix$hex-${chunk.size}"
           val sp = new HPath(target, name)
           val key = fs.makeQualified(sp).toUri.toString
-          if (!fs.exists(sp)) {
-            // create-no-overwrite via tmp + rename: a concurrent commit
-            // writing the SAME content races benignly (identical bytes)
-            val tmp = new HPath(target,
-              s"$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-            if (isLocalFs(fs)) {
-              import java.nio.file.{Files, StandardCopyOption => C}
-              val t = localPath(tmp)
-              Files.write(t, bytes)
-              try Files.move(t, localPath(sp), C.ATOMIC_MOVE)
-              catch { // lost a benign same-content race
-                case _: java.nio.file.FileAlreadyExistsException => ()
-              } finally Files.deleteIfExists(t)
-            } else {
-              val out = fs.create(tmp, false)
-              try out.write(bytes) finally out.close()
-              try {
-                if (!fs.rename(tmp, sp) && !fs.exists(sp))
-                  throw new java.io.IOException(
-                    s"graft-delim: could not land manifest segment $sp")
-              } finally fs.delete(tmp, false)
-            }
-          }
+          // content-addressed: a concurrent commit landing the SAME
+          // chunk races benignly (identical bytes)
+          if (!fs.exists(sp))
+            try landWhole(fs, sp, s"$name.tmp", bytes, replace = false)
+            catch { case _: FileAlreadyExistsException => () }
           if (segCache.size > SegCacheCap) segCache.clear()
           segCache.put(key, chunk)
           runRefs += SegRef(name, chunk.size, chunk.head.rel, chunk.last.rel)
@@ -575,7 +528,7 @@ private[graft] object DelimLog {
     val sb = headerAndMeta(m)
     refs.foreach(r =>
       sb.append(s"#segment\t${r.name}\t${r.count}\t${r.minRel}\t${r.maxRel}\n"))
-    sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    sb.toString.getBytes(Utf8)
   }
 
   /** The committed document for this snapshot: the segmented INDEX
@@ -588,45 +541,16 @@ private[graft] object DelimLog {
       serializeIndex(m, ensureSegments(fs, target, m))
     else serializeManifest(m)
 
-  /** Atomically swap the CURRENT manifest pointer: write a tmp file,
-    * then FileContext rename with OVERWRITE — atomic on HDFS and the
-    * local FS, so there is neither a partial-manifest nor a
-    * missing-manifest window (a delete+rename pair would expose the
-    * fallback listing — and with it a mixed generation — between the
-    * two calls).
+  /** Atomically swap the CURRENT manifest pointer: a tmp file renamed
+    * over it — atomic on HDFS and the local FS, so there is neither a
+    * partial-manifest nor a missing-manifest window (a delete+rename
+    * pair would expose the fallback listing — and with it a mixed
+    * generation — between the two calls).
     */
   private def swapCurrentManifest(
-      fs: FileSystem, target: HPath, bytes: Array[Byte]): Unit = {
-    val tmp = new HPath(target,
-      s"$ManifestFile.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (isLocalFs(fs)) {
-      // same tmp-then-atomic-replace shape, via java.nio (rename(2) is
-      // the atomic-overwrite primitive; no forks, no .crc sidecars).
-      // A pointer landed by an earlier checksummed writer may carry a
-      // `.crc` sidecar; it must go BEFORE the swap or a checksummed
-      // reader verifies the new bytes against the old sum (between the
-      // two steps the pointer is simply unchecksummed — still the old
-      // complete document).
-      import java.nio.file.{Files, StandardCopyOption => C}
-      val t = localPath(tmp)
-      Files.write(t, bytes)
-      val dst = localPath(new HPath(target, ManifestFile))
-      Files.deleteIfExists(dst.getParent.resolve(s".$ManifestFile.crc"))
-      Files.move(t, dst, C.ATOMIC_MOVE)
-      return
-    }
-    // FileContext for BOTH create and rename: the FileSystem facade is
-    // checksum-wrapped on file:// and would leave orphan .crc sidecars
-    // behind the raw rename
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      target.toUri, fs.getConf)
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE))
-    try out.write(bytes) finally out.close()
-    fc.rename(tmp, new HPath(target, ManifestFile),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      fs: FileSystem, target: HPath, bytes: Array[Byte]): Unit =
+    landWhole(fs, new HPath(target, ManifestFile), s"$ManifestFile.tmp", bytes,
+      replace = true)
 
   /** Raw bytes of an existing manifest document — the pointer swap and
     * crash recovery copy the claimed version VERBATIM (re-serializing
@@ -712,64 +636,20 @@ private[graft] object DelimLog {
       .map(_.toLong).getOrElse(600000L)
     val bytes = manifestBytes(fs, target, m)
     val vf = new HPath(target, s"$ManifestFile.v${m.gen}")
-    // the claim lands as tmp + rename-NO-OVERWRITE: still an atomic
-    // compare-and-set on the generation number, but the claimed file
-    // is COMPLETE from its first visible instant — a bare create would
-    // expose a partially-written snapshot to the swap-window fallback
-    // readers
-    val tmp = new HPath(target,
-      s"$ManifestFile.claim-${java.util.UUID.randomUUID().toString.take(8)}")
-    def claimLost(): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"graft-delim: generation ${m.gen} already claimed at $target — " +
-          "either a concurrent committer won the race (re-run this job " +
-          "against the new snapshot) or a previous commit crashed between " +
-          "its version claim and the pointer swap (run " +
-          "DelimLog.recoverManifest once no writer is active)")
-    if (isLocalFs(fs)) {
-      // java.nio claim via link(2): createLink fails with EEXIST
-      // ATOMICALLY, a genuine kernel-level compare-and-set on the
-      // generation file (round-22 advice: Files.move without
-      // REPLACE_EXISTING is an existence check followed by rename(2),
-      // which overwrites — two racing committers could both believe
-      // they won). Filesystems without hard links fall back to the
-      // move form, which matches the Hadoop facade's own TOCTOU.
-      import java.nio.file.Files
-      val t = localPath(tmp)
-      Files.write(t, bytes)
-      val dst = localPath(vf)
-      // a retention-deleted older claim of this generation may have
-      // left a checksum sidecar behind a non-checksummed delete
-      Files.deleteIfExists(dst.getParent.resolve(s".${vf.getName}.crc"))
-      try {
-        Files.createLink(dst, t)
-        Files.deleteIfExists(t)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(t)
-          claimLost()
-        case _: UnsupportedOperationException =>
-          try Files.move(t, dst)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              Files.deleteIfExists(t)
-              claimLost()
-          }
-      }
-    } else {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        target.toUri, fs.getConf)
-      val out = fc.create(tmp,
-        java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-          org.apache.hadoop.fs.CreateFlag.OVERWRITE))
-      try out.write(bytes) finally out.close()
-      try fc.rename(tmp, vf)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-            _: java.nio.file.FileAlreadyExistsException =>
-          fc.delete(tmp, false)
-          claimLost()
-      }
+    // the claim lands as tmp + rename-NO-OVERWRITE: an atomic
+    // compare-and-set on the generation number (link(2) on file://, see
+    // core.BareLocalFs), and the claimed file is COMPLETE from its first
+    // visible instant — a bare create would expose a partially-written
+    // snapshot to the swap-window fallback readers
+    try landWhole(fs, vf, s"$ManifestFile.claim", bytes, replace = false)
+    catch {
+      case _: FileAlreadyExistsException =>
+        throw new java.util.ConcurrentModificationException(
+          s"graft-delim: generation ${m.gen} already claimed at $target — " +
+            "either a concurrent committer won the race (re-run this job " +
+            "against the new snapshot) or a previous commit crashed between " +
+            "its version claim and the pointer swap (run " +
+            "DelimLog.recoverManifest once no writer is active)")
     }
     // GC-RACE RE-VERIFY: the claim above now references this commit's
     // segments (protected from every future sweep), but a sweep that
@@ -876,7 +756,7 @@ private[graft] object DelimLog {
     else {
       val in = fs.open(mf)
       try Option(new java.io.BufferedReader(new java.io.InputStreamReader(in,
-        java.nio.charset.StandardCharsets.UTF_8)).readLine())
+        Utf8)).readLine())
         .filter(_.startsWith("#"))
       finally in.close()
     }
@@ -1084,7 +964,7 @@ private[graft] object DelimLog {
     staged.flatMap { sf =>
       val src = new HPath(sf.path)
       val dstDir = if (sf.subdir.isEmpty) target else new HPath(target, sf.subdir)
-      if (sf.subdir.nonEmpty) fastMkdirs(fs, dstDir)
+      if (sf.subdir.nonEmpty) fs.mkdirs(dstDir)
       val dst = new HPath(dstDir, sf.finalName)
       if (fs.exists(dst)) fs.delete(dst, false)
       if (!fs.rename(src, dst))

@@ -474,7 +474,24 @@ private[graft] object DelimV2 {
   }
 
   def driverConf(): Configuration =
-    SparkSession.active.sessionState.newHadoopConf()
+    withLocalFs(SparkSession.active.sessionState.newHadoopConf())
+
+  /** `conf`, or a copy of it, binding `FileContext`'s `file` scheme to
+    * [[graft.core.BareLocalFs]] for graft-delim's own I/O, whatever the
+    * session set (Hadoop's default `LocalFs` writes `.crc` sidecars and
+    * its no-overwrite rename is check-then-act). A cached `FileSystem`'s
+    * conf is whichever conf first created it, so the pin is applied per
+    * use; `FileContext` is not cached, so a context built from the
+    * result keeps the `file://` generation claim a compare-and-set. */
+  private[v2] def withLocalFs(conf: Configuration): Configuration = {
+    val afs = classOf[graft.core.BareLocalFs].getName
+    if (conf.get(graft.core.BareLocalFs.Key) == afs) conf
+    else {
+      val c = new Configuration(conf)
+      c.set(graft.core.BareLocalFs.Key, afs)
+      c
+    }
+  }
 
   /** The fs./hadoop. entries executor tasks rebuild a Configuration
     * from (defaults load executor-side; these overlay them) — ONE

@@ -255,8 +255,7 @@ private[v2] class DelimWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val hc = DelimV2.driverConf()
-    val fs = staging.getFileSystem(hc)
-    DelimLog.fastMkdirs(fs, staging)
+    staging.getFileSystem(hc).mkdirs(staging)
     val confMap = DelimV2.shippableConf(hc)
     new DelimWriterFactory(schema, delim, staging.toString, confMap, partCols, quote,
       genToken = queryId.replace("-", "").take(8), bloomFor = bloomFor)
@@ -386,7 +385,7 @@ private[v2] class DelimWrite(
           info: PhysicalWriteInfo)
           : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
         val hc = DelimV2.driverConf()
-        DelimLog.fastMkdirs(staging.getFileSystem(hc), staging)
+        staging.getFileSystem(hc).mkdirs(staging)
         val confMap = DelimV2.shippableConf(hc)
         val stagingDir = staging.toString
         val s = schema; val d = delim; val pc = partCols; val q = quote
@@ -702,8 +701,7 @@ private[v2] class DelimDataWriter(
       val file = new HPath(stagingDir, s"$fileStem$suffix.txt")
       staged += DelimStagedFile(subdir, file.toString, s"$finStem.txt")
       val out = new java.io.BufferedOutputStream(
-        DelimLog.fastCreate(file.getFileSystem(DelimV2.executorConf(confMap)), file,
-          overwrite = true),
+        DelimLog.create(DelimV2.executorConf(confMap), file, overwrite = true),
         1 << 16)
       streams(subdir) = out
       out
@@ -821,7 +819,7 @@ private[v2] class DelimDataWriter(
                 (schema.fieldNames(si), b.bits)
               })
             val side = new HPath(sf.path + DelimBloom.Suffix)
-            val out = DelimLog.fastCreate(side.getFileSystem(c), side, overwrite = true)
+            val out = DelimLog.create(c, side, overwrite = true)
             try out.write(bytes) finally out.close()
             DelimStagedFile(sf.subdir, side.toString,
               sf.finalName + DelimBloom.Suffix, bytes.length.toLong,

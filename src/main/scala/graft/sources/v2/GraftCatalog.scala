@@ -471,8 +471,7 @@ private[v2] class DelimPartitionedTable(
       throw new org.apache.spark.sql.catalyst.analysis
         .PartitionsAlreadyExistException(name(), ident, partitionSchema())
     val d = new HPath(root, sub)
-    fs.mkdirs(d)
-    fs.create(new HPath(d, AddedMarker), true).close()
+    DelimLog.create(DelimV2.driverConf(), new HPath(d, AddedMarker), overwrite = true).close()
   }
 
   override def dropPartition(ident: InternalRow): Boolean = {

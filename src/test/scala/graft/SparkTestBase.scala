@@ -20,6 +20,10 @@ object TestSpark {
       .config("spark.sql.catalog.graft_cat",
         classOf[graft.sources.v2.GraftCatalog].getName)
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      // the builder's one local filesystem, so specs run the file://
+      // path the engine ships
+      .config(GraftSession.LocalFsImpl._1, GraftSession.LocalFsImpl._2)
+      .config(GraftSession.LocalAbstractFsImpl._1, GraftSession.LocalAbstractFsImpl._2)
       // the builder's compiled-class cache size, so a spec that pins
       // compile counts sees the cache the engine runs with
       .config("spark.sql.codegen.cache.maxEntries",

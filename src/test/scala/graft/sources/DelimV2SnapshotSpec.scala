@@ -93,6 +93,62 @@ class DelimV2SnapshotSpec extends SparkFunSuite {
     assert(e.getMessage.contains("already claimed"), e.getMessage)
   }
 
+  /** 8 threads race `commitManifest` for the same next generation,
+    * `rounds` times: exactly one wins each round, every loser gets the
+    * "already claimed" error, and the pointer ends on the winner's
+    * bytes. Each thread commits a distinct one-entry snapshot, so the
+    * pointer names its writer. */
+  private def claimRace(fs: org.apache.hadoop.fs.FileSystem, t: String,
+      rounds: Int): Unit = {
+    val hp = new HPath(t)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (1 to rounds).foreach { round =>
+      val prev = DelimLog.readManifest(fs, hp).get
+      val gen = prev.gen + 1
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val results = (0 until 8).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Option[Throwable]] {
+          def call(): Option[Throwable] = {
+            start.await()
+            try {
+              DelimLog.commitManifest(fs, hp, prev.copy(gen = gen,
+                files = Seq(DelimLog.ManifestEntry(i.toLong, gen, s"w$i.txt"))))
+              None
+            } catch { case e: Throwable => Some(e) }
+          }
+        })
+      }
+      start.countDown()
+      val outcomes = results.map(_.get())
+      val winners = outcomes.indices.filter(outcomes(_).isEmpty)
+      assert(winners.size == 1, s"round $round: winners $winners, outcomes $outcomes")
+      outcomes.flatten.foreach { e =>
+        assert(e.isInstanceOf[java.util.ConcurrentModificationException] &&
+          e.getMessage.contains("already claimed"), s"round $round: $e")
+      }
+      val now = DelimLog.readManifest(fs, hp).get
+      assert(now.gen == gen && now.files.map(_.rel) == Seq(s"w${winners.head}.txt"),
+        s"round $round: pointer at gen ${now.gen} lists ${now.files}")
+    } finally pool.shutdownNow()
+  }
+
+  test("8 threads race each claim: exactly one wins, the pointer holds its bytes") {
+    val t = s"${tempDir("delimv2-threadrace")}/t"
+    Seq((1L, 1.0)).toDF("id", "v")
+      .write.format("graft-delim").mode("overwrite").save(t)
+    claimRace(fsFor(t), t, rounds = 50)
+    // the same race through a Configuration carrying none of the
+    // session's filesystem confs (Hadoop's default binds its checksummed
+    // LocalFs): the commit pins graft's `file` AbstractFileSystem itself,
+    // so the claim stays a compare-and-set and lands no `.crc` sidecar
+    val plain = new org.apache.hadoop.conf.Configuration()
+    assert(plain.get(graft.core.BareLocalFs.Key) == "org.apache.hadoop.fs.local.LocalFs")
+    val fs = org.apache.hadoop.fs.FileSystem.newInstance(new HPath(t).toUri, plain)
+    try claimRace(fs, t, rounds = 10) finally fs.close()
+    val crc = new java.io.File(t).list().filter(_.endsWith(".crc"))
+    assert(crc.isEmpty, crc.mkString(", "))
+  }
+
   test("a write losing the claim race rolls back its promoted files") {
     val dir = tempDir("delimv2-raceroll")
     val t = s"$dir/t"
