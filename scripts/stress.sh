@@ -73,11 +73,6 @@ for amp in ${AMPS//,/ }; do
 done
 
 for amp in ${AMPS//,/ }; do
-  echo "### fresh JVM: native vs window as-of comparison point $amp" >&2
-  run_fresh asofcmp "$amp"
-done
-
-for amp in ${AMPS//,/ }; do
   echo "### fresh JVM: as-of SQL rewrite on/off point $amp" >&2
   run_fresh asofsqlcmp "$amp"
 done

@@ -6,13 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
-import graft.core.{AsOfJoin, RangeJoin, Tables}
-import graft.plans.AsOfJoinNative
+import graft.core.Tables
+import graft.plans.{AsOfJoinNative, RangeBinJoinRule}
 
 import CertSupport._
 
-/** As-of and range-join certifications: the DataFrame as-of operators,
-  * the native as-of exec, the SQL rewrites (correlated scalar, LATERAL
+/** As-of and range-join certifications: the native as-of exec, the SQL rewrites (correlated scalar, LATERAL
   * top-1, tolerance, forward, nearest) and point-in-interval joins.
   */
 object AsOfCerts {
@@ -252,39 +251,69 @@ object AsOfCerts {
       |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
       |  ON e.user_id = c.user_id AND e.ts >= c.ts""".stripMargin
 
+  /** `df`, after requiring the native as-of exec in its plan: the
+    * certs below certify the operator, never a fallback. */
+  private def nativeAsOf(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.explainString(FormattedMode)
+    require(plan.contains("AsOfJoin"),
+      s"native as-of operator missing from plan:\n$plan")
+    df
+  }
+
+  // One run per as-of twin pair below: `asof_join_events` and
+  // `asof_join_native` (and the forward and tolerance pairs) answer
+  // the same oracle through the same function, so they cannot drift.
+
+  /** Each event's latest order of the same user at or before it. The
+    * payload is the matched TIME, deterministic under ties. */
+  private def lastOrder(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
+    val o = Tables.orders(s, dir)
+      .select(col("o_custkey"), col("o_orderdate"),
+        col("o_orderdate").as("matched_order_date"))
+    nativeAsOf(AsOfJoinNative.join(ev, o, "user_id", "o_custkey",
+        "ts", "o_orderdate", Seq("matched_order_date"))
+      .select("event_id", "user_id", "matched_order_date"))
+  }
+
+  /** Each click's earliest following purchase of the same user. */
+  private def nextPurchase(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select("event_id", "user_id", "ts")
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+        col("ts").as("next_purchase"))
+    nativeAsOf(AsOfJoinNative.join(clicks, purchases, "user_id", "p_user",
+        "ts", "p_ts", Seq("next_purchase"), forward = true)
+      .select(col("event_id"), col("user_id"),
+        unix_seconds(col("next_purchase")).as("next_purchase_epoch")))
+  }
+
+  /** Each error's latest click of the same user, only if at most an
+    * hour old (the stale-quote guard, pushed into the merge). Matched
+    * time surfaces as epoch seconds: nullable BIGINT, not nullable
+    * TIMESTAMP, which comparison harnesses handle reliably. */
+  private def lastClickWithinHour(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    val errors = ev.filter(col("event_type") === "error")
+      .select("event_id", "user_id", "ts")
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+        col("ts").as("last_click"))
+    nativeAsOf(AsOfJoinNative.join(errors, clicks, "user_id", "c_user",
+        "ts", "c_ts", Seq("last_click"), toleranceSeconds = Some(3600L))
+      .select(col("event_id"), col("user_id"),
+        unix_seconds(col("last_click")).as("last_click_epoch")))
+  }
+
   val all: Seq[Cert] = Seq(
     // As-of join: each event matched to the latest order of the same
-    // key at-or-before its timestamp (composed union+window operator;
-    // DuckDB's native ASOF JOIN is the oracle). The payload is the
-    // matched TIME, which is deterministic under ties by construction.
-    Cert("asof_join_events",
-      LastOrderOracle) { (s, dir) =>
-      val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
-      val o = Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderdate"),
-          col("o_orderdate").as("matched_order_date"))
-      AsOfJoin.latestPrior(ev, o, "user_id", "o_custkey", "ts", "o_orderdate",
-          Seq("matched_order_date"))
-        .select("event_id", "user_id", "matched_order_date")
-    },
-    // As-of with a lookback bound: each error event picks up the same
-    // user's latest click, but only if it is at most an hour old (the
-    // "stale quote" guard). Matched time surfaces as epoch seconds —
-    // nullable BIGINT, not nullable TIMESTAMP, which comparison
-    // harnesses handle reliably.
-    Cert("asof_join_tolerance",
-      LastClickWithinHourOracle) { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      val errors = ev.filter(col("event_type") === "error")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("ts").as("last_click"))
-      AsOfJoin.latestPriorWithin(errors, clicks, "user_id", "c_user", "ts", "c_ts",
-          Seq("last_click"), 3600L)
-        .select(col("event_id"), col("user_id"),
-          unix_seconds(col("last_click")).as("last_click_epoch"))
-    },
+    // key at-or-before its timestamp (DuckDB's native ASOF JOIN is the
+    // oracle).
+    Cert("asof_join_events", LastOrderOracle)(lastOrder),
+    // As-of with a lookback bound: the latest click at most an hour old.
+    Cert("asof_join_tolerance", LastClickWithinHourOracle)(lastClickWithinHour),
     // NOT EXISTS window exclusion through the same extension — the
     // anti-join tier of RangeBinJoinRule certified on the query
     // surface with one SQL text run verbatim by both engines.
@@ -340,65 +369,13 @@ object AsOfCerts {
         case None    => s.conf.unset(key)
       }
     },
-    // Native as-of join — the engine's whole-operator Catalyst
-    // extension (plans.AsOfJoinNative: logical node + strategy +
-    // physical single-pass merge operator). Same semantics and SAME
-    // DuckDB ASOF JOIN oracle as asof_join_events, but the plan is the
-    // custom AsOfJoin exec over two co-partitioned sorted exchanges —
-    // no union, no null-padded shuffle rows, no window re-scan. The
-    // require pins the forced path: the window form can never print an
-    // AsOfJoin node, so this query certifies the OPERATOR, not a
-    // fallback.
-    Cert("asof_join_native",
-      LastOrderOracle) { (s, dir) =>
-      val ev = Tables.events(s, dir).select("event_id", "user_id", "ts")
-      val o = Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderdate"),
-          col("o_orderdate").as("matched_order_date"))
-      val df = AsOfJoinNative.join(ev, o, "user_id", "o_custkey",
-          "ts", "o_orderdate", Seq("matched_order_date"))
-        .select("event_id", "user_id", "matched_order_date")
-      val plan = df.queryExecution.explainString(FormattedMode)
-      require(plan.contains("AsOfJoin"),
-        s"native as-of operator missing from plan:\n$plan")
-      df
-    },
-    // Forward direction through the native operator (earliest following
-    // purchase per click) — asof_join_forward's oracle.
-    Cert("asof_join_native_forward",
-      NextPurchaseOracle) { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("ts").as("next_purchase"))
-      val df = AsOfJoinNative.join(clicks, purchases, "user_id", "p_user",
-          "ts", "p_ts", Seq("next_purchase"), forward = true)
-        .select(col("event_id"), col("user_id"),
-          unix_seconds(col("next_purchase")).as("next_purchase_epoch"))
-      require(df.queryExecution.explainString(FormattedMode)
-        .contains("AsOfJoin"), "native as-of operator missing from plan")
-      df
-    },
-    // Tolerance-bounded native as-of (stale-quote guard pushed INTO the
-    // merge) — asof_join_tolerance's oracle.
-    Cert("asof_join_native_tolerance",
-      LastClickWithinHourOracle) { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      val errors = ev.filter(col("event_type") === "error")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("ts").as("last_click"))
-      val df = AsOfJoinNative.join(errors, clicks, "user_id", "c_user",
-          "ts", "c_ts", Seq("last_click"), toleranceSeconds = Some(3600L))
-        .select(col("event_id"), col("user_id"),
-          unix_seconds(col("last_click")).as("last_click_epoch"))
-      require(df.queryExecution.explainString(FormattedMode)
-        .contains("AsOfJoin"), "native as-of operator missing from plan")
-      df
-    },
+    // The native twins of asof_join_events, asof_join_forward and
+    // asof_join_tolerance (plans.AsOfJoinNative: logical node +
+    // strategy + physical single-pass merge operator over two
+    // co-partitioned sorted exchanges).
+    Cert("asof_join_native", LastOrderOracle)(lastOrder),
+    Cert("asof_join_native_forward", NextPurchaseOracle)(nextPurchase),
+    Cert("asof_join_native_tolerance", LastClickWithinHourOracle)(lastClickWithinHour),
     // The SQL front door to the native operator: a correlated scalar
     // max-subquery — the natural as-of SQL in engines without an ASOF
     // keyword — decorrelates into a domain join whose inner theta join
@@ -685,7 +662,8 @@ object AsOfCerts {
     },
     // Non-equi range join via bucketing: events falling inside derived
     // daily 02:00–06:00 maintenance windows (no equi key — the bucket
-    // expansion is what keeps this a hash join; see core.RangeJoin).
+    // expansion is what keeps this a hash join; see
+    // RangeBinJoinRule.pointInInterval).
     Cert("range_join_windows",
       """WITH w AS (
         |  SELECT DISTINCT date_trunc('day', ts) + INTERVAL 2 HOUR AS w_start,
@@ -699,26 +677,13 @@ object AsOfCerts {
         .select(
           (col("day") + expr("INTERVAL 2 HOURS")).as("w_start"),
           (col("day") + expr("INTERVAL 6 HOURS")).as("w_end"))
-      RangeJoin.pointInInterval(ev, windows, "ts", "w_start", "w_end", 3600L)
+      RangeBinJoinRule.pointInInterval(ev, windows, "ts", "w_start", "w_end", 3600L)
         .groupBy(col("w_start"))
         .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
     },
     // Forward as-of join (attribution direction): each click picks up
     // the same user's EARLIEST following purchase — the mirror of
-    // asof_join_events' latest-prior lookup, same one-shuffle
-    // union-and-window shape with the time order flipped.
-    Cert("asof_join_forward",
-      NextPurchaseOracle) { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("ts").as("next_purchase"))
-      AsOfJoin.earliestFollowing(clicks, purchases,
-          "user_id", "p_user", "ts", "p_ts", Seq("next_purchase"))
-        .select(col("event_id"), col("user_id"),
-          unix_seconds(col("next_purchase")).as("next_purchase_epoch"))
-    }
+    // asof_join_events' latest-prior lookup.
+    Cert("asof_join_forward", NextPurchaseOracle)(nextPurchase)
   )
 }

@@ -44,8 +44,8 @@ object StreamCerts {
     * timeout the final watermark passed. The engine compares timeout
     * timestamps in floored MILLISECONDS: timeout fires iff
     * epoch_ms(session_end) + gap < epoch_ms(max ts) - lateness, strict,
-    * mirrored here exactly. ONE definition serves BOTH state-API tiers
-    * — that equality is the certification.
+    * mirrored here exactly. ONE definition serves the AvailableNow, live
+    * and restart runs — that equality is the certification.
     */
   private def sessionCloseOracle(where: String): String =
     sessionOracle(where,
@@ -142,62 +142,49 @@ object StreamCerts {
       |GROUP BY 1, 2, m.wm
       |HAVING window_start + INTERVAL 1 HOUR <= m.wm""".stripMargin
 
+  /** The session-close machine (`SessionCloseTws`: StatefulProcessor +
+    * typed ValueState + event-time timers fired through
+    * handleExpiredTimer, on the RocksDB provider it requires) over the
+    * chunked events. Each per-user gap session is emitted EXACTLY ONCE:
+    * by a successor event proving the gap elapsed (data-batch close),
+    * or by its timer once the WATERMARK passes session end + gap —
+    * which for the final sessions of a bounded run only the trailing
+    * no-data micro-batch delivers. The two requires pin exactly that:
+    * the run's last trigger consumed zero input AND contributed
+    * emissions. Sessions the final watermark never times out (the live
+    * tail within gap+lateness of stream end) are never emitted; the
+    * oracle encodes both the emission rule and the engine's millisecond
+    * timeout arithmetic (epoch_ms floors).
+    */
+  private def sessionCloseRun(s: SparkSession, dir: String, out: String): DataFrame = {
+    val src = eventsChunks(s, dir)
+    import s.implicits._
+    val ev = src.select(col("user_id"), col("ts"), col("value"))
+      .withWatermark("ts", "1 hour")
+      .as[SessionClose.Event]
+    ensureRocksDb(s)
+    val (res, stats) = StreamRun.runAvailableNow(
+      SessionCloseTws.close(ev, gapMinutes = 30).toDF(),
+      s"$out/run", Sink.Update, noDataBatch = true)
+    val last = stats.last
+    require(last.inputRows == 0L,
+      s"final trigger must be the engine's no-data batch: $stats")
+    require(res.filter(col("batch_id") === last.batchId).limit(1).count() == 1L,
+      "the no-data batch must contribute timer-fired session closes")
+    res.drop("batch_id")
+  }
+
   val all: Seq[Cert] = Seq(
-    // X6, EventTimeTimeout flatMapGroupsWithState EXECUTED BY THE
-    // STREAMING ENGINE — the session-close state machine the NoTimeout
-    // custom-state query stops short of. Each per-user gap session is
-    // emitted EXACTLY ONCE: by a successor event proving the gap
-    // elapsed (data-batch close), or by state.hasTimedOut once the
-    // WATERMARK passes session end + gap — which for the final sessions
-    // of a bounded run only the trailing no-data micro-batch delivers
-    // (the noDataBatch plumbing, exercised here). The two
-    // requires pin exactly that: the run's last trigger consumed zero
-    // input AND contributed emissions. Sessions the final watermark
-    // never times out (the live tail within gap+lateness of stream end)
-    // are never emitted; the oracle encodes both the emission rule and
-    // the engine's millisecond timeout arithmetic (epoch_ms floors).
-    Cert.scratch("events_session_timeout_stream", sessionCloseOracle(""), stream = true) { (s, dir, out) =>
-      val src = eventsChunks(s, dir)
-      import s.implicits._
-      val ev = src.select(col("user_id"), col("ts"), col("value"))
-        .withWatermark("ts", "1 hour")
-        .as[SessionClose.Event]
-      val (res, stats) = StreamRun.runAvailableNow(
-        SessionClose.close(ev, gapMinutes = 30).toDF(),
-        s"$out/run", Sink.Update, noDataBatch = true)
-      val last = stats.last
-      require(last.inputRows == 0L,
-        s"final trigger must be the engine's no-data batch: $stats")
-      require(res.filter(col("batch_id") === last.batchId).limit(1).count() == 1L,
-        "the no-data batch must contribute watermark-fired session closes")
-      res.drop("batch_id")
-    },
-    // X6 on the NEXT-GENERATION stateful API: the identical session
-    // machine re-implemented with transformWithState (StatefulProcessor
-    // + typed ValueState + explicit event-time timers fired through
-    // handleExpiredTimer) — certified under the SAME oracle as the
-    // flatMapGroupsWithState tier, so both state APIs are pinned to
-    // byte-identical emissions. transformWithState requires RocksDB,
-    // adding another RocksDB-provider certification; the same
-    // no-data-batch requires apply (timers fire on watermark advance
-    // after the backlog drains).
-    Cert.scratch("events_session_tws_stream", sessionCloseOracle(""), stream = true) { (s, dir, out) =>
-      val src = eventsChunks(s, dir)
-      import s.implicits._
-      val ev = src.select(col("user_id"), col("ts"), col("value"))
-        .withWatermark("ts", "1 hour")
-        .as[SessionClose.Event]
-      ensureRocksDb(s)
-      val (res, stats) = StreamRun.runAvailableNow(
-        SessionCloseTws.close(ev, gapMinutes = 30).toDF(),
-        s"$out/run", Sink.Update, noDataBatch = true)
-      val last = stats.last
-      require(last.inputRows == 0L,
-        s"final trigger must be the engine's no-data batch: $stats")
-      require(res.filter(col("batch_id") === last.batchId).limit(1).count() == 1L,
-        "the no-data batch must contribute timer-fired session closes")
-      res.drop("batch_id")
-    },
+    // X6, the session-close state machine EXECUTED BY THE STREAMING
+    // ENGINE on transformWithState (see sessionCloseRun) — emitted
+    // sessions only, the ones whose close the watermark proved.
+    Cert.scratch("events_session_timeout_stream", sessionCloseOracle(""),
+      stream = true)(sessionCloseRun),
+    // The same run under the name that certifies the transformWithState
+    // API and its RocksDB provider (one function, so the two cannot
+    // drift).
+    Cert.scratch("events_session_tws_stream", sessionCloseOracle(""),
+      stream = true)(sessionCloseRun),
     // X6, CUSTOM-STATE stop/restart recovery — the strongest recovery
     // certification the engine has: drain the first half of the (u150)
     // events through the transformWithState session machine (INCLUDING
@@ -464,7 +451,7 @@ object StreamCerts {
       res.drop("batch_id")
     },
     // X6, CUSTOM STATE + EVENT-TIME TIMERS under the LIVE trigger: the
-    // EventTimeTimeout session machine re-run with Trigger.ProcessingTime
+    // transformWithState session machine re-run with Trigger.ProcessingTime
     // against the concurrently-appended directory. Beyond
     // events_windowed_live's built-in aggregation, this certifies that
     // user-managed state and registered timeouts behave identically when
@@ -476,13 +463,14 @@ object StreamCerts {
     // batch. Oracle: the bounded twin's session oracle VERBATIM.
     Cert.scratch("events_session_live",
       // the bounded twin's session-close oracle VERBATIM (one definition
-      // serves the AvailableNow tiers, both state APIs, and now the live
-      // trigger — that four-way equality is the certification)
+      // serves the AvailableNow run and the live trigger — that equality
+      // is the certification)
       sessionCloseOracle(""), stream = true) { (s, dir, out) =>
       import s.implicits._
+      ensureRocksDb(s)
       val (res, stats) = StreamRun.runProcessingTimeLive(
         Tables.events(s, dir),
-        src => SessionClose.close(
+        src => SessionCloseTws.close(
           src.select(col("user_id"), col("ts"), col("value"))
             .withWatermark("ts", "1 hour")
             .as[SessionClose.Event], gapMinutes = 30).toDF(),
@@ -1206,7 +1194,7 @@ object StreamCerts {
           (col("n_updates") >= 1 && col("n_updates") <= 4).as("updates_bounded"))
     },
     // X6, CUSTOM state EXECUTED BY THE STREAMING ENGINE — the
-    // flatMapGroupsWithState tier beyond built-in windows: a per-user
+    // GroupState tier (SessionTracker) beyond built-in windows: a per-user
     // running summary accumulated in user code across 4 micro-batches.
     // The state-store risk this certifies is cross-batch ACCUMULATION
     // (a user spanning chunks must fold into prior state, not reset —

@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * merge operator (the (c) rung of the extension ladder; the engine's
   * other custom pieces are expressions (b) and an optimizer rule).
   *
-  * Why a physical operator when [[graft.core.AsOfJoin]]'s
-  * union-and-window form is already one shuffle: the union form pays
+  * Why a physical operator when the union-and-window composition (tag
+  * both sides, union, running `last(_, ignoreNulls)` per key) is
+  * already one shuffle: that form, which this operator replaced, pays
   * for generality three times at scale —
   *
   *   1. the shuffle carries left ∪ right rows PADDED TO THE COMBINED
@@ -49,8 +50,8 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * inclusive; optional tolerance nulls matches farther than
   * `toleranceMicros` from the left time; unmatched left rows keep
   * null right columns (left outer). Among right ties at the matched
-  * (key, time) the winner is sort-unstable, same as the window form —
-  * callers wanting a specific winner pre-reduce the right side.
+  * (key, time) the winner is sort-unstable — callers wanting a
+  * specific winner pre-reduce the right side.
   */
 case class AsOfJoinPlan(
     left: LogicalPlan,
@@ -117,8 +118,7 @@ object AsOfJoinStrategy extends SparkStrategy {
   * State per partition: one buffered right row + one copied match —
   * O(1), no per-key buffering, no spill path needed. Null keys or
   * null times never match (right such rows are consumed and dropped;
-  * left ones emit unmatched), matching both the window form and SQL
-  * join null semantics.
+  * left ones emit unmatched), matching SQL join null semantics.
   */
 case class AsOfJoinExec(
     leftKeys: Seq[Expression],
@@ -174,7 +174,7 @@ case class AsOfJoinExec(
       // 0..k-1, so the trailing time slot rides in the same row. The
       // right head's evaluation is cached until the head is consumed —
       // without the cache every left row re-projects the same unmoved
-      // head, which measured ~1.6× over the window form.
+      // head, which measured ~1.6× over the union-and-window form.
       val nKeys = lKeyExprs.length
       val lGen = UnsafeProjection.create(lKeyExprs :+ lTimeExpr, lAttrs)
       val rGen = UnsafeProjection.create(rKeyExprs :+ rTimeExpr, rAttrs)

@@ -1,11 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
 
 /** Engine extension entry point (`spark.sql.extensions`): injects the
@@ -55,19 +57,44 @@ object RangeBinJoinRule {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RangeBinJoinRule(spark)
   }
+
+  /** The DataFrame entry: join `points` (timestamp `pointCol`) to
+    * `intervals` ([`startCol`, `endCol`) half-open timestamps) at a
+    * fixed bucket width of `bucketSeconds`, returning matched rows with
+    * all columns of both inputs. It plans the plain
+    * `p >= lo AND p < hi` join and applies the rule's own rewrite to
+    * it, whatever [[BinSecondsKey]] says for the session.
+    */
+  def pointInInterval(
+      points: DataFrame, intervals: DataFrame,
+      pointCol: String, startCol: String, endCol: String,
+      bucketSeconds: Long = 3600L): DataFrame = {
+    require(bucketSeconds >= 1L && bucketSeconds <= MaxBinSeconds,
+      s"bucketSeconds must be in [1, $MaxBinSeconds], got $bucketSeconds")
+    val joined = points.join(intervals,
+      col(pointCol) >= col(startCol) && col(pointCol) < col(endCol))
+    val rewritten = joined.queryExecution.analyzed match {
+      case j @ Join(l, r, Inner, Some(cond), hint) =>
+        RangeBinJoinRule(points.sparkSession)
+          .rewrite(j, Inner, l, r, cond, hint, Some(bucketSeconds * 1000000L))
+      case _ => None
+    }
+    GraftSqlShim.ofRows(points.sparkSession, rewritten.getOrElse(
+      throw new IllegalArgumentException(s"$pointCol in [$startCol, $endCol) " +
+        "is not a bucketable point-in-interval join")))
+  }
 }
 
-/** Automatic point-in-interval join rewrite — the optimizer-rule form
-  * of [[graft.core.RangeJoin.pointInInterval]].
+/** Automatic point-in-interval join rewrite.
   *
   * A SQL user writing the natural thing —
   * `FROM events e JOIN w ON e.ts >= w.lo AND e.ts < w.hi` — hands
   * Catalyst a join with NO equi key, which it can only plan as a
   * broadcast nested loop (or a cartesian product): O(points ×
-  * intervals) comparisons, the canonical 100 TB non-starter. The
-  * DataFrame helper in core.RangeJoin fixes that shape manually; this
+  * intervals) comparisons, the canonical 100 TB non-starter. This
   * rule fixes it for ANY query on the session, inside the optimizer,
-  * with no query rewrite:
+  * with no query rewrite (and, at a fixed width, for one DataFrame
+  * through [[RangeBinJoinRule.pointInInterval]]):
   *
   *   - the point side gains a bucket column `unix_micros(p) DIV w`;
   *   - the interval side explodes each interval into the buckets it
@@ -106,7 +133,7 @@ object RangeBinJoinRule {
   *
   * Reference behavior: verizon_automation_script.sh has no non-equi
   * join (Hive refuses them in the ON clause); this is north-star
-  * surface, the session-level form of core.RangeJoin.
+  * surface.
   */
 case class RangeBinJoinRule(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
@@ -189,7 +216,7 @@ case class RangeBinJoinRule(session: SparkSession)
     case _ => None
   }
 
-  private def rewrite(j: Join, jt: JoinType,
+  private[plans] def rewrite(j: Join, jt: JoinType,
                       left: LogicalPlan, right: LogicalPlan,
                       cond: Expression, hint: JoinHint,
                       fixedBinMicros: Option[Long]): Option[LogicalPlan] = {

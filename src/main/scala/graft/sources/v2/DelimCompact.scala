@@ -63,7 +63,7 @@ object DelimCompact {
       delimiter: Char = '|', quote: Int = '"'.toInt): Long = {
     val target = new HPath(tablePath)
     val conf = DelimV2.driverConf()
-    val fs = target.getFileSystem(conf)
+    val fs = DelimV2.fileSystem(target, conf)
     val m = DelimLog.readManifest(fs, target).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $tablePath — " +
@@ -183,7 +183,7 @@ object DelimCompact {
       .map { case (sub, gen, rels, i) =>
         val root = new HPath(targetStr)
         val cx = DelimV2.executorConf(confMap)
-        val fsx = root.getFileSystem(cx)
+        val fsx = DelimV2.fileSystem(root, cx)
         val outName = f"compact-$newGen-$i%05d.txt"
         val outPath = new HPath(new HPath(root, stagingName), outName)
         val out = DelimLog.create(cx, outPath, overwrite = true)
@@ -289,7 +289,7 @@ object DelimCompact {
             math.max(1, spark.sparkContext.defaultParallelism)))
           .map { case (partVals, members, i) =>
             val root = new HPath(targetStr)
-            val fsx = root.getFileSystem(DelimV2.executorConf(confMap))
+            val fsx = DelimV2.fileSystem(root, DelimV2.executorConf(confMap))
             val writer = new DelimDataWriter(
               s"$targetStr/$stagingName", f"retire-$newGen-$i%05d",
               struct, dChar, confMap, pCols, quote = qInt,

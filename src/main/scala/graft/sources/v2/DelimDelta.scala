@@ -127,7 +127,7 @@ private[v2] class DelimDeltaWrite(
     // Header-only read: the factory needs just the bloom config, not
     // the full (possibly segmented) manifest commit() re-reads anyway
     val bloomFor = {
-      val fs0 = staging.getFileSystem(DelimV2.driverConf())
+      val fs0 = DelimV2.fileSystem(staging, DelimV2.driverConf())
       DelimLog.headerBloomCols(fs0, new HPath(path))
         .filter(c => schema.fieldNames.contains(c) && !partCols.contains(c))
     }
@@ -146,7 +146,7 @@ private[v2] class DelimDeltaWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = staging.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(staging, DelimV2.driverConf())
     val target = new HPath(path)
     val deltas = messages.toSeq.map {
       case d: DelimDeltaCommit => d
@@ -201,7 +201,7 @@ private[v2] class DelimDeltaWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = staging.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(staging, DelimV2.driverConf())
     fs.delete(staging, true)
   }
 }

@@ -876,7 +876,7 @@ private[graft] object DelimLog {
       versionAsOf: Option[Long] = None): Boolean =
     paths.exists { p =>
       val hp = new HPath(p)
-      val fs = hp.getFileSystem(conf)
+      val fs = DelimV2.fileSystem(hp, conf)
       Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty).exists { st =>
         // a FILE or glob match (load("t/*.txt")) still belongs to its
         // table: probe the enclosing table ROOT — the file's directory,

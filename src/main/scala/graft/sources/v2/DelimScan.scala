@@ -770,7 +770,7 @@ class DelimScan(
         with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
         with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
       private val root = new HPath(paths.head)
-      private def fs = root.getFileSystem(DelimV2.driverConf())
+      private def fs = DelimV2.fileSystem(root, DelimV2.driverConf())
       private val splitBytes = math.max(1L, options.getLong("splitBytes",
         SparkSession.active.sessionState.conf.filesMaxPartitionBytes))
 
@@ -939,7 +939,7 @@ private[v2] class DelimCountReaderFactory(nCols: Int, confMap: Map[String, Strin
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val split = partition.asInstanceOf[DelimSplit]
     val p = new HPath(split.path)
-    val in = p.getFileSystem(DelimV2.executorConf(confMap)).open(p)
+    val in = DelimV2.fileSystem(p, DelimV2.executorConf(confMap)).open(p)
     new PartitionReader[InternalRow] {
       private var done = false
       private var row: InternalRow = _
@@ -1039,7 +1039,7 @@ private[v2] class DelimReaderFactory(
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val split = partition.asInstanceOf[DelimSplit]
     val p = new HPath(split.path)
-    val fs = p.getFileSystem(DelimV2.executorConf(confMap))
+    val fs = DelimV2.fileSystem(p, DelimV2.executorConf(confMap))
     // executor-side BLOOM gate: when the split carries probes and the
     // file's sidecar proves no equality key can match, the task never
     // opens the data bytes (DelimBloom — the footer-bloom move)

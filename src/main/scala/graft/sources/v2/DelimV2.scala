@@ -77,7 +77,7 @@ class DelimSource extends TableProvider with DataSourceRegister {
     // opaque text, verizon_automation_script.sh:220)
     val recorded = DelimV2.paths(options).iterator.flatMap { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(conf)
+      val fs = DelimV2.fileSystem(hp, conf)
       Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
         .filter(_.isDirectory).flatMap { st =>
           val m = vAsOf match {
@@ -97,7 +97,7 @@ class DelimSource extends TableProvider with DataSourceRegister {
         else -1
       val files = DelimV2.listSnapshot(DelimV2.paths(options), conf, vAsOf).files
       val nCols = files.map(_.status).find(_.getLen > 0).map { f =>
-        val fs = f.getPath.getFileSystem(conf)
+        val fs = DelimV2.fileSystem(f.getPath, conf)
         val in = fs.open(f.getPath)
         try {
           val line = new LineSplitReader(in, 0L, f.getLen, f.getLen, framing).nextLine()
@@ -218,7 +218,7 @@ private[v2] class DelimTable(tableSchema: StructType, options: CaseInsensitiveSt
 
   private def tableRoot: HPath = new HPath(DelimV2.paths(options).head)
   private def rootFs: org.apache.hadoop.fs.FileSystem =
-    tableRoot.getFileSystem(DelimV2.driverConf())
+    DelimV2.fileSystem(tableRoot, DelimV2.driverConf())
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     tableSchema.nonEmpty && filters.nonEmpty &&
@@ -434,7 +434,7 @@ private[graft] object DelimV2 {
         "mutually exclusive")
     tag.foreach { name =>
       val root = new HPath(paths(options).head)
-      val fs = root.getFileSystem(driverConf())
+      val fs = fileSystem(root, driverConf())
       val m = DelimLog.readManifest(fs, root).getOrElse(
         throw new IllegalArgumentException(
           s"graft-delim: tagAsOf requires a manifest-bearing table, " +
@@ -447,7 +447,7 @@ private[graft] object DelimV2 {
     }
     v.orElse(t.map { ts =>
       val root = new HPath(paths(options).head)
-      val fs = root.getFileSystem(driverConf())
+      val fs = fileSystem(root, driverConf())
       val candidates = DelimLog.retainedVersions(fs, root).flatMap { g =>
         DelimLog.readManifestFile(fs, new HPath(root, s"${DelimLog.ManifestFile}.v$g"))
           .map(m => (g, m.ts))
@@ -475,6 +475,31 @@ private[graft] object DelimV2 {
 
   def driverConf(): Configuration =
     withLocalFs(SparkSession.active.sessionState.newHadoopConf())
+
+  /** graft-delim's `FileSystem` for `p`, at every site that lists,
+    * opens, renames or deletes table files. Hadoop's `FileSystem` cache
+    * ignores the conf, so on `file://` `p.getFileSystem(conf)` returns
+    * whatever the JVM's first `file://` lookup asked for — a
+    * checksummed, `chmod`-forking stock `LocalFileSystem` if that
+    * caller lacked the session's `fs.file.impl`. On `file://` this is
+    * one shared [[graft.core.BareLocalFileSystem]] whatever the cache
+    * holds; other schemes go through the cache. */
+  private[v2] def fileSystem(p: HPath, conf: Configuration): FileSystem = {
+    val scheme = Option(p.toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme == "file") localFs else p.getFileSystem(conf)
+  }
+
+  /** The one `file://` instance [[fileSystem]] hands out, built once
+    * per JVM (the sites run on every statement), carrying the session's
+    * pair of local filesystem bindings in its conf. */
+  private lazy val localFs: FileSystem = {
+    val c = withLocalFs(new Configuration())
+    c.set("fs.file.impl", classOf[graft.core.BareLocalFileSystem].getName)
+    val fs = new graft.core.BareLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), c)
+    fs
+  }
 
   /** `conf`, or a copy of it, binding `FileContext`'s `file` scheme to
     * [[graft.core.BareLocalFs]] for graft-delim's own I/O, whatever the
@@ -886,7 +911,7 @@ private[graft] object DelimV2 {
     val rootKeySets = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     val files = paths.flatMap { p =>
       val hp = new HPath(p)
-      val fs = hp.getFileSystem(conf)
+      val fs = fileSystem(hp, conf)
       val matched = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
       if (versionAsOf.isDefined && !matched.exists(_.isDirectory))
         throw new IllegalArgumentException(

@@ -255,7 +255,7 @@ private[v2] class DelimWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val hc = DelimV2.driverConf()
-    staging.getFileSystem(hc).mkdirs(staging)
+    DelimV2.fileSystem(staging, hc).mkdirs(staging)
     val confMap = DelimV2.shippableConf(hc)
     new DelimWriterFactory(schema, delim, staging.toString, confMap, partCols, quote,
       genToken = queryId.replace("-", "").take(8), bloomFor = bloomFor)
@@ -272,7 +272,7 @@ private[v2] class DelimWrite(
     * overwrite deleted.
     */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = staging.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(staging, DelimV2.driverConf())
     val target = new HPath(path)
     val newFiles: Seq[DelimStagedFile] = messages.toSeq.flatMap {
       case DelimCommit(staged, _) => staged
@@ -352,7 +352,7 @@ private[v2] class DelimWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = staging.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(staging, DelimV2.driverConf())
     fs.delete(staging, true)
   }
 
@@ -379,13 +379,13 @@ private[v2] class DelimWrite(
       // protocol documents (without it the next epoch's claim would
       // collide forever)
       DelimLog.recoverManifest(
-        staging.getFileSystem(DelimV2.driverConf()), new HPath(path))
+        DelimV2.fileSystem(staging, DelimV2.driverConf()), new HPath(path))
 
       override def createStreamingWriterFactory(
           info: PhysicalWriteInfo)
           : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
         val hc = DelimV2.driverConf()
-        staging.getFileSystem(hc).mkdirs(staging)
+        DelimV2.fileSystem(staging, hc).mkdirs(staging)
         val confMap = DelimV2.shippableConf(hc)
         val stagingDir = staging.toString
         val s = schema; val d = delim; val pc = partCols; val q = quote
@@ -399,7 +399,7 @@ private[v2] class DelimWrite(
 
       override def commit(epochId: Long,
           messages: Array[WriterCommitMessage]): Unit = {
-        val fs = staging.getFileSystem(DelimV2.driverConf())
+        val fs = DelimV2.fileSystem(staging, DelimV2.driverConf())
         val target = new HPath(path)
         val prevM = DelimLog.snapshotManifest(fs, target, fs.getConf)
         // the epoch promotes its OWN files, outside the commit's
@@ -435,7 +435,7 @@ private[v2] class DelimWrite(
 
       override def abort(epochId: Long,
           messages: Array[WriterCommitMessage]): Unit = {
-        val fs = staging.getFileSystem(DelimV2.driverConf())
+        val fs = DelimV2.fileSystem(staging, DelimV2.driverConf())
         messages.foreach {
           case DelimCommit(staged, _) =>
             staged.foreach(sf => fs.delete(new HPath(sf.path), false))
@@ -835,7 +835,7 @@ private[v2] class DelimDataWriter(
     val c = DelimV2.executorConf(confMap)
     staged.foreach { sf =>
       val p = new HPath(sf.path)
-      p.getFileSystem(c).delete(p, false)
+      DelimV2.fileSystem(p, c).delete(p, false)
     }
   }
 

@@ -123,7 +123,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           "graft-delim catalog: LOCATION or OPTIONS(path ...) required")))
     val props = opts + ("path" -> path)
     val hp = new HPath(path)
-    hp.getFileSystem(DelimV2.driverConf()).mkdirs(hp)
+    DelimV2.fileSystem(hp, DelimV2.driverConf()).mkdirs(hp)
     tables.put(key(ident), (schema, partCols, props))
     loadTable(ident)
   }
@@ -160,7 +160,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     def commitSchemaChange(change: StructType => StructType,
         touched: String): Unit = {
       val root = new HPath(props("path"))
-      val fs = root.getFileSystem(DelimV2.driverConf())
+      val fs = DelimV2.fileSystem(root, DelimV2.driverConf())
       DelimLog.readManifest(fs, root).foreach { m =>
         m.tombstones.foreach { case (_, enc) =>
           val refs = DelimV2.tombstoneFilter(enc, schema).references
@@ -396,7 +396,7 @@ private[v2] class DelimPartitionedTable(
   }
 
   private def root = new HPath(DelimV2.paths(options).head)
-  private def fs = root.getFileSystem(DelimV2.driverConf())
+  private def fs = DelimV2.fileSystem(root, DelimV2.driverConf())
 
   override def partitionSchema(): StructType =
     StructType(partCols.map(c => tableSchema(c)))

@@ -94,7 +94,7 @@ private[v2] class OptimizeProcedure(cat: GraftCatalog)
     val root = cat.tableRootOf(tableArg)
     val target = if (input.isNullAt(1)) 0L else input.getLong(1)
     val minFiles = if (input.isNullAt(2)) 2 else input.getInt(2)
-    val fs = root.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(root, DelimV2.driverConf())
     val before = DelimLog.readManifest(fs, root).map(_.files.size).getOrElse(0)
     // the TABLE's line format, not the defaults: tombstone retirement
     // rewrites through the parse path, and parsing a ','-delimited
@@ -131,7 +131,7 @@ private[v2] class ExpireSnapshotsProcedure(cat: GraftCatalog)
     val retain = if (input.isNullAt(1)) 1 else input.getInt(1)
     require(retain >= 1,
       s"graft-delim: expire_snapshots retain must be >= 1, got $retain")
-    val fs = root.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(root, DelimV2.driverConf())
     val m = DelimLog.readManifest(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $root"))
@@ -161,7 +161,7 @@ private[v2] class SnapshotsProcedure(cat: GraftCatalog)
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val root = cat.tableRootOf(input.getUTF8String(0).toString)
-    val fs = root.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(root, DelimV2.driverConf())
     val gens = DelimLog.retainedVersions(fs, root)
     if (gens.isEmpty)
       throw new IllegalArgumentException(
@@ -216,7 +216,7 @@ private[v2] class RemoveOrphansProcedure(cat: GraftCatalog)
     require(grace >= 0L,
       s"graft-delim: remove_orphans older_than_ms must be >= 0, got $grace")
     val cutoff = System.currentTimeMillis() - grace
-    val fs = root.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(root, DelimV2.driverConf())
     val m = DelimLog.readManifest(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $root — remove_orphans " +
@@ -290,7 +290,7 @@ private[v2] class RecoverManifestProcedure(cat: GraftCatalog)
 
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val root = cat.tableRootOf(input.getUTF8String(0).toString)
-    val fs = root.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(root, DelimV2.driverConf())
     val recovered = DelimLog.recoverManifest(fs, root)
     GraftProcedures.single(GraftProcedures.SummaryScan(
       StructType.fromDDL("recovered_generation BIGINT"),
@@ -326,7 +326,7 @@ private[v2] class CreateTagProcedure(cat: GraftCatalog)
       !tag.exists(_.isWhitespace),
       s"graft-delim: tag names must be non-empty with no ',', ':' or " +
         s"whitespace, got '$tag'")
-    val fs = root.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(root, DelimV2.driverConf())
     val m = DelimLog.readManifest(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $root"))
@@ -365,7 +365,7 @@ private[v2] class DropTagProcedure(cat: GraftCatalog)
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val root = cat.tableRootOf(input.getUTF8String(0).toString)
     val tag = input.getUTF8String(1).toString.trim
-    val fs = root.getFileSystem(DelimV2.driverConf())
+    val fs = DelimV2.fileSystem(root, DelimV2.driverConf())
     val m = DelimLog.readManifest(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-delim: no committed manifest at $root"))

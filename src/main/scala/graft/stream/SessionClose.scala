@@ -2,12 +2,8 @@ package graft.stream
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** Watermark-driven session CLOSE via `flatMapGroupsWithState` with
-  * `GroupStateTimeout.EventTimeTimeout` (SURVEY.md §2b X6 — the state
-  * machine tier SessionTracker's NoTimeout summary stops short of).
+/** The watermark-driven session-close machine's types and per-batch
+  * fold; [[SessionCloseTws]] runs it on `transformWithState`.
   *
   * Semantics: per-user gap sessions, identical to
   * [[EventWindows.sessions]] (inclusive gap boundary — an event at
@@ -16,11 +12,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   *  - in a data batch, when a later event from the same user arrives
   *    more than `gap` after the session's end (the successor close), or
-  *  - on `state.hasTimedOut`, when the WATERMARK passes the session's
-  *    end + gap (the timeout close) — fired by the engine with no input
-  *    for the key, which on a bounded AvailableNow run requires the
-  *    trailing no-data micro-batch
-  *    (`StreamRun.runAvailableNowUpdateObserved(..., noDataBatch = true)`).
+  *  - when the WATERMARK passes the session's end + gap (the timeout
+  *    close) — fired by the engine with no input for the key, which on
+  *    a bounded AvailableNow run requires the trailing no-data
+  *    micro-batch.
   *
   * A session whose timeout the final watermark (max event time −
   * lateness) never passes stays open in the state store and is never
@@ -30,8 +25,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale shape: state is one open session per active user — O(distinct
   * users within the gap+lateness horizon), NOT O(events) — and the
   * engine prunes timed-out entries every watermark advance, so a
-  * year-long run holds only the live tail. Emission is distributed
-  * (per-key handler in the state-store partition), nothing driver-side.
+  * year-long run holds only the live tail.
   */
 object SessionClose {
 
@@ -58,13 +52,11 @@ object SessionClose {
     Closed(fromMicros(s.startUs), userId, s.nEvents,
       math.round(s.sumValue * 100).toDouble / 100)
 
-  /** The per-batch session fold shared VERBATIM by both state-API tiers
-    * (flatMapGroupsWithState here, StatefulProcessor in
-    * [[SessionCloseTws]]) — one definition is what makes their
-    * byte-identical-emissions certification meaningful. Restores
-    * event-time order (the batch iterator has no ordering contract —
-    * bounded per user per trigger), closes every session a successor
-    * event proves expired, and returns the still-open tail.
+  /** The per-batch session fold of every [[SessionCloseTws]] processor
+    * (plain, evolved and bootstrapped). Restores event-time order (the
+    * batch iterator has no ordering contract — bounded per user per
+    * trigger), closes every session a successor event proves expired,
+    * and returns the still-open tail.
     */
   private[stream] def foldBatch(
       userId: Long, prior: Option[Open], batch: Iterator[Event],
@@ -92,40 +84,5 @@ object SessionClose {
       }
     }
     (closed.reverse, cur.get)
-  }
-
-  /** `events` must already carry a watermark on `ts` (EventTimeTimeout
-    * requires one); `gapMinutes` is the inactivity gap.
-    */
-  def close(events: Dataset[Event], gapMinutes: Int): Dataset[Closed] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    val gapMs = gapMinutes * 60L * 1000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Open, Closed](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[Open]) =>
-          if (state.hasTimedOut) {
-            // watermark passed session end + gap: the session can never
-            // grow again (anything that would extend it is beyond-
-            // watermark late and dropped upstream) — final emission
-            val s = state.get
-            state.remove()
-            Iterator.single(emit(userId, s))
-          } else {
-            val (closed, s) = foldBatch(userId, state.getOption, batch, gapUs)
-            state.update(s)
-            // timeout when the watermark passes session end + gap. The
-            // engine compares in MILLISECONDS (floor of the µs event
-            // time), mirrored in the oracle via epoch_ms. The max-guard
-            // only defends the (event-time-ordered sources: impossible)
-            // case of a session already older than the watermark —
-            // setTimeoutTimestamp rejects values at/below it.
-            val timeoutMs = Math.floorDiv(s.lastUs, 1000L) + gapMs
-            state.setTimeoutTimestamp(
-              math.max(timeoutMs, state.getCurrentWatermarkMs() + 1))
-            closed.iterator
-          }
-      }
   }
 }

@@ -7,16 +7,13 @@ import org.apache.spark.sql.streaming.{
 
 import SessionClose.{Closed, Event, Open}
 
-/** The SAME session-close state machine as [[SessionClose]], on Spark
-  * 4's `transformWithState` API (`StatefulProcessor` + typed
-  * `ValueState` + explicit event-time TIMERS) — the successor to
-  * `flatMapGroupsWithState` and the API new stateful pipelines should
-  * target. Implementing the identical semantics on both tiers and
-  * certifying them under the SAME DuckDB oracle is the point: the
-  * round-10 query `events_session_tws_stream` must emit byte-identical
-  * sessions to `events_session_timeout_stream`.
+/** The session-close state machine ([[SessionClose]]: semantics, types
+  * and the per-batch fold) on Spark 4's `transformWithState` API
+  * (`StatefulProcessor` + typed `ValueState` + explicit event-time
+  * TIMERS) — the successor to the `GroupState` API and the API new
+  * stateful pipelines should target.
   *
-  * What the new API changes operationally, all exercised here:
+  * What the API brings operationally, all exercised here:
   *  - state is named and typed (`getValueState("session", …)`) instead
   *    of one opaque blob, so schema evolution is per-variable;
   *  - timeouts are first-class TIMERS (`registerTimer`/`deleteTimer`/
@@ -27,14 +24,16 @@ import SessionClose.{Closed, Event, Open}
   *  - the operator REQUIRES the RocksDB state store provider, so this
   *    queries riding it certify the RocksDB provider as a side effect.
   *
-  * Scale shape identical to [[SessionClose]]: one open session + one
-  * timer per active user, pruned as the watermark advances.
+  * Scale shape: one open session + one timer per active user, pruned
+  * as the watermark advances.
   */
 object SessionCloseTws {
 
-  /** Arm a session's close timer 1 ms past its [[SessionClose]] timeout:
-    * that tier times out strictly below the watermark, a timer fires at
-    * or below it, so both close a session on the same watermark. */
+  /** Arm a session's close timer 1 ms past its timeout, end + gap in
+    * floored milliseconds: the oracle times a session out strictly
+    * below the watermark, a timer fires at or below it. The max-guard
+    * only defends the (event-time-ordered sources: impossible) case of
+    * a session already older than the watermark. */
   private def armCloseTimer(handle: StatefulProcessorHandle, lastUs: Long,
       gapMs: Long, timerValues: TimerValues): Unit =
     handle.registerTimer(math.max(Math.floorDiv(lastUs, 1000L) + gapMs,
@@ -54,15 +53,11 @@ object SessionCloseTws {
     override def handleInputRows(
         userId: Long, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[Closed] = {
-      // the session fold is SessionClose.foldBatch — one definition for
-      // both state-API tiers, so their identical-emissions certification
-      // compares the APIs, not two implementations
       val prior = if (session.exists()) Some(session.get()) else None
       val (closed, s) = SessionClose.foldBatch(userId, prior, rows, gapUs)
       session.update(s)
       // one live timer per key: drop whatever was scheduled for the
-      // superseded session end, then arm the new close time (same
-      // max-guard as SessionClose — ordered sources never hit it)
+      // superseded session end, then arm the new close time
       getHandle.listTimers().foreach(getHandle.deleteTimer)
       armCloseTimer(getHandle, s.lastUs, gapMs, timerValues)
       closed.iterator

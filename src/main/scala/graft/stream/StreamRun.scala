@@ -291,7 +291,7 @@ object StreamRun {
       * state and built-in update-mode aggs alike), so the trailing
       * no-data batch is result-neutral — pure fixed cost. A caller whose
       * state handler emits on EVENT-TIME TIMEOUT (EventTimeTimeout
-      * flatMapGroupsWithState, transformWithState timers) MUST pass
+      * `GroupState`, transformWithState timers) MUST pass
       * `noDataBatch = true`: its final emissions fire from watermark
       * advancement after the backlog drains, which only the no-data
       * batch delivers on a bounded run.

@@ -103,13 +103,14 @@ object Stress {
           s"streamed_rows=${st.map(_.inputRows).sum}")
     }
 
-    // The EventTimeTimeout session machine over `ev` in 8 chunks,
-    // trailing no-data batch included (it fires the final timeouts).
+    // The transformWithState session machine (RocksDB, the session's
+    // state store provider) over `ev` in 8 chunks, trailing no-data
+    // batch included (it fires the final timers).
     def sessionCloseRun(ev: DataFrame, root: String) = {
       import spark.implicits._
       val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 8)
       StreamRun.runAvailableNow(
-        graft.stream.SessionClose.close(
+        graft.stream.SessionCloseTws.close(
           src.select(col("user_id"), col("ts"), col("value"))
             .withWatermark("ts", "1 hour")
             .as[graft.stream.SessionClose.Event], gapMinutes = 30).toDF(),
@@ -200,7 +201,7 @@ object Stress {
     // Trigger-granularity sweep at fixed volume: state must shrink as
     // triggers get finer (it tracks the arrival window), while the
     // streamed total stays put — the orthogonal axis to the amp loop.
-    // 6. EventTimeTimeout session machine under amplification (round-10
+    // 6. Session-close machine under amplification (round-10
     // addition): users ×amp over the same calendar, so OPEN-session
     // state must track the amplified active-user population of the
     // arrival window — never the stream's history — and the watermark
@@ -223,7 +224,7 @@ object Stress {
     // 7. HOT-KEY session stress (round-10 verdict wart #1): the uniform
     // sweeps amplify users evenly, so no single task ever concentrates a
     // per-trigger batch — exactly the shape foldBatch's per-key
-    // materialize+sort (SessionClose.scala:72) would be hurt by. Here
+    // materialize+sort (SessionClose.foldBatch) would be hurt by. Here
     // user −1 absorbs ~1% of the amplified stream (hotPermille = 10), so
     // every trigger funnels that user's whole slice (≈ rows/chunks/100)
     // through ONE task of the state-store stage. max_task_s against the
@@ -373,76 +374,6 @@ object Stress {
       }
     }
 
-    // Native as-of operator vs the union-and-window form: identical
-    // results required (checksummed), wall/shuffle/straggler columns
-    // quantify what the custom SparkPlan buys. Amplified copies get
-    // disjoint user spaces, so out_rows must scale exactly ×amp.
-    for (amp <- amps if sections("asofcmp")) {
-      val evA = Amplify.events(ev0, amp)
-      val left = evA.select("event_id", "user_id", "ts")
-      val right = evA.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("ts").as("matched"))
-      def summarize(df: DataFrame) = df.agg(
-        count(lit(1)).as("n"),
-        sum(hash(col("event_id"), unix_seconds(col("matched")))).as("chk"))
-      def native(l: DataFrame, r: DataFrame, pay: Seq[String]) = {
-        val df = summarize(graft.plans.AsOfJoinNative.join(
-          l, r, "user_id", "p_user", "ts", "p_ts", pay))
-        require(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode).contains("AsOfJoin"),
-          "native as-of operator missing from stress plan")
-        df
-      }
-      def window(l: DataFrame, r: DataFrame, pay: Seq[String]) =
-        summarize(graft.core.AsOfJoin.latestPrior(
-          l, r, "user_id", "p_user", "ts", "p_ts", pay))
-      // UNTIMED warmup of both pipelines: whichever query runs first in
-      // a fresh JVM absorbs the scan/shuffle/sort codegen+JIT warmup
-      // (measured ~2× on the first run) — the timed runs below compare
-      // the OPERATORS, not the compile order
-      native(left, right, Seq("matched")).head
-      window(left, right, Seq("matched")).head
-      var nativeRow: org.apache.spark.sql.Row = null
-      run("asof_native", amp, ev0.count() * amp) {
-        nativeRow = native(left, right, Seq("matched")).head
-        (nativeRow.getLong(0), "")
-      }
-      run("asof_window", amp, ev0.count() * amp) {
-        val row = window(left, right, Seq("matched")).head
-        require(row == nativeRow,
-          s"native/window as-of disagree: native=$nativeRow window=$row")
-        (row.getLong(0), "")
-      }
-      // WIDE shape: full left schema, 3 payload columns — the padded
-      // union now ships every left row with 3 null payload slots plus
-      // every right row with 5 null left slots, and the window form
-      // runs 3 running-last frames; the native merge is indifferent
-      val leftW = evA
-      val rightW = evA.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("ts").as("matched"), col("value").as("p_value"),
-          col("event_id").as("p_event"))
-      def summarizeW(df: DataFrame) = df.agg(
-        count(lit(1)).as("n"),
-        sum(hash(col("event_id"), unix_seconds(col("matched")),
-          col("p_value"), col("p_event"))).as("chk"))
-      val payW = Seq("matched", "p_value", "p_event")
-      var nativeW: org.apache.spark.sql.Row = null
-      run("asof_native_wide", amp, ev0.count() * amp) {
-        nativeW = summarizeW(graft.plans.AsOfJoinNative.join(
-          leftW, rightW, "user_id", "p_user", "ts", "p_ts", payW)).head
-        (nativeW.getLong(0), "")
-      }
-      run("asof_window_wide", amp, ev0.count() * amp) {
-        val row = summarizeW(graft.core.AsOfJoin.latestPrior(
-          leftW, rightW, "user_id", "p_user", "ts", "p_ts", payW)).head
-        require(row == nativeW,
-          s"native/window wide as-of disagree: native=$nativeW window=$row")
-        (row.getLong(0), "")
-      }
-    }
-
     // Native as-of under a HOT KEY (round-14 verdict ask #1): user −1
     // owns ~10% of the amplified stream on BOTH sides (hotPermille =
     // 100), so the unsalted operator must funnel that user's whole
@@ -466,7 +397,8 @@ object Stress {
         left, right, "user_id", "p_user", "ts", "p_ts", Seq("matched")))
       def salted() = summarize(graft.plans.AsOfJoinNative.joinSkewSalted(
         left, right, "user_id", "p_user", "ts", "p_ts", Seq("matched")))
-      // untimed warmup of both pipelines (JIT/codegen, same as asofcmp)
+      // untimed warmup of both pipelines (JIT/codegen): whichever runs
+      // first in a fresh JVM absorbs it (measured ~2× on the first run)
       plain().head; salted().head
       val hotRows = left.filter(col("user_id") === -1L).count()
       var plainRow: org.apache.spark.sql.Row = null

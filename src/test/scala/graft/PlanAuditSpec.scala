@@ -254,10 +254,14 @@ class PlanAuditSpec extends SparkFunSuite {
   }
 
   test("forward as-of is the one-shuffle union-and-window plan, not a join") {
+    // the union-and-window form is retired: the one shuffle per side
+    // now feeds the native merge exec, and no other join, union or
+    // window may appear
     val p = plan("asof_join_forward")
-    assert(p.contains("Union"), p)
-    assert(p.contains("Window"), p)
-    assert(!p.contains("Join"), s"as-of must not plan a join operator:\n$p")
+    assert(p.contains("AsOfJoin"), p)
+    for (op <- Seq("Union", "Window", "BroadcastNestedLoopJoin",
+        "CartesianProduct", "SortMergeJoin"))
+      assert(!p.contains(op), s"as-of must not plan $op:\n$p")
   }
 
   test("sparse cosine candidates come from the postings self-join, never all pairs") {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.core.AsOfJoin
+import graft.plans.AsOfJoinNative
 import graft.ext.{Dedup, Funnel, FuzzyJoin, SparseSim, TextStats}
 
 /** Invariants for the round-6 library additions: the incremental
@@ -74,7 +74,7 @@ class Round6Spec extends SparkFunSuite {
     val right = Seq((10L, 100L, "at100"), (10L, 200L, "at200"), (20L, 40L, "at40"))
       .toDF("rk", "rt", "v")
       .select(col("rk"), col("rt").cast("timestamp").as("rt"), col("v"))
-    val got = AsOfJoin.earliestFollowing(left, right, "k", "rk", "t", "rt", Seq("v"))
+    val got = AsOfJoinNative.join(left, right, "k", "rk", "t", "rt", Seq("v"), forward = true)
       .select("lid", "v").collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(got == Map(
       1L -> Some("at100"), // equal timestamps match (inclusive >=)

@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkFunSuite
+import graft.plans.AsOfJoinNative
 import java.sql.Timestamp
 
 class AsOfJoinSpec extends SparkFunSuite {
@@ -22,7 +23,7 @@ class AsOfJoinSpec extends SparkFunSuite {
       (3L, ts("2024-01-01 12:00:00"), "t5")  // no quotes for key → null
     ).toDF("t_key", "t_ts", "trade_id")
 
-    val got = AsOfJoin.latestPrior(trades, quotes, "t_key", "q_key", "t_ts", "q_ts", Seq("price"))
+    val got = AsOfJoinNative.join(trades, quotes, "t_key", "q_key", "t_ts", "q_ts", Seq("price"))
       .collect().map(r => r.getString(2) -> Option(r.get(3))).toMap
     assert(got("t1") == Some(100.0))
     assert(got("t2") == Some(110.0))
@@ -40,8 +41,8 @@ class AsOfJoinSpec extends SparkFunSuite {
       (1L, ts("2024-01-01 11:00:00"), "boundary"), // exactly 1h → kept (<=)
       (1L, ts("2024-01-01 11:00:01"), "stale")    // 1h1s → nulled
     ).toDF("t_key", "t_ts", "trade_id")
-    val got = AsOfJoin.latestPriorWithin(
-        trades, quotes, "t_key", "q_key", "t_ts", "q_ts", Seq("price"), 3600L)
+    val got = AsOfJoinNative.join(trades, quotes, "t_key", "q_key", "t_ts", "q_ts",
+        Seq("price"), toleranceSeconds = Some(3600L))
       .collect().map(r => r.getString(2) -> Option(r.get(3))).toMap
     assert(got("fresh") == Some(100.0))
     assert(got("boundary") == Some(100.0))
@@ -54,7 +55,7 @@ class AsOfJoinSpec extends SparkFunSuite {
       .select(org.apache.spark.sql.functions.col("o_custkey"),
         org.apache.spark.sql.functions.col("o_orderdate"),
         org.apache.spark.sql.functions.col("o_orderdate").as("matched"))
-    val joined = AsOfJoin.latestPrior(ev, o, "user_id", "o_custkey", "ts", "o_orderdate", Seq("matched"))
+    val joined = AsOfJoinNative.join(ev, o, "user_id", "o_custkey", "ts", "o_orderdate", Seq("matched"))
     assert(joined.count() == ev.count())
   }
 }

@@ -2,6 +2,7 @@ package graft.core
 
 import graft.SparkFunSuite
 import graft.ext.{Dedup, Multimodal, SimSearch}
+import graft.plans.AsOfJoinNative
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -20,7 +21,7 @@ class EdgeCasesSpec extends SparkFunSuite {
     ).toDF("k", "qts", "qid")
       .withColumn("matched_time", col("qts"))
     val trades = Seq((1L, ts("2024-01-01 10:30:00"), "t")).toDF("k2", "tts", "tid")
-    val got = AsOfJoin.latestPrior(trades, quotes, "k2", "k", "tts", "qts", Seq("matched_time"))
+    val got = AsOfJoinNative.join(trades, quotes, "k2", "k", "tts", "qts", Seq("matched_time"))
       .head
     // the payload that is a function of (key, time) is stable under ties
     assert(got.getTimestamp(3) == ts("2024-01-01 10:00:00"))

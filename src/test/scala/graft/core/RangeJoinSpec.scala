@@ -3,6 +3,7 @@ package graft.core
 import java.sql.Timestamp
 
 import graft.SparkFunSuite
+import graft.plans.RangeBinJoinRule.pointInInterval
 
 class RangeJoinSpec extends SparkFunSuite {
   import spark.implicits._
@@ -24,20 +25,20 @@ class RangeJoinSpec extends SparkFunSuite {
   ).toDF("wid", "w_start", "w_end")
 
   test("half-open semantics: start in, end out, empty interval dropped") {
-    val got = RangeJoin.pointInInterval(points, intervals, "t", "w_start", "w_end")
+    val got = pointInInterval(points, intervals, "t", "w_start", "w_end")
       .select("id", "wid").as[(Long, Long)].collect().toSet
     assert(got == Set((2L, 10L), (3L, 10L), (5L, 20L)))
   }
 
   test("each match appears exactly once despite interval bucket expansion") {
-    val got = RangeJoin.pointInInterval(points, intervals, "t", "w_start", "w_end",
+    val got = pointInInterval(points, intervals, "t", "w_start", "w_end",
       bucketSeconds = 600L) // 24 buckets per interval
     assert(got.count() == 3)
     assert(got.select("id", "wid").distinct().count() == 3)
   }
 
   test("plans as an equi join on the bucket key, not a nested loop") {
-    val plan = RangeJoin.pointInInterval(points, intervals, "t", "w_start", "w_end")
+    val plan = pointInInterval(points, intervals, "t", "w_start", "w_end")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
@@ -45,7 +46,7 @@ class RangeJoinSpec extends SparkFunSuite {
   test("interval crossing a bucket boundary matches points in both buckets") {
     val iv = Seq((1L, ts("2024-01-01 01:30:00.0"), ts("2024-01-01 02:30:00.0")))
       .toDF("wid", "w_start", "w_end")
-    val got = RangeJoin.pointInInterval(points, iv, "t", "w_start", "w_end")
+    val got = pointInInterval(points, iv, "t", "w_start", "w_end")
       .select("id").as[Long].collect().toSet
     assert(got == Set(1L, 2L))
   }

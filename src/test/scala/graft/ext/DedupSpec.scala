@@ -174,9 +174,53 @@ class DedupSpec extends SparkFunSuite {
     val first = run()
     assert(first._2.iters > 1 && first._2.converged)
     val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val second = run()
-    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0 == 0)
+    val (second, compiled) = compiledDuring(run())
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0 == 0,
+      s"classes compiled during the second call: ${compiled.mkString("; ")}")
     assert(second == first)
+  }
+
+  /** `body`'s result and one line per class Janino compiled while it ran,
+    * anywhere in the JVM (the compile counter's scope): Spark's
+    * `CodeGenerator` logs each compiled source at DEBUG, so its logger
+    * is raised to DEBUG, detached from the console, for `body` only. */
+  private def compiledDuring[A](body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val prevLevel = ctx.getConfiguration.getLoggerConfig(name).getLevel
+    val sources = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(
+        "compiled-classes", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.DEBUG) sources.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    Configurator.setLevel(name, Level.DEBUG)
+    val lc = ctx.getConfiguration.getLoggerConfig(name)
+    val prevAdditive = lc.isAdditive
+    lc.setAdditive(false)
+    lc.addAppender(appender, Level.DEBUG, null)
+    ctx.updateLoggers()
+    try {
+      val r = body
+      // each source compacted onto one line: its class names, then its
+      // body with the line-number gutters and indentation squeezed out
+      (r, sources.toArray(Array.empty[String]).toSeq.map { src =>
+        val names = "class (\\w+)".r.findAllMatchIn(src).map(_.group(1))
+          .toSeq.distinct.mkString("/")
+        val code = src.replaceAll("/\\* \\d+ \\*/", " ").replaceAll("\\s+", " ").trim
+        s"$names (${src.count(_ == '\n')} lines): ${code.take(1500)}"
+      })
+    } finally {
+      lc.removeAppender(appender.getName)
+      lc.setAdditive(prevAdditive)
+      Configurator.setLevel(name, prevLevel)
+      appender.stop()
+    }
   }
 
   test("connectedComponentsWithStats: concurrent calls of different loop widths keep their own results") {

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkFunSuite
-import graft.core.{AsOfJoin, Tables}
+import graft.core.Tables
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -31,9 +31,12 @@ class AsOfJoinNativeSpec extends SparkFunSuite {
     ).toDF("t_key", "t_ts", "trade_id")
     val native = AsOfJoinNative.join(trades, quotes,
       "t_key", "q_key", "t_ts", "q_ts", Seq("price"))
-    val window = AsOfJoin.latestPrior(trades, quotes,
+    val reference = AsOfReference.join(trades, quotes,
       "t_key", "q_key", "t_ts", "q_ts", Seq("price"))
-    assert(sortedRows(native) == sortedRows(window))
+    assert(sortedRows(native) == sortedRows(reference))
+    assert(sortedRows(native) == Seq("[1,2024-01-01 09:00:00.0,t3,null]",
+      "[1,2024-01-01 10:30:00.0,t1,100.0]", "[1,2024-01-01 11:00:00.0,t2,110.0]",
+      "[2,2024-01-01 12:00:00.0,t4,200.0]", "[3,2024-01-01 12:00:00.0,t5,null]"))
   }
 
   test("nearest mode: min |Δt| wins, equidistant tie takes the prior row") {
@@ -121,10 +124,10 @@ class AsOfJoinNativeSpec extends SparkFunSuite {
         col("o_orderdate").as("matched"))
     val native = AsOfJoinNative.join(ev, o,
       "user_id", "o_custkey", "ts", "o_orderdate", Seq("matched"))
-    val window = AsOfJoin.latestPrior(ev, o,
+    val reference = AsOfReference.join(ev, o,
       "user_id", "o_custkey", "ts", "o_orderdate", Seq("matched"))
     assert(native.count() == ev.count())
-    assert(sortedRows(native) == sortedRows(window))
+    assert(sortedRows(native) == sortedRows(reference))
   }
 
   test("native == window form on the fixture (forward)") {
@@ -136,9 +139,9 @@ class AsOfJoinNativeSpec extends SparkFunSuite {
         col("ts").as("next_purchase"))
     val native = AsOfJoinNative.join(clicks, purchases,
       "user_id", "p_user", "ts", "p_ts", Seq("next_purchase"), forward = true)
-    val window = AsOfJoin.earliestFollowing(clicks, purchases,
-      "user_id", "p_user", "ts", "p_ts", Seq("next_purchase"))
-    assert(sortedRows(native) == sortedRows(window))
+    val reference = AsOfReference.join(clicks, purchases,
+      "user_id", "p_user", "ts", "p_ts", Seq("next_purchase"), forward = true)
+    assert(sortedRows(native) == sortedRows(reference))
   }
 
   test("tolerance nulls matches beyond the bound, boundary inclusive") {
@@ -295,10 +298,46 @@ class AsOfJoinNativeSpec extends SparkFunSuite {
     for (fwd <- Seq(false, true)) {
       val native = AsOfJoinNative.join(left, right, "k", "rk", "t", "rt",
         Seq("pay"), forward = fwd)
-      val window =
-        if (fwd) AsOfJoin.earliestFollowing(left, right, "k", "rk", "t", "rt", Seq("pay"))
-        else AsOfJoin.latestPrior(left, right, "k", "rk", "t", "rt", Seq("pay"))
-      assert(sortedRows(native) == sortedRows(window), s"forward=$fwd")
+      val reference = AsOfReference.join(left, right, "k", "rk", "t", "rt",
+        Seq("pay"), forward = fwd)
+      assert(sortedRows(native) == sortedRows(reference), s"forward=$fwd")
     }
+  }
+
+  test("native == brute-force reference on 25 seeded cases with null keys and times") {
+    // each case's key is folded with its id, so one join per direction
+    // covers all 25; null keys and null times never match (SQL equality)
+    val rnd = new scala.util.Random(2024)
+    val base = ts("2024-01-01 00:00:00").getTime
+    def key(c: Int): Option[Long] =
+      if (rnd.nextInt(8) == 0) None else Some(c * 10L + rnd.nextInt(3))
+    def time(): Option[Timestamp] =
+      if (rnd.nextInt(8) == 0) None
+      else Some(new Timestamp(base + rnd.nextInt(4 * 3600) * 1000L))
+    val cases = (0 until 25).map { c =>
+      (Seq.fill(1 + rnd.nextInt(12))((key(c), time())),
+        Seq.fill(rnd.nextInt(10))((key(c), time())))
+    }
+    val left = cases.flatMap(_._1).zipWithIndex
+      .map { case ((k, t), i) => (k, t, s"l$i") }.toDF("k", "t", "id")
+    val right = cases.flatMap(_._2).zipWithIndex
+      .map { case ((k, t), i) => (k, t, s"r$i") }.toDF("rk", "rt", "pay")
+      // one payload per (key, time): the tie winner is unspecified
+      .groupBy("rk", "rt").agg(max("pay").as("pay"))
+    var matched = 0
+    for (fwd <- Seq(false, true); tol <- Seq(None, Some(3600L))) {
+      val native = sortedRows(AsOfJoinNative.join(left, right, "k", "rk",
+        "t", "rt", Seq("pay"), forward = fwd, toleranceSeconds = tol))
+      assert(native == sortedRows(AsOfReference.join(left, right, "k", "rk",
+        "t", "rt", Seq("pay"), forward = fwd, toleranceSeconds = tol)),
+        s"forward=$fwd tol=$tol")
+      assert(native.length == left.count())
+      matched += native.count(!_.endsWith(",null]"))
+    }
+    assert(matched > 0)
+    // a null-keyed or null-timed left row is never matched
+    val nulls = AsOfJoinNative.join(left, right, "k", "rk", "t", "rt", Seq("pay"))
+      .filter(col("k").isNull || col("t").isNull)
+    assert(nulls.count() > 0 && nulls.filter(col("pay").isNotNull).count() == 0)
   }
 }

@@ -4,13 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
-import graft.core.{RangeJoin, Tables}
+import graft.core.Tables
 
 /** The automatic range-join rewrite (plans.RangeBinJoinRule via
   * GraftExtensions): a plain SQL non-equi interval join must come out
   * of the optimizer as an EQUI join on the injected bucket key — and
-  * produce exactly the rows of both the nested-loop original and the
-  * manual core.RangeJoin composition.
+  * produce exactly the rows of the nested-loop original.
   */
 class RangeBinJoinSpec extends graft.SparkFunSuite {
   import spark.implicits._
@@ -65,12 +64,6 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
       val got = df.select(col("event_id"), col("w_start"))
         .as[(Long, java.sql.Timestamp)].collect().sorted.toSeq
       assert(got == expected)
-      // and it agrees with the manual composition rewritten by hand
-      val manual = RangeJoin.pointInInterval(
-          events, windows, "ts", "w_start", "w_end", 3600L)
-        .select(col("event_id"), col("w_start"))
-        .as[(Long, java.sql.Timestamp)].collect().sorted.toSeq
-      assert(got == manual)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.sources.v2
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkFunSuite
@@ -132,5 +133,34 @@ class DelimOtherSchemeSpec extends SparkFunSuite {
     roundTrip("file_scheme", s"file://$dir/t", s"file://$dir/ckpt", label = None)
     assert(new java.io.File(s"$dir/ckpt/commits").exists)
     assert(crcFiles(dir).isEmpty, crcFiles(dir).mkString(", "))
+  }
+
+  test("a stock LocalFileSystem in Hadoop's cache leaves graft-delim on the shipped one") {
+    val dir = tempDir("delim-poisoned-cache")
+    val fileUri = java.net.URI.create("file:///")
+    // evict the cached file:// instance, then cache one built from a
+    // conf without the session's bindings: checksummed, chmod-forking
+    FileSystem.get(fileUri, spark.sparkContext.hadoopConfiguration).close()
+    val poisoned = FileSystem.get(fileUri, new Configuration())
+    try {
+      assert(!poisoned.isInstanceOf[graft.core.BareLocalFileSystem])
+      assert(FileSystem.get(fileUri, DelimV2.driverConf()) eq poisoned)
+      val loc = s"file://$dir/t"
+      val fs = DelimV2.fileSystem(new HPath(loc), DelimV2.driverConf())
+      assert(fs.isInstanceOf[graft.core.BareLocalFileSystem])
+      assert(DelimV2.fileSystem(new HPath(dir), DelimV2.driverConf()) eq fs)
+
+      val tbl = "graft_cat.default.poisoned_cache"
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      spark.sql(s"""CREATE TABLE $tbl (id BIGINT, v DOUBLE, pc STRING)
+        USING `graft-delim` PARTITIONED BY (pc) LOCATION '$loc'""")
+      (1L to 10L).map(row).toDF("id", "v", "pc").writeTo(tbl).append()
+      (11L to 20L).map(row).toDF("id", "v", "pc").writeTo(tbl).append()
+      val appended = manifest(loc).gen
+      assert(DelimCompact.compact(spark, loc) > appended, "nothing compacted")
+      assert(rowsOf(spark.table(tbl)) == (1L to 20L).map(row))
+      assert(crcFiles(dir).isEmpty, crcFiles(dir).mkString(", "))
+      spark.sql(s"DROP TABLE $tbl")
+    } finally poisoned.close() // later specs look up a clean cache
   }
 }

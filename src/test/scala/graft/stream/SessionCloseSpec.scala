@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import graft.SparkFunSuite
 
-/** Pins the EventTimeTimeout session machine's contract on a controlled
+/** Pins the session-close machine's contract (SessionCloseTws, on the
+  * RocksDB provider transformWithState requires) on a controlled
   * two-chunk stream (the fixture-scale certification is
   * events_session_timeout_stream):
   *  - successor close: a later event beyond the gap closes the previous
@@ -36,9 +37,11 @@ class SessionCloseSpec extends SparkFunSuite {
 
     val src = StreamRun.chunkedSource(spark, df, s"$root/src", 2)
     val ev = src.withWatermark("ts", "1 hour").as[SessionClose.Event]
-    val (res, stats) = StreamRun.runAvailableNowUpdateObserved(
-      SessionClose.close(ev, gapMinutes = 30).toDF(), s"$root/run",
-      noDataBatch = true)
+    val (res, stats) = withRocksDb {
+      StreamRun.runAvailableNowUpdateObserved(
+        SessionCloseTws.close(ev, gapMinutes = 30).toDF(), s"$root/run",
+        noDataBatch = true)
+    }
 
     val got = res.select("user_id", "session_start", "n_events", "sum_value", "batch_id")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
