@@ -24,27 +24,6 @@ import graft.functions.GraftFunctions
   */
 object GraftSession {
 
-  /** Size of the JVM-wide compiled-class cache. One cold pass over all
-    * 233 certifications in one JVM compiles 2,996 distinct classes
-    * (sf0.01); a second pass at another scale adds about 1,300 more,
-    * most of them per-session streaming classes no cache can reuse.
-    * 4,000 holds the first with room for those.
-    */
-  val CodegenCacheEntries: Int = 4000
-
-  /** The one local filesystem (`core/BareLocalFileSystem.scala`):
-    * `file://` without a forked `chmod`/`readlink` per call, through the
-    * `FileSystem` API (Spark's data and report writes) and through
-    * `FileContext` (streaming checkpoints, graft-delim commits), so
-    * checkpoint I/O needs no manager of its own. Scheme-scoped: hdfs and
-    * object stores are untouched. The builder and the test session set
-    * this same pair.
-    */
-  val LocalFsImpl: (String, String) =
-    "spark.hadoop.fs.file.impl" -> classOf[graft.core.BareLocalFileSystem].getName
-  val LocalAbstractFsImpl: (String, String) =
-    s"spark.hadoop.${graft.core.BareLocalFs.Key}" -> classOf[graft.core.BareLocalFs].getName
-
   /** Build a new session with the engine's recommended configuration.
     * `cores` sizes both the local master and shuffle parallelism —
     * on a real cluster pass a master URL instead and size
@@ -93,11 +72,14 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
-      // file:// through graft's one local filesystem (LocalFsImpl and
-      // LocalAbstractFsImpl below): no forked process per call on either
-      // Hadoop API. Spark's stock checkpoint manager runs on it.
-      .config(LocalFsImpl._1, LocalFsImpl._2)
-      .config(LocalAbstractFsImpl._1, LocalAbstractFsImpl._2)
+      // file:// through graft's one local filesystem
+      // (core/BareLocalFileSystem.scala) on both Hadoop APIs, so neither
+      // data writes nor Spark's stock checkpoint manager fork a process
+      // per call. Scheme-scoped: hdfs and object stores are untouched.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.core.BareLocalFileSystem].getName)
+      .config(s"spark.hadoop.${graft.core.BareLocalFs.Key}",
+        classOf[graft.core.BareLocalFs].getName)
       // runtime bloom-filter join filtering: when one side of a shuffle
       // join carries a selective predicate, inject a bloom filter into
       // the other side's scan — at warehouse scale this drops
@@ -125,9 +107,21 @@ object GraftSession {
       // them: Spark's default cache of 100 classes is smaller than the
       // engine's working set (one nearDupClusters call alone needs about
       // 180), so with it the LRU evicts each class before its next use
-      // and every call pays Janino again. Static and JVM-wide: it takes
-      // effect only if set before the first query compiles anything.
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      // and every call pays Janino again. One cold pass over all 233
+      // certifications in one JVM compiles about 3,000 distinct classes
+      // (sf0.01); 4,000 holds them with room for a second scale's
+      // variants. Static and JVM-wide: it takes effect only if set
+      // before the first query compiles anything.
+      .config("spark.sql.codegen.cache.maxEntries", 4000L)
+      // One executor class loader for every session of the SparkContext.
+      // The compiled-class cache is keyed by the loader, and by default
+      // each session (every newSession() and every streaming query's
+      // clone) gets its own, so each would recompile code another
+      // session already compiled. Per-session loaders exist to isolate
+      // artifacts added with addArtifact or through Spark Connect; graft
+      // does neither. Read only when a session is created, so it is set
+      // here and not per session.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     if (shufflePartitions > 0)
       b.config("spark.sql.shuffle.partitions", shufflePartitions)
     else b

@@ -20,22 +20,17 @@ import CertSupport._
   */
 object StreamCerts {
 
-  /** Pin the RocksDB provider + changelog checkpointing for the session
-    * (idempotent — GraftSession.builder already defaults both; this makes
-    * the queries that REQUIRE RocksDB — transformWithState — and the ones
-    * that CERTIFY it deterministic under any caller's session). There is
-    * deliberately no restore: a restore-after-block shape would be
-    * safe only while every body happened to finish its stream before
-    * returning — a lazily-evaluated caller would execute under the
-    * restored provider. RocksDB is the engine's production default
-    * session-wide, so "restore" has nothing to restore to.
+  /** The certs that need RocksDB (transformWithState) or certify it
+    * run on the provider `GraftSession.builder` declares. A cert never
+    * rewrites its caller's session: a session built elsewhere fails here,
+    * naming the provider it carries.
     */
-  private def ensureRocksDb(s: SparkSession): Unit = {
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
+  private def requireRocksDb(s: SparkSession): Unit = {
+    val provider = s.conf.get("spark.sql.streaming.stateStore.providerClass")
+    require(provider ==
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "this certification runs on the RocksDB state store that " +
+        s"GraftSession.builder sets; the session's provider is $provider")
   }
 
   /** Gap sessions per user (identical session derivation to
@@ -162,7 +157,7 @@ object StreamCerts {
     val ev = src.select(col("user_id"), col("ts"), col("value"))
       .withWatermark("ts", "1 hour")
       .as[SessionClose.Event]
-    ensureRocksDb(s)
+    requireRocksDb(s)
     val (res, stats) = StreamRun.runAvailableNow(
       SessionCloseTws.close(ev, gapMinutes = 30).toDF(),
       s"$out/run", Sink.Update, noDataBatch = true)
@@ -206,7 +201,7 @@ object StreamCerts {
       val ev = Tables.events(s, dir).filter(col("user_id") < 150)
       val (early, late) = splitAtMidpoint(ev)
       import s.implicits._
-      ensureRocksDb(s)
+      requireRocksDb(s)
       val (res, _, run2) = StreamRun.runRestart(
         early, late,
         src => SessionCloseTws.close(
@@ -237,7 +232,7 @@ object StreamCerts {
         |FROM events WHERE user_id < 150 GROUP BY 1, 2""".stripMargin, stream = true) { (s, dir, out) =>
       val ev = Tables.events(s, dir).filter(col("user_id") < 150)
       val (early, late) = splitAtMidpoint(ev)
-      ensureRocksDb(s)
+      requireRocksDb(s)
       val (result, _, _) = StreamRun.runRestart(
         early, late,
         src => EventWindows.tumblingStream(src, "1 hour", "1 hour"),
@@ -467,7 +462,7 @@ object StreamCerts {
       // is the certification)
       sessionCloseOracle(""), stream = true) { (s, dir, out) =>
       import s.implicits._
-      ensureRocksDb(s)
+      requireRocksDb(s)
       val (res, stats) = StreamRun.runProcessingTimeLive(
         Tables.events(s, dir),
         src => SessionCloseTws.close(
@@ -501,7 +496,7 @@ object StreamCerts {
       val ev = src.select(col("user_id"), col("ts"), col("value"))
         .withWatermark("ts", "1 hour")
         .as[SessionClose.Event]
-      ensureRocksDb(s)
+      requireRocksDb(s)
       StreamRun.runAvailableNow(
         SessionCloseTws.close(ev, gapMinutes = 30).toDF(),
         s"$out/run", Sink.Update, noDataBatch = true)
@@ -533,7 +528,7 @@ object StreamCerts {
       val ev = Tables.events(s, dir).filter(col("user_id") < 150)
       val (early, late) = splitAtMidpoint(ev)
       import s.implicits._
-      ensureRocksDb(s)
+      requireRocksDb(s)
       def toTyped(src: DataFrame) =
         src.select(col("user_id"), col("ts"), col("value"))
           .withWatermark("ts", "1 hour").as[SessionClose.Event]
@@ -569,7 +564,7 @@ object StreamCerts {
       import s.implicits._
       val ev = src.select(col("user_id"), col("event_type"), col("value"),
           col("event_id")).as[UserProfileTws.Event]
-      ensureRocksDb(s)
+      requireRocksDb(s)
       StreamRun.runAvailableNow(
         UserProfileTws.profiles(ev).toDF(), s"$out/run", Sink.Update)
       def stateVar(name: String) = s.read.format("statestore")
@@ -638,7 +633,7 @@ object StreamCerts {
         .as[(Long, Long, Long, Long, Double)]
         .map { case (u, st, la, n, sv) =>
           (u, SessionClose.Open(st, la, n, sv)) }
-      ensureRocksDb(s)
+      requireRocksDb(s)
       val src = StreamRun.chunkedSource(s, late,
         s"$out/src-${dir.replaceAll("[^A-Za-z0-9.]", "_")}", 4)
       val evS = src.select(col("user_id"), col("ts"), col("value"))
@@ -670,7 +665,7 @@ object StreamCerts {
       import s.implicits._
       val ev = src.select(col("user_id"), col("event_type"), col("value"),
           col("event_id")).as[UserProfileTws.Event]
-      ensureRocksDb(s)
+      requireRocksDb(s)
       StreamRun.runAvailableNow(
           UserProfileTws.profiles(ev).toDF(), s"$out/run", Sink.Update)._1
         .groupBy(col("user_id"))

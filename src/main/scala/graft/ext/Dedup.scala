@@ -673,10 +673,19 @@ object Dedup {
     // table (label(label(x)) is in the same component, so the
     // min-of-component invariant holds — chains converge in
     // O(log diameter) rounds). Input/output schema: (id, label, orig).
+    //
+    // Both joins are left outer with the label table on the right. Every
+    // dst is an active node and `l` holds a label for each, so the hop
+    // returns exactly the inner join's rows; what the outer join fixes is
+    // the plan. Both inputs are checkpoints with no size estimate, so AQE
+    // picks a broadcast side from whichever shuffle stage finishes
+    // first. With an inner join that was either side, run to run, and
+    // each choice compiles its own classes; a left outer join can only
+    // broadcast `l`.
     def step(l: DataFrame): DataFrame = {
       val hop = withSelf
         .join(l.select(col("id").as("dst"), col("label").as("nl"),
-          col("orig").as("no")), Seq("dst"))
+          col("orig").as("no")), Seq("dst"), "left_outer")
         .groupBy(col("src").as("id"))
         .agg(min(col("nl")).as("cand"), min(when(col("self"), col("no"))).as("orig"))
       hop
@@ -732,32 +741,22 @@ object Dedup {
       CcStats(iters, converged, nEdges, nActive))
   }
 
-  /** The CC loop's sessions, one per (SparkContext, shuffle width),
-    * each dropped when its SparkContext ends. A session per call would
-    * cost a recompile of the loop's generated code on every call:
-    * Spark's compiled-class cache is keyed by the class loader, and each
-    * new session gets its own loader on the executors. A loop session
-    * carries nothing but its shuffle width, so concurrent calls of the
-    * same width share it safely.
+  /** A fresh session for one CC loop, carrying the loop's confs so the
+    * caller's are never touched. A session costs no recompile:
+    * `GraftSession.builder` gives every session of a SparkContext one
+    * executor class loader, so the loop's generated classes hit the
+    * compiled-class cache from call to call.
     */
-  private val loopSessions =
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.SparkContext,
-      java.util.concurrent.ConcurrentHashMap[Long, SparkSession]]()
-
-  private[ext] def loopSession(spark: SparkSession, nParts: Long): SparkSession =
-    loopSessions.computeIfAbsent(spark.sparkContext, { sc =>
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          loopSessions.remove(sc)
-      })
-      new java.util.concurrent.ConcurrentHashMap[Long, SparkSession]()
-    }).computeIfAbsent(nParts, { _ =>
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-      s
-    })
+  private[ext] def loopSession(spark: SparkSession, nParts: Long): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", nParts.toString)
+    // AQE numbers whole-stage codegen stages in the order it creates
+    // them, and that order follows which shuffle stage finished first.
+    // Left out of the class name, the number no longer makes one stage
+    // shape a new class on a call whose stages finished in another order.
+    s.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    s
+  }
 
   /** Unsigned lexicographic order on UTF-8 bytes — matches Spark's
     * UTF8String binary comparison (code-point order), which the

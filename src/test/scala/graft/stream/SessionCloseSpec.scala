@@ -37,11 +37,9 @@ class SessionCloseSpec extends SparkFunSuite {
 
     val src = StreamRun.chunkedSource(spark, df, s"$root/src", 2)
     val ev = src.withWatermark("ts", "1 hour").as[SessionClose.Event]
-    val (res, stats) = withRocksDb {
-      StreamRun.runAvailableNowUpdateObserved(
-        SessionCloseTws.close(ev, gapMinutes = 30).toDF(), s"$root/run",
-        noDataBatch = true)
-    }
+    val (res, stats) = StreamRun.runAvailableNowUpdateObserved(
+      SessionCloseTws.close(ev, gapMinutes = 30).toDF(), s"$root/run",
+      noDataBatch = true)
 
     val got = res.select("user_id", "session_start", "n_events", "sum_value", "batch_id")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),

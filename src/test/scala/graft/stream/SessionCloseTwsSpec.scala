@@ -30,14 +30,12 @@ class SessionCloseTwsSpec extends SparkFunSuite {
 
     val src = StreamRun.chunkedSource(spark, df, s"$root/src", 2)
     val ev = src.withWatermark("ts", "1 hour").as[SessionClose.Event]
-    val tws = withRocksDb {
-      StreamRun.runAvailableNow(SessionCloseTws.close(ev, 30).toDF(), s"$root/run",
-          StreamRun.Sink.Update, noDataBatch = true)._1
-        .select("user_id", "session_start", "n_events", "sum_value")
-        .collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))
-        .toSet
-    }
+    val tws = StreamRun.runAvailableNow(SessionCloseTws.close(ev, 30).toDF(), s"$root/run",
+        StreamRun.Sink.Update, noDataBatch = true)._1
+      .select("user_id", "session_start", "n_events", "sum_value")
+      .collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))
+      .toSet
     // both tiers' emissions at the time the flatMapGroupsWithState tier
     // was retired; users 4 and 99 stay open
     val flatMapGroupsWithState = Set(

@@ -30,14 +30,12 @@ class SessionRestartSpec extends SparkFunSuite {
     ).toDF("user_id", "ts", "value")
     val root = java.nio.file.Files.createTempDirectory("session_restart").toString
 
-    val (res, run1, run2) = withRocksDb {
-      StreamRun.runRestart(
-        early, late,
-        src => SessionCloseTws.close(
-          src.withWatermark("ts", "1 hour").as[SessionClose.Event],
-          gapMinutes = 30).toDF(),
-        s"$root/run", StreamRun.Sink.Update, chunksPerPhase = 1)
-    }
+    val (res, run1, run2) = StreamRun.runRestart(
+      early, late,
+      src => SessionCloseTws.close(
+        src.withWatermark("ts", "1 hour").as[SessionClose.Event],
+        gapMinutes = 30).toDF(),
+      s"$root/run", StreamRun.Sink.Update, chunksPerPhase = 1)
 
     val got = res.select("user_id", "session_start", "n_events", "sum_value")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),

@@ -310,37 +310,49 @@ class StreamRunSpec extends SparkFunSuite {
   test("RocksDB changelog checkpointing leaves changelog files in the checkpoint") {
     val ev = Tables.events(spark, sf001)
     val root = tmp("streamrun_clog")
-    val key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try withRocksDb {
-      val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
-      StreamRun.runAvailableNow(
-        EventWindows.tumblingStream(src, "1 hour", "1 hour"),
-        s"$root/run", Sink.Complete)
-      // the conf being set is not the certification — the OBSERVED
-      // checkpoint layout is: per-commit .changelog deltas (and not a
-      // full .zip snapshot per batch, which is what the conf replaces)
-      val stream = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(s"$root/run/ckpt/state"))
-      val names =
-        try {
-          val it = stream.iterator()
-          val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) buf += it.next().getFileName.toString
-          buf.toSeq
-        } finally stream.close()
-      val changelogs = names.count(_.endsWith(".changelog"))
-      val snapshots = names.count(_.endsWith(".zip"))
-      assert(changelogs >= 4,
-        s"expected per-batch changelog files, found $changelogs " +
-          s"(snapshots: $snapshots) in ${names.take(30)}")
-      assert(changelogs > snapshots,
-        "changelog checkpointing must replace per-batch snapshot uploads")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    val src = StreamRun.chunkedSource(spark, ev, s"$root/src", 4)
+    StreamRun.runAvailableNow(
+      EventWindows.tumblingStream(src, "1 hour", "1 hour"),
+      s"$root/run", Sink.Complete)
+    // the conf being set is not the certification — the OBSERVED
+    // checkpoint layout is: per-commit .changelog deltas (and not a
+    // full .zip snapshot per batch, which is what the conf replaces)
+    val stream = java.nio.file.Files.walk(
+      java.nio.file.Paths.get(s"$root/run/ckpt/state"))
+    val names =
+      try {
+        val it = stream.iterator()
+        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+        while (it.hasNext) buf += it.next().getFileName.toString
+        buf.toSeq
+      } finally stream.close()
+    val changelogs = names.count(_.endsWith(".changelog"))
+    val snapshots = names.count(_.endsWith(".zip"))
+    assert(changelogs >= 4,
+      s"expected per-batch changelog files, found $changelogs " +
+        s"(snapshots: $snapshots) in ${names.take(30)}")
+    assert(changelogs > snapshots,
+      "changelog checkpointing must replace per-batch snapshot uploads")
+  }
+
+  test("a repeated stream run compiles no new class") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = tmp("streamrun_reuse")
+    val src = StreamRun.chunkedSource(spark, Tables.events(spark, sf001), s"$root/src", 2)
+    val ev = src.select(col("user_id"), col("ts"), col("value"))
+      .withWatermark("ts", "1 hour").as[SessionClose.Event]
+    // each run clones the session and gets its own checkpoint; the
+    // second one's generated classes must all come from the cache
+    def run(i: Int): Long =
+      StreamRun.runAvailableNow(SessionCloseTws.close(ev, gapMinutes = 30).toDF(),
+        s"$root/run$i", Sink.Update, noDataBatch = true)._1.count()
+    val first = run(1)
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run(2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    assert(compiled == 0, s"the second run compiled $compiled classes")
+    assert(second == first && first > 0)
   }
 
   test("chunked source stamps file mtimes in time-range order") {

@@ -30,20 +30,18 @@ class UserProfileTwsSpec extends SparkFunSuite {
     // must carry across triggers — or, under the tiny TTL, expire)
     val src = StreamRun.chunkedSource(spark, df, s"$root/src", 2, tsCol = "event_id")
     val ev = src.as[UserProfileTws.Event]
-    withRocksDb {
-      StreamRun.runAvailableNow(
-          UserProfileTws.profiles(ev, k = 3, ttl = ttl).toDF(), s"$root/run",
-          StreamRun.Sink.Update)._1
-        .groupBy(col("user_id"))
-        .agg(max_by(struct(col("n_events"), col("n_types"), col("top3_sum"),
-          col("top_event_id")), col("batch_id")).as("p"))
-        .collect()
-        .map(r => r.getLong(0) -> {
-          val p = r.getStruct(1)
-          (p.getLong(0), p.getLong(1), p.getDouble(2), p.getLong(3))
-        })
-        .toMap
-    }
+    StreamRun.runAvailableNow(
+        UserProfileTws.profiles(ev, k = 3, ttl = ttl).toDF(), s"$root/run",
+        StreamRun.Sink.Update)._1
+      .groupBy(col("user_id"))
+      .agg(max_by(struct(col("n_events"), col("n_types"), col("top3_sum"),
+        col("top_event_id")), col("batch_id")).as("p"))
+      .collect()
+      .map(r => r.getLong(0) -> {
+        val p = r.getStruct(1)
+        (p.getLong(0), p.getLong(1), p.getDouble(2), p.getLong(3))
+      })
+      .toMap
   }
 
   test("map+list state accumulate across batches; top-k tie-breaks on event_id") {
