@@ -3,18 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.core.Tables
-import graft.functions.GraftFunctions
 
 /** Library front door: one call gives a session with the engine's
-  * recommended runtime settings, the optimizer extensions installed
-  * (`plans.GraftExtensions` — e.g. the automatic non-equi range-join
-  * rewrite, conf-gated per query), the custom Catalyst functions
-  * registered (usable from SQL as `graft_dot`, `graft_minhash_sig`,
-  * `graft_simhash64`, `graft_sorted_intersect_count`,
-  * `graft_first_equal_index`, `graft_rhp_sig`,
-  * `graft_bloom_contains`, plus the Count-Min trio `graft_cms_build` /
-  * `graft_cms_union` / `graft_cms_estimate`), and — optionally — a
-  * warehouse directory attached as queryable views.
+  * recommended runtime settings and graft's extension
+  * (`plans.GraftExtensions`), which gives this session and every
+  * session made from it the optimizer rules (e.g. the automatic
+  * non-equi range-join rewrite, conf-gated per query) and the custom
+  * Catalyst functions (usable from SQL as `graft_dot`,
+  * `graft_minhash_sig`, `graft_simhash64`,
+  * `graft_sorted_intersect_count`, `graft_first_equal_index`,
+  * `graft_rhp_sig`, `graft_bloom_contains`, plus the Count-Min trio
+  * `graft_cms_build` / `graft_cms_union` / `graft_cms_estimate`), and
+  * — optionally — a warehouse directory attached as queryable views.
   *
   * A user of the reference runs `configuration.properties` through
   * `config.JobConfig` and `core.ReconcilePipeline`; a SQL user attaches
@@ -30,7 +30,7 @@ object GraftSession {
     * `spark.sql.shuffle.partitions` to the cluster (2–3× total cores).
     */
   def create(master: String = "local[*]", shufflePartitions: Int = 0): SparkSession =
-    configure(builder(master, shufflePartitions).getOrCreate())
+    builder(master, shufflePartitions).getOrCreate()
 
   /** The base builder every entry point (library front door, Bench,
     * Verify, dev tools) shares, so the runtime confs the fixtures
@@ -42,10 +42,10 @@ object GraftSession {
     val b = SparkSession.builder()
       .master(master)
       .config("spark.sql.session.timeZone", "UTC")
-      // engine optimizer extensions (plans.GraftExtensions). Each
-      // injected rule gates on its own conf and ships disabled, so this
-      // changes no plan until a query opts in (e.g.
-      // plans.RangeBinJoinRule.BinSecondsKey for the automatic
+      // graft's functions and optimizer rules on every session
+      // (plans.GraftExtensions). Each rule gates on its own conf and
+      // ships disabled, so this changes no plan until a query opts in
+      // (e.g. plans.RangeBinJoinRule.BinSecondsKey for the automatic
       // non-equi range-join rewrite).
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // nanosecond parquet timestamps arrive as long micros-convertible
@@ -113,6 +113,11 @@ object GraftSession {
       // variants. Static and JVM-wide: it takes effect only if set
       // before the first query compiles anything.
       .config("spark.sql.codegen.cache.maxEntries", 4000L)
+      // AQE numbers whole-stage codegen stages in the order it creates
+      // them, and that order follows which shuffle stage finished first.
+      // Left out of the class name, the number no longer makes one stage
+      // shape a new class on a run whose stages finished in another order.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // One executor class loader for every session of the SparkContext.
       // The compiled-class cache is keyed by the loader, and by default
       // each session (every newSession() and every streaming query's
@@ -127,31 +132,12 @@ object GraftSession {
     else b
   }
 
-  /** Register the engine's custom functions on an existing session and
-    * return it (idempotent).
-    */
-  def configure(spark: SparkSession): SparkSession = {
-    GraftFunctions.register(spark)
-    graft.functions.CmsSketch.registerSql(spark)
-    // the post-subquery copy of the range-join rewrite (EXISTS/NOT
-    // EXISTS sandwiches decorrelate after the extension batch runs)
-    graft.plans.RangeBinJoinRule.installLate(spark)
-    // the correlated-scalar as-of sandwich likewise only exists after
-    // decorrelation; its rewrite targets the native as-of operator
-    graft.plans.AsOfRewriteRule.installLate(spark)
-    // the SQL DDL front door for graft-delim partition trees
-    // (SHOW PARTITIONS / ALTER TABLE ADD|DROP PARTITION)
-    graft.sources.v2.GraftCatalog.register(spark)
-    spark
-  }
-
   /** Attach every known table found under `dir` as a temp view (events
     * gets its timestamp normalization), so `spark.sql` works against the
     * warehouse exactly like the reference's Hive database. Returns the
     * view names created.
     */
   def attach(spark: SparkSession, dir: String): Seq[String] = {
-    configure(spark)
     val names = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     names.filter { n =>

@@ -23,7 +23,7 @@ object AsOfCerts {
     * rewrites it (point on the left, existence semantics absorb the
     * interval explosion).
     */
-  private def rangeAntiJoinSql(eventsTable: String): String =
+  private[graft] def rangeAntiJoinSql(eventsTable: String): String =
     s"""WITH w AS (
        |  SELECT DISTINCT date_trunc('day', ts) + INTERVAL 1 HOUR AS w_start,
        |         date_trunc('day', ts) + INTERVAL 7 HOUR AS w_end
@@ -90,7 +90,6 @@ object AsOfCerts {
     */
   private def runAsofSql(s: SparkSession, dir: String, out: String,
       sql: String, forward: Boolean, tolMicros: Option[Long]): DataFrame = {
-    plans.AsOfRewriteRule.installLate(s)
     val key = plans.AsOfRewriteRule.EnabledKey
     val prev = s.conf.getOption(key)
     s.conf.set(key, "true")
@@ -162,7 +161,6 @@ object AsOfCerts {
       s: SparkSession, dir: String, out: String, sql: String,
       tolMicros: Option[Long] = None,
       nearest: Boolean = false): DataFrame = {
-    plans.AsOfRewriteRule.installLate(s)
     val key = plans.AsOfRewriteRule.EnabledKey
     val prev = s.conf.getOption(key)
     s.conf.set(key, "true")
@@ -319,7 +317,6 @@ object AsOfCerts {
     // surface with one SQL text run verbatim by both engines.
     Cert.scratch("range_antijoin_auto", rangeAntiJoinSql("events")) { (s, dir, out) =>
       val key = plans.RangeBinJoinRule.BinSecondsKey
-      plans.RangeBinJoinRule.installLate(s)
       val prev = s.conf.getOption(key)
       s.conf.set(key, "3600")
       try {
@@ -386,7 +383,6 @@ object AsOfCerts {
     // the rule on (plan require'd to contain the AsOfJoin exec and no
     // nested loop) and verbatim in DuckDB as the oracle.
     Cert.scratch("asof_join_sql_auto", asofSqlText("events", "orders")) { (s, dir, out) =>
-      plans.AsOfRewriteRule.installLate(s)
       val key = plans.AsOfRewriteRule.EnabledKey
       val prev = s.conf.getOption(key)
       s.conf.set(key, "true")

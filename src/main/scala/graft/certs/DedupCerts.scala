@@ -337,7 +337,6 @@ object DedupCerts {
          |JOIN sz sa ON sa.doc_id = id_a
          |JOIN sz sb ON sb.doc_id = id_b
          |WHERE i / least(sa.n, sb.n) >= 0.9""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val sets = Tables.documents(s, dir).filter(col("doc_id") < 300)
         .select(col("doc_id").as("id"),
           graft.ext.Text.hashedShingleSet(col("text"), 1).as("sh"))

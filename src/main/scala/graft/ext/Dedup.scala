@@ -123,7 +123,7 @@ object Dedup {
     val bloom = hashes.stat.bloomFilter("h", expected, fpp)
     val withFp = batch.withColumn("__fp", md5(col(textCol)))
     val maybeSeen = graft.functions.GraftFunctions.bloomContainsLong(
-      spark, xxhash64(col("__fp")), bloom)
+      xxhash64(col("__fp")), bloom)
     val cleared = withFp.filter(!maybeSeen)
     val suspects = withFp.filter(maybeSeen)
     val dupFps = store.select(col("fp").as("__fp"))
@@ -157,7 +157,6 @@ object Dedup {
     */
   private[ext] def jaccardPairsFromSets(
       setsDf: DataFrame, threshold: Double): DataFrame = {
-    GraftFunctions.register(setsDf.sparkSession)
     val sets = setsDf
       .withColumn("sz", size(col("s")))
       .filter(col("sz") > 0)
@@ -230,7 +229,6 @@ object Dedup {
     * query; native expression — one primitive nested loop, sub-second.
     */
   def minhashSignature(shingleSet: Column, params: MinHashParams): Column = {
-    SparkSession.getActiveSession.foreach(GraftFunctions.register)
     val hashed = transform(shingleSet, s => xxhash64(s))
     call_function("graft_minhash_sig", hashed, lit(params.k), lit(params.seed))
   }
@@ -299,7 +297,6 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double,
       params: MinHashParams = MinHashParams()): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     // size-based physical strategy: exact blocked all-pairs under the
     // cutover (same output — LSH candidates are exactly verified anyway).
     // A disabled cutover (bruteForceMaxDocs <= 0, the force-LSH
@@ -342,7 +339,7 @@ object Dedup {
       spark: SparkSession, docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(
       col(idCol).as("id"),
-      GraftFunctions.simhash64(spark, Text.hashed(Text.tokenSet(col(textCol)))).as("simhash"))
+      GraftFunctions.simhash64(Text.hashed(Text.tokenSet(col(textCol)))).as("simhash"))
 
   /** Near-dup pairs at Hamming distance <= maxHamming, using the
     * pigeonhole block trick: split 64 bits into (maxHamming+1) blocks —
@@ -446,7 +443,7 @@ object Dedup {
       .withColumnsRenamed(Map("id" -> "corpus_id", "payload" -> "c_sh", "keys" -> "c_keys"))
     in.join(corp,
         in("band") === corp("band") && in("band_hash") === corp("band_hash") &&
-        GraftFunctions.firstEqualIndex(spark, col("in_keys"), col("c_keys"))
+        GraftFunctions.firstEqualIndex(col("in_keys"), col("c_keys"))
           === in("band") &&
         bit_count(col("in_sh").bitwiseXOR(col("c_sh"))) <= maxHamming)
       .select(col("in_id"), col("corpus_id"),
@@ -750,11 +747,6 @@ object Dedup {
   private[ext] def loopSession(spark: SparkSession, nParts: Long): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-    // AQE numbers whole-stage codegen stages in the order it creates
-    // them, and that order follows which shuffle stage finished first.
-    // Left out of the class name, the number no longer makes one stage
-    // shape a new class on a call whose stages finished in another order.
-    s.conf.set("spark.sql.codegen.useIdInClassName", "false")
     s
   }
 
@@ -933,7 +925,6 @@ object Dedup {
         */
       broadcastPrefixMaxBytes: Long = 64L << 20): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold: $threshold")
-    GraftFunctions.register(docs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     // IDENTICAL-SET COLLAPSE: docs with the same shingle set are one
     // node in the join (the same move nearDupClusters makes) — the

@@ -72,7 +72,6 @@ object LshJoin {
       ordered: Boolean = true,
       pairFilter: Option[(org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
         org.apache.spark.sql.Column] = None): DataFrame = {
-    val spark = bands.sparkSession
     val okBuckets = bands.groupBy("band", "band_hash")
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2 && col("n") <= maxBucketSize)
@@ -106,7 +105,7 @@ object LshJoin {
     val baseCond =
       col("lsh_l.band") === col("lsh_r.band") &&
       col("lsh_l.band_hash") === col("lsh_r.band_hash") && idCond &&
-      (GraftFunctions.firstEqualIndex(spark, col("mkeys_a"), col("mkeys_b"))
+      (GraftFunctions.firstEqualIndex(col("mkeys_a"), col("mkeys_b"))
         === col("lsh_l.band"))
     val cond = pairFilter match {
       case Some(f) if hasPayload => baseCond && f(col("payload_a"), col("payload_b"))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,10 +28,7 @@ object SimSearch {
     * allocates an intermediate array per pair, which dominated the
     * all-pairs similarity queries at sf0.1).
     */
-  def dot(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(GraftFunctions.register)
-    call_function("graft_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 
   def l2Norm(v: Column): Column = sqrt(dot(v, v))
 
@@ -98,11 +95,10 @@ object SimSearch {
       emb: DataFrame, idCol: String, vecCol: String,
       numBands: Int = 8, bitsPerBand: Int = 8, dim: Int = 64,
       seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
     // "keys" (the full band-key vector) rides along for the
     // first-collision pair dedup in the candidate joins
     emb.select(col(idCol).as("id"),
-        GraftFunctions.rhpSig(spark, col(vecCol),
+        GraftFunctions.rhpSig(col(vecCol),
           numBands, bitsPerBand, dim, seed).as("keys"))
       .select(col("id"), col("keys"),
         posexplode(col("keys")).as(Seq("band", "band_hash")))

@@ -62,8 +62,7 @@ object Text {
 
   /** Exact Jaccard over SORTED distinct arrays (string or bigint
     * elements) via the allocation-free merge kernel. Same value as
-    * [[jaccard]], ~10-30x cheaper per pair. Requires
-    * graft.functions.GraftFunctions.register on the session.
+    * [[jaccard]], ~10-30x cheaper per pair.
     */
   def jaccardSorted(a: Column, b: Column): Column = {
     val inter = call_function("graft_sorted_intersect_count", a, b).cast("double")

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 import org.apache.spark.util.sketch.CountMinSketch
 
 /** Mergeable Count-Min frequency sketches as typed Aggregators — the
@@ -87,30 +87,20 @@ object CmsSketch {
   val Seed = 42
 
   /** SQL front door (default shape): `graft_cms_build(longCol)`,
-    * `graft_cms_union(sketchCol)`, `graft_cms_estimate(sketch, key)`.
-    * The estimate deserializes per CALL — it is a probe-side helper
-    * (O(probe keys)), not a per-corpus-row kernel. Idempotent per
-    * session, like GraftFunctions.register.
+    * `graft_cms_union(sketchCol)`, `graft_cms_estimate(sketch, key)`,
+    * given to every session by `plans.GraftExtensions`. The estimate
+    * deserializes per CALL — it is a probe-side helper (O(probe keys)),
+    * not a per-corpus-row kernel.
     */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!registered.add(spark)) return
-    spark.udf.register("graft_cms_build",
-      udaf(new CmsBuildLong(Eps, Confidence, Seed)))
-    spark.udf.register("graft_cms_union",
-      udaf(new CmsMerge(Eps, Confidence, Seed)))
-    spark.udf.register("graft_cms_estimate",
-      org.apache.spark.sql.functions.udf((sketch: Array[Byte], key: Long) =>
-        // null sketch (e.g. an empty outer-join side) probes to null,
-        // not an NPE from CountMinSketch.readFrom(null)
-        if (sketch == null) null
-        else java.lang.Long.valueOf(CountMinSketch.readFrom(sketch)
-          .estimateCount(java.lang.Long.valueOf(key)))))
-  }
-
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[
-        org.apache.spark.sql.SparkSession, java.lang.Boolean]())
+  val sqlFunctions: Seq[UserDefinedFunction] = Seq(
+    udaf(new CmsBuildLong(Eps, Confidence, Seed)).withName("graft_cms_build"),
+    udaf(new CmsMerge(Eps, Confidence, Seed)).withName("graft_cms_union"),
+    udf((sketch: Array[Byte], key: Long) =>
+      // null sketch (e.g. an empty outer-join side) probes to null,
+      // not an NPE from CountMinSketch.readFrom(null)
+      if (sketch == null) null
+      else java.lang.Long.valueOf(CountMinSketch.readFrom(sketch)
+        .estimateCount(java.lang.Long.valueOf(key)))).withName("graft_cms_estimate"))
 
   /** Column form: sketch of a long key column. */
   def buildLong(key: Column,

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,97 +92,66 @@ case class SimHash64(child: Expression)
     copy(child = newChild)
 }
 
-/** Session registration + Column-level access for graft's custom
-  * expressions. `call_function` after registry insertion avoids any
-  * dependence on non-public Column constructors.
+/** graft's native SQL functions and their Column-level access. Every
+  * session gets [[builders]] from `plans.GraftExtensions`, so the Column
+  * forms below are plain `call_function`s on any graft session (no
+  * dependence on non-public Column constructors).
   */
 object GraftFunctions {
 
-  // one registration per session — repeat calls are no-ops (and noisy:
-  // createOrReplaceTempFunction logs a WARN per replacement)
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  def register(spark: SparkSession): Unit = {
-    if (!registered.add(spark)) return
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => ArrayDotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sorted_first_contained",
-      exprs => SortedFirstContained(exprs(0), exprs(1)), "built-in")
+  /** Each function's name and the builder of its native expression. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_simhash64" -> (e => SimHash64(e.head)),
+    "graft_sorted_intersect_count" -> (e => SortedIntersectCount(e(0), e(1))),
+    "graft_dot" -> (e => ArrayDotProduct(e(0), e(1))),
+    "graft_sorted_first_contained" -> (e => SortedFirstContained(e(0), e(1))),
     // threshold is baked into the generated merge-abort bound, so it
     // must be a foldable literal
-    reg.createOrReplaceTempFunction(
-      "graft_containment_verify",
-      exprs => ContainmentVerify(exprs(0), exprs(1), exprs(2), exprs(3),
-        exprs(4).eval().asInstanceOf[Number].doubleValue()), "built-in")
+    "graft_containment_verify" -> (e => ContainmentVerify(e(0), e(1), e(2), e(3),
+      e(4).eval().asInstanceOf[Number].doubleValue())),
     // k and seed must be foldable literals: they parameterize the hash
     // family baked into the generated code.
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => MinHashSig(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_first_equal_index",
-      exprs => FirstEqualIndex(exprs(0), exprs(1)), "built-in")
+    "graft_minhash_sig" -> (e => MinHashSig(
+      e(0),
+      e(1).eval().asInstanceOf[Number].intValue(),
+      e(2).eval().asInstanceOf[Number].longValue())),
+    "graft_first_equal_index" -> (e => FirstEqualIndex(e(0), e(1))),
     // the serialized filter must be a foldable binary literal — it is
     // deserialized once and baked into the generated code's references
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => BloomMightContainLong(exprs(0), exprs(1)), "built-in")
+    "graft_bloom_contains" -> (e => BloomMightContainLong(e(0), e(1))),
     // band/bit/dim/seed parameterize the plane matrix baked into the
     // generated code, so they must be foldable literals.
-    reg.createOrReplaceTempFunction(
-      "graft_rhp_sig", exprs => RhpSignature(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].intValue(),
-        exprs(4).eval().asInstanceOf[Number].longValue()), "built-in")
-  }
+    "graft_rhp_sig" -> (e => RhpSignature(
+      e(0),
+      e(1).eval().asInstanceOf[Number].intValue(),
+      e(2).eval().asInstanceOf[Number].intValue(),
+      e(3).eval().asInstanceOf[Number].intValue(),
+      e(4).eval().asInstanceOf[Number].longValue())))
 
-  def simhash64(spark: SparkSession, tokenHashes: Column): Column = {
-    register(spark)
+  def simhash64(tokenHashes: Column): Column =
     call_function("graft_simhash64", tokenHashes)
-  }
 
   /** Double-precision dot product over float/double arrays. */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** First index where two bigint arrays agree, -1 if none. */
-  def firstEqualIndex(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def firstEqualIndex(a: Column, b: Column): Column =
     call_function("graft_first_equal_index", a, b)
-  }
 
   /** Bloom-filter membership probe on a bigint column; `filter` is a
     * driver-built `org.apache.spark.util.sketch.BloomFilter`, shipped
     * serialized as a binary literal.
     */
-  def bloomContainsLong(spark: SparkSession, value: Column,
+  def bloomContainsLong(value: Column,
       filter: org.apache.spark.util.sketch.BloomFilter): Column = {
-    register(spark)
     val bos = new java.io.ByteArrayOutputStream()
     filter.writeTo(bos)
     call_function("graft_bloom_contains", value, lit(bos.toByteArray))
   }
 
   /** Random-hyperplane LSH band keys (array<bigint>, one per band). */
-  def rhpSig(spark: SparkSession, vec: Column, numBands: Int,
-      bitsPerBand: Int, dim: Int, seed: Long): Column = {
-    register(spark)
+  def rhpSig(vec: Column, numBands: Int,
+      bitsPerBand: Int, dim: Int, seed: Long): Column =
     call_function("graft_rhp_sig", vec, lit(numBands), lit(bitsPerBand),
       lit(dim), lit(seed))
-  }
 }

@@ -11,20 +11,6 @@ import org.apache.spark.sql.types.{DateType, DayTimeIntervalType, TimestampType}
 object AsOfRewriteRule {
   /** Opt-in gate; the rule ships disabled like the range-join rewrite. */
   val EnabledKey = "spark.graft.asofRewrite.enabled"
-
-  /** Install into `experimental.extraOptimizations`: the decorrelated
-    * scalar-subquery shape this rule matches only EXISTS after
-    * `RewriteSubquery`, which runs after the operator-optimization
-    * fixpoint the extension-injected rules live in — same positioning
-    * argument as [[RangeBinJoinRule.installLate]]. Idempotent per
-    * session; GraftSession.configure calls it.
-    */
-  def installLate(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[AsOfRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsOfRewriteRule(spark)
-  }
 }
 
 /** Automatic as-of rewrite — the optimizer-rule front door to the

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
@@ -9,21 +9,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
-
-/** Engine extension entry point (`spark.sql.extensions`): injects the
-  * optimizer rules the built-in operator set cannot express.
-  *
-  * Registered by default on every [[graft.GraftSession]] session; each
-  * injected rule is individually gated on its own conf and ships
-  * disabled, so the extension's presence never changes a plan until a
-  * user opts a query in.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(session => RangeBinJoinRule(session))
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-  }
-}
 
 object RangeBinJoinRule {
   /** Bin width in seconds for the automatic range-join rewrite;
@@ -39,24 +24,6 @@ object RangeBinJoinRule {
     * a malformed conf must never become a wrong plan.
     */
   val MaxBinSeconds: Long = 86400L * 3653
-
-  /** Install the rule ALSO into the post-subquery optimizer position
-    * (`experimental.extraOptimizations` — the "User Provided
-    * Optimizers" batch). The extension-injected copy runs inside the
-    * operator-optimization fixpoint, which sits BEFORE
-    * `RewriteSubquery` — so a correlated `EXISTS` / `NOT EXISTS`
-    * time-window predicate is still a `Filter(Exists...)` when that
-    * copy looks, and only becomes the semi/anti Join this rule matches
-    * after decorrelation. The late copy catches exactly those; the
-    * equi-conjunct guard keeps the two copies from double-rewriting.
-    * Idempotent per session; GraftSession.configure calls it.
-    */
-  def installLate(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[RangeBinJoinRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeBinJoinRule(spark)
-  }
 
   /** The DataFrame entry: join `points` (timestamp `pointCol`) to
     * `intervals` ([`startCol`, `endCol`) half-open timestamps) at a

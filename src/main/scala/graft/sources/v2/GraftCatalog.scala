@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
@@ -17,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * DDL front door the reference drives through Hive
   * (`SHOW PARTITIONS`, `ALTER TABLE ... ADD|DROP PARTITION`;
   * verizon_automation_script.sh:104,138). Registered by
-  * `GraftSession.configure` as `graft_cat`, so
+  * `GraftSession.builder` as `graft_cat`, so
   *
   * {{{
   *   CREATE TABLE graft_cat.default.t (...) USING graft-delim
@@ -352,9 +351,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 object GraftCatalog {
   /** Conf key under which [[graft.GraftSession]] registers the catalog. */
   val Name = "graft_cat"
-
-  def register(spark: SparkSession): Unit =
-    spark.conf.set(s"spark.sql.catalog.$Name", classOf[GraftCatalog].getName)
 }
 
 /** A catalog-managed [[DelimTable]] with native partition DDL: the

@@ -598,7 +598,6 @@ object Stress {
     // amps to show the rewritten plan stays linear.
     if (sections("asofsqlcmp")) {
       val key = graft.plans.AsOfRewriteRule.EnabledKey
-      graft.plans.AsOfRewriteRule.installLate(spark)
       val sqlText =
         """SELECT count(*) AS n, sum(hash(event_id, m)) AS chk FROM (
           |  SELECT e.event_id,

@@ -37,14 +37,49 @@ class GraftSessionSpec extends SparkFunSuite {
   }
 
   test("custom kernels are callable from SQL after configure") {
-    GraftSession.configure(spark)
-    val d = spark.sql(
+    val n = spark.newSession()
+    val d = n.sql(
       "SELECT graft_dot(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS d")
       .collect()(0).getDouble(0)
     assert(d == 11.0)
-    val f = spark.sql(
+    val f = n.sql(
       "SELECT graft_first_equal_index(array(1L, 5L, 7L), array(2L, 5L, 7L)) AS i")
       .collect()(0).getInt(0)
     assert(f == 1)
+  }
+
+  test("a newSession has graft's functions and late rules, whatever session is active") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.FormattedMode
+    import org.apache.spark.sql.functions._
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    try {
+      val n = spark.newSession()
+      // column helpers resolve on the DataFrame's own session
+      val params = ext.Dedup.MinHashParams()
+      def sigs(s: SparkSession) = s.createDataFrame(Seq(Tuple1("a b c d"), Tuple1("c d e")))
+        .select(ext.Dedup.minhashSignature(
+          ext.Text.hashedShingleSet(col("_1"), params.shingleN), params).as("sig"))
+        .collect().map(_.getSeq[Long](0)).toSeq
+      val onN = sigs(n)
+      assert(onN.forall(_.length == params.k))
+      assert(onN == sigs(spark))
+      val d = n.range(1).select(ext.SimSearch.dot(
+        array(lit(1.0f), lit(2.0f)), array(lit(3.0f), lit(4.0f)))).head().getDouble(0)
+      assert(d == 11.0)
+      // the Count-Min trio from SQL
+      assert(n.sql("SELECT graft_cms_estimate(graft_cms_build(id), 1) FROM range(10)")
+        .head().getLong(0) == 1L)
+      // the late range-join copy catches the decorrelated NOT EXISTS
+      n.conf.set(plans.RangeBinJoinRule.BinSecondsKey, "3600")
+      core.Tables.events(n, sf001).createOrReplaceTempView("ns_events")
+      val plan = n.sql(certs.AsOfCerts.rangeAntiJoinSql("ns_events"))
+        .queryExecution.explainString(FormattedMode)
+      assert(plan.contains("_graft_pbucket"), plan)
+    } finally prev match {
+      case Some(s) => SparkSession.setActiveSession(s)
+      case None => SparkSession.clearActiveSession()
+    }
   }
 }

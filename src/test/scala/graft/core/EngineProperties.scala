@@ -5,7 +5,6 @@ import org.scalacheck.Prop.forAll
 
 import graft.TestSpark
 import graft.ext.{Dedup, Text}
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Property-based invariants (SURVEY.md §5.3). Each property runs Spark
@@ -92,7 +91,6 @@ object EngineProperties extends Properties("graft") {
     forAll(Gen.listOfN(6,
       Gen.zip(Gen.listOfN(12, Gen.oneOf("a", "b", "c", "dd", "ee", "f", "gg", "hh")),
         Gen.listOfN(12, Gen.oneOf("a", "b", "c", "dd", "ee", "f", "gg", "hh"))))) { pairs =>
-      GraftFunctions.register(spark)
       val df = pairs.map { case (x, y) =>
         (x.distinct.sorted.mkString(" "), y.distinct.sorted.mkString(" "))
       }.toDF("ta", "tb")

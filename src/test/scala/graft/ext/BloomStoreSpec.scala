@@ -45,7 +45,7 @@ class BloomStoreSpec extends SparkFunSuite {
     val hits = novel.toDF("doc_id", "text")
       .withColumn("fp", md5(col("text")))
       .filter(graft.functions.GraftFunctions.bloomContainsLong(
-        spark, xxhash64(col("fp")), bloom))
+        xxhash64(col("fp")), bloom))
       .count()
     // all 5000 rows are novel: every hit is a false positive; at target
     // fpp 1% over 5000 probes, 150 would be 3x the expectation — a
@@ -56,7 +56,7 @@ class BloomStoreSpec extends SparkFunSuite {
     val storedHits = accepted.toDF("doc_id", "text")
       .withColumn("fp", md5(col("text")))
       .filter(graft.functions.GraftFunctions.bloomContainsLong(
-        spark, xxhash64(col("fp")), bloom))
+        xxhash64(col("fp")), bloom))
       .count()
     assert(storedHits == 5000L, s"no false negatives allowed: $storedHits")
   }

@@ -315,7 +315,6 @@ class DedupSpec extends SparkFunSuite {
     // EXACTLY (the prefix guarantee is recall 1.0, not approximate)
     val corpus = Tables.documents(spark, sf001)
     def allPairs(t: Double) = {
-      graft.functions.GraftFunctions.register(spark)
       val sets = corpus.select(col("doc_id").as("id"),
           Text.hashedShingleSet(col("text"), 1).as("s"))
         .withColumn("sz", size(col("s"))).filter(col("sz") > 0)

@@ -52,7 +52,6 @@ class CmsSketchSpec extends graft.SparkFunSuite {
   }
 
   test("SQL front door: build, union, and probe from plain SQL") {
-    CmsSketch.registerSql(spark)
     keys.createOrReplaceTempView("cms_keys")
     val row = spark.sql(
       """WITH shards AS (
@@ -67,7 +66,6 @@ class CmsSketchSpec extends graft.SparkFunSuite {
   }
 
   test("probing a null sketch yields null, not an NPE") {
-    CmsSketch.registerSql(spark)
     val row = spark.sql(
       "SELECT graft_cms_estimate(CAST(NULL AS BINARY), 3L) AS est").head()
     assert(row.isNullAt(0),

@@ -9,7 +9,6 @@ class AsOfRewriteSpec extends SparkFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private lazy val ready: Unit = {
-    AsOfRewriteRule.installLate(spark)
     Seq(
       (1L, 10L, ts("2024-01-01 10:30:00"), "t1"),
       (1L, 10L, ts("2024-01-01 11:00:00"), "t2"),
