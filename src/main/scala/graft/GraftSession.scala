@@ -43,10 +43,8 @@ object GraftSession {
       .master(master)
       .config("spark.sql.session.timeZone", "UTC")
       // graft's functions and optimizer rules on every session
-      // (plans.GraftExtensions). Each rule gates on its own conf and
-      // ships disabled, so this changes no plan until a query opts in
-      // (e.g. plans.RangeBinJoinRule.BinSecondsKey for the automatic
-      // non-equi range-join rewrite).
+      // (plans.GraftExtensions): the point-in-interval and as-of
+      // rewrites run on every query, with no setting of their own.
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // nanosecond parquet timestamps arrive as long micros-convertible
       // values instead of failing the read (see core.Tables.events)

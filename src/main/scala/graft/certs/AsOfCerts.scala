@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.plans.{AsOfJoinNative, RangeBinJoinRule}
+import graft.plans.AsOfJoinNative
 
 import CertSupport._
 
@@ -39,7 +39,7 @@ object AsOfCerts {
     * the rewrite) and verbatim in DuckDB (which decorrelates it its own
     * way) — engine-independent by construction.
     */
-  private def asofSqlText(events: String, orders: String): String =
+  private[graft] def asofSqlText(events: String, orders: String): String =
     s"""SELECT e.event_id, e.user_id,
        |       (SELECT max(o.o_orderdate) FROM $orders o
        |        WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)
@@ -84,38 +84,26 @@ object AsOfCerts {
        |FROM $events c
        |WHERE c.event_type = 'click'""".stripMargin
 
-  /** Run an as-of SQL text with the rewrite enabled, pin the expected
-    * plan shape, and materialize the result so the conf toggle cannot
-    * leak into later execution (same discipline as asof_join_sql_auto).
-    */
-  private def runAsofSql(s: SparkSession, dir: String, out: String,
+  /** Run an as-of SQL text and pin the expected plan shape. */
+  private def runAsofSql(s: SparkSession, dir: String,
       sql: String, forward: Boolean, tolMicros: Option[Long]): DataFrame = {
-    val key = plans.AsOfRewriteRule.EnabledKey
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
-      Tables.events(s, dir).createOrReplaceTempView("asql14_events")
-      val df = s.sql(sql)
-      // pin the rewrite INCLUDING direction and tolerance: a fire that
-      // dropped the tolerance would still look like an AsOfJoin in the
-      // formatted plan but return wrong (non-null) rows at 100 TB
-      val nodes = df.queryExecution.optimizedPlan.collect {
-        case p: plans.AsOfJoinPlan
-            if p.forward == forward && p.toleranceMicros == tolMicros => p
-      }
-      require(nodes.nonEmpty,
-        s"as-of rewrite did not fire with forward=$forward tol=$tolMicros:\n" +
-          df.queryExecution.optimizedPlan)
-      val plan = df.queryExecution.explainString(FormattedMode)
-      require(!plan.contains("BroadcastNestedLoopJoin") &&
-              !plan.contains("CartesianProduct"),
-        "rewrite enabled but the domain join still nested-loops")
-      df.write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+    Tables.events(s, dir).createOrReplaceTempView("asql14_events")
+    val df = s.sql(sql)
+    // pin the rewrite INCLUDING direction and tolerance: a fire that
+    // dropped the tolerance would still look like an AsOfJoin in the
+    // formatted plan but return wrong (non-null) rows at 100 TB
+    val nodes = df.queryExecution.optimizedPlan.collect {
+      case p: plans.AsOfJoinPlan
+          if p.forward == forward && p.toleranceMicros == tolMicros => p
     }
+    require(nodes.nonEmpty,
+      s"as-of rewrite did not fire with forward=$forward tol=$tolMicros:\n" +
+        df.queryExecution.optimizedPlan)
+    val plan = df.queryExecution.explainString(FormattedMode)
+    require(!plan.contains("BroadcastNestedLoopJoin") &&
+            !plan.contains("CartesianProduct"),
+      "rewrite enabled but the domain join still nested-loops")
+    df
   }
 
   /** The payload-bearing as-of SQL: a
@@ -158,40 +146,31 @@ object AsOfCerts {
 
   /** Shared runner for the lateral as-of certifications. */
   private def runLateralAsof(
-      s: SparkSession, dir: String, out: String, sql: String,
+      s: SparkSession, dir: String, sql: String,
       tolMicros: Option[Long] = None,
       nearest: Boolean = false): DataFrame = {
-    val key = plans.AsOfRewriteRule.EnabledKey
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
-      Tables.events(s, dir).createOrReplaceTempView("asql15_events")
-      val df = s.sql(sql)
-      val opt = df.queryExecution.optimizedPlan
-      val nodes = opt.collect {
-        case p: plans.AsOfJoinPlan
-            if !p.forward && p.toleranceMicros == tolMicros &&
-              p.nearest == nearest => p
-      }
-      require(nodes.nonEmpty,
-        s"lateral as-of rewrite did not fire with tol=$tolMicros " +
-          s"nearest=$nearest:\n$opt")
-      val leftoverRanking = opt.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-        case w: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit => w
-      }
-      require(leftoverRanking.isEmpty,
-        s"ranking sandwich survived the rewrite:\n$opt")
-      val plan = df.queryExecution.explainString(FormattedMode)
-      require(!plan.contains("BroadcastNestedLoopJoin") &&
-        !plan.contains("CartesianProduct"),
-        "rewrite enabled but the domain join still nested-loops")
-      df.write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+    Tables.events(s, dir).createOrReplaceTempView("asql15_events")
+    val df = s.sql(sql)
+    val opt = df.queryExecution.optimizedPlan
+    val nodes = opt.collect {
+      case p: plans.AsOfJoinPlan
+          if !p.forward && p.toleranceMicros == tolMicros &&
+            p.nearest == nearest => p
     }
+    require(nodes.nonEmpty,
+      s"lateral as-of rewrite did not fire with tol=$tolMicros " +
+        s"nearest=$nearest:\n$opt")
+    val leftoverRanking = opt.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      case w: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit => w
+    }
+    require(leftoverRanking.isEmpty,
+      s"ranking sandwich survived the rewrite:\n$opt")
+    val plan = df.queryExecution.explainString(FormattedMode)
+    require(!plan.contains("BroadcastNestedLoopJoin") &&
+      !plan.contains("CartesianProduct"),
+      "rewrite enabled but the domain join still nested-loops")
+    df
   }
 
   /** Tolerance-bounded lateral: the stale-quote payload spelling. */
@@ -315,56 +294,34 @@ object AsOfCerts {
     // NOT EXISTS window exclusion through the same extension — the
     // anti-join tier of RangeBinJoinRule certified on the query
     // surface with one SQL text run verbatim by both engines.
-    Cert.scratch("range_antijoin_auto", rangeAntiJoinSql("events")) { (s, dir, out) =>
-      val key = plans.RangeBinJoinRule.BinSecondsKey
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "3600")
-      try {
-        Tables.events(s, dir).createOrReplaceTempView("rja_events")
-        val df = s.sql(rangeAntiJoinSql("rja_events"))
-        val plan = df.queryExecution.explainString(FormattedMode)
-        require(!plan.contains("BroadcastNestedLoopJoin") &&
-                !plan.contains("CartesianProduct"),
-          s"anti-join sandwich still planned as a nested loop:\n$plan")
-        require(plan.contains("_graft_pbucket"),
-          s"bucket key missing — the anti rewrite did not fire:\n$plan")
-        df.write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
+    Cert("range_antijoin_auto", rangeAntiJoinSql("events")) { (s, dir) =>
+      Tables.events(s, dir).createOrReplaceTempView("rja_events")
+      val df = s.sql(rangeAntiJoinSql("rja_events"))
+      val plan = df.queryExecution.explainString(FormattedMode)
+      require(!plan.contains("BroadcastNestedLoopJoin") &&
+              !plan.contains("CartesianProduct"),
+        s"anti-join sandwich still planned as a nested loop:\n$plan")
+      require(plan.contains("_graft_pbucket"),
+        s"bucket key missing — the anti rewrite did not fire:\n$plan")
+      df
     },
-    // The optimizer-extension certification. The rule is gated on its
-    // conf, so it is enabled for exactly this query's optimization and
-    // the result is materialized under it (eager write + read-back —
-    // the same construction-eager idiom as reports_roundtrip; a lazy
-    // frame would optimize after the conf restore). The construction
-    // `require`s prove the rewrite actually fired: no nested-loop /
-    // cartesian join anywhere in the physical plan, and the injected
-    // bucket key present. At 100 TB this is the difference between an
-    // O(points × windows) broadcast nested loop and a shuffled hash
-    // join on the bucket key.
-    Cert.scratch("range_join_auto", rangeJoinSql("events")) { (s, dir, out) =>
-      val key = plans.RangeBinJoinRule.BinSecondsKey
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "3600")
-      try {
-        Tables.events(s, dir).createOrReplaceTempView("rja_events")
-        val df = s.sql(rangeJoinSql("rja_events"))
-        val plan = df.queryExecution.explainString(FormattedMode)
-        require(!plan.contains("BroadcastNestedLoopJoin") &&
-                !plan.contains("CartesianProduct"),
-          "RangeBinJoinRule enabled but the non-equi join still planned " +
-            s"as a nested loop:\n$plan")
-        require(plan.contains("_graft_pbucket"),
-          s"bucket key missing — the rewrite did not fire:\n$plan")
-        df.write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
+    // The optimizer-extension certification: the natural non-equi SQL,
+    // run as written. The construction `require`s prove the rewrite
+    // fired: no nested-loop / cartesian join anywhere in the physical
+    // plan, and the injected bucket key present. At 100 TB this is the
+    // difference between an O(points × windows) broadcast nested loop
+    // and a shuffled hash join on the bucket key.
+    Cert("range_join_auto", rangeJoinSql("events")) { (s, dir) =>
+      Tables.events(s, dir).createOrReplaceTempView("rja_events")
+      val df = s.sql(rangeJoinSql("rja_events"))
+      val plan = df.queryExecution.explainString(FormattedMode)
+      require(!plan.contains("BroadcastNestedLoopJoin") &&
+              !plan.contains("CartesianProduct"),
+        "RangeBinJoinRule enabled but the non-equi join still planned " +
+          s"as a nested loop:\n$plan")
+      require(plan.contains("_graft_pbucket"),
+        s"bucket key missing — the rewrite did not fire:\n$plan")
+      df
     },
     // The native twins of asof_join_events, asof_join_forward and
     // asof_join_tolerance (plans.AsOfJoinNative: logical node +
@@ -377,55 +334,45 @@ object AsOfCerts {
     // max-subquery — the natural as-of SQL in engines without an ASOF
     // keyword — decorrelates into a domain join whose inner theta join
     // is |distinct left times| × |orders| (the nested-loop scale trap).
-    // plans.AsOfRewriteRule (conf-gated, installed post-decorrelation)
-    // collapses the sandwich into the native AsOfJoinPlan. Certified
-    // the same way as range_join_auto: ONE SQL text, run in Spark with
-    // the rule on (plan require'd to contain the AsOfJoin exec and no
-    // nested loop) and verbatim in DuckDB as the oracle.
-    Cert.scratch("asof_join_sql_auto", asofSqlText("events", "orders")) { (s, dir, out) =>
-      val key = plans.AsOfRewriteRule.EnabledKey
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try {
-        Tables.events(s, dir).createOrReplaceTempView("asql_events")
-        Tables.orders(s, dir).createOrReplaceTempView("asql_orders")
-        val df = s.sql(asofSqlText("asql_events", "asql_orders"))
-        val plan = df.queryExecution.explainString(FormattedMode)
-        require(plan.contains("AsOfJoin"),
-          s"as-of rewrite did not fire:\n$plan")
-        require(!plan.contains("BroadcastNestedLoopJoin") &&
-                !plan.contains("CartesianProduct"),
-          "rewrite enabled but the domain join still nested-loops")
-        df.write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
+    // plans.AsOfRewriteRule (installed post-decorrelation) collapses
+    // the sandwich into the native AsOfJoinPlan. Certified the same way
+    // as range_join_auto: ONE SQL text, run in Spark as written (plan
+    // require'd to contain the AsOfJoin exec and no nested loop) and
+    // verbatim in DuckDB as the oracle.
+    Cert("asof_join_sql_auto", asofSqlText("events", "orders")) { (s, dir) =>
+      Tables.events(s, dir).createOrReplaceTempView("asql_events")
+      Tables.orders(s, dir).createOrReplaceTempView("asql_orders")
+      val df = s.sql(asofSqlText("asql_events", "asql_orders"))
+      val plan = df.queryExecution.explainString(FormattedMode)
+      require(plan.contains("AsOfJoin"),
+        s"as-of rewrite did not fire:\n$plan")
+      require(!plan.contains("BroadcastNestedLoopJoin") &&
+              !plan.contains("CartesianProduct"),
+        "rewrite enabled but the domain join still nested-loops")
+      df
     },
     // The stale-quote SQL shape: a user
     // bounding the backward as-of with `AND c.ts >= e.ts - INTERVAL 1
-    // HOUR` previously stayed on the BNLJ domain-join path even with
-    // the rewrite on — the matcher now maps the tolerance conjunct
-    // onto the operator's toleranceMicros.
-    Cert.scratch("asof_join_sql_tolerance_auto", asofTolSqlText("events")) { (s, dir, out) =>
-      runAsofSql(s, dir, out,
+    // HOUR` — the matcher maps the tolerance conjunct onto the
+    // operator's toleranceMicros.
+    Cert("asof_join_sql_tolerance_auto", asofTolSqlText("events")) { (s, dir) =>
+      runAsofSql(s, dir,
         asofTolSqlText("asql14_events"),
         forward = false, tolMicros = Some(3600000000L))
     },
     // The same stale-quote SQL with a STRICT bound — the other
     // spelling a user reaches for — certified through the 1µs
     // tolerance tightening.
-    Cert.scratch("asof_join_sql_strict_auto", asofStrictTolSqlText("events")) { (s, dir, out) =>
-      runAsofSql(s, dir, out,
+    Cert("asof_join_sql_strict_auto", asofStrictTolSqlText("events")) { (s, dir) =>
+      runAsofSql(s, dir,
         asofStrictTolSqlText("asql14_events"),
         forward = false, tolMicros = Some(3600000000L - 1L))
     },
     // The forward (min/>=) SQL spelling through the same front door —
     // the rule has always matched it but the certified SQL surface
     // only exercised backward/max.
-    Cert.scratch("asof_join_sql_forward_auto", asofFwdSqlText("events")) { (s, dir, out) =>
-      runAsofSql(s, dir, out,
+    Cert("asof_join_sql_forward_auto", asofFwdSqlText("events")) { (s, dir) =>
+      runAsofSql(s, dir,
         asofFwdSqlText("asql14_events"),
         forward = true, tolMicros = None)
     },
@@ -505,8 +452,8 @@ object AsOfCerts {
     // rows with nulls — the operator's own output, no inner filter.
     // Same collapse, same requires; the purchase-side left means real
     // null rows exist at every SF (purchases with no prior click).
-    Cert.scratch("asof_lateral_left_auto", asofLateralLeftSqlText("events")) { (s, dir, out) =>
-      runLateralAsof(s, dir, out,
+    Cert("asof_lateral_left_auto", asofLateralLeftSqlText("events")) { (s, dir) =>
+      runLateralAsof(s, dir,
         asofLateralLeftSqlText("asql15_events"))
     },
     // The stale-quote LATERAL: the tolerance-bounded payload as-of a
@@ -516,8 +463,8 @@ object AsOfCerts {
     // that dropped the tolerance would look right in a name-only plan
     // check and return wrong rows); DuckDB evaluates the bound
     // directly, so any divergence hash-mismatches.
-    Cert.scratch("asof_lateral_tolerance_auto", asofLateralTolSqlText("events")) { (s, dir, out) =>
-      runLateralAsof(s, dir, out,
+    Cert("asof_lateral_tolerance_auto", asofLateralTolSqlText("events")) { (s, dir) =>
+      runLateralAsof(s, dir,
         asofLateralTolSqlText("asql15_events"), tolMicros = Some(3600000000L))
     },
     // The LATERAL as-of front door: without the rewrite, Spark
@@ -529,11 +476,11 @@ object AsOfCerts {
     // riding through; the requires pin the fire (backward, no
     // tolerance), the ABSENCE of the ranking machinery (Window /
     // WindowGroupLimit both gone), and the nested-loop-free plan.
-    Cert.scratch("asof_lateral_auto",
+    Cert("asof_lateral_auto",
       // the SAME text the engine ran (modulo the view name): DuckDB
       // executes the lateral top-1 directly
-      asofLateralSqlText("events")) { (s, dir, out) =>
-      runLateralAsof(s, dir, out,
+      asofLateralSqlText("events")) { (s, dir) =>
+      runLateralAsof(s, dir,
         asofLateralSqlText("asql15_events"))
     },
     // Streaming as-of against an EVOLVING dimension: asof_stream_enrich joined a static right side; the
@@ -642,8 +589,8 @@ object AsOfCerts {
     // Decorrelation builds an UNCONDITIONED domain × clicks cross join
     // around it — AsOfRewriteRule collapses the whole sandwich onto
     // AsOfJoinPlan(nearest), require'd by the shared runner.
-    Cert.scratch("asof_lateral_nearest_auto", NearestOracleSql) { (s, dir, out) =>
-      runLateralAsof(s, dir, out,
+    Cert("asof_lateral_nearest_auto", NearestOracleSql) { (s, dir) =>
+      runLateralAsof(s, dir,
         """SELECT e.event_id, e.user_id, q.q_ts AS near_ts, q.q_id AS near_id
           |FROM asql15_events e LEFT OUTER JOIN LATERAL (
           |  SELECT q_ts, q_id, abs(q.q_ts - e.ts) AS d FROM (
@@ -657,9 +604,9 @@ object AsOfCerts {
         nearest = true)
     },
     // Non-equi range join via bucketing: events falling inside derived
-    // daily 02:00–06:00 maintenance windows (no equi key — the bucket
-    // expansion is what keeps this a hash join; see
-    // RangeBinJoinRule.pointInInterval).
+    // daily 02:00–06:00 maintenance windows, written as the plain
+    // DataFrame join (no equi key — RangeBinJoinRule's bucket expansion
+    // is what keeps this a hash join, require'd below).
     Cert("range_join_windows",
       """WITH w AS (
         |  SELECT DISTINCT date_trunc('day', ts) + INTERVAL 2 HOUR AS w_start,
@@ -673,8 +620,12 @@ object AsOfCerts {
         .select(
           (col("day") + expr("INTERVAL 2 HOURS")).as("w_start"),
           (col("day") + expr("INTERVAL 6 HOURS")).as("w_end"))
-      RangeBinJoinRule.pointInInterval(ev, windows, "ts", "w_start", "w_end", 3600L)
-        .groupBy(col("w_start"))
+      val joined = ev.join(windows,
+        col("ts") >= col("w_start") && col("ts") < col("w_end"))
+      val plan = joined.queryExecution.explainString(FormattedMode)
+      require(plan.contains("_graft_pbucket"),
+        s"bucket key missing — the rewrite did not fire:\n$plan")
+      joined.groupBy(col("w_start"))
         .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
     },
     // Forward as-of join (attribution direction): each click picks up

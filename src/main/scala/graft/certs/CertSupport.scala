@@ -74,8 +74,8 @@ object CertSupport {
 
   /** The natural point-in-interval SQL — ONE text, run verbatim by BOTH
     * engines (only the event-table name differs): Spark executes it via
-    * `range_join_auto` with the rewrite rule enabled, DuckDB executes it
-    * as the oracle. Daily 01:00–07:00 maintenance windows derived from
+    * `range_join_auto`, where the rewrite rule plans it, DuckDB executes
+    * it as the oracle. Daily 01:00–07:00 maintenance windows derived from
     * the data itself, then events counted into their window.
     */
   private[graft] def rangeJoinSql(eventsTable: String): String =

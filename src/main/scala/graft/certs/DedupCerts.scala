@@ -137,9 +137,9 @@ object DedupCerts {
       // Hamming join and must report all-true.
       "SELECT true AS nonempty, true AS subset_ok, true AS recall_ok") { (s, dir) =>
       val docs = Tables.documents(s, dir).filter(col("doc_id") < 100)
-      val block = Dedup.simhashNearDupPairs(s, docs, "doc_id", "text", maxHamming = 3)
+      val block = Dedup.simhashNearDupPairs(docs, "doc_id", "text", maxHamming = 3)
         .select(col("id_a"), col("id_b"))
-      val exact = Dedup.simhashPairsExact(s, docs, "doc_id", "text", maxHamming = 3)
+      val exact = Dedup.simhashPairsExact(docs, "doc_id", "text", maxHamming = 3)
         .select(col("id_a"), col("id_b"))
       val nB = block.agg(count(lit(1)).as("n_block"))
       val nE = exact.agg(count(lit(1)).as("n_exact"))
@@ -166,11 +166,11 @@ object DedupCerts {
       val corpus = docs.filter(col("doc_id") < 100)
       val incoming = docs.filter(col("doc_id") >= 100)
       val matches = Dedup
-        .streamSimhashMatches(s, incoming, corpus, "doc_id", "text", maxHamming = 3)
+        .streamSimhashMatches(incoming, corpus, "doc_id", "text", maxHamming = 3)
         .select(col("in_id"), col("corpus_id"))
-      val shIn = Dedup.simhashes(s, incoming, "doc_id", "text")
+      val shIn = Dedup.simhashes(incoming, "doc_id", "text")
         .select(col("id").as("in_id"), col("simhash").as("sh_in"))
-      val shC = Dedup.simhashes(s, corpus, "doc_id", "text")
+      val shC = Dedup.simhashes(corpus, "doc_id", "text")
         .select(col("id").as("corpus_id"), col("simhash").as("sh_c"))
       val exact = shIn.join(shC,
           bit_count(col("sh_in").bitwiseXOR(col("sh_c"))) <= 3)

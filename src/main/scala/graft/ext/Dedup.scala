@@ -335,8 +335,7 @@ object Dedup {
   // ----------------------------------------------------------- SimHash
 
   /** (id, simhash) per document via the codegen'd SimHash64 expression. */
-  def simhashes(
-      spark: SparkSession, docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  def simhashes(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(
       col(idCol).as("id"),
       GraftFunctions.simhash64(Text.hashed(Text.tokenSet(col(textCol)))).as("simhash"))
@@ -353,7 +352,7 @@ object Dedup {
     * ball agrees exactly on at least one block.
     */
   def simhashBlocks(
-      spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
+      docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val nBlocks = maxHamming + 1
     val width = 64 / nBlocks
@@ -362,7 +361,7 @@ object Dedup {
     // behavior as the MinHash signature). Streaming inputs can't cache —
     // they evaluate the chain per block, which is fine at per-batch
     // volumes.
-    val sh0 = simhashes(spark, docs, idCol, textCol)
+    val sh0 = simhashes(docs, idCol, textCol)
     val sh = if (docs.isStreaming) sh0 else CacheScope.cached(sh0)
     val blockKeys = array((0 until nBlocks).map { j =>
       val shifted = shiftrightunsigned(col("simhash"), j * width)
@@ -376,7 +375,7 @@ object Dedup {
   }
 
   def simhashNearDupPairs(
-      spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
+      docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3,
       /** Skew guard, same rationale as MinHash banding: low-entropy
         * corpora make many non-near documents agree on one 16-bit block,
@@ -386,7 +385,7 @@ object Dedup {
         * document's other blocks unless ALL of them are hot.
         */
       maxBucketSize: Int = 2000): DataFrame = {
-    val blocks = CacheScope.cached(simhashBlocks(spark, docs, idCol, textCol, maxHamming))
+    val blocks = CacheScope.cached(simhashBlocks(docs, idCol, textCol, maxHamming))
     // Hamming bound INSIDE the join condition (far pairs are rejected
     // during the probe, never materialized); first-healthy-collision
     // emission makes each pair unique with no distinct() (see LshJoin)
@@ -411,10 +410,10 @@ object Dedup {
     * every query.
     */
   def simhashPairsExact(
-      spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
+      docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    val sh = CacheScope.cached(simhashes(spark, docs, idCol, textCol))
-    val par = spark.sparkContext.defaultParallelism
+    val sh = CacheScope.cached(simhashes(docs, idCol, textCol))
+    val par = docs.sparkSession.sparkContext.defaultParallelism
     val a = sh.repartition(par)
       .select(col("id").as("id_a"), col("simhash").as("sh_a"))
     val b = sh.select(col("id").as("id_b"), col("simhash").as("sh_b"))
@@ -435,11 +434,11 @@ object Dedup {
     * Output: (in_id, corpus_id, hamming).
     */
   def streamSimhashMatches(
-      spark: SparkSession, incoming: DataFrame, corpus: DataFrame,
+      incoming: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, maxHamming: Int = 3): DataFrame = {
-    val in = simhashBlocks(spark, incoming, idCol, textCol, maxHamming)
+    val in = simhashBlocks(incoming, idCol, textCol, maxHamming)
       .withColumnsRenamed(Map("id" -> "in_id", "payload" -> "in_sh", "keys" -> "in_keys"))
-    val corp = simhashBlocks(spark, corpus, idCol, textCol, maxHamming)
+    val corp = simhashBlocks(corpus, idCol, textCol, maxHamming)
       .withColumnsRenamed(Map("id" -> "corpus_id", "payload" -> "c_sh", "keys" -> "c_keys"))
     in.join(corp,
         in("band") === corp("band") && in("band_hash") === corp("band_hash") &&

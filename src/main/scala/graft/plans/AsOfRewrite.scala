@@ -6,12 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{JOIN, PROJECT}
 import org.apache.spark.sql.types.{DateType, DayTimeIntervalType, TimestampType}
-
-object AsOfRewriteRule {
-  /** Opt-in gate; the rule ships disabled like the range-join rewrite. */
-  val EnabledKey = "spark.graft.asofRewrite.enabled"
-}
 
 /** Automatic as-of rewrite — the optimizer-rule front door to the
   * native as-of operator ([[AsOfJoinPlan]]).
@@ -93,19 +89,20 @@ object AsOfRewriteRule {
   * payload re-applies the identical cast so the alias keeps
   * `maxAttr`'s type — reusing the exprId with a different type would
   * silently retype every downstream consumer.
+  *
+  * The rule runs on every session's plans; nothing turns it on. Spark's
+  * own `spark.sql.optimizer.excludedRules` (set to this class's name)
+  * leaves a session's plans un-rewritten, the domain-join reference the
+  * specs compare against.
   */
 case class AsOfRewriteRule(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
-  import AsOfRewriteRule._
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(EnabledKey, "false").trim
-        .equalsIgnoreCase("true")) plan
-    else plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithPruning(_.containsAllPatterns(PROJECT, JOIN)) {
       case p @ Project(_, _: Join) =>
         rewrite(p).orElse(rewriteLateral(p)).getOrElse(p)
     }
-  }
 
   private def stripCast(e: Expression): Expression = e match {
     case c: Cast => stripCast(c.child)

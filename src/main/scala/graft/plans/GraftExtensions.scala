@@ -18,24 +18,33 @@ import graft.functions.{CmsSketch, GraftFunctions}
   *   - Functions: the native kernels of [[GraftFunctions.builders]] and
   *     the Count-Min trio of [[CmsSketch.sqlFunctions]], callable from
   *     SQL and through `call_function`.
-  *   - [[RangeBinJoinRule]] and [[AsOfRewriteRule]], each gated on its
-  *     own conf and shipped disabled, so their presence never changes a
-  *     plan until a query opts in.
+  *   - [[RangeBinJoinRule]] and [[AsOfRewriteRule]], always on: each
+  *     rewrites only its own narrow shape (a non-equi point-in-interval
+  *     join; a decorrelated as-of subquery) and returns the same rows as
+  *     the plan it replaces. Spark's `spark.sql.optimizer.excludedRules`
+  *     removes either from every batch, both copies included.
   *
-  * Each rule runs twice. The injected copy of the range-join rule runs
-  * inside the operator-optimization fixpoint, which sits BEFORE
-  * `RewriteSubquery`: a correlated `EXISTS` / `NOT EXISTS` time-window
-  * predicate, or the as-of rule's correlated scalar subquery, only
-  * becomes the join those rules match after decorrelation. So a second
-  * copy of each goes into `experimental.extraOptimizations`, the "User
-  * Provided Optimizers" batch after it. No extension hook reaches that
-  * batch, so the append lives in the optimizer-rule builder: Spark calls
-  * it with the session each time the optimizer builds its batches,
-  * after the session state exists and before the batches read
+  * Each rule runs twice. The injected copies run inside the
+  * operator-optimization fixpoint, which sits BEFORE `RewriteSubquery`:
+  * a correlated `EXISTS` / `NOT EXISTS` time-window predicate only
+  * becomes the join the range-join rule matches after that batch, and
+  * a correlated scalar subquery, decorrelated inside the fixpoint, may
+  * settle into the as-of shape only after it. So a second copy of each
+  * goes into `experimental.extraOptimizations`, the "User Provided
+  * Optimizers" batch after it. No extension hook reaches that batch, so
+  * the append lives in the optimizer-rule builder: Spark calls it with
+  * the session each time the optimizer builds its batches, after the
+  * session state exists and before the batches read
   * `extraOptimizations`, so the late copies are there from the
   * session's first query on. The builder runs several times per query,
   * hence the check-and-append under the lock. The range-join rule's
   * equi-conjunct guard keeps its two copies from double-rewriting.
+  *
+  * In both places the as-of rule runs first. A tolerance-bounded as-of
+  * (`rt <= t AND rt >= t - INTERVAL 1 HOUR`) decorrelates into a domain
+  * join that is also a point-in-interval sandwich; the as-of rule
+  * collapses the whole subquery into one merge, which the range
+  * rewrite of its inner join would rule out.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -46,8 +55,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     CmsSketch.sqlFunctions.foreach(u => inject(u.name, GraftSqlShim.expression(u, _)))
     ext.injectOptimizerRule { session =>
       GraftExtensions.appendLateRules(session)
-      RangeBinJoinRule(session)
+      AsOfRewriteRule(session)
     }
+    ext.injectOptimizerRule(RangeBinJoinRule(_))
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }
@@ -56,7 +66,7 @@ object GraftExtensions {
   private def appendLateRules(session: SparkSession): Unit = {
     val x = session.experimental
     x.synchronized {
-      val missing = Seq(RangeBinJoinRule(session), AsOfRewriteRule(session))
+      val missing = Seq(AsOfRewriteRule(session), RangeBinJoinRule(session))
         .filterNot(r => x.extraOptimizations.exists(_.getClass == r.getClass))
       if (missing.nonEmpty) x.extraOptimizations ++= missing
     }

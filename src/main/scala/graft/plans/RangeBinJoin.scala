@@ -1,55 +1,23 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.trees.TreePattern.JOIN
 import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
 
 object RangeBinJoinRule {
-  /** Bin width in seconds for the automatic range-join rewrite;
-    * `0` (the default) disables the rule entirely; `auto` derives the
-    * width from the interval side's max interval length at rewrite
-    * time (one scalar side job, DPP-style).
-    */
-  val BinSecondsKey = "spark.graft.rangeJoin.binSeconds"
-
-  /** Upper bound on an explicit bin width (~10 years). The guard is
-    * not taste: `binSeconds * 1000000L` silently overflows Long for
-    * absurd values, and the rule runs on EVERY plan of the session —
-    * a malformed conf must never become a wrong plan.
+  /** Upper bound on the data-derived bin width (~10 years). An interval
+    * side whose longest interval is longer still is bucketed at this
+    * width: its long intervals explode into more buckets, while a width
+    * past it would put every point of real data into one or two buckets
+    * and leave the equi key nothing to partition.
     */
   val MaxBinSeconds: Long = 86400L * 3653
-
-  /** The DataFrame entry: join `points` (timestamp `pointCol`) to
-    * `intervals` ([`startCol`, `endCol`) half-open timestamps) at a
-    * fixed bucket width of `bucketSeconds`, returning matched rows with
-    * all columns of both inputs. It plans the plain
-    * `p >= lo AND p < hi` join and applies the rule's own rewrite to
-    * it, whatever [[BinSecondsKey]] says for the session.
-    */
-  def pointInInterval(
-      points: DataFrame, intervals: DataFrame,
-      pointCol: String, startCol: String, endCol: String,
-      bucketSeconds: Long = 3600L): DataFrame = {
-    require(bucketSeconds >= 1L && bucketSeconds <= MaxBinSeconds,
-      s"bucketSeconds must be in [1, $MaxBinSeconds], got $bucketSeconds")
-    val joined = points.join(intervals,
-      col(pointCol) >= col(startCol) && col(pointCol) < col(endCol))
-    val rewritten = joined.queryExecution.analyzed match {
-      case j @ Join(l, r, Inner, Some(cond), hint) =>
-        RangeBinJoinRule(points.sparkSession)
-          .rewrite(j, Inner, l, r, cond, hint, Some(bucketSeconds * 1000000L))
-      case _ => None
-    }
-    GraftSqlShim.ofRows(points.sparkSession, rewritten.getOrElse(
-      throw new IllegalArgumentException(s"$pointCol in [$startCol, $endCol) " +
-        "is not a bucketable point-in-interval join")))
-  }
 }
 
 /** Automatic point-in-interval join rewrite.
@@ -59,11 +27,12 @@ object RangeBinJoinRule {
   * Catalyst a join with NO equi key, which it can only plan as a
   * broadcast nested loop (or a cartesian product): O(points ×
   * intervals) comparisons, the canonical 100 TB non-starter. This
-  * rule fixes it for ANY query on the session, inside the optimizer,
-  * with no query rewrite (and, at a fixed width, for one DataFrame
-  * through [[RangeBinJoinRule.pointInInterval]]):
+  * rule fixes it for every query on every session, inside the
+  * optimizer, with no query rewrite and no setting to turn it on:
   *
-  *   - the point side gains a bucket column `unix_micros(p) DIV w`;
+  *   - the point side gains a bucket column `unix_micros(p) DIV w`,
+  *     where w is the interval side's longest interval, measured by
+  *     one scalar side job at rewrite time;
   *   - the interval side explodes each interval into the buckets it
   *     overlaps (`sequence(lo DIV w, (hi-1µs) DIV w)` — half-open end,
   *     so an interval ending exactly on a bucket boundary does not
@@ -98,6 +67,10 @@ object RangeBinJoinRule {
   * drops empty intervals (`hi <= lo`) that `sequence` would otherwise
   * step backwards through — rows the inner join could never emit.
   *
+  * Spark's own `spark.sql.optimizer.excludedRules` (set to this class's
+  * name) leaves a session's plans un-rewritten; the specs use that as
+  * the nested-loop reference.
+  *
   * Reference behavior: verizon_automation_script.sh has no non-equi
   * join (Hive refuses them in the ON clause); this is north-star
   * surface.
@@ -106,43 +79,21 @@ case class RangeBinJoinRule(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
   import RangeBinJoinRule._
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // Robust conf parse: the rule runs inside the optimizer on EVERY
-    // query of the session — a malformed value must disable the rewrite
-    // (with a warning), never throw and fail unrelated queries.
-    // `None` = disabled; `Some(None)` = auto width; `Some(Some(w))` =
-    // fixed width in microseconds, bounded so the multiply cannot
-    // overflow.
-    val width: Option[Option[Long]] =
-      conf.getConfString(BinSecondsKey, "0").trim match {
-        case "" | "0"                        => None
-        case a if a.equalsIgnoreCase("auto") => Some(None)
-        case s => s.toLongOption match {
-          case Some(v) if v >= 1L && v <= MaxBinSeconds =>
-            Some(Some(v * 1000000L))
-          case _ =>
-            logWarning(s"$BinSecondsKey='$s' is not 'auto' or an integer " +
-              s"in [1, $MaxBinSeconds]; range-join rewrite disabled")
-            None
-        }
-      }
-    width match {
-      case None => plan
-      case Some(fixed) => plan.transformUp {
-        case j @ Join(left, right, jt @ (Inner | LeftSemi | LeftAnti),
-            Some(cond), hint) =>
-          rewrite(j, jt, left, right, cond, hint, fixed).getOrElse(j)
-      }
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithPruning(_.containsPattern(JOIN)) {
+      case j @ Join(left, right, jt @ (Inner | LeftSemi | LeftAnti),
+          Some(cond), hint) =>
+        rewrite(j, jt, left, right, cond, hint).getOrElse(j)
     }
-  }
 
-  /** Auto mode: the bin width is the interval side's LONGEST interval,
-    * measured at rewrite time by one scalar aggregation over the
-    * interval subplan (the DPP idiom — a side job feeding a planning
-    * decision). With w = max(hi - lo), every interval explodes into at
-    * most TWO buckets, the amplification-optimal width when interval
-    * lengths are of the same order; the side job scans only the
-    * interval side — the windows/dimension relation of every
+  /** The bin width: the interval side's LONGEST interval, capped at
+    * [[RangeBinJoinRule.MaxBinSeconds]] and measured at rewrite time by
+    * one scalar aggregation over the interval subplan (the DPP idiom —
+    * a side job feeding a planning decision). With w = max(hi - lo),
+    * every interval explodes into at most TWO buckets, the
+    * amplification-optimal width when interval lengths are of the same
+    * order; the side job scans only the interval side — the
+    * windows/dimension relation of every
     * point-in-interval join, orders of magnitude smaller than the
     * points side the rewrite saves from the nested loop. An empty or
     * all-degenerate interval side yields no width and the rewrite is
@@ -156,14 +107,14 @@ case class RangeBinJoinRule(session: SparkSession)
       val len = Alias(
         new aggregate.Max(Subtract(hiM, loM)).toAggregateExpression(),
         "_graft_max_interval")()
-      val row = org.apache.spark.sql.graft.GraftSqlShim
+      val row = GraftSqlShim
         .ofRows(session, Aggregate(Nil, Seq(len), iSide)).collect().head
       if (row.isNullAt(0) || row.getLong(0) <= 0L) None
       else Some(math.min(math.max(row.getLong(0), 1000000L),
         MaxBinSeconds * 1000000L))
     } catch {
       case scala.util.control.NonFatal(e) =>
-        logWarning("auto bin-width side job failed; " +
+        logWarning("bin-width side job failed; " +
           "range-join rewrite skipped", e)
         None
     }
@@ -183,10 +134,9 @@ case class RangeBinJoinRule(session: SparkSession)
     case _ => None
   }
 
-  private[plans] def rewrite(j: Join, jt: JoinType,
+  private def rewrite(j: Join, jt: JoinType,
                       left: LogicalPlan, right: LogicalPlan,
-                      cond: Expression, hint: JoinHint,
-                      fixedBinMicros: Option[Long]): Option[LogicalPlan] = {
+                      cond: Expression, hint: JoinHint): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
     def crossSide(a: Expression, b: Expression): Boolean =
       (a.references.nonEmpty && b.references.nonEmpty) &&
@@ -249,7 +199,7 @@ case class RangeBinJoinRule(session: SparkSession)
 
     sandwich.headOption.flatMap {
       case (pSide, pM, iSide, lo, loM, hi, hiM, upperStrict) =>
-        fixedBinMicros.orElse(autoBinMicros(iSide, loM, hiM)).map { binMicros =>
+        autoBinMicros(iSide, loM, hiM).map { binMicros =>
         val w = Literal(binMicros)
         val pBucket = Alias(IntegralDivide(pM, w), "_graft_pbucket")()
         val newPoints = Project(pSide.output :+ pBucket, pSide)

@@ -88,6 +88,13 @@ object Stress {
         f"max_task_s=${acc.maxTaskMs / 1e3}%.1f|$extra")
     }
 
+    // The "rule off" side of the on/off comparisons: `body` with `rule`
+    // left out of every optimizer batch (Spark's own rule exclusion).
+    def withoutRule[A](rule: Class[_])(body: => A): A = {
+      spark.conf.set("spark.sql.optimizer.excludedRules", rule.getName)
+      try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    }
+
     // One stream-stream interval join over `ev` in `chunks` chunks, with
     // the progress-trail evidence the amp and chunks sweeps report.
     def intervalJoinRun(ev: DataFrame, root: String, chunks: Int): (Long, String) = {
@@ -247,27 +254,23 @@ object Stress {
     // 8. Optimizer-extension range join under amplification (round 12):
     // points ×amp against a CONSTANT interval side (the amplified
     // copies share the fixture calendar, so the derived daily windows
-    // don't grow). With RangeBinJoinRule enabled the join must stay an
-    // equi join on the bucket key at every amp — matched rows exactly
+    // don't grow). RangeBinJoinRule must keep the join an equi join on
+    // the bucket key at every amp — matched rows exactly
     // ×amp, wall time ~linear. The un-rewritten nested loop would be
     // O(points × windows) row comparisons; the require makes the sweep
     // fail loudly if the rewrite ever stops firing.
     for (amp <- amps if sections("rangejoin")) {
       val evA = Amplify.events(ev0, amp)
       run("range_join_auto", amp, ev0.count() * amp) {
-        val key = graft.plans.RangeBinJoinRule.BinSecondsKey
-        spark.conf.set(key, "3600")
-        try {
-          evA.createOrReplaceTempView("stress_rja_events")
-          val df = spark.sql(graft.certs.CertSupport.rangeJoinSql("stress_rja_events"))
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          require(!plan.contains("BroadcastNestedLoopJoin") &&
-                  !plan.contains("CartesianProduct"),
-            "range-join rewrite did not fire under amplification")
-          val row = df.agg(sum("n_events"), count(lit(1))).head
-          (row.getLong(0), s"windows=${row.getLong(1)}")
-        } finally spark.conf.unset(key)
+        evA.createOrReplaceTempView("stress_rja_events")
+        val df = spark.sql(graft.certs.CertSupport.rangeJoinSql("stress_rja_events"))
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        require(!plan.contains("BroadcastNestedLoopJoin") &&
+                !plan.contains("CartesianProduct"),
+          "range-join rewrite did not fire under amplification")
+        val row = df.agg(sum("n_events"), count(lit(1))).head
+        (row.getLong(0), s"windows=${row.getLong(1)}")
       }
     }
 
@@ -346,31 +349,29 @@ object Stress {
            |       sum(hash(e.event_id, unix_seconds(w.w_start))) AS chk
            |FROM stress_rjc_events e
            |JOIN w ON e.ts >= w.w_start AND e.ts < w.w_end""".stripMargin
-      val key = graft.plans.RangeBinJoinRule.BinSecondsKey
       var onRow: org.apache.spark.sql.Row = null
       run("range_join_rule_on", amp, ev0.count() * amp) {
-        spark.conf.set(key, "auto")
-        try {
-          val df = spark.sql(sqlText)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          require(plan.contains("_graft_pbucket"),
-            "auto rewrite did not fire in the comparison sweep")
-          onRow = df.head
-          (onRow.getLong(0), s"windows=${30 * 6 * amp}")
-        } finally spark.conf.unset(key)
-      }
-      run("range_join_rule_off", amp, ev0.count() * amp) {
         val df = spark.sql(sqlText)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        require(plan.contains("BroadcastNestedLoopJoin") ||
-                plan.contains("CartesianProduct"),
-          "rule-off run unexpectedly found an equi plan")
-        val row = df.head
-        require(row == onRow,
-          s"rule on/off disagree: on=$onRow off=$row")
-        (row.getLong(0), s"windows=${30 * 6 * amp}")
+        require(plan.contains("_graft_pbucket"),
+          "auto rewrite did not fire in the comparison sweep")
+        onRow = df.head
+        (onRow.getLong(0), s"windows=${30 * 6 * amp}")
+      }
+      run("range_join_rule_off", amp, ev0.count() * amp) {
+        withoutRule(classOf[graft.plans.RangeBinJoinRule]) {
+          val df = spark.sql(sqlText)
+          val plan = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          require(plan.contains("BroadcastNestedLoopJoin") ||
+                  plan.contains("CartesianProduct"),
+            "rule-off run unexpectedly found an equi plan")
+          val row = df.head
+          require(row == onRow,
+            s"rule on/off disagree: on=$onRow off=$row")
+          (row.getLong(0), s"windows=${30 * 6 * amp}")
+        }
       }
     }
 
@@ -597,7 +598,6 @@ object Stress {
     // at amp=1 only, and the ON path sweeps the 1-in-10 slice across
     // amps to show the rewritten plan stays linear.
     if (sections("asofsqlcmp")) {
-      val key = graft.plans.AsOfRewriteRule.EnabledKey
       val sqlText =
         """SELECT count(*) AS n, sum(hash(event_id, m)) AS chk FROM (
           |  SELECT e.event_id,
@@ -630,15 +630,12 @@ object Stress {
       def runOn(label: String, amp: Int, nRows: Long): org.apache.spark.sql.Row = {
         var row: org.apache.spark.sql.Row = null
         run(label, amp, nRows) {
-          spark.conf.set(key, "true")
-          try {
-            val df = spark.sql(sqlText)
-            require(df.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode)
-              .contains("AsOfJoin"), "as-of rewrite did not fire in stress")
-            row = df.head
-            (row.getLong(0), "")
-          } finally spark.conf.unset(key)
+          val df = spark.sql(sqlText)
+          require(df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode)
+            .contains("AsOfJoin"), "as-of rewrite did not fire in stress")
+          row = df.head
+          (row.getLong(0), "")
         }
         row
       }
@@ -646,7 +643,8 @@ object Stress {
         val nSmall = views(evMod = 40, amp = 1)
         val onRow = runOn("asof_sql_rule_on_small", 1, nSmall)
         run("asof_sql_rule_off_small", 1, nSmall) {
-          val row = spark.sql(sqlText).head
+          val row = withoutRule(classOf[graft.plans.AsOfRewriteRule])(
+            spark.sql(sqlText).head)
           require(row == onRow,
             s"as-of rule on/off disagree: on=$onRow off=$row")
           (row.getLong(0), "")

@@ -71,12 +71,17 @@ class GraftSessionSpec extends SparkFunSuite {
       // the Count-Min trio from SQL
       assert(n.sql("SELECT graft_cms_estimate(graft_cms_build(id), 1) FROM range(10)")
         .head().getLong(0) == 1L)
-      // the late range-join copy catches the decorrelated NOT EXISTS
-      n.conf.set(plans.RangeBinJoinRule.BinSecondsKey, "3600")
+      // the late range-join copy catches the decorrelated NOT EXISTS,
+      // and the as-of rule collapses the correlated max-subquery, with
+      // no setting on `n`
       core.Tables.events(n, sf001).createOrReplaceTempView("ns_events")
       val plan = n.sql(certs.AsOfCerts.rangeAntiJoinSql("ns_events"))
         .queryExecution.explainString(FormattedMode)
       assert(plan.contains("_graft_pbucket"), plan)
+      core.Tables.orders(n, sf001).createOrReplaceTempView("ns_orders")
+      val asof = n.sql(certs.AsOfCerts.asofSqlText("ns_events", "ns_orders"))
+        .queryExecution.optimizedPlan
+      assert(asof.collect { case p: plans.AsOfJoinPlan => p }.nonEmpty, asof)
     } finally prev match {
       case Some(s) => SparkSession.setActiveSession(s)
       case None => SparkSession.clearActiveSession()

@@ -32,7 +32,7 @@ class EdgeCasesSpec extends SparkFunSuite {
     assert(Dedup.exactByKey(empty, "doc_id", "text").count() == 0)
     assert(Dedup.jaccardPairsExact(empty, "doc_id", "text", 0.9).count() == 0)
     assert(Dedup.minhashNearDupPairs(empty, "doc_id", "text", 0.9).count() == 0)
-    assert(Dedup.simhashNearDupPairs(spark, empty, "doc_id", "text").count() == 0)
+    assert(Dedup.simhashNearDupPairs(empty, "doc_id", "text").count() == 0)
   }
 
   test("similarity operators tolerate empty and zero-norm inputs") {

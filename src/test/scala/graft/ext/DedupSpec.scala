@@ -61,7 +61,7 @@ class DedupSpec extends SparkFunSuite {
   }
 
   test("simhash: identical texts collide, near texts are close, different texts far") {
-    val sh = Dedup.simhashes(spark, docs, "doc_id", "text")
+    val sh = Dedup.simhashes(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(sh(1L) == sh(2L))
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -69,7 +69,7 @@ class DedupSpec extends SparkFunSuite {
   }
 
   test("simhashNearDupPairs finds the duplicate pair via block join") {
-    val got = Dedup.simhashNearDupPairs(spark, docs, "doc_id", "text", maxHamming = 3)
+    val got = Dedup.simhashNearDupPairs(docs, "doc_id", "text", maxHamming = 3)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.contains((1L, 2L)))
   }
@@ -83,8 +83,8 @@ class DedupSpec extends SparkFunSuite {
     val d = Tables.documents(spark, sf001)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Dedup.simhashPairsExact(spark, d, "doc_id", "text", 3))
-    val block = pairs(Dedup.simhashNearDupPairs(spark, d, "doc_id", "text", 3))
+    val exact = pairs(Dedup.simhashPairsExact(d, "doc_id", "text", 3))
+    val block = pairs(Dedup.simhashNearDupPairs(d, "doc_id", "text", 3))
     assert(block.subsetOf(exact))
     assert(exact.nonEmpty && block.size.toDouble / exact.size >= 0.75,
       s"full-corpus recall ${block.size}/${exact.size}")

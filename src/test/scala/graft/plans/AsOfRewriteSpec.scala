@@ -8,6 +8,10 @@ class AsOfRewriteSpec extends SparkFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** `body` with the rule left out: the domain-join reference. */
+  private def ruleOff[A](body: => A): A =
+    withoutRule(classOf[AsOfRewriteRule])(body)
+
   private lazy val ready: Unit = {
     Seq(
       (1L, 10L, ts("2024-01-01 10:30:00"), "t1"),
@@ -24,23 +28,24 @@ class AsOfRewriteSpec extends SparkFunSuite {
     ).toDF("rk", "rk2", "rt").createOrReplaceTempView("asof_r")
   }
 
-  /** Run `sql` with the rewrite on and off; assert identical sorted
-    * results, and that the rewrite fired (or not) as expected.
+  private def fired(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collect { case p: AsOfJoinPlan => p }.nonEmpty
+
+  /** Run `sql` as written and with the rule excluded; assert identical
+    * sorted results, and that the rewrite fired (or not) as expected.
     */
   private def check(sql: String, expectFire: Boolean): Unit = {
     ready
-    val off = spark.sql(sql).collect().map(_.toString).sorted.toSeq
-    spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-    try {
+    val off = ruleOff {
       val df = spark.sql(sql)
-      val fired = df.queryExecution.optimizedPlan.collect {
-        case p: AsOfJoinPlan => p
-      }.nonEmpty
-      assert(fired == expectFire,
-        s"expected fire=$expectFire:\n${df.queryExecution.optimizedPlan}")
-      val on = df.collect().map(_.toString).sorted.toSeq
-      assert(on == off, s"rewrite changed the answer for:\n$sql")
-    } finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
+      assert(!fired(df), s"excluded rule still fired:\n${df.queryExecution.optimizedPlan}")
+      df.collect().map(_.toString).sorted.toSeq
+    }
+    val df = spark.sql(sql)
+    assert(fired(df) == expectFire,
+      s"expected fire=$expectFire:\n${df.queryExecution.optimizedPlan}")
+    val on = df.collect().map(_.toString).sorted.toSeq
+    assert(on == off, s"rewrite changed the answer for:\n$sql")
   }
 
   test("backward max/<= fires and preserves the answer") {
@@ -124,13 +129,10 @@ class AsOfRewriteSpec extends SparkFunSuite {
     val off = spark.sql(sql)
     assert(off.schema("m").dataType == org.apache.spark.sql.types.TimestampType)
     check(sql, expectFire = true)
-    spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-    try {
-      val on = spark.sql(sql)
-      assert(on.schema("m").dataType ==
-        org.apache.spark.sql.types.TimestampType,
-        "rewrite changed the output type of the aggregate alias")
-    } finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
+    val on = spark.sql(sql)
+    assert(on.schema("m").dataType ==
+      org.apache.spark.sql.types.TimestampType,
+      "rewrite changed the output type of the aggregate alias")
   }
 
   test("PROVENANCE: a domain built from another table does not fire") {
@@ -187,15 +189,12 @@ class AsOfRewriteSpec extends SparkFunSuite {
   private def checkLateral(sql: String, expectFire: Boolean): Unit = {
     check(sql, expectFire)
     if (expectFire) {
-      spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-      try {
-        val plan = spark.sql(sql).queryExecution.optimizedPlan
-        val leftover = plan.collect {
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-          case w: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit => w
-        }
-        assert(leftover.isEmpty, s"ranking sandwich survived the rewrite:\n$plan")
-      } finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
+      val plan = spark.sql(sql).queryExecution.optimizedPlan
+      val leftover = plan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+        case w: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit => w
+      }
+      assert(leftover.isEmpty, s"ranking sandwich survived the rewrite:\n$plan")
     }
   }
 
@@ -270,14 +269,11 @@ class AsOfRewriteSpec extends SparkFunSuite {
                ORDER BY r.rt DESC LIMIT 1) q""", expectFire = true)
     // only 'a' survives either path — pin the absolute answer too, not
     // just on-vs-off equality
-    spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-    try {
-      val rows = spark.sql("""SELECT l.id FROM asof_lat_l l, LATERAL (
-               SELECT rt FROM asof_r r
-               WHERE r.rk = l.k AND r.rt <= l.t
-               ORDER BY r.rt DESC LIMIT 1) q""").collect().map(_.getString(0))
-      assert(rows.toSeq == Seq("a"))
-    } finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
+    val rows = spark.sql("""SELECT l.id FROM asof_lat_l l, LATERAL (
+             SELECT rt FROM asof_r r
+             WHERE r.rk = l.k AND r.rt <= l.t
+             ORDER BY r.rt DESC LIMIT 1) q""").collect().map(_.getString(0))
+    assert(rows.toSeq == Seq("a"))
   }
 
   test("LATERAL tolerance conjunct fires and preserves the answer") {
@@ -316,17 +312,14 @@ class AsOfRewriteSpec extends SparkFunSuite {
                WHERE r.rk = l.k AND r.rt <= l.t
                ORDER BY r.rt DESC LIMIT 1) q ON true""", expectFire = true)
     // a left key with no right rows must SURVIVE with nulls (t5: k=3)
-    spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-    try {
-      val rows = spark.sql("""SELECT l.id, q.rt
-             FROM asof_l l LEFT OUTER JOIN LATERAL (
-               SELECT rt FROM asof_r r
-               WHERE r.rk = l.k AND r.rt <= l.t
-               ORDER BY r.rt DESC LIMIT 1) q ON true""").collect()
-      assert(rows.length == 5, "left-outer lateral must keep every left row")
-      val t5 = rows.find(_.getString(0) == "t5").get
-      assert(t5.isNullAt(1), "no-match left must carry a NULL payload")
-    } finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
+    val rows = spark.sql("""SELECT l.id, q.rt
+           FROM asof_l l LEFT OUTER JOIN LATERAL (
+             SELECT rt FROM asof_r r
+             WHERE r.rk = l.k AND r.rt <= l.t
+             ORDER BY r.rt DESC LIMIT 1) q ON true""").collect()
+    assert(rows.length == 5, "left-outer lateral must keep every left row")
+    val t5 = rows.find(_.getString(0) == "t5").get
+    assert(t5.isNullAt(1), "no-match left must carry a NULL payload")
   }
 
   test("null keys and times keep SQL semantics through the rewrite") {
@@ -378,26 +371,21 @@ class AsOfRewriteSpec extends SparkFunSuite {
                  (SELECT max(o.o_orderdate) FROM asof_ord_u o
                   WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts) AS m
                  FROM asof_ev_union e"""
-    for (ruleOn <- Seq(false, true)) {
-      if (ruleOn) spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-      try {
-        val e = intercept[Exception](spark.sql(sql).collect())
-        def msgs(t: Throwable): Seq[String] =
-          if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-        assert(msgs(e).exists(_.contains("key not found")),
-          s"expected the upstream optimizer crash, got: $e")
-      } finally if (ruleOn) spark.conf.unset(AsOfRewriteRule.EnabledKey)
+    def crash(): Unit = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(_.contains("key not found")),
+        s"expected the upstream optimizer crash, got: $e")
     }
+    ruleOff(crash())
+    crash()
     // the documented workaround: flatten the union off the plan
     ev.unionByName(ev.withColumn("event_id", $"event_id" + 1000000L))
       .localCheckpoint().createOrReplaceTempView("asof_ev_union")
-    spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-    try {
-      val df = spark.sql(sql)
-      assert(df.queryExecution.optimizedPlan.collect {
-        case p: AsOfJoinPlan => p }.nonEmpty, "rewrite should fire post-flatten")
-      assert(df.count() > 0)
-    } finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
+    val df = spark.sql(sql)
+    assert(fired(df), "rewrite should fire post-flatten")
+    assert(df.count() > 0)
   }
 
   // parquet-backed twins of the fixture views: a LocalRelation folds
@@ -415,27 +403,14 @@ class AsOfRewriteSpec extends SparkFunSuite {
 
   private def nearestFired(sql: String): Boolean = {
     readyNearest
-    spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-    try spark.sql(sql).queryExecution.optimizedPlan.collect {
+    spark.sql(sql).queryExecution.optimizedPlan.collect {
       case p: AsOfJoinPlan if p.nearest => p }.nonEmpty
-    finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
   }
 
   /** [[check]] against the parquet-backed views. */
   private def checkNearest(sql: String, expectFire: Boolean): Unit = {
     readyNearest
-    val off = spark.sql(sql).collect().map(_.toString).sorted.toSeq
-    spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-    try {
-      val df = spark.sql(sql)
-      val fired = df.queryExecution.optimizedPlan.collect {
-        case p: AsOfJoinPlan => p
-      }.nonEmpty
-      assert(fired == expectFire,
-        s"expected fire=$expectFire:\n${df.queryExecution.optimizedPlan}")
-      val on = df.collect().map(_.toString).sorted.toSeq
-      assert(on == off, s"rewrite changed the answer for:\n$sql")
-    } finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
+    check(sql, expectFire)
   }
 
   test("nearest lateral (ORDER BY abs alias, rt tie-break) fires and preserves the answer") {
@@ -459,11 +434,8 @@ class AsOfRewriteSpec extends SparkFunSuite {
                    WHERE r.rk = l.k AND r.rt IS NOT NULL
                    ORDER BY d, rt LIMIT 1) q ON true
                  WHERE l.t IS NOT NULL AND l.id = 't1'""".stripMargin
-    spark.conf.set(AsOfRewriteRule.EnabledKey, "true")
-    try {
-      val row = spark.sql(sql).collect().head
-      assert(row.getTimestamp(1) === ts("2024-01-01 10:00:00"))
-    } finally spark.conf.unset(AsOfRewriteRule.EnabledKey)
+    val row = spark.sql(sql).collect().head
+    assert(row.getTimestamp(1) === ts("2024-01-01 10:00:00"))
   }
 
   test("nearest bails without the rt tie-break (nondeterministic pick must not be pinned)") {

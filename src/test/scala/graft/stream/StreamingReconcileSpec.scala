@@ -65,7 +65,7 @@ class StreamingReconcileSpec extends SparkFunSuite {
     ).toDF("doc_id", "text")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Doc]
     val matches = Dedup.streamSimhashMatches(
-      spark, in.toDF(), corpus, "doc_id", "text", maxHamming = 3)
+      in.toDF(), corpus, "doc_id", "text", maxHamming = 3)
     val q = matches.writeStream.format("memory").queryName("ingest_dedup")
       .outputMode("append").start()
     try {
