@@ -7,9 +7,10 @@ import graft.core.Tables
 /** Library front door: one call gives a session with the engine's
   * recommended runtime settings and graft's extension
   * (`plans.GraftExtensions`), which gives this session and every
-  * session made from it the optimizer rules (e.g. the automatic
-  * non-equi range-join rewrite, conf-gated per query) and the custom
-  * Catalyst functions (usable from SQL as `graft_dot`,
+  * session made from it the optimizer rules (the automatic non-equi
+  * range-join and as-of rewrites, which run on every query; only
+  * Spark's `spark.sql.optimizer.excludedRules` turns them off) and the
+  * custom Catalyst functions (usable from SQL as `graft_dot`,
   * `graft_minhash_sig`, `graft_simhash64`,
   * `graft_sorted_intersect_count`, `graft_first_equal_index`,
   * `graft_rhp_sig`, `graft_bloom_contains`, plus the Count-Min trio

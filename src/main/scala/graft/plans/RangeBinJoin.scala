@@ -56,8 +56,9 @@ object RangeBinJoinRule {
   * timestamp/long columns with the point on one side and both bounds
   * on the other, and NO equi conjunct across the sides (with an equi
   * key present the join already shuffles fine and the residual range
-  * predicate is cheap). The rule runs inside the operator-optimization
-  * fixpoint; its own output contains a cross-side equi conjunct, so it
+  * predicate is cheap). The rule runs in the "User Provided Optimizers"
+  * batch ([[GraftExtensions]]), which repeats it only while the plan
+  * changes; its own output contains a cross-side equi conjunct, so it
   * can never match twice.
   *
   * The rewrite preserves the join's output attributes exactly (the
@@ -67,9 +68,10 @@ object RangeBinJoinRule {
   * drops empty intervals (`hi <= lo`) that `sequence` would otherwise
   * step backwards through — rows the inner join could never emit.
   *
-  * Spark's own `spark.sql.optimizer.excludedRules` (set to this class's
-  * name) leaves a session's plans un-rewritten; the specs use that as
-  * the nested-loop reference.
+  * [[GraftExtensions.withoutRule]] (Spark's own
+  * `spark.sql.optimizer.excludedRules`, set to this class's name)
+  * leaves a session's plans un-rewritten; the specs use that as the
+  * nested-loop reference.
   *
   * Reference behavior: verizon_automation_script.sh has no non-equi
   * join (Hive refuses them in the ON clause); this is north-star
@@ -92,10 +94,15 @@ case class RangeBinJoinRule(session: SparkSession)
     * a side job feeding a planning decision). With w = max(hi - lo),
     * every interval explodes into at most TWO buckets, the
     * amplification-optimal width when interval lengths are of the same
-    * order; the side job scans only the interval side — the
-    * windows/dimension relation of every
-    * point-in-interval join, orders of magnitude smaller than the
-    * points side the rewrite saves from the nested loop. An empty or
+    * order.
+    *
+    * The side job evaluates the whole interval subplan, whatever it is:
+    * a small dimension scan, or (as in `range_join_windows`) a DISTINCT
+    * over the full events table. It runs once per optimization that
+    * meets an eligible join, declined or not (the batch stops once a
+    * pass leaves the plan unchanged), and nothing is reused across
+    * optimizations: a frame whose plan is printed and then executed
+    * optimizes, and pays the job, twice. An empty or
     * all-degenerate interval side yields no width and the rewrite is
     * skipped (the original join is already trivially cheap); a failed
     * side job likewise falls back to the unrewritten plan — the rule

@@ -88,12 +88,7 @@ object Stress {
         f"max_task_s=${acc.maxTaskMs / 1e3}%.1f|$extra")
     }
 
-    // The "rule off" side of the on/off comparisons: `body` with `rule`
-    // left out of every optimizer batch (Spark's own rule exclusion).
-    def withoutRule[A](rule: Class[_])(body: => A): A = {
-      spark.conf.set("spark.sql.optimizer.excludedRules", rule.getName)
-      try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
-    }
+    import graft.plans.GraftExtensions.withoutRule
 
     // One stream-stream interval join over `ev` in `chunks` chunks, with
     // the progress-trail evidence the amp and chunks sweeps report.
@@ -360,7 +355,7 @@ object Stress {
         (onRow.getLong(0), s"windows=${30 * 6 * amp}")
       }
       run("range_join_rule_off", amp, ev0.count() * amp) {
-        withoutRule(classOf[graft.plans.RangeBinJoinRule]) {
+        withoutRule(spark, classOf[graft.plans.RangeBinJoinRule]) {
           val df = spark.sql(sqlText)
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
@@ -643,7 +638,7 @@ object Stress {
         val nSmall = views(evMod = 40, amp = 1)
         val onRow = runOn("asof_sql_rule_on_small", 1, nSmall)
         run("asof_sql_rule_off_small", 1, nSmall) {
-          val row = withoutRule(classOf[graft.plans.AsOfRewriteRule])(
+          val row = withoutRule(spark, classOf[graft.plans.AsOfRewriteRule])(
             spark.sql(sqlText).head)
           require(row == onRow,
             s"as-of rule on/off disagree: on=$onRow off=$row")

@@ -35,16 +35,6 @@ abstract class SparkFunSuite extends AnyFunSuite
   }
   private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
-  /** `body` with optimizer rule `rule` left out of every batch, through
-    * Spark's own `spark.sql.optimizer.excludedRules`: the un-rewritten
-    * reference the rewrite specs compare against. Force results inside
-    * `body`; a lazy frame optimizes when its first action runs.
-    */
-  def withoutRule[A](rule: Class[_])(body: => A): A = {
-    val key = "spark.sql.optimizer.excludedRules"
-    spark.conf.set(key, rule.getName)
-    try body finally spark.conf.unset(key)
-  }
   override protected def afterAll(): Unit = {
     tempDirs.foreach(core.Scratch.rmTree)
     super.afterAll()

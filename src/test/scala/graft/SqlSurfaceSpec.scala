@@ -55,7 +55,8 @@ class SqlSurfaceSpec extends SparkFunSuite {
     GraftSession.attach(spark, sf001)
     def viaSql = canon(spark.sql(SparkEntry.oracleSql(name)))
     val s =
-      if (ruleOff(name)) withoutRule(classOf[plans.RangeBinJoinRule])(viaSql)
+      if (ruleOff(name))
+        plans.GraftExtensions.withoutRule(spark, classOf[plans.RangeBinJoinRule])(viaSql)
       else viaSql
     val d = canon(SparkEntry.queries(name)(spark, sf001))
     assert(s == d,

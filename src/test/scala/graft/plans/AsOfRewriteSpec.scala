@@ -10,7 +10,7 @@ class AsOfRewriteSpec extends SparkFunSuite {
 
   /** `body` with the rule left out: the domain-join reference. */
   private def ruleOff[A](body: => A): A =
-    withoutRule(classOf[AsOfRewriteRule])(body)
+    GraftExtensions.withoutRule(spark, classOf[AsOfRewriteRule])(body)
 
   private lazy val ready: Unit = {
     Seq(

@@ -1,8 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.Tables
 
@@ -17,7 +18,7 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
 
   /** `body` with the rule left out: the nested-loop reference. */
   private def ruleOff[A](body: => A): A =
-    withoutRule(classOf[RangeBinJoinRule])(body)
+    GraftExtensions.withoutRule(spark, classOf[RangeBinJoinRule])(body)
 
   private def events = Tables.events(spark, sf001)
     .select(col("event_id"), col("user_id"), col("ts"), col("value"))
@@ -70,8 +71,9 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
     val iv = Seq(("2024-01-01 02:00:00", "2024-01-01 04:00:00"))
       .toDF("a", "b")
       .select(to_timestamp(col("a")).as("lo"), to_timestamp(col("b")).as("hi"))
-    val got = pts.join(iv, col("ts") >= col("lo") && col("ts") < col("hi"))
-      .select("id").as[Long].collect().sorted.toSeq
+    val df = pts.join(iv, col("ts") >= col("lo") && col("ts") < col("hi"))
+    assert(planOf(df).contains("_graft_pbucket"), planOf(df))
+    val got = df.select("id").as[Long].collect().sorted.toSeq
     assert(got == Seq(1L, 2L), "ts == hi must not match a half-open interval")
   }
 
@@ -88,17 +90,24 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
     val df = pts.join(iv, col("ts").between(col("lo"), col("hi")))
     assert(!planOf(df).contains("BroadcastNestedLoopJoin"),
       "BETWEEN sandwich must be rewritten too")
+    assert(planOf(df).contains("_graft_pbucket"), planOf(df))
     assert(df.select("id").as[Long].collect().toSeq == Seq(1L))
   }
 
   test("single-instant interval (lo == hi, inclusive) survives and matches") {
     val pts = Seq(("2024-01-01 03:00:00", 1L))
       .toDF("s", "id").select(to_timestamp(col("s")).as("ts"), col("id"))
-    val iv = Seq(("2024-01-01 03:00:00", "2024-01-01 03:00:00"))
-      .toDF("a", "b")
+    // the hour-long interval matches nothing; it gives the side a
+    // positive longest interval, so the width is derived and the
+    // instant goes through the rewrite
+    val iv = Seq(
+      ("2024-01-01 03:00:00", "2024-01-01 03:00:00"),
+      ("2024-01-01 05:00:00", "2024-01-01 06:00:00")
+    ).toDF("a", "b")
       .select(to_timestamp(col("a")).as("lo"), to_timestamp(col("b")).as("hi"))
-    assert(pts.join(iv,
-      col("ts") >= col("lo") && col("ts") <= col("hi")).count() == 1L)
+    val df = pts.join(iv, col("ts") >= col("lo") && col("ts") <= col("hi"))
+    assert(planOf(df).contains("_graft_pbucket"), planOf(df))
+    assert(df.count() == 1L)
   }
 
   test("strict lower bound: the boundary point is excluded, rewrite still fires") {
@@ -111,6 +120,7 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
       .select(to_timestamp(col("a")).as("lo"), to_timestamp(col("b")).as("hi"))
     val df = pts.join(iv, col("ts") > col("lo") && col("ts") < col("hi"))
     assert(!planOf(df).contains("BroadcastNestedLoopJoin"))
+    assert(planOf(df).contains("_graft_pbucket"), planOf(df))
     assert(df.select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
@@ -123,9 +133,9 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
       ("2024-01-01 02:30:00", "2024-01-01 03:30:00")  // real match
     ).toDF("a", "b")
       .select(to_timestamp(col("a")).as("lo"), to_timestamp(col("b")).as("hi"))
-    val got = pts.join(iv, col("ts") >= col("lo") && col("ts") < col("hi"))
-      .count()
-    assert(got == 1L)
+    val df = pts.join(iv, col("ts") >= col("lo") && col("ts") < col("hi"))
+    assert(planOf(df).contains("_graft_pbucket"), planOf(df))
+    assert(df.count() == 1L)
   }
 
   test("date-typed validity intervals rewrite too (daily bin)") {
@@ -137,6 +147,7 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
     val df = pts.join(iv, col("d") >= col("lo") && col("d") <= col("hi"))
     assert(!planOf(df).contains("BroadcastNestedLoopJoin"),
       "date sandwich must be rewritten")
+    assert(planOf(df).contains("_graft_pbucket"), planOf(df))
     val got = df.select(col("id"), col("lo").cast("string"))
       .as[(Long, String)].collect().sorted.toSeq
     assert(got == Seq((1L, "2024-01-01"), (2L, "2024-02-01")))
@@ -263,6 +274,38 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
       col("ts") >= col("lo") && col("ts") < col("hi")).count() == 0L)
   }
 
+  test("a declined join pays the width side job once per optimization") {
+    // zero-length intervals (the hours 00:00-03:00 of 2024-01-01) over
+    // a non-local relation: the side job is a real query, it finds no
+    // width, and the rule declines; the plan never gains the bucket key,
+    // so only running the rule once per optimization keeps the job from
+    // repeating
+    val pts = Seq(("2024-01-01 03:00:00", 1L))
+      .toDF("s", "id").select(to_timestamp(col("s")).as("ts"), col("id"))
+    val hour = timestamp_seconds(lit(1704067200L) + col("id") * 3600)
+    val iv = spark.range(4).select(hour.as("lo"), hour.as("hi"))
+    val sideJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.toString.contains("_graft_max_interval"))
+          sideJobs.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val df = pts.join(iv, col("ts") >= col("lo") && col("ts") <= col("hi"))
+    try {
+      df.queryExecution.optimizedPlan
+      // listener events arrive asynchronously: wait for the first, then
+      // give any repeat time to land
+      val deadline = System.nanoTime() + 10000000000L
+      while (sideJobs.get == 0 && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(500)
+    } finally spark.listenerManager.unregister(listener)
+    assert(sideJobs.get == 1, s"${sideJobs.get} side jobs for one optimization")
+    assert(!planOf(df).contains("_graft_pbucket"))
+    assert(df.count() == 1L)
+  }
+
   test("malformed / out-of-range conf disables the rewrite, never throws") {
     // LongType bounds are microseconds as they stand; the longest
     // interval here is past MaxBinSeconds, so the width is clamped to it
@@ -294,8 +337,8 @@ class RangeBinJoinSpec extends graft.SparkFunSuite {
       (Some("2024-01-01 22:00:00"), None)
     ).toDF("a", "b")
       .select(to_timestamp(col("a")).as("lo"), to_timestamp(col("b")).as("hi"))
-    val got = pts.join(iv, col("ts") >= col("lo") && col("ts") < col("hi"))
-      .select("id").as[Long].collect().toSeq
-    assert(got == Seq(1L))
+    val df = pts.join(iv, col("ts") >= col("lo") && col("ts") < col("hi"))
+    assert(planOf(df).contains("_graft_pbucket"), planOf(df))
+    assert(df.select("id").as[Long].collect().toSeq == Seq(1L))
   }
 }
