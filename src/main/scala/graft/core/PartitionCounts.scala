@@ -43,12 +43,18 @@ object PartitionCounts {
     */
   def perPartition(df: DataFrame, table: String, partCols: Seq[String]): DataFrame = {
     require(partCols.nonEmpty, "perPartition requires at least one partition column")
-    val spec: Column = concat_ws("/",
-      partCols.map(c => concat_ws("=", lit(c), col(c).cast("string"))): _*)
     df.groupBy(partCols.map(col): _*)
       .agg(count(lit(1)).as("cnt"))
-      .select(lit(table).as("table"), spec.as("partition"), col("cnt"))
+      .select(lit(table).as("table"), spec(partCols).as("partition"), col("cnt"))
   }
+
+  /** The canonical `k=v[/k2=v2]` partition spec of a record; NULL for a
+    * whole-table record (no partition columns). A NULL value renders as
+    * its bare key (`concat_ws` skips it).
+    */
+  def spec(partCols: Seq[String]): Column =
+    if (partCols.isEmpty) lit(null).cast("string")
+    else concat_ws("/", partCols.map(c => concat_ws("=", lit(c), col(c).cast("string"))): _*)
 
   /** Counts for a list of tables in one DataFrame: per-partition where
     * partition columns are given, whole-table otherwise. Mirrors the

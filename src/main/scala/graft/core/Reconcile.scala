@@ -26,27 +26,29 @@ object Reconcile {
   val MissingInTarget = "missing_in_target"
   val MissingInSource = "missing_in_source"
 
-  /** Full reconciliation report from two CountRecord DataFrames
-    * (columns: table, partition, cnt).
+  /** Full reconciliation report from two record DataFrames keyed on
+    * (table, partition) with a `cnt` column: (table, partition, src_cnt,
+    * tgt_cnt, status). Every further record column `c` (e.g. a digest)
+    * rides through the same join as `src_c`, `tgt_c` after the counts.
     */
   def counts(src: DataFrame, tgt: DataFrame): DataFrame = {
-    val s = src.select(col("table"), col("partition"), col("cnt").as("src_cnt"))
-    val t = tgt.select(col("table"), col("partition"), col("cnt").as("tgt_cnt"))
+    val vals = "cnt" +: src.columns.filterNot(Set("table", "partition", "cnt")).toSeq
+    def side(df: DataFrame, p: String) =
+      df.select(col("table") +: col("partition") +: vals.map(c => col(c).as(s"${p}_$c")): _*)
     // <=> join on partition: null partition (whole-table records) must
     // match null, which === would drop.
-    val joined = s.alias("s").join(t.alias("t"),
+    val joined = side(src, "src").alias("s").join(side(tgt, "tgt").alias("t"),
       col("s.table") === col("t.table") && col("s.partition") <=> col("t.partition"),
       "full_outer")
-    joined.select(
-      coalesce(col("s.table"), col("t.table")).as("table"),
-      coalesce(col("s.partition"), col("t.partition")).as("partition"),
-      col("src_cnt"),
-      col("tgt_cnt"),
+    joined.select(Seq(
+        coalesce(col("s.table"), col("t.table")).as("table"),
+        coalesce(col("s.partition"), col("t.partition")).as("partition")) ++
+      vals.flatMap(c => Seq(col(s"src_$c"), col(s"tgt_$c"))) :+
       when(col("src_cnt").isNull, MissingInSource)
         .when(col("tgt_cnt").isNull, MissingInTarget)
         .when(col("src_cnt") === col("tgt_cnt"), Matched)
         .otherwise(Mismatched)
-        .as("status"))
+        .as("status"): _*)
   }
 
   /** J1: the reference's MatchedData report. */

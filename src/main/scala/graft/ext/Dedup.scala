@@ -228,26 +228,39 @@ object Dedup {
     * lambda evaluation with a k-array copy per shingle, 19s of the 22s
     * query; native expression — one primitive nested loop, sub-second.
     */
-  def minhashSignature(shingleSet: Column, params: MinHashParams): Column = {
-    val hashed = transform(shingleSet, s => xxhash64(s))
-    call_function("graft_minhash_sig", hashed, lit(params.k), lit(params.seed))
-  }
+  def minhashSignature(shingleSet: Column, params: MinHashParams): Column =
+    hashedSignature(Text.hashed(shingleSet), params)
 
-  /** (id, band, band_hash) — one row per band per doc; the LSH index.
-    *
-    * The (id, signature) projection is cached BEFORE the band keys are
-    * derived: the signature expression (tokenize → shingle → hash →
-    * k-minima) would otherwise be inlined by CollapseProject into every
-    * downstream reference — one per band key — re-running the whole
-    * interpreted tokenization chain ~numBands times per document
-    * (profiled: 18s of the 22s query at sf0.1).
+  /** [[minhashSignature]] of an already-hashed array<bigint>. The kernel
+    * takes a min over elements, so order and duplicates do not matter.
+    */
+  private def hashedSignature(hashed: Column, params: MinHashParams): Column =
+    call_function("graft_minhash_sig", hashed, lit(params.k), lit(params.seed))
+
+  /** (id, keys, band, band_hash) — one row per band per doc; the LSH
+    * index of the docs' `Text.hashedShingleSet`s, whose signature equals
+    * `minhashSignature(Text.shingleSet(text, n))`.
     */
   def minhashBands(
       docs: DataFrame, idCol: String, textCol: String,
-      params: MinHashParams): DataFrame = {
-    val sig = minhashSignature(
-      Text.shingleSet(col(textCol), params.shingleN), params)
-    val sigDf = CacheScope.cached(docs.select(col(idCol).as("id"), sig.as("sig")))
+      params: MinHashParams): DataFrame =
+    bandsFromSets(docs.select(col(idCol).as("id"),
+      Text.hashedShingleSet(col(textCol), params.shingleN).as("s")), params)
+
+  /** The LSH band index of (id, s) hashed shingle sets: the one
+    * signature-and-band chain under the candidate pairs, the drop audit
+    * and the verified pairs. An empty set's all-`Prime` signature collides
+    * with every other empty set in every band; a NULL set has no bands.
+    *
+    * The (id, signature) projection is cached BEFORE the band keys are
+    * derived: the signature expression would otherwise be inlined by
+    * CollapseProject into every downstream reference — one per band key
+    * — re-running it ~numBands times per document (profiled, with the
+    * tokenize chain inlined too: 18s of the 22s query at sf0.1).
+    */
+  private def bandsFromSets(sets: DataFrame, params: MinHashParams): DataFrame = {
+    val sigDf = CacheScope.cached(
+      sets.select(col("id"), hashedSignature(col("s"), params).as("sig")))
     val bandKeys = array((0 until params.numBands).map { j =>
       xxhash64(lit(j), slice(col("sig"), j * params.rowsPerBand + 1, params.rowsPerBand))
     }: _*)
@@ -261,7 +274,9 @@ object Dedup {
 
   /** Candidate pairs from banded MinHash: docs sharing any band bucket.
     * One shuffle to size buckets (skew guard), one shuffle-join per side
-    * on (band, band_hash), then pair-level distinct.
+    * on (band, band_hash), each pair emitted once. Empty-text docs stay
+    * in the index here (they collide in every band); the verified path,
+    * [[minhashPairsFromSets]], drops them before banding.
     */
   def minhashCandidatePairs(
       docs: DataFrame, idCol: String, textCol: String,
@@ -288,36 +303,46 @@ object Dedup {
       CacheScope.cached(minhashBands(docs, idCol, textCol, params)),
       params.numBands, params.maxBucketSize)
 
-  /** X2 end-to-end: LSH candidates verified with exact shingle Jaccard.
-    * Verification joins the (small) candidate pair set back to the
-    * shingle sets — broadcast-able when candidates fit, shuffle join
-    * otherwise; Catalyst/AQE picks.
+  /** X2 end-to-end: near-dup pairs (id_a < id_b, jaccard >= threshold)
+    * with exact shingle Jaccard. The docs are tokenized once, into a
+    * cached hashed-shingle-set projection whose count picks the strategy
+    * in [[minhashPairsFromSets]].
     */
   def minhashNearDupPairs(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double,
       params: MinHashParams = MinHashParams()): DataFrame = {
-    // size-based physical strategy: exact blocked all-pairs under the
-    // cutover (same output — LSH candidates are exactly verified anyway).
-    // A disabled cutover (bruteForceMaxDocs <= 0, the force-LSH
-    // certifications) skips the corpus count entirely — at 100 TB that
-    // count is a full metadata pass paid for an answer that cannot
-    // matter (round 22).
-    if (params.bruteForceMaxDocs > 0 && docs.count() <= params.bruteForceMaxDocs)
-      return jaccardPairsExact(docs, idCol, textCol, threshold, params.shingleN)
-    val cand = minhashCandidatePairs(docs, idCol, textCol, params)
-    // cached: both verification join sides consume the shingle sets, and
-    // the tokenize→shingle→hash→sort chain is the expensive part
     val sets = CacheScope.cached(docs.select(
       col(idCol).as("id"), Text.hashedShingleSet(col(textCol), params.shingleN).as("s")))
+    minhashPairsFromSets(sets, sets.count(), threshold, params)
+  }
+
+  /** Near-dup pairs over `nSets` precomputed (id, s) hashed shingle sets
+    * (`Text.hashedShingleSet`): exact all-pairs ([[jaccardPairsFromSets]])
+    * up to `params.bruteForceMaxDocs` sets — same output, LSH candidates
+    * are exactly verified anyway — else banded MinHash candidates
+    * verified with exact Jaccard against the same sets. Empty sets are
+    * dropped before banding: they would all collide in every band, and
+    * Jaccard of two empty sets is 0/0, so they never pair. Runs no job
+    * while the plan is built: the cutover and the broadcast decision take
+    * the count they are given.
+    */
+  private[ext] def minhashPairsFromSets(
+      sets: DataFrame, nSets: Long, threshold: Double,
+      params: MinHashParams): DataFrame = {
+    if (nSets <= params.bruteForceMaxDocs) return jaccardPairsFromSets(sets, threshold)
+    // the band index feeds three consumers (bucket sizing + both join
+    // sides); each colliding pair is emitted once, at its first healthy
+    // band (see LshJoin)
+    val bands = CacheScope.cached(bandsFromSets(sets.filter(size(col("s")) > 0), params))
+    val cand = LshJoin.candidatePairs(bands, params.numBands, params.maxBucketSize)
     // On a low-entropy corpus the candidate set is orders of magnitude
     // larger than the true pair set, so the dominant cost is moving the
     // candidate×shingle-set rows. When the per-doc set table fits in a
     // broadcast, ship IT to the candidates (pairs never shuffle and the
     // failed ones are dropped during the broadcast-hash probe); beyond
     // broadcast size, fall back to shuffle joins on the pair ids.
-    // decided once: both join sides share the one count job
-    val broadcastSets = sets.count() <= params.maxBroadcastDocs
+    val broadcastSets = nSets <= params.maxBroadcastDocs
     val side = (df: DataFrame) => if (broadcastSets) broadcast(df) else df
     val withA = cand
       .join(side(sets.select(col("id").as("id_a"), col("s").as("s_a"))), Seq("id_a"))
@@ -830,17 +855,11 @@ object Dedup {
       .groupBy(col("s"), when(size(col("s")) === 0, col("id")).otherwise(lit(0L)).as("ek"))
       .agg(min("id").as("rep"), collect_list("id").as("members"))
       .select(col("s"), col("rep"), col("members")))
-    // rep pairs reuse the already-materialized group-key sets: one
-    // tokenize pass for the whole pipeline
+    // rep pairs, on either path, reuse the already-materialized
+    // group-key sets: one tokenize pass for the whole pipeline
     val repSets = groups.select(col("rep").as("id"), col("s"))
-    val nReps = repSets.count()
-    val repPairs =
-      (if (nReps <= params.bruteForceMaxDocs)
-         jaccardPairsFromSets(repSets, threshold)
-       else minhashNearDupPairs(
-         docs.join(groups.select(col("rep").as(idCol)), Seq(idCol)),
-         idCol, textCol, threshold, params))
-        .select("id_a", "id_b")
+    val repPairs = minhashPairsFromSets(repSets, repSets.count(), threshold, params)
+      .select("id_a", "id_b")
     val comp = connectedComponents(
       groups.select(col("rep").as("id")), repPairs, maxDriverEdges = maxDriverEdges)
     groups.select(col("rep"), explode(col("members")).as("member"))

@@ -301,12 +301,18 @@ class DedupSpec extends SparkFunSuite {
       (4L, null.asInstanceOf[String]),
       (5L, ""),
       (6L, "   ")).toDF("doc_id", "text")
-    val got = Dedup.nearDupClusters(docs, "doc_id", "text", 0.9)
-      .as[(Long, Long)].collect().toMap
+    val lsh = Dedup.MinHashParams(bruteForceMaxDocs = 0)
     // identical docs cluster; NULL/empty/whitespace docs never pair and
     // each stays its own representative (NULL used to collapse into one
-    // shared identical-set group)
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L, 6L -> 6L))
+    // shared identical-set group) — on the brute-force path and on the
+    // LSH path with the distributed loop, where empty sets would collide
+    // in every band and Jaccard of two of them divides 0/0
+    for (got <- Seq(Dedup.nearDupClusters(docs, "doc_id", "text", 0.9),
+        Dedup.nearDupClusters(docs, "doc_id", "text", 0.9, lsh, maxDriverEdges = 0)))
+      assert(got.as[(Long, Long)].collect().toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L, 6L -> 6L))
+    assert(Dedup.minhashNearDupPairs(docs, "doc_id", "text", 0.9, lsh)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
   }
 
   test("containmentPairs: prefix-filter path == all-pairs lens on the fixture corpus") {
